@@ -77,11 +77,17 @@ object BloomIO {
   }
 
   /** Parse and load a dump; if `into` is given, ORs the stream into it
-    * (sizes/hashes must match), else allocates a new filter.
+    * (sizes/hashes must match), else allocates a new filter. A header
+    * claiming more blocks than the array holds is rejected before any
+    * allocation (a 64-byte hostile dump could otherwise ask for ~8 GiB).
     */
   def load(bytes: Array[Byte],
-           into: Option[BlockedBloomFilter] = None): BlockedBloomFilter =
+           into: Option[BlockedBloomFilter] = None): BlockedBloomFilter = {
+    if (bytes.length >= HeaderLen &&
+        bytes.length < HeaderLen * (2L + getU32LE(bytes, 12)))
+      throw new IllegalArgumentException("unexpected end of dump")
     loadFrom(new java.io.ByteArrayInputStream(bytes), into)
+  }
 
   def loadFrom(in0: InputStream,
                into: Option[BlockedBloomFilter] = None): BlockedBloomFilter = {

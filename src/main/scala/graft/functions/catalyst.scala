@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -10,15 +10,18 @@ import org.apache.spark.sql.graftglue.glue
 import org.apache.spark.sql.types._
 import graft.core._
 
-/** Catalyst-native sketch aggregates.
+/** Catalyst-native sketch aggregates — the one definition of every
+  * sketch aggregate. The Column API (`functions`), the SQL surface
+  * (`sql`) and typed Datasets (`.as[Array[Byte]]` over the Column) all
+  * plan these.
   *
-  * These are the hot-path versions of the Aggregator-based UDAFs: a
-  * TypedImperativeAggregate reads the input ArrayData IN PLACE inside
+  * A TypedImperativeAggregate reads the input ArrayData IN PLACE inside
   * `update` — no per-row encoder projection, no Array[Int] copy, no boxed
-  * round trip (profiling showed the ScalaAggregator encoder path costing
-  * ~6x the sketch kernel itself). Buffers are the sketch objects; Spark
-  * serializes them only at the partial->final shuffle boundary, exactly
-  * the reference's worker-filter -> tree-Union pattern
+  * round trip (profiling showed the typed-Aggregator (ScalaAggregator)
+  * encoder path costing ~6x the sketch kernel itself). Buffers are the
+  * sketch objects; Spark serializes them only at the partial->final
+  * shuffle boundary, exactly the reference's worker-filter -> tree-Union
+  * pattern
   * (/root/reference/example_test.go:179-208).
   *
   * Serialization formats are the engine's stable wire formats (Bloom: the
@@ -197,6 +200,30 @@ object catalyst {
       copy(child = c)
   }
 
+  /** HLL union re-aggregation over serialized-sketch columns (the panel
+    * checkpoint resume path; all inputs must share precision `p`).
+    */
+  case class HllUnionAggregate(
+      child: Expression, p: Int,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends ScalarAggregate[HyperLogLog] {
+    override def prettyName: String = "hll_union_agg"
+    def createAggregationBuffer(): HyperLogLog = HyperLogLog(p)
+    protected def updateValue(b: HyperLogLog, v: Any): Unit =
+      b.merge(HyperLogLog.deserialize(v.asInstanceOf[Array[Byte]]))
+    def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
+    def eval(b: HyperLogLog): Any = b.serialize()
+    def serialize(b: HyperLogLog): Array[Byte] = b.serialize()
+    def deserialize(bytes: Array[Byte]): HyperLogLog =
+      HyperLogLog.deserialize(bytes)
+    def withNewMutableAggBufferOffset(o: Int): HllUnionAggregate =
+      copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): HllUnionAggregate =
+      copy(inputAggBufferOffset = o)
+    protected def withNewChildInternal(c: Expression): HllUnionAggregate =
+      copy(child = c)
+  }
+
   /** Count-min build over array<int> token columns. */
   case class CmsTokensAggregate(
       child: Expression, depth: Int, width: Int,
@@ -244,6 +271,30 @@ object catalyst {
     def withNewInputAggBufferOffset(o: Int): CmsHashAggregate =
       copy(inputAggBufferOffset = o)
     protected def withNewChildInternal(c: Expression): CmsHashAggregate =
+      copy(child = c)
+  }
+
+  /** Count-min union re-aggregation over serialized-sketch columns
+    * (counter-add; all inputs must share depth and width).
+    */
+  case class CmsUnionAggregate(
+      child: Expression, depth: Int, width: Int,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends ScalarAggregate[CountMinSketch] {
+    override def prettyName: String = "cms_union_agg"
+    def createAggregationBuffer(): CountMinSketch = CountMinSketch(depth, width)
+    protected def updateValue(b: CountMinSketch, v: Any): Unit =
+      b.merge(CountMinSketch.deserialize(v.asInstanceOf[Array[Byte]]))
+    def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
+    def eval(b: CountMinSketch): Any = b.serialize()
+    def serialize(b: CountMinSketch): Array[Byte] = b.serialize()
+    def deserialize(bytes: Array[Byte]): CountMinSketch =
+      CountMinSketch.deserialize(bytes)
+    def withNewMutableAggBufferOffset(o: Int): CmsUnionAggregate =
+      copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): CmsUnionAggregate =
+      copy(inputAggBufferOffset = o)
+    protected def withNewChildInternal(c: Expression): CmsUnionAggregate =
       copy(child = c)
   }
 
@@ -537,6 +588,61 @@ object catalyst {
     def withNewInputAggBufferOffset(o: Int): FreqUnionAggregate =
       copy(inputAggBufferOffset = o)
     protected def withNewChildInternal(c: Expression): FreqUnionAggregate =
+      copy(child = c)
+  }
+
+  /** Set-level MinHash signature over array<int> token columns: each
+    * partial is an element-wise-min fold, merge is element-wise min —
+    * the signature of the union of all inputs (Broder 1997
+    * mergeability), equal to MinHash.signatureOfTokens of the distinct
+    * tokens. Empty input gives all Long.MaxValue.
+    */
+  case class MinHashTokensAggregate(
+      child: Expression, numPerms: Int,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends TokenArrayAggregate[Array[Long]] {
+    override def prettyName: String = "minhash_agg_tokens"
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    @transient private lazy val seeds = Array.tabulate(numPerms)(MinHash.permSeed)
+    def createAggregationBuffer(): Array[Long] = Array.fill(numPerms)(Long.MaxValue)
+    protected def updateArray(sig: Array[Long], arr: ArrayData): Unit = {
+      val s = seeds
+      var t = 0
+      val n = arr.numElements()
+      while (t < n) {
+        if (!arr.isNullAt(t)) {
+          val h = Hashing.tokenHash(arr.getInt(t))
+          var i = 0
+          while (i < numPerms) {
+            val v = Hashing.splitmix64(h ^ s(i))
+            if (v < sig(i)) sig(i) = v
+            i += 1
+          }
+        }
+        t += 1
+      }
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < a.length) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
+      a
+    }
+    def eval(sig: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(sig)
+    def serialize(sig: Array[Long]): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(8 * sig.length)
+      buf.asLongBuffer().put(sig)
+      buf.array()
+    }
+    def deserialize(bytes: Array[Byte]): Array[Long] = {
+      val sig = new Array[Long](bytes.length / 8)
+      java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(sig)
+      sig
+    }
+    def withNewMutableAggBufferOffset(o: Int): MinHashTokensAggregate =
+      copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): MinHashTokensAggregate =
+      copy(inputAggBufferOffset = o)
+    protected def withNewChildInternal(c: Expression): MinHashTokensAggregate =
       copy(child = c)
   }
 

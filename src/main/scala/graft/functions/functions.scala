@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.functions.udf
 import graft.core._
 
 /** Column-level API of the sketch engine.
@@ -24,14 +23,13 @@ import graft.core._
   */
 object functions {
 
-  private val intArrayEnc = ExpressionEncoder[Array[Int]]()
-
   // ---------------- builders (aggregation functions) ----------------
   //
   // All builders plan as native TypedImperativeAggregates (graft.functions
   // .catalyst) — input read in place from ArrayData, no per-row encoder
-  // copy; the Aggregator-based versions in `aggregators` remain as the
-  // public-API typed facade (usable with Dataset.groupByKey/agg).
+  // copy. Typed Dataset users take the same Column with a typed view:
+  // ds.groupByKey(_.source).agg(bloom_agg_tokens(col("tokens"), ...)
+  // .as[Array[Byte]]).
 
   /** Bloom filter over token arrays, sized like the reference's
     * NewOptimized (/root/reference/optimize.go:40-43).
@@ -76,7 +74,7 @@ object functions {
     catalyst.aggCol(catalyst.HllHashAggregate(catalyst.expr(hash.cast("bigint")), p))
 
   def hll_union_agg(sketches: Column, p: Int = 14): Column =
-    udaf(new aggregators.HllUnionAgg(p), Encoders.BINARY)(sketches)
+    catalyst.aggCol(catalyst.HllUnionAggregate(catalyst.expr(sketches), p))
 
   def cms_agg_tokens(tokens: Column, depth: Int = 5, width: Int = 65536): Column =
     catalyst.aggCol(catalyst.CmsTokensAggregate(
@@ -87,7 +85,8 @@ object functions {
       catalyst.expr(hash.cast("bigint")), depth, width))
 
   def cms_union_agg(sketches: Column, depth: Int = 5, width: Int = 65536): Column =
-    udaf(new aggregators.CmsUnionAgg(depth, width), Encoders.BINARY)(sketches)
+    catalyst.aggCol(catalyst.CmsUnionAggregate(
+      catalyst.expr(sketches), depth, width))
 
   /** Theta (KMV) distinct sketch over token arrays — the intersectable
     * distinct counter. Use HLL when only unions/estimates are needed
@@ -165,7 +164,8 @@ object functions {
       catalyst.expr(values.cast("double")), k))
 
   def minhash_agg_tokens(tokens: Column, numPerms: Int = 128): Column =
-    udaf(new aggregators.MinHashTokensAgg(numPerms), intArrayEnc)(tokens)
+    catalyst.aggCol(catalyst.MinHashTokensAggregate(
+      catalyst.expr(tokens.cast("array<int>")), numPerms))
 
   // ---------------- hashing ----------------
 

@@ -3,17 +3,17 @@ package graft.functions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftglue.glue
 import graft.core._
 
 /** SQL surface: every sketch operator callable from `spark.sql(...)`.
   *
-  * Two registration paths:
+  * One table of graft_* functions — aggregates, native scalar
+  * expressions, and the `functions` udf accessors — each with its usage
+  * string, and two entry points that register all of it:
   *  - `GraftExtensions` (for `spark.sql.extensions=graft.functions.
-  *    GraftExtensions` in spark-submit conf) injects the aggregate
-  *    expressions into the session function registry;
-  *  - `sql.registerAll(spark)` does the same at runtime and additionally
-  *    registers the scalar helpers (probe/estimate/quantile/hash) as
-  *    named UDFs.
+  *    GraftExtensions` in spark-submit conf) at session build;
+  *  - `sql.registerAll(spark)` at runtime into a live session.
   *
   * Sizing arguments (capacity, fpr, precision, ...) must be literals —
   * they size the aggregation buffer at plan time, mirroring how the
@@ -312,76 +312,86 @@ object sql {
           lng(es(2), "n").toInt)))
   }
 
-  private def injectInto(registry:
-      org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
-    (aggregateBuilders ++ scalarBuilders).foreach {
+  /** name -> (usage, builder) for the sketch accessors: each is the
+    * `functions` udf val itself, lifted into a SQL builder. Same
+    * contract as the Column form — every call deserializes its sketch
+    * argument per ROW, so use them on already-aggregated results (one
+    * sketch row per group), never on corpus-sized frames.
+    */
+  val udfBuilders: Map[String, (String, Seq[Expression] => Expression)] = {
+    val F = functions
+    Seq(
+      "graft_bloom_might_contain" -> (
+        "(dump, hash64) - membership test of a dumped Bloom filter",
+        F.bloom_might_contain),
+      "graft_bloom_cardinality" -> (
+        "(dump) - cardinality estimate of a dumped Bloom filter; null " +
+          "when saturated", F.bloom_cardinality),
+      "graft_bloom_fprate" -> (
+        "(dump, nkeys) - modeled false-positive rate after nkeys inserts",
+        F.bloom_fprate),
+      "graft_hll_estimate" -> (
+        "(sketch) - HyperLogLog distinct estimate", F.hll_estimate),
+      "graft_cms_estimate" -> (
+        "(sketch, hash64) - count-min frequency estimate", F.cms_estimate),
+      "graft_theta_estimate" -> (
+        "(sketch) - theta distinct estimate", F.theta_estimate),
+      "graft_theta_intersect" -> (
+        "(a, b) - theta sketch of the intersection", F.theta_intersect),
+      "graft_theta_a_not_b" -> (
+        "(a, b) - theta sketch of a minus b", F.theta_a_not_b),
+      "graft_tuple_estimate" -> (
+        "(sketch) - tuple-sketch distinct-key estimate", F.tuple_estimate),
+      "graft_tuple_sum_estimate" -> (
+        "(sketch) - tuple-sketch total-weight estimate",
+        F.tuple_sum_estimate),
+      "graft_tuple_intersect" -> (
+        "(a, b) - tuple sketch of the shared keys, summaries summed",
+        F.tuple_intersect),
+      "graft_tuple_a_not_b" -> (
+        "(a, b) - tuple sketch of a's keys absent from b, a's summaries",
+        F.tuple_a_not_b),
+      "graft_freq_entries" -> (
+        "(sketch) - array<struct<item, lower bound, upper bound>>",
+        F.freq_entries),
+      "graft_freq_lower_bound" -> (
+        "(sketch, item) - lower bound on the item's weight (0 if absent)",
+        F.freq_lower_bound),
+      "graft_freq_max_error" -> (
+        "(sketch) - max error of every freq-sketch bound", F.freq_max_error),
+      "graft_tdigest_quantile" -> (
+        "(sketch, q) - t-digest quantile", F.tdigest_quantile),
+      "graft_kll_quantile" -> (
+        "(sketch, q) - KLL quantile", F.kll_quantile),
+      "graft_minhash_jaccard" -> (
+        "(sigA, sigB) - MinHash Jaccard estimate", F.minhash_jaccard)
+    ).map { case (name, (usage, u)) =>
+      val named = u.withName(name)
+      name -> (usage, (es: Seq[Expression]) => glue.udfExpression(named, es))
+    }.toMap
+  }
+
+  /** Every graft_* SQL function as (id, info, builder): the one table
+    * behind both entry points, so they cannot drift apart.
+    */
+  private[functions] def all: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] =
+    (aggregateBuilders ++ scalarBuilders ++ udfBuilders).toSeq.map {
       case (name, (usage, builder)) =>
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+        // DESCRIBE FUNCTION <name> shows the usage string
+        (FunctionIdentifier(name),
+          new ExpressionInfo("graft", null, name, "_FUNC_" + usage, ""),
+          builder)
     }
 
-  /** Runtime registration of everything (aggregates + scalar helpers). */
+  /** Runtime registration of every graft_* function into a live session
+    * (the same set GraftExtensions injects at session build).
+    */
   def registerAll(spark: SparkSession): Unit = {
-    injectInto(spark.sessionState.functionRegistry)
-    val u = spark.udf
-    u.register("graft_bloom_might_contain",
-      (dump: Array[Byte], h: Long) => BloomIO.load(dump).has(h))
-    u.register("graft_bloom_cardinality", (dump: Array[Byte]) => {
-      val c = BloomIO.load(dump).cardinality
-      if (c.isInfinite) None else Some(c)
-    })
-    u.register("graft_bloom_fprate", (dump: Array[Byte], nkeys: Long) => {
-      val f = BloomIO.load(dump)
-      BloomConfig.fpRateAfter(nkeys, f.numBits, f.k)
-    })
-    u.register("graft_hll_estimate",
-      (bytes: Array[Byte]) => HyperLogLog.deserialize(bytes).estimate)
-    u.register("graft_theta_estimate",
-      (bytes: Array[Byte]) => ThetaSketch.deserialize(bytes).estimate)
-    u.register("graft_theta_intersect",
-      (a: Array[Byte], b: Array[Byte]) =>
-        ThetaSketch.deserialize(a).intersect(ThetaSketch.deserialize(b)).serialize())
-    u.register("graft_theta_a_not_b",
-      (a: Array[Byte], b: Array[Byte]) =>
-        ThetaSketch.deserialize(a).aNotB(ThetaSketch.deserialize(b)).serialize())
-    u.register("graft_tuple_estimate",
-      (bytes: Array[Byte]) => TupleSketch.deserialize(bytes).estimate)
-    u.register("graft_tuple_sum_estimate",
-      (bytes: Array[Byte]) => TupleSketch.deserialize(bytes).sumEstimate)
-    u.register("graft_tuple_intersect",
-      (a: Array[Byte], b: Array[Byte]) =>
-        TupleSketch.deserialize(a).intersect(TupleSketch.deserialize(b)).serialize())
-    u.register("graft_tuple_a_not_b",
-      (a: Array[Byte], b: Array[Byte]) =>
-        TupleSketch.deserialize(a).aNotB(TupleSketch.deserialize(b)).serialize())
-    u.register("graft_freq_entries",
-      (bytes: Array[Byte]) => {
-        val s = FreqSketch.deserialize(bytes)
-        s.entries.map { case (item, lb) =>
-          (s.codec.render(item), lb, lb + s.maxError)
-        }.toSeq
-      })
-    u.register("graft_freq_lower_bound",
-      (bytes: Array[Byte], item: String) => {
-        val s = FreqSketch.deserialize(bytes)
-        val key: AnyRef =
-          if (s.codec.tag == 0) java.lang.Long.valueOf(item.toLong) else item
-        s.lowerBound(key)
-      })
-    u.register("graft_freq_max_error",
-      (bytes: Array[Byte]) => FreqSketch.deserialize(bytes).maxError)
-    u.register("graft_cms_estimate",
-      (bytes: Array[Byte], h: Long) =>
-        CountMinSketch.deserialize(bytes).estimate(h))
-    u.register("graft_tdigest_quantile",
-      (bytes: Array[Byte], q: Double) =>
-        TDigest.deserialize(bytes).quantile(q))
-    u.register("graft_kll_quantile",
-      (bytes: Array[Byte], q: Double) =>
-        KllSketch.deserialize(bytes).quantile(q))
-    u.register("graft_minhash_jaccard",
-      (a: Array[Long], b: Array[Long]) => MinHash.estimateJaccard(a, b))
-    // simhash/hamming/tokenize/cosine/minhash are injected above as
-    // NATIVE expressions (scalarBuilders), not UDFs
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
   }
 }
 
@@ -391,14 +401,7 @@ object sql {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
-    (sql.aggregateBuilders ++ sql.scalarBuilders).foreach {
-      case (name, (usage, builder)) =>
-        e.injectFunction((
-          FunctionIdentifier(name),
-          // surface the usage string: DESCRIBE FUNCTION <name> shows it
-          new ExpressionInfo("graft", null, name, usage, ""),
-          builder))
-    }
+    sql.all.foreach(e.injectFunction)
     e.injectOptimizerRule(graft.plans.GraftRuntimeFilter(_))
   }
 }

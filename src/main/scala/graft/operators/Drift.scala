@@ -480,8 +480,10 @@ object Drift {
     val spark = snapshot.sparkSession
     val F = graft.functions.functions
     val live = liveReferenceDir(spark, dir)
+    // pinned: a later writeReferenceCounts GCs this version's files
     val va = spark.read.parquet(s"$live/lengths")
       .select(col("n_tok"), col("cnt").as("cnt_a"))
+      .localCheckpoint(true)
     val meta = spark.read.parquet(s"$live/length_sketch").head()
     val nA = meta.getAs[Long]("n_docs")
     val a = graft.core.KllSketch.deserialize(meta.getAs[Array[Byte]]("kll"))

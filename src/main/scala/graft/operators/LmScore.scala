@@ -326,7 +326,8 @@ object LmScore {
     val fs = log.getFileSystem(conf)
     val next = new org.apache.hadoop.fs.Path(s"$dir/batches.next")
     if (fs.exists(next)) {
-      if (!fs.exists(log)) fs.rename(next, log)
+      if (!fs.exists(log))
+        require(fs.rename(next, log), s"heal: rename failed in $dir")
       else fs.delete(next, true)
     }
   }
@@ -538,7 +539,8 @@ object LmScore {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches.next")
       val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
       fs.delete(log, true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$dir/batches.next"), log)
+      require(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/batches.next"), log),
+        s"compact: rename failed in $dir")
     }
     val live = if (committed.size > 1) Set(newId) else committed
     (Seq("uni", "big") ++ (if (hasWords) Seq("words") else Nil))

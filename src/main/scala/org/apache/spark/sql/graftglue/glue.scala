@@ -2,7 +2,9 @@ package org.apache.spark.sql.graftglue
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ExpressionUtils, UserDefinedFunctionUtils}
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction,
+  UserDefinedFunction}
 
 /** Minimal bridge into Spark's `private[sql]` Column<->Expression
   * converters (org.apache.spark.sql.classic.ExpressionUtils). Lives under
@@ -13,4 +15,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object glue {
   def columnOf(e: Expression): Column = ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The ScalaUDF a Column-API `udf` val plans as, over analyzer-side
+    * children — what `spark.udf.register` builds, so one udf val serves
+    * both the Column API and SQL. (`expressionOf(u(cols))` is not a
+    * substitute: it leaves an unresolved column node that fails codegen.)
+    */
+  def udfExpression(u: UserDefinedFunction,
+                    children: Seq[Expression]): Expression =
+    UserDefinedFunctionUtils.toScalaUDF(
+      u.asInstanceOf[SparkUserDefinedFunction], children)
 }

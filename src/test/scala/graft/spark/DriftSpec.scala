@@ -388,6 +388,20 @@ class DriftSpec extends AnyFunSuite {
       Map("x" -> 4L, "y" -> 2L, "q" -> 1L, "r" -> 1L, "s" -> 1L))
   }
 
+  test("lengthDriftVsReference reads the version live when it was built") {
+    // the frame is built, then a new reference version is written (its
+    // GC deletes the old version's files) before the frame is consumed
+    val a = docs(0L -> "x x x x y y", 1L -> "q r s")
+    val b = docs(2L -> "x y y z z z", 3L -> "q q t")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-drift-pin").toString
+    Drift.writeReferenceCounts(a, dir)
+    val expected = Drift.lengthDrift(a, b).collect().toSeq
+    val drift = Drift.lengthDriftVsReference(b, dir)
+    Drift.writeReferenceCounts(b, dir)
+    assert(drift.collect().toSeq == expected)
+  }
+
   test("pmiPhrases: planted collocation tops the list with exact lift") {
     // "aa bb" always adjacent (4 times); fillers independent
     val d = docs(

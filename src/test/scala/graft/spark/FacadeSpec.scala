@@ -1,30 +1,36 @@
 package graft.spark
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{aggregators, functions => F}
-import graft.sources.{TokenDoc, TokenDocGen}
+import graft.functions.{functions => F}
+import graft.sources.TokenDocGen
 
-/** Coverage for the two secondary surfaces: the typed Aggregator facade
-  * (Dataset API users) and the spark.sql.extensions injection path.
+/** Coverage for the secondary surfaces: typed Dataset views over the
+  * native aggregates, and the SQL surface through both entry points
+  * (spark.sql.extensions injection and runtime registerAll).
   */
 class FacadeSpec extends AnyFunSuite {
 
-  test("GraftExtensions injects SQL functions at session build time") {
-    // getOrCreate ignores withExtensions when a session already exists
-    // (e.g. created by an earlier suite in this JVM) — build fresh
+  /** A new session, optionally with GraftExtensions: getOrCreate ignores
+    * withExtensions when a session already exists (e.g. created by an
+    * earlier suite in this JVM), so stop that one first.
+    */
+  private def freshSession(withGraftExtensions: Boolean): SparkSession = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[2]")
-      .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    (if (withGraftExtensions) b.withExtensions(new graft.functions.GraftExtensions)
+     else b).getOrCreate()
+  }
+
+  test("GraftExtensions injects SQL functions at session build time") {
+    val spark = freshSession(withGraftExtensions = true)
     try {
       import spark.implicits._
       TokenDocGen.generateDf(spark, 200, 5L, 2)
@@ -106,7 +112,49 @@ class FacadeSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
-  test("typed Aggregator facade works through Dataset.groupByKey") {
+  test("GraftExtensions and registerAll expose the same graft_* functions") {
+    def graftNames(spark: SparkSession): Set[String] =
+      spark.catalog.listFunctions().collect().map(_.name)
+        .filter(_.startsWith("graft_")).toSet
+    def usage(spark: SparkSession, name: String): String =
+      spark.sql(s"DESCRIBE FUNCTION $name").collect()
+        .map(_.getString(0)).mkString("\n")
+    val ext = freshSession(withGraftExtensions = true)
+    val (extNames, extHll, extUsage) = try {
+      TokenDocGen.generateDf(ext, 200, 5L, 2).createOrReplaceTempView("t")
+      // the udf accessors resolve and run in the extension session
+      val r = ext.sql(
+        """SELECT graft_hll_estimate(s.h) AS e,
+          |       graft_bloom_might_contain(s.b, graft_token_hash(0)) AS m,
+          |       s.h AS h
+          |FROM (SELECT graft_hll_agg_tokens(tokens, 12) AS h,
+          |             graft_bloom_agg_tokens(tokens, 10000, 0.01) AS b
+          |      FROM t) s""".stripMargin).head()
+      assert(r.getDouble(0) ==
+        graft.core.HyperLogLog.deserialize(r.getAs[Array[Byte]]("h")).estimate)
+      assert(r.getBoolean(1), "token 0 (most frequent) must be present")
+      (graftNames(ext), r.getDouble(0), usage(ext, "graft_hll_estimate"))
+    } finally ext.stop()
+    val rt = freshSession(withGraftExtensions = false)
+    graft.functions.sql.registerAll(rt)
+    assert(extNames.contains("graft_hll_estimate"))
+    assert(extNames.contains("graft_bloom_agg_tokens"))
+    assert(extNames.contains("graft_tokenize"))
+    assert(graftNames(rt) == extNames,
+      s"only ext: ${extNames -- graftNames(rt)}; " +
+        s"only registerAll: ${graftNames(rt) -- extNames}")
+    // usage strings reach DESCRIBE FUNCTION on both entry points
+    for (u <- Seq(extUsage, usage(rt, "graft_hll_estimate")))
+      assert(u.contains("graft_hll_estimate(sketch) - HyperLogLog"), u)
+    assert(usage(rt, "graft_bloom_agg_tokens")
+      .contains("graft_bloom_agg_tokens(tokens, capacity, fpr"))
+    // same estimate through registerAll
+    TokenDocGen.generateDf(rt, 200, 5L, 2).createOrReplaceTempView("t")
+    assert(rt.sql("SELECT graft_hll_estimate(graft_hll_agg_tokens(tokens, " +
+      "12)) FROM t").head().getDouble(0) == extHll)
+  }
+
+  test("typed Dataset view works through Dataset.groupByKey") {
     val spark = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
@@ -114,29 +162,27 @@ class FacadeSpec extends AnyFunSuite {
       .getOrCreate()
     import spark.implicits._
     val ds = TokenDocGen.generate(spark, 500, 9L, 4)
+    // a typed Dataset takes the native Column with a typed view
     val typedResult = ds.groupByKey(_.source)
-      .mapValues(_.tokens)
-      .agg(new aggregators.BloomTokensAgg(65536, 5).toColumn.name("bloom"))
+      .agg(F.bloom_agg_tokens(col("tokens"), 10000, 0.01).as[Array[Byte]])
       .collect().toMap
-    // equals the native-aggregate DataFrame path bit-for-bit
+    // equals the untyped DataFrame path bit-for-bit
     val nativeResult = ds.toDF().groupBy(col("source"))
-      .agg(graft.functions.catalyst.aggCol(
-        graft.functions.catalyst.BloomTokensAggregate(
-          graft.functions.catalyst.expr(col("tokens")), 65536, 5))
-        .as("bloom"))
+      .agg(F.bloom_agg_tokens(col("tokens"), 10000, 0.01).as("bloom"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]]("bloom"))
       .toMap
+    assert(typedResult.nonEmpty)
     assert(typedResult.keySet == nativeResult.keySet)
     typedResult.foreach { case (k, bytes) =>
       assert(java.util.Arrays.equals(bytes, nativeResult(k)),
-        s"typed facade diverged from native aggregate for $k")
+        s"typed view diverged from the DataFrame aggregate for $k")
     }
   }
 
-  test("every typed Aggregator matches its core sketch bit-for-bit") {
-    // the facade classes are the Dataset-API surface; each must produce
-    // the SAME wire bytes as a direct core-class build over the same
-    // rows (divergence guard for the hand-written reduce loops)
+  test("every native sketch aggregate matches its core sketch bit-for-bit") {
+    // each F.* builder and union must produce the SAME wire bytes as a
+    // direct core-class build over the same rows (divergence guard for
+    // the hand-written update loops in catalyst.scala)
     val spark = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
@@ -147,83 +193,96 @@ class FacadeSpec extends AnyFunSuite {
     val tokens = (0 until 400).map(i =>
       Array.tabulate(20)(j => (i * 31 + j * 7) % 5000))
     val hashes = tokens.flatten.map(Hashing.tokenHash(_)).toArray
-    val tokDs = spark.createDataset(tokens)
-    val hashDs = hashes.toSeq.toDS()
-    def one[B](ds: org.apache.spark.sql.Dataset[B],
-               agg: org.apache.spark.sql.expressions.Aggregator[B, _, Array[Byte]]): Array[Byte] =
-      ds.groupByKey(_ => 0).agg(agg.toColumn).collect().head._2
+    // several partitions, so every partial -> merge path runs
+    val tokDf = tokens.toDF("x").repartition(3)
+    val hashDf = hashes.toSeq.toDF("x").repartition(3)
+    def one(df: org.apache.spark.sql.DataFrame,
+            agg: org.apache.spark.sql.Column): Array[Byte] =
+      df.agg(agg).head().getAs[Array[Byte]](0)
+    def same(a: Array[Byte], b: Array[Byte]): Boolean =
+      java.util.Arrays.equals(a, b)
+    // two disjoint halves of the stream, serialized, for the unions
+    def halves[S](mk: () => S)(add: (S, Long) => Unit): (S, S) = {
+      val a = mk(); val b = mk()
+      hashes.zipWithIndex.foreach { case (h, ix) =>
+        add(if (ix % 2 == 0) a else b, h)
+      }
+      (a, b)
+    }
+    val x = col("x")
     // Bloom: tokens / hash / union forms vs one core build
-    val coreBloom = BlockedBloomFilter(1 << 16, 5)
+    val (nbits, k) = BloomConfig.optimize(8000, 0.01)
+    val coreBloom = BlockedBloomFilter(nbits, k)
     hashes.foreach(coreBloom.add)
     val bloomDump = BloomIO.dump(coreBloom)
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.BloomTokensAgg(1 << 16, 5)), bloomDump))
-    assert(java.util.Arrays.equals(
-      one(hashDs, new aggregators.BloomHashAgg(1 << 16, 5)), bloomDump))
-    assert(java.util.Arrays.equals(
-      one(Seq(bloomDump, bloomDump).toDS(),
-        new aggregators.BloomUnionAgg(1 << 16, 5)), bloomDump))
-    // HLL
+    assert(same(one(tokDf, F.bloom_agg_tokens(x, 8000, 0.01)), bloomDump))
+    assert(same(one(hashDf, F.bloom_agg_hash(x, 8000, 0.01)), bloomDump))
+    val (bA, bB) = halves(() => BlockedBloomFilter(nbits, k))(_.add(_))
+    assert(same(one(Seq(BloomIO.dump(bA), BloomIO.dump(bB)).toDF("x"),
+      F.bloom_union_agg(x, nbits, k)), bloomDump))
+    // HLL: union is register-max
     val coreHll = HyperLogLog(12)
     hashes.foreach(coreHll.add)
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.HllTokensAgg(12)), coreHll.serialize()))
-    assert(java.util.Arrays.equals(
-      one(hashDs, new aggregators.HllHashAgg(12)), coreHll.serialize()))
-    // CMS
+    assert(same(one(tokDf, F.hll_agg_tokens(x, 12)), coreHll.serialize()))
+    assert(same(one(hashDf, F.hll_agg_hash(x, 12)), coreHll.serialize()))
+    val (hA, hB) = halves(() => HyperLogLog(12))(_.add(_))
+    assert(same(one(Seq(hA.serialize(), hB.serialize()).toDF("x"),
+      F.hll_union_agg(x, 12)), coreHll.serialize()))
+    // CMS: union is counter-add
     val coreCms = CountMinSketch(4, 1 << 12)
     hashes.foreach(h => coreCms.add(h))
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.CmsTokensAgg(4, 1 << 12)),
+    assert(same(one(tokDf, F.cms_agg_tokens(x, 4, 1 << 12)),
       coreCms.serialize()))
-    assert(java.util.Arrays.equals(
-      one(hashDs, new aggregators.CmsHashAgg(4, 1 << 12)),
+    assert(same(one(hashDf, F.cms_agg_hash(x, 4, 1 << 12)),
       coreCms.serialize()))
+    val (cA, cB) = halves(() => CountMinSketch(4, 1 << 12))((s, h) => s.add(h))
+    assert(same(one(Seq(cA.serialize(), cB.serialize()).toDF("x"),
+      F.cms_union_agg(x, 4, 1 << 12)), coreCms.serialize()))
     // Theta: order-insensitive, byte-exact vs the core build
     val coreTheta = ThetaSketch(256)
     hashes.foreach(coreTheta.add)
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.ThetaTokensAgg(256)),
-      coreTheta.serialize()))
-    assert(java.util.Arrays.equals(
-      one(Seq(coreTheta.serialize(), coreTheta.serialize()).toDS(),
-        new aggregators.ThetaUnionAgg(256)), coreTheta.serialize()))
-    // Tuple: order-insensitive keys, ADDITIVE summaries — byte-exact vs
-    // the core build; union test merges two DISJOINT halves (tuple
-    // union is not idempotent, unioning the same sketch doubles sums)
+    assert(same(one(tokDf, F.theta_agg_tokens(x, 256)), coreTheta.serialize()))
+    assert(same(one(hashDf, F.theta_agg_hash(x, 256)), coreTheta.serialize()))
+    val (tA, tB) = halves(() => ThetaSketch(256))(_.add(_))
+    assert(same(one(Seq(tA.serialize(), tB.serialize()).toDF("x"),
+      F.theta_union_agg(x, 256)), coreTheta.serialize()))
+    // Tuple: order-insensitive keys, ADDITIVE summaries; the union
+    // merges two DISJOINT halves (tuple union is not idempotent,
+    // unioning the same sketch doubles sums)
     val coreTuple = TupleSketch(256)
     hashes.foreach(h => coreTuple.add(h, 1L))
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.TupleTokensAgg(256)),
+    assert(same(one(tokDf, F.tuple_agg_tokens(x, 256)), coreTuple.serialize()))
+    assert(same(one(hashDf, F.tuple_agg_hash(x, lit(1L), 256)),
       coreTuple.serialize()))
-    val halfA = TupleSketch(256); val halfB = TupleSketch(256)
-    hashes.zipWithIndex.foreach { case (h, ix) =>
-      if (ix % 2 == 0) halfA.add(h, 1L) else halfB.add(h, 1L)
-    }
-    assert(java.util.Arrays.equals(
-      one(Seq(halfA.serialize(), halfB.serialize()).toDS(),
-        new aggregators.TupleUnionAgg(256)), coreTuple.serialize()))
+    val (uA, uB) = halves(() => TupleSketch(256))(_.add(_, 1L))
+    assert(same(one(Seq(uA.serialize(), uB.serialize()).toDF("x"),
+      F.tuple_union_agg(x, 256)), coreTuple.serialize()))
     // Freq (Misra-Gries): in the EXACT regime (distinct <= k at every
     // node) no decrement fires and the state is a pure count map —
     // byte-exact vs the core build at any partitioning
     val coreFreq = FreqSketch.longs(8192)
     tokens.flatten.foreach(t =>
       coreFreq.update(java.lang.Long.valueOf(t.toLong)))
-    assert(java.util.Arrays.equals(
-      one(tokDs, new aggregators.FreqTokensAgg(8192)),
-      coreFreq.serialize()))
+    assert(same(one(tokDf, F.freq_agg_tokens(x, 8192)), coreFreq.serialize()))
     val words = tokens.flatten.map(t => s"w${t % 50}")
     val coreFreqStr = FreqSketch.strings(64)
     words.foreach(coreFreqStr.update(_))
-    assert(java.util.Arrays.equals(
-      one(words.toDS(), new aggregators.FreqStrAgg(64)),
+    assert(same(one(words.toDF("x").repartition(3), F.freq_agg_str(x, 64)),
       coreFreqStr.serialize()))
     // t-digest / KLL merges are order-sensitive, so compare estimates
     // (rank-level agreement), not bytes
     val vals = (0 until 4000).map(i => Hashing.toUnitDouble(Hashing.at(3, i)))
-    val tdBytes = one(vals.toDS(), new aggregators.TDigestAgg(100.0))
+    val valDf = vals.toDF("x").repartition(3)
+    val tdBytes = one(valDf, F.tdigest_agg(x, 100.0))
     assert(math.abs(TDigest.deserialize(tdBytes).quantile(0.5) - 0.5) < 0.05)
-    val kllBytes = one(vals.toDS(), new aggregators.KllAgg(200))
+    val kllBytes = one(valDf, F.kll_agg(x, 200))
     assert(math.abs(KllSketch.deserialize(kllBytes).quantile(0.5) - 0.5) < 0.05)
+    // MinHash: the set signature of the token union, with the udaf's
+    // old output schema (array<bigint> without null elements)
+    val sigDf = tokDf.agg(F.minhash_agg_tokens(x, 64).as("sig"))
+    assert(sigDf.schema("sig").dataType == org.apache.spark.sql.types
+      .ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))
+    assert(sigDf.head().getSeq[Long](0) ==
+      MinHash.signatureOfTokens(tokens.flatten.distinct.toArray, 64).toSeq)
   }
 }

@@ -64,6 +64,32 @@ class PlanSpec extends AnyFunSuite {
       s"expected exactly one shuffle:\n$plan")
   }
 
+  test("checkpoint resume and minhash_agg_tokens plan no ScalaAggregator") {
+    // every sketch aggregate is a native TypedImperativeAggregate; the
+    // udaf encoder path (ScalaAggregator) costs ~6x the kernel
+    val docs = graft.sources.TokenDocGen.generateDf(spark, 300, 11L, 4)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-plan-resume").toString
+    graft.plans.SketchCheckpoint.writePanelPartials(
+      docs, "source", 10000, 0.01, dir, "s1")
+    val resumed = graft.plans.SketchCheckpoint.resumePanel(
+      spark, dir, 10000, 0.01)
+    val minhash = docs.agg(F.minhash_agg_tokens(col("tokens"), 64))
+    // the plan string names a udaf after its Aggregator class, so look
+    // at the expression classes of the executed plan (AQE stages too)
+    val stages = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    for (df <- Seq(resumed, minhash)) {
+      df.collect()
+      val exprClasses = stages.collect(df.queryExecution.executedPlan) {
+        case p => p
+      }.flatMap(_.expressions)
+        .flatMap(_.collect { case e => e.getClass.getSimpleName }).toSet
+      assert(!exprClasses.contains("ScalaAggregator"), planOf(df))
+      assert(planOf(df).contains("ObjectHashAggregate"), planOf(df))
+    }
+  }
+
   test("filter pushdown reaches the parquet scan") {
     val df = spark.read
       .parquet("/root/testdata/sf0.001/lineitem.parquet")
