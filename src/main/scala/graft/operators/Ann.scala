@@ -309,11 +309,9 @@ object Ann {
     // lists/ while overwriting it — the corruption the doc above warns
     // about. (Filesystem symlinks are outside Path identity; a symlinked
     // alias still needs the caller to pass the canonical spelling.)
-    def qualified(p: String): org.apache.hadoop.fs.Path = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(path)
-    }
+    def qualified(p: String): org.apache.hadoop.fs.Path =
+      graft.store.Store.fs(spark, p)
+        .makeQualified(new org.apache.hadoop.fs.Path(p))
     if (outDir == null || qualified(outDir) == qualified(dir))
       writeIvfIndex(corpus.localCheckpoint(), dir, nlist, iters)
     else

@@ -27,12 +27,20 @@ import org.apache.spark.sql.functions._
   * never all-pairs); contamination is the q35 Bloom-prune + exact
   * verify; the audit adds only id-keyed joins of id-sized flag frames
   * on top. No driver collect anywhere. Each tier's NARROW result
-  * (ids + booleans — corpus-row count but a few bytes per row) is
+  * (the quality flags, exact drops, near drops and contaminated ids:
+  * ids + booleans, corpus-row count but a few bytes per row) is
   * eagerly localCheckpoint'ed: every flag frame is referenced at least
   * twice (once to gate the next tier's population, once in the final
   * flag join), and without materialization Catalyst re-evaluates the
   * whole upstream subtree per reference — the Gopher battery and the
   * LSH band join are exactly the work that must run ONCE at 100 TB.
+  * Each tier's survivor POPULATION (`qualitySurv`, `exactSurv`,
+  * `nearSurv`) is lazily localCheckpoint'ed too (materialized when the
+  * next tier first reads it), and these frames are WIDE: full document
+  * rows, text included. Storage cost: up to three corpus-sized text
+  * copies (each a subset of the one before) held in executor block
+  * storage (memory, spilling to disk) until the returned frame is
+  * garbage-collected.
   * (localCheckpoint, not persist: nothing registers in the
   * CacheManager, so no caller-owned lifetime to leak — the house Ann
   * discipline. The op is therefore eager, which a diagnostics pass

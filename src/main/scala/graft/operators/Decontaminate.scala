@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.BloomIO
 import graft.functions.{functions => F}
+import graft.store.Store
 
 /** Eval-set decontamination — the canonical LLM-training use of a Bloom
   * filter: training documents that share word n-grams with a held-out
@@ -342,11 +343,7 @@ object Decontaminate {
       .select(col("ng")).distinct()
       .write.mode("overwrite").parquet(s"$dir/ngrams")
     val storedNg = spark.read.parquet(s"$dir/ngrams")
-    val filter = filterFromNgrams(storedNg, fpr, expectedEvalNgrams)
-    val out = hadoopFs(spark, dir)
-      .create(filterPath(dir), true)
-    try out.write(BloomIO.dump(filter, comment = "graft/v1 eval-ngrams"))
-    finally out.close()
+    writeFilter(spark, dir, filterFromNgrams(storedNg, fpr, expectedEvalNgrams))
     Seq((n, fpr)).toDF("n", "fpr")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
   }
@@ -403,26 +400,31 @@ object Decontaminate {
     // fresh and heals both files; the opposite order would hit the
     // nFresh==0 early return above with a stale filter — permanent
     // false negatives for the new eval docs.
-    val out = hadoopFs(spark, dir).create(filterPath(dir), true)
-    try out.write(BloomIO.dump(filter, comment = "graft/v1 eval-ngrams"))
-    finally out.close()
+    writeFilter(spark, dir, filter)
     fresh.write.mode("append").parquet(s"$dir/ngrams")
   }
 
-  private def filterPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "filter.bloom")
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Replace `filter.bloom` through one `graft.store.Store` swap, so a
+    * crash mid-write never leaves a truncated live filter.
+    */
+  private def writeFilter(spark: org.apache.spark.sql.SparkSession,
+                          dir: String,
+                          filter: graft.core.BlockedBloomFilter): Unit =
+    Store.swap(spark, dir, "filter.bloom") { next =>
+      val out = Store.fs(spark, dir)
+        .create(new org.apache.hadoop.fs.Path(next), true)
+      try out.write(BloomIO.dump(filter, comment = "graft/v1 eval-ngrams"))
+      finally out.close()
+    }
 
   /** Load the persisted filter (for [[graft.streaming.StreamingSketches
     * .streamingDecontaminate]] or ad-hoc probes).
     */
   def loadEvalFilter(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String): graft.core.BlockedBloomFilter = {
-    val in = hadoopFs(spark, indexDir).open(filterPath(indexDir))
+    Store.heal(spark, indexDir, "filter.bloom")
+    val in = Store.fs(spark, indexDir)
+      .open(new org.apache.hadoop.fs.Path(indexDir, "filter.bloom"))
     try BloomIO.loadFrom(in)
     finally in.close()
   }

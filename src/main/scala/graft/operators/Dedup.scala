@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
@@ -535,9 +535,8 @@ object Dedup {
   /** True iff `dir` holds a CC-labeled index (labels_meta present). */
   def hasClusterLabels(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean = {
-    val metaDir = new org.apache.hadoop.fs.Path(s"$dir/labels_meta")
-    metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(metaDir)
+    graft.store.Store.fs(spark, dir)
+      .exists(new org.apache.hadoop.fs.Path(s"$dir/labels_meta"))
   }
 
   /** A pairwise-policy append on a CC-labeled index would leave the
@@ -561,14 +560,52 @@ object Dedup {
       .agg(max(col("threshold"))).head().getDouble(0)
   }
 
+  /** On-disk format of the text dedup index, stamped in every manifest
+    * row as `format_version`. Version 2 stores each tokset sorted: the
+    * `sorted_intersect_size` merge-walk verify silently undercounts
+    * Jaccard on the unsorted toksets older indexes hold, so those are
+    * refused instead of read.
+    */
+  private val IndexFormat = 2
+
   /** (numBands, rowsPerBand, ngram, nDocs, maxDocId) of an index. */
   def readIndexManifest(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): (Int, Int, Int, Long, Long) = {
-    val r = spark.read.parquet(s"$dir/manifest")
-      .agg(max(col("num_bands")), max(col("rows_per_band")),
-        max(col("ngram")), sum(col("n_docs")), max(col("max_doc_id")))
+                        dir: String): (Int, Int, Int, Long, Long) =
+    manifestOf(spark.read.parquet(s"$dir/manifest"), dir)
+
+  /** The one reader of a dedup manifest, directory or table layout (one
+    * row per appended snapshot): refuses a manifest without the current
+    * [[IndexFormat]] stamp.
+    */
+  private def manifestOf(m: DataFrame,
+                         where: String): (Int, Int, Int, Long, Long) = {
+    val stamp =
+      if (m.columns.contains("format_version"))
+        min(coalesce(col("format_version"), lit(0)))
+      else lit(0)
+    val r = m.agg(max(col("num_bands")), max(col("rows_per_band")),
+        max(col("ngram")), sum(col("n_docs")), max(col("max_doc_id")), stamp)
       .head()
+    if (r.getInt(5) < IndexFormat)
+      throw new IllegalStateException(s"dedup index at $where has " +
+        s"format_version ${r.getInt(5)} (0 = unstamped); this build " +
+        s"reads only version $IndexFormat (sorted toksets) — rebuild " +
+        "it with writeDedupIndex")
     (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))
+  }
+
+  /** One stamped manifest row; an all-duplicates snapshot appends zero
+    * docs, so a null max id is recorded as -1 (the monotone check stays
+    * a no-op for it).
+    */
+  private def manifestRow(spark: org.apache.spark.sql.SparkSession,
+                          numBands: Int, rowsPerBand: Int, ngram: Int,
+                          stats: Row): DataFrame = {
+    import spark.implicits._
+    Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
+        if (stats.isNullAt(1)) -1L else stats.getLong(1), IndexFormat))
+      .toDF("num_bands", "rows_per_band", "ngram", "n_docs", "max_doc_id",
+        "format_version")
   }
 
   private def writeIndexState(afterExact: DataFrame, dir: String,
@@ -604,12 +641,7 @@ object Dedup {
         afterExact
           .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
       } finally afterExact.unpersist()
-    import spark.implicits._
-    // an all-duplicates snapshot appends zero docs: record maxDocId -1
-    // so the monotone check stays a no-op for it
-    Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
-        if (stats.isNullAt(1)) -1L else stats.getLong(1)))
-      .toDF("num_bands", "rows_per_band", "ngram", "n_docs", "max_doc_id")
+    manifestRow(spark, numBands, rowsPerBand, ngram, stats)
       .coalesce(1).write.mode(mode).parquet(s"$dir/manifest")
   }
 
@@ -785,7 +817,6 @@ object Dedup {
                             numBands: Int = 32, rowsPerBand: Int = 4,
                             ngram: Int = 1): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val afterExact = docs.join(exactDropIds(docs), Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats =
@@ -805,10 +836,7 @@ object Dedup {
           .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
       } finally afterExact.unpersist()
     graft.sources.BucketedTables.saveTable(
-      Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
-          if (stats.isNullAt(1)) -1L else stats.getLong(1)))
-        .toDF("num_bands", "rows_per_band", "ngram", "n_docs",
-          "max_doc_id"),
+      manifestRow(spark, numBands, rowsPerBand, ngram, stats),
       s"${tablePrefix}_manifest")
   }
 
@@ -823,15 +851,13 @@ object Dedup {
   def dedupIncrementalTables(newDocs: DataFrame, tablePrefix: String,
                              threshold: Double = 0.9): DataFrame = {
     val spark = newDocs.sparkSession
-    val m = spark.table(s"${tablePrefix}_manifest")
-      .agg(max(col("num_bands")), max(col("rows_per_band")),
-        max(col("ngram")), max(col("max_doc_id"))).head()
+    val (nb, rpb, ng, _, maxId) =
+      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
     incrementalPairsFrom(newDocs,
       spark.table(s"${tablePrefix}_digests"),
       spark.table(s"${tablePrefix}_bands"),
       spark.table(s"${tablePrefix}_toksets"),
-      m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3),
-      threshold) match {
+      nb, rpb, ng, maxId, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
         st.newExact
@@ -906,20 +932,18 @@ object Dedup {
                                tablePrefix: String): DataFrame = {
     val spark = newDocs.sparkSession
     val threshold = readLabelsThresholdTables(spark, tablePrefix)
-    val m = spark.table(s"${tablePrefix}_manifest")
-      .agg(max(col("num_bands")), max(col("rows_per_band")),
-        max(col("ngram")), max(col("max_doc_id"))).head()
+    val (nb, rpb, ng, _, maxId) =
+      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
     incrementalPairsFrom(newDocs,
       spark.table(s"${tablePrefix}_digests"),
       spark.table(s"${tablePrefix}_bands"),
       spark.table(s"${tablePrefix}_toksets"),
-      m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3),
-      threshold) match {
+      nb, rpb, ng, maxId, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
         val (drops, _) = ccOverIncrementalPairs(
           spark.table(s"${tablePrefix}_labels"),
-          st.pairsVsCorpus, st.pairsWithin, m.getLong(3))
+          st.pairsVsCorpus, st.pairsWithin, maxId)
         st.newExact.join(drops.withColumnRenamed("id", "doc_id"),
           Seq("doc_id"), "left_anti")
     }
@@ -954,9 +978,7 @@ object Dedup {
     // one consolidated manifest row (the directory may hold one per
     // appended snapshot)
     graft.sources.BucketedTables.saveTable(
-      Seq((nb, rpb, ng, nDocs, maxId))
-        .toDF("num_bands", "rows_per_band", "ngram", "n_docs",
-          "max_doc_id"),
+      manifestRow(spark, nb, rpb, ng, Row(nDocs, maxId)),
       s"${tablePrefix}_manifest")
     if (hasClusterLabels(spark, indexDir)) {
       graft.sources.BucketedTables.writeBucketed(
@@ -1000,13 +1022,12 @@ object Dedup {
   def nearDupHitsVsTables(docs: DataFrame, tablePrefix: String,
                           threshold: Double = 0.9): DataFrame = {
     val spark = docs.sparkSession
-    val m = spark.table(s"${tablePrefix}_manifest")
-      .agg(max(col("num_bands")), max(col("rows_per_band")),
-        max(col("ngram"))).head()
+    val (nb, rpb, ng, _, _) =
+      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
     nearDupHitsFrom(docs,
       spark.table(s"${tablePrefix}_bands"),
       spark.table(s"${tablePrefix}_toksets"),
-      m.getInt(0), m.getInt(1), m.getInt(2), threshold)
+      nb, rpb, ng, threshold)
   }
 
   private def nearDupHitsFrom(docs: DataFrame, bands: DataFrame,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Corpus drift monitors — compare two snapshots of the training corpus
   * (crawl N vs crawl N+1, or any two id/source slices) BEFORE a model is
@@ -94,23 +95,21 @@ object Drift {
     * decision, made loudly via a fresh write, never an accumulation.
     *
     * Layout: versioned dirs `v=<N>/{counts, lengths, length_sketch}`
-    * committed by ONE `_current` pointer swap (the batches.next rule),
-    * so the three tables become visible together or not at all; a
-    * crash at any point leaves either the old baseline or the new one,
-    * never a mix, and superseded/orphaned versions are GC'd by the
-    * next successful write.
+    * committed by ONE `_current` pointer swap (`graft.store.Store`),
+    * so the three tables become visible together or not at all, and
+    * superseded/orphaned versions are GC'd by the next successful write.
     */
   def writeReferenceCounts(docs: DataFrame, dir: String,
                            kllK: Int = 200): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    healReference(spark, dir)
+    Store.heal(spark, dir, "_current")
     val newVer = currentVersion(spark, dir).getOrElse(0L) + 1
     // stage EVERYTHING under the new version dir, then commit with ONE
-    // pointer swap (the batches.next rule): the three tables become
-    // visible together or not at all — a two-table delete-rename dance
-    // would have a crash window exposing a MIXED baseline (new lengths
-    // beside old words), which no heal could tell from a valid one
+    // pointer swap: the three tables become visible together or not at
+    // all — one swap per table would have a crash window exposing a
+    // MIXED baseline (new lengths beside old words), which no heal
+    // could tell from a valid one
     // when the corpus carries a source column, persist the
     // (source × vocab) counts too and DERIVE the global table from
     // them — one corpus explode feeds both, and sourceDriftVsReference
@@ -142,22 +141,19 @@ object Drift {
     Seq((lens.count(), blob)).toDF("n_docs", "kll")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/v=$newVer/length_sketch")
-    // commit: pointer swap, then GC superseded versions
-    Seq(newVer).toDF("version").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_current.next")
-    val f = fsOf(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/_current")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/_current.next")
-    if (f.exists(cur))
-      require(f.delete(cur, true), s"reference swap: delete failed in $dir")
-    require(f.rename(next, cur), s"reference swap: rename failed in $dir")
-    gcReferenceVersions(spark, dir, newVer)
+    // commit: pointer swap, then GC superseded versions (crash
+    // leftovers included: a staged-but-never-committed version is
+    // invisible to readers)
+    Store.swap(spark, dir, "_current") { next =>
+      Seq(newVer).toDF("version").coalesce(1)
+        .write.mode("overwrite").parquet(next)
+    }
+    Store.gc(spark, dir, "v=", Set(newVer))
   }
 
   /** The persisted reference word table, as (w, c) — rename to
     * (t, c_ref) to feed [[windowedTokenDrift]]. Heals a crashed
-    * [[writeReferenceCounts]] swap first (roll a completed pointer
-    * swap forward; drop a half-staged one, keeping the old baseline).
+    * [[writeReferenceCounts]] pointer swap first (`graft.store.Store`).
     */
   def readReferenceCounts(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame =
@@ -168,52 +164,20 @@ object Drift {
     spark.read.parquet(s"${liveReferenceDir(spark, dir)}/counts")
       .localCheckpoint(true)
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def healReference(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Unit = {
-    val f = fsOf(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/_current")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/_current.next")
-    if (f.exists(next)) {
-      if (!f.exists(cur))
-        require(f.rename(next, cur), s"reference heal: rename failed in $dir")
-      else require(f.delete(next, true),
-        s"reference heal: delete failed in $dir")
-    }
-  }
-
   private def currentVersion(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Option[Long] = {
-    val f = fsOf(spark, dir)
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$dir/_current"))) None
+    if (!Store.fs(spark, dir).exists(
+        new org.apache.hadoop.fs.Path(s"$dir/_current"))) None
     else Some(spark.read.parquet(s"$dir/_current")
       .head().getAs[Long]("version"))
   }
 
   private def liveReferenceDir(spark: org.apache.spark.sql.SparkSession,
                                dir: String): String = {
-    healReference(spark, dir)
+    Store.heal(spark, dir, "_current")
     val ver = currentVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed reference at $dir"))
     s"$dir/v=$ver"
-  }
-
-  /** Drop version dirs superseded by `keep` (crash leftovers included:
-    * a staged-but-never-committed version is invisible to readers and
-    * reclaimed by the next successful write's GC).
-    */
-  private def gcReferenceVersions(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Long): Unit = {
-    val f = fsOf(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    f.listStatus(root).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("v="))
-      .filterNot(_.getPath.getName == s"v=$keep")
-      .foreach(st => f.delete(st.getPath, true))
   }
 
   /** Counts frame (`w, c_a` = reference, `c_b` = snapshot) of a
@@ -598,40 +562,21 @@ object Drift {
   /** Persist the embedding baseline — the dims-sized fixed-point sum
     * vector plus the vector count — so later snapshots screen with
     * [[embeddingDriftVsReference]] without rescanning the reference
-    * (the reference-counts pattern for the embedding table; same
-    * staged-swap commit: the table lands at `sums.next` and one
-    * delete-rename makes it live, readers heal a crashed swap).
+    * (the reference-counts pattern for the embedding table, committed
+    * by one `graft.store.Store` swap of `sums`).
     */
   def writeEmbeddingReference(emb: DataFrame, dir: String,
                               embCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
-    healEmbeddingReference(spark, dir)
     val n = emb.count()
-    emb.select(posexplode(col(embCol)).as(Seq("dim", "v")))
-      .groupBy(col("dim"))
-      .agg(sum(round(col("v").cast("double") * 1024).cast("bigint"))
-        .as("s"))
-      .withColumn("n_vecs", lit(n))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/sums.next")
-    val f = fsOf(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/sums")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/sums.next")
-    if (f.exists(cur))
-      require(f.delete(cur, true), s"emb reference swap: delete failed in $dir")
-    require(f.rename(next, cur), s"emb reference swap: rename failed in $dir")
-  }
-
-  private def healEmbeddingReference(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val f = fsOf(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/sums")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/sums.next")
-    if (f.exists(next)) {
-      if (!f.exists(cur))
-        require(f.rename(next, cur), s"emb reference heal: rename failed in $dir")
-      else require(f.delete(next, true),
-        s"emb reference heal: delete failed in $dir")
+    Store.swap(spark, dir, "sums") { next =>
+      emb.select(posexplode(col(embCol)).as(Seq("dim", "v")))
+        .groupBy(col("dim"))
+        .agg(sum(round(col("v").cast("double") * 1024).cast("bigint"))
+          .as("s"))
+        .withColumn("n_vecs", lit(n))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(next)
     }
   }
 
@@ -641,7 +586,7 @@ object Drift {
   def embeddingDriftVsReference(snapshot: DataFrame, dir: String,
                                 embCol: String = "embedding"): DataFrame = {
     val spark = snapshot.sparkSession
-    healEmbeddingReference(spark, dir)
+    Store.heal(spark, dir, "sums")
     val ref = spark.read.parquet(s"$dir/sums").localCheckpoint(true)
     val nA = ref.head().getAs[Long]("n_vecs")
     val sb = snapshot
@@ -670,7 +615,7 @@ object Drift {
   def windowedEmbeddingDrift(windowed: DataFrame,
                              dir: String): DataFrame = {
     val spark = windowed.sparkSession
-    healEmbeddingReference(spark, dir)
+    Store.heal(spark, dir, "sums")
     val ref = spark.read.parquet(s"$dir/sums")
       .select(col("dim"), col("s").as("s_a"), col("n_vecs").as("n_a"))
       .localCheckpoint(true)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{expressions => E}
+import graft.store.Store
+import graft.store.Store.BatchLog
 
 /** CCNet-style n-gram language-model quality scoring (Wenzek et al.
   * 2020): train a smoothed bigram model on a trusted reference slice of
@@ -240,16 +242,15 @@ object LmScore {
   // fold in WITHOUT rescanning old ones. Layout:
   //   dir/uni/batch_id=<b>/   (w, c1)  per-batch unigram counts
   //   dir/big/batch_id=<b>/   (ng, c2) per-batch bigram counts
-  //   dir/batches             one (batch_id) row per COMMITTED batch
+  //   dir/batches             the graft.store BatchLog of COMMITTED batches
   //   dir/manifest            (order) — probe-compatibility guard
   // Counts are log-structured: each batch holds ITS OWN counts and the
   // reader sums across committed batches (counts are mergeable, the
-  // same partial->final property every sketch here leans on). The
-  // WRITE ORDER is the crash-recovery contract: batch data first,
-  // commit row second. A crash in between leaves an uncommitted
-  // partition the reader ignores; re-running the same append OVERWRITES
-  // that partition and then commits — no double counting, no partial
-  // reads (the eval-index append discipline, applied to count tables).
+  // same partial->final property every sketch here leans on). Commits,
+  // heals and exactly-once replays are `graft.store.Store.BatchLog`'s:
+  // a crashed append leaves an uncommitted partition the reader
+  // ignores, and re-running it OVERWRITES that partition and then
+  // commits — no double counting, no partial reads.
 
   /** Build and persist the model from the initial reference batch.
     * `order` > 2 adds a third per-batch count table, `words/` (the
@@ -289,77 +290,30 @@ object LmScore {
       .parquet(s"$dir/drift_baseline")
     Seq(order).toDF("order")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
-    Seq((0L, -1L)).toDF("batch_id", "folded_up_to")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches")
-  }
-
-  /** The batches log: (committed batch ids, highest batch id ever
-    * folded by a compaction). `folded_up_to` is what keeps the append
-    * exactly-once key valid ACROSS compactions: a replayed
-    * `appendToLmModel(batchId = k)` whose batch was folded away no
-    * longer finds k in the committed set — without the high-water mark
-    * it would re-append and silently double-count the batch.
-    */
-  private def readBatchesLog(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): (Set[Long], Long) = {
-    val rows = spark.read.parquet(s"$dir/batches")
-      .collect() // bounded: #appends
-    (rows.map(_.getAs[Long]("batch_id")).toSet,
-      rows.map(_.getAs[Long]("folded_up_to")).max)
-  }
-
-  /** Roll the batches log forward/backward after a crashed
-    * [[compactLmModel]]: the compaction switch stages the new log at
-    * `batches.next` and then delete-renames it over `batches`, so the
-    * only non-atomic window leaves either (a) `batches` missing with
-    * `batches.next` present — the switch was past the point of no
-    * return (the compacted batch is durable), complete it by renaming
-    * forward — or (b) both present — the switch never started, the
-    * staged log is garbage, drop it and let the re-run redo it. Called
-    * from every reader/writer entry point, so the protocol is
-    * self-healing: any crash at any point heals on the next touch.
-    */
-  private def healBatchesLog(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = log.getFileSystem(conf)
-    val next = new org.apache.hadoop.fs.Path(s"$dir/batches.next")
-    if (fs.exists(next)) {
-      if (!fs.exists(log))
-        require(fs.rename(next, log), s"heal: rename failed in $dir")
-      else fs.delete(next, true)
-    }
+    BatchLog.commit(spark, dir, Set(0L), -1L)
   }
 
   /** Fold a NEW reference batch into the model under caller-chosen
-    * `batchId` (exactly-once key: an id already committed is a no-op,
-    * so retries are safe). Scales with the new batch only — stored
-    * batches are never read, let alone rescanned.
+    * `batchId` (exactly-once key: an id already committed, or folded
+    * away by a compaction, is a no-op, so retries are safe). Scales with
+    * the new batch only — stored batches are never read, let alone
+    * rescanned.
     */
   def appendToLmModel(newRef: DataFrame, dir: String, batchId: Long,
                       textCol: String = "text"): Unit = {
     require(batchId > 0, "batchId 0 is the initial build; use > 0")
     val spark = newRef.sparkSession
-    import spark.implicits._
-    healBatchesLog(spark, dir)
     val order = spark.read.parquet(s"$dir/manifest")
       .head().getAs[Int]("order")
-    val (committed, foldedUpTo) = readBatchesLog(spark, dir)
-    // exactly-once across compactions: a batch id at or under the fold
-    // high-water mark was committed once and then folded away — a
-    // replay must stay a no-op, not a double count
-    if (committed(batchId) || batchId <= foldedUpTo) return
-    driftGate(newRef, dir, textCol)
-    contextCounts(newRef, order, textCol)
-      .write.mode("overwrite").parquet(s"$dir/uni/batch_id=$batchId")
-    ngramCounts(newRef, order, textCol)
-      .write.mode("overwrite").parquet(s"$dir/big/batch_id=$batchId")
-    if (order > 2) unigramCounts(newRef, textCol)
-      .write.mode("overwrite").parquet(s"$dir/words/batch_id=$batchId")
-    // data durable -> now commit (see write-order contract above)
-    Seq((batchId, -1L)).toDF("batch_id", "folded_up_to")
-      .write.mode("append").parquet(s"$dir/batches")
+    BatchLog.append(spark, dir, batchId) {
+      driftGate(newRef, dir, textCol)
+      contextCounts(newRef, order, textCol)
+        .write.mode("overwrite").parquet(s"$dir/uni/batch_id=$batchId")
+      ngramCounts(newRef, order, textCol)
+        .write.mode("overwrite").parquet(s"$dir/big/batch_id=$batchId")
+      if (order > 2) unigramCounts(newRef, textCol)
+        .write.mode("overwrite").parquet(s"$dir/words/batch_id=$batchId")
+    }
   }
 
   /** Drift gate on model appends (the engine's no-silent-degradation
@@ -390,9 +344,8 @@ object LmScore {
     require(Set("warn", "refuse", "off")(action),
       s"spark.graft.lm.driftAction must be warn|refuse|off, got $action")
     if (action == "off") return
-    val conf = spark.sessionState.newHadoopConf()
-    val basePath = new org.apache.hadoop.fs.Path(s"$dir/drift_baseline")
-    if (!basePath.getFileSystem(conf).exists(basePath)) return
+    if (!Store.fs(spark, dir).exists(
+        new org.apache.hadoop.fs.Path(s"$dir/drift_baseline"))) return
     val tol = spark.conf.get("spark.graft.lm.driftTolerance", "0.25")
       .toDouble
     val head = spark.read.parquet(s"$dir/drift_baseline")
@@ -462,10 +415,9 @@ object LmScore {
     */
   private def modelCounts(spark: org.apache.spark.sql.SparkSession,
                           dir: String): ModelCounts = {
-    healBatchesLog(spark, dir)
     val order = spark.read.parquet(s"$dir/manifest")
       .head().getAs[Int]("order")
-    val committed = readBatchesLog(spark, dir)._1.toSeq
+    val committed = BatchLog.read(spark, dir)._1.toSeq
     require(committed.nonEmpty, s"no committed batches at $dir")
     // lazily checkpointed: the summed context table feeds both the
     // vocab scalar and the scoring join (see scoreDocs), and the local
@@ -490,68 +442,30 @@ object LmScore {
     * [[Dedup.compactDedupIndexTables]]: appends stay cheap and
     * log-structured, compaction periodically pays one summing pass so
     * the read path stops re-summing N batch partitions per score.
-    * Crash-safe at every step, in write order:
-    *  1. summed counts land under a FRESH batch id (uncommitted —
-    *     invisible to every reader; a crash here leaves garbage the
-    *     final GC of a re-run removes);
-    *  2. the new one-row batches log is staged at `batches.next`;
-    *  3. the switch: delete `batches`, rename the staged log over it
-    *     ([[healBatchesLog]] rolls a crash inside the switch forward
-    *     from any entry point — the staged log IS the commit record);
-    *  4. GC: batch directories no longer referenced by the log (the
-    *     just-folded ones, plus any append/crash leftovers) are
-    *     deleted; a crash mid-GC leaves uncommitted dirs that stay
-    *     invisible and go away on the next compaction.
+    * The summed counts land under a FRESH batch id and
+    * `Store.BatchLog.compact` switches the log to it: the fold
+    * high-water mark rides in the same log swap, so every folded id is
+    * permanently burned for appends and replays of folded batches stay
+    * no-ops; stale batch dirs are GC'd only after the switch.
     * Answers are unchanged by construction (counts are mergeable;
     * CurationSpec pins score equality before/after), and appends keep
     * working afterwards — the folded batch is just a big batch.
     */
   def compactLmModel(spark: org.apache.spark.sql.SparkSession,
                      dir: String): Unit = {
-    import spark.implicits._
-    healBatchesLog(spark, dir)
-    val (committed, foldedUpTo) = readBatchesLog(spark, dir)
-    require(committed.nonEmpty, s"no committed batches at $dir")
-    val newId = committed.max + 1
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val hasWords =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/words"))
-    if (committed.size > 1) {
-      spark.read.parquet(s"$dir/uni")
-        .filter(col("batch_id").isin(committed.toSeq: _*))
-        .groupBy(col("w")).agg(sum(col("c1")).as("c1"))
-        .write.mode("overwrite").parquet(s"$dir/uni/batch_id=$newId")
-      spark.read.parquet(s"$dir/big")
-        .filter(col("batch_id").isin(committed.toSeq: _*))
-        .groupBy(col("ng")).agg(sum(col("c2")).as("c2"))
-        .write.mode("overwrite").parquet(s"$dir/big/batch_id=$newId")
-      if (hasWords) spark.read.parquet(s"$dir/words")
-        .filter(col("batch_id").isin(committed.toSeq: _*))
-        .groupBy(col("w")).agg(sum(col("c1")).as("c1"))
-        .write.mode("overwrite").parquet(s"$dir/words/batch_id=$newId")
-      // the fold high-water mark rides in the SAME atomic log switch:
-      // every id folded here (up to committed.max) is permanently
-      // burned for appends, so replays of folded batches stay no-ops
-      Seq((newId, math.max(foldedUpTo, committed.max)))
-        .toDF("batch_id", "folded_up_to")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches.next")
-      val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
-      fs.delete(log, true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/batches.next"), log),
-        s"compact: rename failed in $dir")
+    val sides = Seq(("uni", "w", "c1"), ("big", "ng", "c2")) ++
+      (if (Store.fs(spark, dir).exists(
+        new org.apache.hadoop.fs.Path(s"$dir/words")))
+        Seq(("words", "w", "c1")) else Nil)
+    BatchLog.compact(spark, dir, sides.map(t => s"$dir/${t._1}")) {
+      (committed, newId) =>
+        sides.foreach { case (side, key, cnt) =>
+          spark.read.parquet(s"$dir/$side")
+            .filter(col("batch_id").isin(committed.toSeq: _*))
+            .groupBy(col(key)).agg(sum(col(cnt)).as(cnt))
+            .write.mode("overwrite").parquet(s"$dir/$side/batch_id=$newId")
+        }
     }
-    val live = if (committed.size > 1) Set(newId) else committed
-    (Seq("uni", "big") ++ (if (hasWords) Seq("words") else Nil))
-      .foreach { side =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$side"))
-          .filter(_.isDirectory)
-          .filter(_.getPath.getName.startsWith("batch_id="))
-          .filterNot(st =>
-            live(st.getPath.getName.stripPrefix("batch_id=").toLong))
-          .foreach(st => fs.delete(st.getPath, true))
-      }
   }
 
   /** Full-precision twin of [[scoreDocs]]: per-occurrence NLL

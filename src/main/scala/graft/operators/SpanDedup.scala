@@ -161,16 +161,19 @@ object SpanDedup {
     distinctGrams(docs, minLen, textCol).write.mode(mode)
       .parquet(s"$dir/grams")
     val n = spark.read.parquet(s"$dir/grams").count()
-    Seq((minLen, n)).toDF("min_len", "n_grams").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/manifest")
+    graft.store.Store.swap(spark, dir, "manifest") { next =>
+      Seq((minLen, n)).toDF("min_len", "n_grams").coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(next)
+    }
   }
 
   /** Stored gram length of a span index. */
   def readSpanIndexMinLen(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Int =
+                          dir: String): Int = {
+    graft.store.Store.heal(spark, dir, "manifest")
     spark.read.parquet(s"$dir/manifest")
       .agg(max(col("min_len"))).head().getInt(0)
+  }
 
   /** Distinct (rolling-hash, md5) gram keys of a corpus — the stored
     * payload of both index layouts.

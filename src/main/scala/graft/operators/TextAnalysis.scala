@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.core.Hashing
+import graft.store.Store.BatchLog
 
 /** Text-analysis operators for training-data pipelines: quality metrics,
   * token statistics, language ID, and content fingerprints.
@@ -441,7 +442,7 @@ object TextAnalysis {
     *
     *   dir/manifest                 (n, theta_k, tuple_k)
     *   dir/sketches/batch_id=<b>/   per-source sketch rows of batch b
-    *   dir/batches                  committed-batch log (swap-healed)
+    *   dir/batches                  committed-batch log (graft.store BatchLog)
     *
     * Readers union sketch rows across COMMITTED batches at read time
     * (sources x batches rows — trivial at any corpus size). Each
@@ -449,9 +450,7 @@ object TextAnalysis {
     * is correct for BOTH sketch kinds: theta (idempotent set union)
     * and tuple (additive summaries — the reason the old merged-table
     * swap had to go: its "replay is a no-op" contract held only for
-    * idempotent unions). Exactly-once is the committed log: a batch id
-    * already in the log is a no-op on replay; uncommitted batch data
-    * is invisible to readers.
+    * idempotent unions). Exactly-once is the committed log.
     */
   def writeOverlapSketches(docs: DataFrame, dir: String, n: Int = 3,
                            thetaK: Int = 4096, tupleK: Int = 0,
@@ -463,30 +462,7 @@ object TextAnalysis {
     Seq((n, thetaK, tupleK, freqK)).toDF("n", "theta_k", "tuple_k", "freq_k")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
     // log LAST: a crash mid-build leaves no committed log -> no index
-    Seq((0L, -1L)).toDF("batch_id", "folded_up_to")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches")
-  }
-
-  private def fs(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Roll a crashed log swap forward/backward (the LmScore
-    * healBatchesLog rule): `batches` missing with a complete
-    * `batches.next` — the swap passed the point of no return, rename
-    * forward; both present — the swap never started, the staged log is
-    * garbage, drop it (the batch data it named stays invisible until
-    * its append is replayed).
-    */
-  private def healOverlapSketches(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String): Unit = {
-    val f = fs(spark, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val next = new org.apache.hadoop.fs.Path(s"$dir/batches.next")
-    if (f.exists(next)) {
-      if (!f.exists(log)) require(f.rename(next, log), s"heal: rename failed in $dir")
-      else require(f.delete(next, true), s"heal: delete failed in $dir")
-    }
+    BatchLog.commit(spark, dir, Set(0L), -1L)
   }
 
   /** Stored build parameters; `tuple_k`/`freq_k` tolerant of older
@@ -501,23 +477,6 @@ object TextAnalysis {
     (r.getAs[Int]("n"), r.getAs[Int]("theta_k"), tk, fk)
   }
 
-  /** Committed batch ids plus the fold high-water mark (`folded_up_to`
-    * column, -1 on indexes that predate compaction): every id at or
-    * below the mark was committed once and folded away by
-    * [[compactOverlapSketches]] — permanently burned for appends, so
-    * replays of folded batches stay no-ops.
-    */
-  private def committedBatchIds(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): (Set[Long], Long) = {
-    val df = spark.read.parquet(s"$dir/batches")
-    val rows = df.collect()
-    val folded =
-      if (df.columns.contains("folded_up_to"))
-        rows.map(_.getAs[Long]("folded_up_to")).max
-      else -1L
-    (rows.map(_.getAs[Long]("batch_id")).toSet, folded)
-  }
-
   /** The per-source union of all COMMITTED batches — the frame every
     * reader consumes. Sources x batches input rows, sources output
     * rows; bit-identical to a fresh single build over the union of the
@@ -525,9 +484,8 @@ object TextAnalysis {
     */
   private def committedSketches(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): DataFrame = {
-    healOverlapSketches(spark, dir)
     val (_, k, tk, fk) = overlapManifest(spark, dir)
-    val (ids, _) = committedBatchIds(spark, dir)
+    val (ids, _) = BatchLog.read(spark, dir)
     val F = graft.functions.functions
     val aggs = F.theta_union_agg(col("sketch"), k).as("sketch") ::
       ((if (tk > 0) List(F.tuple_union_agg(col("mass_sketch"), tk)
@@ -541,12 +499,9 @@ object TextAnalysis {
   }
 
   /** Fold a new corpus batch in under `batchId` (the exactly-once
-    * replay key: a committed id is a no-op). Write order IS the crash
-    * contract: batch data first (an overwrite — partial data from a
-    * crashed attempt is replaced), then the log via write-next /
-    * delete / rename (healed by [[healOverlapSketches]] from any
-    * entry point). Cost scales with the batch; stored batches are
-    * never read, let alone rescanned.
+    * replay key: a committed or folded id is a no-op), committed
+    * through `Store.BatchLog.append`. Cost scales with the batch;
+    * stored batches are never read, let alone rescanned.
     *
     * `batchId = -1` auto-assigns max(committed)+1 — allowed only on
     * theta-only indexes (replaying the SAME DOCS under a fresh auto id
@@ -557,26 +512,17 @@ object TextAnalysis {
   def appendToOverlapSketches(newDocs: DataFrame, dir: String,
                               batchId: Long = -1L): Unit = {
     val spark = newDocs.sparkSession
-    healOverlapSketches(spark, dir)
     val (n, k, tk, fk) = overlapManifest(spark, dir)
     require(batchId >= 0 || (tk == 0 && fk == 0),
       "mass/freq-enabled overlap index requires an explicit batchId: " +
         "tuple union and freq merge are not idempotent, exactly-once " +
         "needs a replay key")
-    val (committed, foldedUpTo) = committedBatchIds(spark, dir)
-    val id = if (batchId >= 0) batchId else committed.max + 1
-    if (committed(id) || id <= foldedUpTo) return
-    import spark.implicits._
-    perSourceSketchesMass(newDocs, n, k, tk, fk)
-      .write.mode("overwrite").parquet(s"$dir/sketches/batch_id=$id")
-    (committed + id).toSeq.sorted.map((_, foldedUpTo))
-      .toDF("batch_id", "folded_up_to")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches.next")
-    val f = fs(spark, dir)
-    val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    require(f.delete(log, true), s"append: delete failed in $dir")
-    require(f.rename(new org.apache.hadoop.fs.Path(s"$dir/batches.next"), log),
-      s"append: rename failed in $dir")
+    val id =
+      if (batchId >= 0) batchId else BatchLog.read(spark, dir)._1.max + 1
+    BatchLog.append(spark, dir, id) {
+      perSourceSketchesMass(newDocs, n, k, tk, fk)
+        .write.mode("overwrite").parquet(s"$dir/sketches/batch_id=$id")
+    }
   }
 
   /** Mixture preview off the persisted index: the estimated DISTINCT
@@ -618,48 +564,22 @@ object TextAnalysis {
     *
     *  - the folded union is written as a NEW batch id (never in place
     *    — readers of the old log keep working through the whole fold);
-    *  - the log switch is the same atomic write-next/delete/rename the
-    *    appends use, carrying `folded_up_to = max(old committed)` so
-    *    every folded id is permanently burned — replaying an append
-    *    whose batch was folded away stays a no-op;
-    *  - stale batch directories are GC'd only AFTER the switch; a
-    *    crash between switch and GC leaves invisible garbage that the
-    *    next compaction's GC sweeps.
+    *  - `Store.BatchLog.compact` switches the log to it, carrying
+    *    `folded_up_to = max(old committed)` so every folded id is
+    *    permanently burned — replaying an append whose batch was
+    *    folded away stays a no-op — and GCs stale batch dirs only
+    *    AFTER the switch.
     *
     * The folded state is bit-identical to the union the readers were
     * already computing (theta/tuple/freq merges are the same
     * aggregates), so every reader column is unchanged.
     */
   def compactOverlapSketches(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit = {
-    import spark.implicits._
-    healOverlapSketches(spark, dir)
-    val (committed, foldedUpTo) = committedBatchIds(spark, dir)
-    require(committed.nonEmpty, s"no committed batches at $dir")
-    val f = fs(spark, dir)
-    if (committed.size > 1) {
-      val newId = committed.max + 1
+                             dir: String): Unit =
+    BatchLog.compact(spark, dir, Seq(s"$dir/sketches")) { (_, newId) =>
       committedSketches(spark, dir)
         .write.mode("overwrite").parquet(s"$dir/sketches/batch_id=$newId")
-      Seq((newId, math.max(foldedUpTo, committed.max)))
-        .toDF("batch_id", "folded_up_to")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/batches.next")
-      val log = new org.apache.hadoop.fs.Path(s"$dir/batches")
-      require(f.delete(log, true), s"compact: delete failed in $dir")
-      require(f.rename(
-        new org.apache.hadoop.fs.Path(s"$dir/batches.next"), log),
-        s"compact: rename failed in $dir")
     }
-    // GC everything the (possibly just-switched) log no longer names —
-    // folded batches plus any append/crash leftovers
-    val (live, _) = committedBatchIds(spark, dir)
-    f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/sketches"))
-      .filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("batch_id="))
-      .filterNot(st =>
-        live(st.getPath.getName.stripPrefix("batch_id=").toLong))
-      .foreach(st => f.delete(st.getPath, true))
-  }
 
   /** Screen a snapshot against the persisted corpus sketches: per
     * source, estimated distinct grams in the snapshot, in the corpus,

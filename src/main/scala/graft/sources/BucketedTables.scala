@@ -29,8 +29,9 @@ object BucketedTables {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val p = new org.apache.hadoop.fs.Path(
       s"$wh/${table.toLowerCase(java.util.Locale.ROOT)}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val fs = graft.store.Store.fs(spark, p.toString)
+    if (fs.exists(p))
+      require(fs.delete(p, true), s"replaceTable: delete failed for $p")
   }
 
   /** Replace-then-save for small unbucketed tables (manifests). */

@@ -113,6 +113,31 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("numBands"))
   }
 
+  test("an index without the current format_version stamp is refused loudly") {
+    val dir = Files.createTempDirectory("graft-dedup-idx-old").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    // rewrite the manifest as an index written before the stamp existed
+    // (its toksets were unsorted, so reading it would undercount Jaccard)
+    def restamp(stamp: Option[Int]): Unit = {
+      val m = spark.read.parquet(s"$dir/manifest").drop("format_version")
+      val old = spark.createDataFrame(
+        java.util.Arrays.asList(m.collect(): _*), m.schema)
+      stamp.fold(old)(v => old.withColumn("format_version", lit(v)))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
+    }
+    for (stamp <- Seq(None, Some(1))) {
+      restamp(stamp)
+      val refusals = Seq(
+        () => Dedup.dedupIncremental(df(s2), dir).collect(),
+        () => Dedup.writeDedupIndex(df(s2), dir, append = true),
+        () => Dedup.compactDedupIndexTables(spark, dir, "graft_old_idx", 4))
+      refusals.foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("writeDedupIndex"), e.getMessage)
+      }
+    }
+  }
+
   test("embedding incremental dedup == batch drop policy over the union") {
     // deterministic unit vectors in 8-d: near-dups = same base + tiny
     // noise (cosine ~0.999); distinct bases are near-orthogonal

@@ -1,0 +1,158 @@
+package graft.spark
+
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{Decontaminate, SpanDedup}
+import graft.store.Store
+import graft.store.Store.BatchLog
+
+/** Local filesystem under the `crashfs` scheme that throws, instead of
+  * acting, on the first delete or rename of a path whose name is
+  * `CrashFs.failOn` — a process killed right before that step.
+  */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  private def cut(op: String, p: Path): Unit =
+    if (CrashFs.failOn.contains((op, p.getName))) {
+      CrashFs.failOn = None
+      throw new java.io.IOException(s"crash before $op of $p")
+    }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    cut("delete", p); super.delete(p, recursive)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    cut("rename", src); super.rename(src, dst)
+  }
+}
+object CrashFs { @volatile var failOn: Option[(String, String)] = None }
+
+/** The shared commit protocol of every persisted index: a crash after
+  * each step of a swap heals to the old or the new value, and the batch
+  * log keeps its exactly-once contract.
+  */
+class StoreSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+  import spark.implicits._
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  test("swap: a crash after each step heals to the old or the new value") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashFs].getName)
+    def put(p: String, v: String): Unit = {
+      val out = Store.fs(spark, p).create(new Path(p), true)
+      try out.write(v.getBytes(UTF_8)) finally out.close()
+    }
+    def live(dir: String): String = {
+      val f = Store.fs(spark, dir)
+      assert(!f.exists(new Path(dir, "v.next")), "heal leaves no staged copy")
+      val in = f.open(new Path(dir, "v"))
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+    // (crash point, value live after heal): before the delete the old
+    // value is still live; once it is deleted the staged one is the
+    // commit record and rolls forward
+    val cases = Seq(
+      Some(("delete", "v")) -> "old",    // cut after the stage
+      Some(("rename", "v.next")) -> "new", // cut after the delete
+      None -> "new")                     // cut after the rename
+    for ((crash, want) <- cases) {
+      val dir = "crashfs://" + tmp("graft-store-swap")
+      Store.swap(spark, dir, "v")(put(_, "old"))
+      CrashFs.failOn = crash
+      val attempt = scala.util.Try(Store.swap(spark, dir, "v")(put(_, "new")))
+      assert(attempt.isFailure == crash.nonEmpty, s"$crash: $attempt")
+      Store.heal(spark, dir, "v")
+      assert(live(dir) == want, s"crash at $crash")
+      // the next swap lands cleanly on the healed state
+      Store.swap(spark, dir, "v")(put(_, "next"))
+      assert(live(dir) == "next")
+    }
+    // a crash inside the stage leaves a partial copy beside the live
+    // value: dropped, never rolled forward
+    val dir = "crashfs://" + tmp("graft-store-stage")
+    Store.swap(spark, dir, "v")(put(_, "old"))
+    intercept[IllegalStateException] {
+      Store.swap(spark, dir, "v") { next =>
+        put(next, "ne"); throw new IllegalStateException("crash in stage")
+      }
+    }
+    Store.heal(spark, dir, "v")
+    assert(live(dir) == "old")
+  }
+
+  test("BatchLog: exactly-once replay, legacy logs without folded_up_to") {
+    val dir = tmp("graft-store-log")
+    BatchLog.commit(spark, dir, Set(0L), -1L)
+    var writes = 0
+    assert(BatchLog.append(spark, dir, 1L)(writes += 1))
+    assert(!BatchLog.append(spark, dir, 1L)(writes += 1), "committed id")
+    assert(writes == 1)
+    assert(BatchLog.read(spark, dir) == ((Set(0L, 1L), -1L)))
+    // a compaction folds {0, 1} into 2 and burns every id up to 1
+    BatchLog.compact(spark, dir, Nil)((ids, newId) =>
+      assert(ids == Set(0L, 1L) && newId == 2L))
+    assert(BatchLog.read(spark, dir) == ((Set(2L), 1L)))
+    for (id <- Seq(0L, 1L))
+      assert(!BatchLog.append(spark, dir, id)(writes += 1),
+        s"replay of folded id $id must be a no-op")
+    assert(writes == 1)
+    assert(BatchLog.append(spark, dir, 3L)(writes += 1))
+    assert(BatchLog.read(spark, dir) == ((Set(2L, 3L), 1L)))
+
+    // a log written before compaction existed has no folded_up_to
+    val old = tmp("graft-store-oldlog")
+    Seq(0L, 4L).toDF("batch_id").coalesce(1).write.parquet(s"$old/batches")
+    assert(BatchLog.read(spark, old) == ((Set(0L, 4L), -1L)))
+
+    // the multi-file log of a row-appending writer reads the same set,
+    // and its next commit rewrites it as one swapped log
+    val multi = tmp("graft-store-multilog")
+    Seq((0L, -1L)).toDF("batch_id", "folded_up_to")
+      .coalesce(1).write.parquet(s"$multi/batches")
+    for (id <- Seq(1L, 2L))
+      Seq((id, -1L)).toDF("batch_id", "folded_up_to")
+        .write.mode("append").parquet(s"$multi/batches")
+    assert(BatchLog.read(spark, multi) == ((Set(0L, 1L, 2L), -1L)))
+    assert(BatchLog.append(spark, multi, 3L)(()))
+    assert(BatchLog.read(spark, multi) == ((Set(0L, 1L, 2L, 3L), -1L)))
+  }
+
+  test("eval index: loadEvalFilter drops a stale staged filter, rolls a lone one forward") {
+    val evalDocs = Seq((100L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val dir = tmp("graft-store-evalidx")
+    Decontaminate.writeEvalIndex(evalDocs, dir, n = 3, fpr = 1e-6)
+    val want = Decontaminate.loadEvalFilter(spark, dir)
+    val f = Store.fs(spark, dir)
+    val live = new Path(dir, "filter.bloom")
+    val next = new Path(dir, "filter.bloom.next")
+    // a crash mid-stage of a rewrite: truncated copy beside the live one
+    val out = f.create(next, true)
+    try out.write(Array[Byte](1, 2, 3)) finally out.close()
+    assert(Decontaminate.loadEvalFilter(spark, dir) == want)
+    assert(!f.exists(next), "stale staged filter must be dropped")
+    // a crash between delete and rename: only the staged filter is left
+    assert(f.rename(live, next))
+    assert(Decontaminate.loadEvalFilter(spark, dir) == want)
+    assert(f.exists(live) && !f.exists(next))
+  }
+
+  test("span index: readSpanIndexMinLen heals a lone staged manifest") {
+    val corpus = Seq((0L, (1 to 20).map(i => s"a$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val dir = tmp("graft-store-spanidx")
+    SpanDedup.writeSpanIndex(corpus, dir, minLen = 8)
+    val f = Store.fs(spark, dir)
+    assert(f.rename(new Path(dir, "manifest"), new Path(dir, "manifest.next")))
+    assert(SpanDedup.readSpanIndexMinLen(spark, dir) == 8)
+    assert(f.exists(new Path(dir, "manifest")))
+  }
+}
