@@ -8,12 +8,25 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftglue.glue
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
 /** Catalyst-native sketch aggregates — the one definition of every
   * sketch aggregate. The Column API (`functions`), the SQL surface
   * (`sql`) and typed Datasets (`.as[Array[Byte]]` over the Column) all
   * plan these.
+  *
+  * Each sketch's codec lives in one place, its [[SketchKind]]: the
+  * sizing parameters plus `empty`, `merge`, `dump`, `load` and `add`
+  * (fold one scalar input — a hash, a double or a string). The
+  * aggregates take their buffer, merge and wire format from a kind:
+  *  - [[UnionAggregate]] re-aggregates dumped sketches of any kind
+  *    (load-is-union, /root/reference/io.go:151-178);
+  *  - [[ScalarAggregate]] builds any kind from one scalar per row;
+  *  - the token-array aggregates ([[TokenArrayAggregate]]) and
+  *    [[TupleHashAggregate]] keep their own update loops and take the
+  *    rest from their kind;
+  *  - [[SketchPanelAggregate]] fuses three kinds over one token pass.
   *
   * A TypedImperativeAggregate reads the input ArrayData IN PLACE inside
   * `update` — no per-row encoder projection, no Array[Int] copy, no boxed
@@ -33,10 +46,202 @@ object catalyst {
   private def col(e: Expression): Column = glue.columnOf(e)
   def expr(c: Column): Expression = glue.expressionOf(c)
 
-  abstract class TokenArrayAggregate[B] extends TypedImperativeAggregate[B]
-      with UnaryLike[Expression] {
+  /** One sketch's codec and its sizing parameters. Kinds are case
+    * classes, so Catalyst equality and canonicalization still dedupe
+    * identical aggregates.
+    *
+    * @param stem  `prettyName` stem of the aggregates over this kind
+    * @param input type of the scalar input [[add]] folds in
+    */
+  sealed abstract class SketchKind[B](val stem: String, val input: DataType)
+      extends Product with Serializable {
+    def empty(): B
+    def merge(b: B, o: B): B
+    def dump(b: B): Array[Byte]
+    def load(bytes: Array[Byte]): B
+    /** Union one dumped sketch into `b`. */
+    def loadInto(b: B, bytes: Array[Byte]): B = merge(b, load(bytes))
+    /** Fold one non-null scalar input value (of type [[input]]) into `b`. */
+    def add(b: B, v: Any): Unit
+  }
+
+  object SketchKind {
+    /** Blocked Bloom filter of `nbits` bits and `k` hashes over int64
+      * key hashes; the wire format is the reference dump.
+      */
+    case class Bloom(nbits: Long, k: Int)
+        extends SketchKind[BlockedBloomFilter]("bloom", LongType) {
+      def empty(): BlockedBloomFilter = BlockedBloomFilter(nbits, k)
+      def merge(b: BlockedBloomFilter, o: BlockedBloomFilter): BlockedBloomFilter =
+        b.union(o)
+      def dump(b: BlockedBloomFilter): Array[Byte] = BloomIO.dump(b)
+      def load(bytes: Array[Byte]): BlockedBloomFilter = BloomIO.load(bytes)
+      // loads the dump's words straight into the buffer: no filter is
+      // allocated per input row
+      override def loadInto(b: BlockedBloomFilter,
+                            bytes: Array[Byte]): BlockedBloomFilter =
+        BloomIO.load(bytes, Some(b))
+      def add(b: BlockedBloomFilter, v: Any): Unit = b.add(v.asInstanceOf[Long])
+    }
+
+    /** HyperLogLog of precision `p`; union is register-max (all inputs
+      * must share `p`).
+      */
+    case class Hll(p: Int) extends SketchKind[HyperLogLog]("hll", LongType) {
+      def empty(): HyperLogLog = HyperLogLog(p)
+      def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
+      def dump(b: HyperLogLog): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): HyperLogLog = HyperLogLog.deserialize(bytes)
+      def add(b: HyperLogLog, v: Any): Unit = b.add(v.asInstanceOf[Long])
+    }
+
+    /** Count-min sketch; union is counter-add (all inputs must share
+      * depth and width).
+      */
+    case class Cms(depth: Int, width: Int)
+        extends SketchKind[CountMinSketch]("cms", LongType) {
+      def empty(): CountMinSketch = CountMinSketch(depth, width)
+      def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
+      def dump(b: CountMinSketch): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): CountMinSketch = CountMinSketch.deserialize(bytes)
+      def add(b: CountMinSketch, v: Any): Unit = b.add(v.asInstanceOf[Long])
+    }
+
+    /** Theta (KMV) distinct sketch — the intersectable distinct counter
+      * (core/ThetaSketch.scala); HLL is smaller at equal error but
+      * cannot intersect.
+      */
+    case class Theta(k: Int) extends SketchKind[ThetaSketch]("theta", LongType) {
+      def empty(): ThetaSketch = ThetaSketch(k)
+      def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.merge(o)
+      def dump(b: ThetaSketch): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): ThetaSketch = ThetaSketch.deserialize(bytes)
+      def add(b: ThetaSketch, v: Any): Unit = b.add(v.asInstanceOf[Long])
+    }
+
+    /** Tuple sketch — a theta sketch whose retained keys carry additive
+      * 64-bit summaries (core/TupleSketch.scala); union sums equal keys.
+      * A scalar input is a key hash of weight 1.
+      */
+    case class Tuple(k: Int) extends SketchKind[TupleSketch]("tuple", LongType) {
+      def empty(): TupleSketch = TupleSketch(k)
+      def merge(b: TupleSketch, o: TupleSketch): TupleSketch = b.merge(o)
+      def dump(b: TupleSketch): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): TupleSketch = TupleSketch.deserialize(bytes)
+      def add(b: TupleSketch, v: Any): Unit = b.add(v.asInstanceOf[Long], 1L)
+    }
+
+    /** Misra-Gries frequent-items sketch (core/FreqSketch.scala) over raw
+      * long items (identity, not a hash — MG must return the item) or
+      * string items. Deterministic bounds: every reported
+      * [lb, lb+maxError] interval brackets the exact count and no item
+      * above 2N/k can be missing. `strings` selects the buffer codec;
+      * merging a mismatched sketch fails loudly (codec-tag check in
+      * FreqSketch.merge).
+      */
+    case class Freq(k: Int, strings: Boolean)
+        extends SketchKind[FreqSketch]("freq", if (strings) StringType else LongType) {
+      def empty(): FreqSketch =
+        if (strings) FreqSketch.strings(k) else FreqSketch.longs(k)
+      def merge(b: FreqSketch, o: FreqSketch): FreqSketch = b.merge(o)
+      def dump(b: FreqSketch): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): FreqSketch = FreqSketch.deserialize(bytes)
+      def add(b: FreqSketch, v: Any): Unit =
+        if (strings) b.update(v.asInstanceOf[UTF8String].toString)
+        else b.update(java.lang.Long.valueOf(v.asInstanceOf[Long]))
+    }
+
+    /** t-digest over doubles. */
+    case class TDigest(compression: Double)
+        extends SketchKind[graft.core.TDigest]("tdigest", DoubleType) {
+      def empty(): graft.core.TDigest = graft.core.TDigest(compression)
+      def merge(b: graft.core.TDigest, o: graft.core.TDigest): graft.core.TDigest =
+        b.merge(o)
+      def dump(b: graft.core.TDigest): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): graft.core.TDigest =
+        graft.core.TDigest.deserialize(bytes)
+      def add(b: graft.core.TDigest, v: Any): Unit = b.add(v.asInstanceOf[Double])
+    }
+
+    /** KLL quantile sketch over doubles. */
+    case class Kll(k: Int) extends SketchKind[KllSketch]("kll", DoubleType) {
+      def empty(): KllSketch = KllSketch(k)
+      def merge(b: KllSketch, o: KllSketch): KllSketch = b.merge(o)
+      def dump(b: KllSketch): Array[Byte] = b.serialize()
+      def load(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
+      def add(b: KllSketch, v: Any): Unit = b.add(v.asInstanceOf[Double])
+    }
+  }
+  import SketchKind._
+
+  /** A sketch aggregate whose buffer, merge and BinaryType wire output
+    * come from its kind.
+    */
+  abstract class KindAggregate[B] extends TypedImperativeAggregate[B] {
+    def kind: SketchKind[B]
     override def dataType: DataType = BinaryType
     override def nullable: Boolean = false
+    def createAggregationBuffer(): B = kind.empty()
+    def merge(b: B, o: B): B = kind.merge(b, o)
+    def eval(b: B): Any = kind.dump(b)
+    def serialize(b: B): Array[Byte] = kind.dump(b)
+    def deserialize(bytes: Array[Byte]): B = kind.load(bytes)
+  }
+
+  /** Union re-aggregation over dumped sketches of one kind (the
+    * checkpoint resume path and per-source rollups; all inputs must
+    * share the kind's parameters). Null rows are skipped.
+    */
+  case class UnionAggregate[B](
+      child: Expression, kind: SketchKind[B],
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends KindAggregate[B] with UnaryLike[Expression] {
+    override def prettyName: String = kind.stem + "_union_agg"
+    override def update(b: B, input: InternalRow): B = {
+      val v = child.eval(input)
+      if (v == null) b else kind.loadInto(b, v.asInstanceOf[Array[Byte]])
+    }
+    def withNewMutableAggBufferOffset(o: Int): UnionAggregate[B] =
+      copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): UnionAggregate[B] =
+      copy(inputAggBufferOffset = o)
+    protected def withNewChildInternal(c: Expression): UnionAggregate[B] =
+      copy(child = c)
+  }
+
+  /** Sketch build over one scalar column of the kind's input type
+    * (a pre-hashed int64 key, a double or a string). Null rows are
+    * skipped.
+    */
+  case class ScalarAggregate[B](
+      child: Expression, kind: SketchKind[B],
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends KindAggregate[B] with UnaryLike[Expression] {
+    override def prettyName: String = kind.stem + (kind.input match {
+      case LongType => "_agg_hash"
+      case StringType => "_agg_str"
+      case _ => "_agg"
+    })
+    override def update(b: B, input: InternalRow): B = {
+      val v = child.eval(input)
+      if (v != null) kind.add(b, v)
+      b
+    }
+    def withNewMutableAggBufferOffset(o: Int): ScalarAggregate[B] =
+      copy(mutableAggBufferOffset = o)
+    def withNewInputAggBufferOffset(o: Int): ScalarAggregate[B] =
+      copy(inputAggBufferOffset = o)
+    protected def withNewChildInternal(c: Expression): ScalarAggregate[B] =
+      copy(child = c)
+  }
+
+  /** Sketch build over array<int> token columns; null rows and null
+    * tokens are skipped. The per-token hash loops stay hand-written per
+    * class on purpose: a shared per-element callback would be
+    * megamorphic in the hottest loop.
+    */
+  abstract class TokenArrayAggregate[B] extends KindAggregate[B]
+      with UnaryLike[Expression] {
     final override def update(buffer: B, input: InternalRow): B = {
       val v = child.eval(input)
       if (v != null) updateArray(buffer, v.asInstanceOf[ArrayData])
@@ -45,33 +250,11 @@ object catalyst {
     protected def updateArray(buffer: B, arr: ArrayData): Unit
   }
 
-  /** Scalar-input sibling of [[TokenArrayAggregate]]: BinaryType wire
-    * output, non-null, null input rows skipped — the shared scaffolding
-    * of every single-value sketch aggregate, so null semantics cannot
-    * drift between them. (The per-token hash loops in the array
-    * aggregates stay hand-written per class on purpose: a shared
-    * per-element callback would be megamorphic in the hottest loop.)
-    */
-  abstract class ScalarAggregate[B] extends TypedImperativeAggregate[B]
-      with UnaryLike[Expression] {
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    final override def update(buffer: B, input: InternalRow): B = {
-      val v = child.eval(input)
-      if (v != null) updateValue(buffer, v)
-      buffer
-    }
-    protected def updateValue(buffer: B, v: Any): Unit
-  }
-
-  /** Blocked-Bloom build over array<int> token columns. */
   case class BloomTokensAggregate(
-      child: Expression, nbits: Long, k: Int,
+      child: Expression, kind: Bloom,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[BlockedBloomFilter] {
     override def prettyName: String = "bloom_agg_tokens"
-    def createAggregationBuffer(): BlockedBloomFilter =
-      BlockedBloomFilter(nbits, k)
     protected def updateArray(b: BlockedBloomFilter, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -80,12 +263,6 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: BlockedBloomFilter, o: BlockedBloomFilter): BlockedBloomFilter =
-      b.union(o)
-    def eval(b: BlockedBloomFilter): Any = BloomIO.dump(b)
-    def serialize(b: BlockedBloomFilter): Array[Byte] = BloomIO.dump(b)
-    def deserialize(bytes: Array[Byte]): BlockedBloomFilter =
-      BloomIO.load(bytes)
     def withNewMutableAggBufferOffset(o: Int): BloomTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): BloomTokensAggregate =
@@ -94,69 +271,11 @@ object catalyst {
       copy(child = c)
   }
 
-  /** Blocked-Bloom build over pre-hashed int64 key columns. */
-  case class BloomHashAggregate(
-      child: Expression, nbits: Long, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[BlockedBloomFilter] {
-    override def prettyName: String = "bloom_agg_hash"
-    def createAggregationBuffer(): BlockedBloomFilter =
-      BlockedBloomFilter(nbits, k)
-    protected def updateValue(b: BlockedBloomFilter, v: Any): Unit =
-      b.add(v.asInstanceOf[Long])
-    def merge(b: BlockedBloomFilter, o: BlockedBloomFilter): BlockedBloomFilter =
-      b.union(o)
-    def eval(b: BlockedBloomFilter): Any = BloomIO.dump(b)
-    def serialize(b: BlockedBloomFilter): Array[Byte] = BloomIO.dump(b)
-    def deserialize(bytes: Array[Byte]): BlockedBloomFilter =
-      BloomIO.load(bytes)
-    def withNewMutableAggBufferOffset(o: Int): BloomHashAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): BloomHashAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): BloomHashAggregate =
-      copy(child = c)
-  }
-
-  /** Bloom union re-aggregation over dump-bytes columns (load-is-union,
-    * /root/reference/io.go:151-178).
-    */
-  case class BloomUnionAggregate(
-      child: Expression, nbits: Long, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[BlockedBloomFilter]
-      with UnaryLike[Expression] {
-    override def prettyName: String = "bloom_union_agg"
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    def createAggregationBuffer(): BlockedBloomFilter =
-      BlockedBloomFilter(nbits, k)
-    override def update(b: BlockedBloomFilter, input: InternalRow): BlockedBloomFilter = {
-      val v = child.eval(input)
-      if (v != null) BloomIO.load(v.asInstanceOf[Array[Byte]], Some(b))
-      b
-    }
-    def merge(b: BlockedBloomFilter, o: BlockedBloomFilter): BlockedBloomFilter =
-      b.union(o)
-    def eval(b: BlockedBloomFilter): Any = BloomIO.dump(b)
-    def serialize(b: BlockedBloomFilter): Array[Byte] = BloomIO.dump(b)
-    def deserialize(bytes: Array[Byte]): BlockedBloomFilter =
-      BloomIO.load(bytes)
-    def withNewMutableAggBufferOffset(o: Int): BloomUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): BloomUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): BloomUnionAggregate =
-      copy(child = c)
-  }
-
-  /** HLL build over array<int> token columns. */
   case class HllTokensAggregate(
-      child: Expression, p: Int,
+      child: Expression, kind: Hll,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[HyperLogLog] {
     override def prettyName: String = "hll_agg_tokens"
-    def createAggregationBuffer(): HyperLogLog = HyperLogLog(p)
     protected def updateArray(b: HyperLogLog, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -165,11 +284,6 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
-    def eval(b: HyperLogLog): Any = b.serialize()
-    def serialize(b: HyperLogLog): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): HyperLogLog =
-      HyperLogLog.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): HllTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): HllTokensAggregate =
@@ -178,59 +292,11 @@ object catalyst {
       copy(child = c)
   }
 
-  /** HLL build over pre-hashed int64 key columns. */
-  case class HllHashAggregate(
-      child: Expression, p: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[HyperLogLog] {
-    override def prettyName: String = "hll_agg_hash"
-    def createAggregationBuffer(): HyperLogLog = HyperLogLog(p)
-    protected def updateValue(b: HyperLogLog, v: Any): Unit =
-      b.add(v.asInstanceOf[Long])
-    def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
-    def eval(b: HyperLogLog): Any = b.serialize()
-    def serialize(b: HyperLogLog): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): HyperLogLog =
-      HyperLogLog.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): HllHashAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): HllHashAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): HllHashAggregate =
-      copy(child = c)
-  }
-
-  /** HLL union re-aggregation over serialized-sketch columns (the panel
-    * checkpoint resume path; all inputs must share precision `p`).
-    */
-  case class HllUnionAggregate(
-      child: Expression, p: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[HyperLogLog] {
-    override def prettyName: String = "hll_union_agg"
-    def createAggregationBuffer(): HyperLogLog = HyperLogLog(p)
-    protected def updateValue(b: HyperLogLog, v: Any): Unit =
-      b.merge(HyperLogLog.deserialize(v.asInstanceOf[Array[Byte]]))
-    def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
-    def eval(b: HyperLogLog): Any = b.serialize()
-    def serialize(b: HyperLogLog): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): HyperLogLog =
-      HyperLogLog.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): HllUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): HllUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): HllUnionAggregate =
-      copy(child = c)
-  }
-
-  /** Count-min build over array<int> token columns. */
   case class CmsTokensAggregate(
-      child: Expression, depth: Int, width: Int,
+      child: Expression, kind: Cms,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[CountMinSketch] {
     override def prettyName: String = "cms_agg_tokens"
-    def createAggregationBuffer(): CountMinSketch = CountMinSketch(depth, width)
     protected def updateArray(b: CountMinSketch, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -239,11 +305,6 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
-    def eval(b: CountMinSketch): Any = b.serialize()
-    def serialize(b: CountMinSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): CountMinSketch =
-      CountMinSketch.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): CmsTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): CmsTokensAggregate =
@@ -252,105 +313,11 @@ object catalyst {
       copy(child = c)
   }
 
-  /** Count-min build over pre-hashed int64 key columns. */
-  case class CmsHashAggregate(
-      child: Expression, depth: Int, width: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[CountMinSketch] {
-    override def prettyName: String = "cms_agg_hash"
-    def createAggregationBuffer(): CountMinSketch = CountMinSketch(depth, width)
-    protected def updateValue(b: CountMinSketch, v: Any): Unit =
-      b.add(v.asInstanceOf[Long])
-    def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
-    def eval(b: CountMinSketch): Any = b.serialize()
-    def serialize(b: CountMinSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): CountMinSketch =
-      CountMinSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): CmsHashAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): CmsHashAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): CmsHashAggregate =
-      copy(child = c)
-  }
-
-  /** Count-min union re-aggregation over serialized-sketch columns
-    * (counter-add; all inputs must share depth and width).
-    */
-  case class CmsUnionAggregate(
-      child: Expression, depth: Int, width: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[CountMinSketch] {
-    override def prettyName: String = "cms_union_agg"
-    def createAggregationBuffer(): CountMinSketch = CountMinSketch(depth, width)
-    protected def updateValue(b: CountMinSketch, v: Any): Unit =
-      b.merge(CountMinSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-    def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
-    def eval(b: CountMinSketch): Any = b.serialize()
-    def serialize(b: CountMinSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): CountMinSketch =
-      CountMinSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): CmsUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): CmsUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): CmsUnionAggregate =
-      copy(child = c)
-  }
-
-  /** t-digest build over double columns. */
-  case class TDigestAggregate(
-      child: Expression, compression: Double,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[TDigest] {
-    override def prettyName: String = "tdigest_agg"
-    def createAggregationBuffer(): TDigest = TDigest(compression)
-    protected def updateValue(b: TDigest, v: Any): Unit =
-      b.add(v.asInstanceOf[Double])
-    def merge(b: TDigest, o: TDigest): TDigest = b.merge(o)
-    def eval(b: TDigest): Any = b.serialize()
-    def serialize(b: TDigest): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): TDigest = TDigest.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): TDigestAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): TDigestAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): TDigestAggregate =
-      copy(child = c)
-  }
-
-  /** KLL build over double columns. */
-  case class KllAggregate(
-      child: Expression, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[KllSketch] {
-    override def prettyName: String = "kll_agg"
-    def createAggregationBuffer(): KllSketch = KllSketch(k)
-    protected def updateValue(b: KllSketch, v: Any): Unit =
-      b.add(v.asInstanceOf[Double])
-    def merge(b: KllSketch, o: KllSketch): KllSketch = b.merge(o)
-    def eval(b: KllSketch): Any = b.serialize()
-    def serialize(b: KllSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): KllSketch =
-      KllSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): KllAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): KllAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): KllAggregate =
-      copy(child = c)
-  }
-
-  /** Theta (KMV) distinct sketch over array<int> token columns — the
-    * intersectable distinct counter (core/ThetaSketch.scala); HLL is
-    * smaller at equal error but cannot intersect.
-    */
   case class ThetaTokensAggregate(
-      child: Expression, k: Int,
+      child: Expression, kind: Theta,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[ThetaSketch] {
     override def prettyName: String = "theta_agg_tokens"
-    def createAggregationBuffer(): ThetaSketch = ThetaSketch(k)
     protected def updateArray(b: ThetaSketch, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -359,11 +326,6 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.merge(o)
-    def eval(b: ThetaSketch): Any = b.serialize()
-    def serialize(b: ThetaSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): ThetaSketch =
-      ThetaSketch.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): ThetaTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): ThetaTokensAggregate =
@@ -372,68 +334,16 @@ object catalyst {
       copy(child = c)
   }
 
-  /** Theta build over pre-hashed int64 key columns. */
-  case class ThetaHashAggregate(
-      child: Expression, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[ThetaSketch] {
-    override def prettyName: String = "theta_agg_hash"
-    def createAggregationBuffer(): ThetaSketch = ThetaSketch(k)
-    protected def updateValue(b: ThetaSketch, v: Any): Unit =
-      b.add(v.asInstanceOf[Long])
-    def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.merge(o)
-    def eval(b: ThetaSketch): Any = b.serialize()
-    def serialize(b: ThetaSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): ThetaSketch =
-      ThetaSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): ThetaHashAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): ThetaHashAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): ThetaHashAggregate =
-      copy(child = c)
-  }
-
-  /** Theta union re-aggregation over serialized-sketch columns (the
-    * load-is-union form: roll per-source sketches up to a corpus
-    * sketch without touching the corpus).
-    */
-  case class ThetaUnionAggregate(
-      child: Expression, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[ThetaSketch] {
-    override def prettyName: String = "theta_union_agg"
-    def createAggregationBuffer(): ThetaSketch = ThetaSketch(k)
-    protected def updateValue(b: ThetaSketch, v: Any): Unit =
-      b.merge(ThetaSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-    def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.merge(o)
-    def eval(b: ThetaSketch): Any = b.serialize()
-    def serialize(b: ThetaSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): ThetaSketch =
-      ThetaSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): ThetaUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): ThetaUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): ThetaUnionAggregate =
-      copy(child = c)
-  }
-
-  /** Tuple sketch over (key hash, weight) pairs — a theta sketch whose
-    * retained keys carry additive 64-bit summaries (core/TupleSketch
-    * .scala). Weight-null rows count as weight 1 (the "one occurrence"
-    * reading); key-null rows are skipped like every other sketch
-    * aggregate.
+  /** Tuple sketch over (key hash, weight) pairs. Weight-null rows count
+    * as weight 1 (the "one occurrence" reading); key-null rows are
+    * skipped like every other sketch aggregate.
     */
   case class TupleHashAggregate(
-      left: Expression, right: Expression, k: Int,
+      left: Expression, right: Expression, kind: Tuple,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[TupleSketch]
+      extends KindAggregate[TupleSketch]
       with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
     override def prettyName: String = "tuple_agg_hash"
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    def createAggregationBuffer(): TupleSketch = TupleSketch(k)
     override def update(b: TupleSketch, input: InternalRow): TupleSketch = {
       val h = left.eval(input)
       if (h != null) {
@@ -442,11 +352,6 @@ object catalyst {
       }
       b
     }
-    def merge(b: TupleSketch, o: TupleSketch): TupleSketch = b.merge(o)
-    def eval(b: TupleSketch): Any = b.serialize()
-    def serialize(b: TupleSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): TupleSketch =
-      TupleSketch.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): TupleHashAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): TupleHashAggregate =
@@ -456,15 +361,14 @@ object catalyst {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Tuple build over array<int> token columns with weight 1 per token
-    * occurrence: per-token occurrence mass over the sampled key region.
+  /** Tuple build over token arrays with weight 1 per token occurrence:
+    * per-token occurrence mass over the sampled key region.
     */
   case class TupleTokensAggregate(
-      child: Expression, k: Int,
+      child: Expression, kind: Tuple,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[TupleSketch] {
     override def prettyName: String = "tuple_agg_tokens"
-    def createAggregationBuffer(): TupleSketch = TupleSketch(k)
     protected def updateArray(b: TupleSketch, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -473,11 +377,6 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: TupleSketch, o: TupleSketch): TupleSketch = b.merge(o)
-    def eval(b: TupleSketch): Any = b.serialize()
-    def serialize(b: TupleSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): TupleSketch =
-      TupleSketch.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): TupleTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): TupleTokensAggregate =
@@ -486,40 +385,15 @@ object catalyst {
       copy(child = c)
   }
 
-  /** Tuple union re-aggregation over serialized-sketch columns. */
-  case class TupleUnionAggregate(
-      child: Expression, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[TupleSketch] {
-    override def prettyName: String = "tuple_union_agg"
-    def createAggregationBuffer(): TupleSketch = TupleSketch(k)
-    protected def updateValue(b: TupleSketch, v: Any): Unit =
-      b.merge(TupleSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-    def merge(b: TupleSketch, o: TupleSketch): TupleSketch = b.merge(o)
-    def eval(b: TupleSketch): Any = b.serialize()
-    def serialize(b: TupleSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): TupleSketch =
-      TupleSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): TupleUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): TupleUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): TupleUnionAggregate =
-      copy(child = c)
-  }
-
-  /** Misra-Gries frequent-items sketch over array<int> token columns
-    * (core/FreqSketch.scala). Items are the RAW token ids (identity,
-    * not a hash — MG must return the item), weight 1 per occurrence.
-    * Deterministic bounds: every reported [lb, lb+maxError] interval
-    * brackets the exact count and no item above 2N/k can be missing.
+  /** Misra-Gries build over token arrays: items are the RAW token ids,
+    * weight 1 per occurrence, so the kind must use the long codec.
     */
   case class FreqTokensAggregate(
-      child: Expression, k: Int,
+      child: Expression, kind: Freq,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TokenArrayAggregate[FreqSketch] {
+    require(!kind.strings, "freq_agg_tokens takes the long-item codec")
     override def prettyName: String = "freq_agg_tokens"
-    def createAggregationBuffer(): FreqSketch = FreqSketch.longs(k)
     protected def updateArray(b: FreqSketch, arr: ArrayData): Unit = {
       var i = 0
       val n = arr.numElements()
@@ -529,65 +403,11 @@ object catalyst {
         i += 1
       }
     }
-    def merge(b: FreqSketch, o: FreqSketch): FreqSketch = b.merge(o)
-    def eval(b: FreqSketch): Any = b.serialize()
-    def serialize(b: FreqSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): FreqSketch =
-      FreqSketch.deserialize(bytes)
     def withNewMutableAggBufferOffset(o: Int): FreqTokensAggregate =
       copy(mutableAggBufferOffset = o)
     def withNewInputAggBufferOffset(o: Int): FreqTokensAggregate =
       copy(inputAggBufferOffset = o)
     protected def withNewChildInternal(c: Expression): FreqTokensAggregate =
-      copy(child = c)
-  }
-
-  /** Misra-Gries build over string items (words, urls, sources). */
-  case class FreqStrAggregate(
-      child: Expression, k: Int,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[FreqSketch] {
-    override def prettyName: String = "freq_agg_str"
-    def createAggregationBuffer(): FreqSketch = FreqSketch.strings(k)
-    protected def updateValue(b: FreqSketch, v: Any): Unit =
-      b.update(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-    def merge(b: FreqSketch, o: FreqSketch): FreqSketch = b.merge(o)
-    def eval(b: FreqSketch): Any = b.serialize()
-    def serialize(b: FreqSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): FreqSketch =
-      FreqSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): FreqStrAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): FreqStrAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): FreqStrAggregate =
-      copy(child = c)
-  }
-
-  /** Freq-sketch merge re-aggregation over serialized-sketch columns
-    * (roll per-source heavy-hitter sketches up to a corpus sketch).
-    * `stringItems` selects the buffer codec; merging a mismatched
-    * sketch fails loudly (codec-tag check in FreqSketch.merge).
-    */
-  case class FreqUnionAggregate(
-      child: Expression, k: Int, stringItems: Boolean,
-      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends ScalarAggregate[FreqSketch] {
-    override def prettyName: String = "freq_union_agg"
-    def createAggregationBuffer(): FreqSketch =
-      if (stringItems) FreqSketch.strings(k) else FreqSketch.longs(k)
-    protected def updateValue(b: FreqSketch, v: Any): Unit =
-      b.merge(FreqSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-    def merge(b: FreqSketch, o: FreqSketch): FreqSketch = b.merge(o)
-    def eval(b: FreqSketch): Any = b.serialize()
-    def serialize(b: FreqSketch): Array[Byte] = b.serialize()
-    def deserialize(bytes: Array[Byte]): FreqSketch =
-      FreqSketch.deserialize(bytes)
-    def withNewMutableAggBufferOffset(o: Int): FreqUnionAggregate =
-      copy(mutableAggBufferOffset = o)
-    def withNewInputAggBufferOffset(o: Int): FreqUnionAggregate =
-      copy(inputAggBufferOffset = o)
-    protected def withNewChildInternal(c: Expression): FreqUnionAggregate =
       copy(child = c)
   }
 
@@ -600,12 +420,18 @@ object catalyst {
   case class MinHashTokensAggregate(
       child: Expression, numPerms: Int,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TokenArrayAggregate[Array[Long]] {
+      extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
     override def prettyName: String = "minhash_agg_tokens"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = false
     @transient private lazy val seeds = Array.tabulate(numPerms)(MinHash.permSeed)
     def createAggregationBuffer(): Array[Long] = Array.fill(numPerms)(Long.MaxValue)
-    protected def updateArray(sig: Array[Long], arr: ArrayData): Unit = {
+    override def update(sig: Array[Long], input: InternalRow): Array[Long] = {
+      val v = child.eval(input)
+      if (v != null) updateArray(sig, v.asInstanceOf[ArrayData])
+      sig
+    }
+    private def updateArray(sig: Array[Long], arr: ArrayData): Unit = {
       val s = seeds
       var t = 0
       val n = arr.numElements()
@@ -784,8 +610,7 @@ object catalyst {
     * build is byte-identical to three separate builds (q07-checked).
     */
   case class SketchPanelAggregate(
-      child: Expression, nbits: Long, k: Int, p: Int,
-      depth: Int, width: Int,
+      child: Expression, bloom: Bloom, hll: Hll, cms: Cms,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
       extends TypedImperativeAggregate[SketchPanel]
       with UnaryLike[Expression] {
@@ -797,8 +622,7 @@ object catalyst {
     override def nullable: Boolean = false
 
     def createAggregationBuffer(): SketchPanel =
-      new SketchPanel(BlockedBloomFilter(nbits, k), HyperLogLog(p),
-        CountMinSketch(depth, width))
+      new SketchPanel(bloom.empty(), hll.empty(), cms.empty())
 
     override def update(b: SketchPanel, input: InternalRow): SketchPanel = {
       val v = child.eval(input)
@@ -819,22 +643,23 @@ object catalyst {
     }
 
     def merge(a: SketchPanel, b: SketchPanel): SketchPanel = {
-      a.bloom.union(b.bloom); a.hll.merge(b.hll); a.cms.merge(b.cms)
+      bloom.merge(a.bloom, b.bloom); hll.merge(a.hll, b.hll)
+      cms.merge(a.cms, b.cms)
       a
     }
 
     def eval(b: SketchPanel): Any =
       org.apache.spark.sql.catalyst.InternalRow(
-        BloomIO.dump(b.bloom), b.hll.serialize(), b.cms.serialize())
+        bloom.dump(b.bloom), hll.dump(b.hll), cms.dump(b.cms))
 
     def serialize(b: SketchPanel): Array[Byte] = {
-      val bloom = BloomIO.dump(b.bloom)
-      val hll = b.hll.serialize()
-      val cms = b.cms.serialize()
+      val bl = bloom.dump(b.bloom)
+      val hl = hll.dump(b.hll)
+      val cm = cms.dump(b.cms)
       val out = java.nio.ByteBuffer.allocate(
-        12 + bloom.length + hll.length + cms.length)
-      out.putInt(bloom.length).putInt(hll.length).putInt(cms.length)
-      out.put(bloom).put(hll).put(cms)
+        12 + bl.length + hl.length + cm.length)
+      out.putInt(bl.length).putInt(hl.length).putInt(cm.length)
+      out.put(bl).put(hl).put(cm)
       out.array()
     }
 
@@ -842,9 +667,8 @@ object catalyst {
       val in = java.nio.ByteBuffer.wrap(bytes)
       val nb = in.getInt(); val nh = in.getInt(); val nc = in.getInt()
       def take(n: Int) = { val a = new Array[Byte](n); in.get(a); a }
-      new SketchPanel(BloomIO.load(take(nb)),
-        HyperLogLog.deserialize(take(nh)),
-        CountMinSketch.deserialize(take(nc)))
+      new SketchPanel(bloom.load(take(nb)), hll.load(take(nh)),
+        cms.load(take(nc)))
     }
 
     def withNewMutableAggBufferOffset(o: Int): SketchPanelAggregate =

@@ -3,7 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.core._
+import catalyst.SketchKind
 
 /** Column-level API of the sketch engine.
   *
@@ -31,28 +33,34 @@ object functions {
   // ds.groupByKey(_.source).agg(bloom_agg_tokens(col("tokens"), ...)
   // .as[Array[Byte]]).
 
+  private def tokenArray(c: Column): Expression =
+    catalyst.expr(c.cast("array<int>"))
+  private def scalarAgg[B](c: Column, kind: SketchKind[B]): Column =
+    catalyst.aggCol(catalyst.ScalarAggregate(catalyst.expr(c.cast(kind.input)), kind))
+  private def unionAgg[B](c: Column, kind: SketchKind[B]): Column =
+    catalyst.aggCol(catalyst.UnionAggregate(catalyst.expr(c), kind))
+  private def bloomKind(capacity: Long, fpr: Double,
+                        maxBits: Long = 0L): SketchKind.Bloom = {
+    val (nbits, k) = BloomConfig.optimize(capacity, fpr, maxBits)
+    SketchKind.Bloom(nbits, k)
+  }
+
   /** Bloom filter over token arrays, sized like the reference's
     * NewOptimized (/root/reference/optimize.go:40-43).
     */
   def bloom_agg_tokens(tokens: Column, capacity: Long, fpr: Double,
-                       maxBits: Long = 0L): Column = {
-    val (nbits, k) = BloomConfig.optimize(capacity, fpr, maxBits)
+                       maxBits: Long = 0L): Column =
     catalyst.aggCol(catalyst.BloomTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), nbits, k))
-  }
+      tokenArray(tokens), bloomKind(capacity, fpr, maxBits)))
 
   /** Bloom filter over pre-hashed 64-bit keys. */
   def bloom_agg_hash(hash: Column, capacity: Long, fpr: Double,
-                     maxBits: Long = 0L): Column = {
-    val (nbits, k) = BloomConfig.optimize(capacity, fpr, maxBits)
-    catalyst.aggCol(catalyst.BloomHashAggregate(
-      catalyst.expr(hash.cast("bigint")), nbits, k))
-  }
+                     maxBits: Long = 0L): Column =
+    scalarAgg(hash, bloomKind(capacity, fpr, maxBits))
 
   /** Union of pre-built Bloom dumps (checkpoint resume path). */
   def bloom_union_agg(dumps: Column, nbits: Long, k: Int): Column =
-    catalyst.aggCol(catalyst.BloomUnionAggregate(
-      catalyst.expr(dumps), nbits, k))
+    unionAgg(dumps, SketchKind.Bloom(nbits, k))
 
   /** Fused Bloom+HLL+CMS panel in one pass (struct of the three wire
     * formats, byte-identical to the standalone aggregates at equal
@@ -61,32 +69,29 @@ object functions {
     */
   def sketch_panel_agg(tokens: Column, capacity: Long, fpr: Double,
                        p: Int = 14, depth: Int = 5,
-                       width: Int = 65536): Column = {
-    val (nbits, k) = BloomConfig.optimize(capacity, fpr)
-    catalyst.aggCol(catalyst.SketchPanelAggregate(
-      catalyst.expr(tokens.cast("array<int>")), nbits, k, p, depth, width))
-  }
+                       width: Int = 65536): Column =
+    catalyst.aggCol(catalyst.SketchPanelAggregate(tokenArray(tokens),
+      bloomKind(capacity, fpr), SketchKind.Hll(p),
+      SketchKind.Cms(depth, width)))
 
   def hll_agg_tokens(tokens: Column, p: Int = 14): Column =
-    catalyst.aggCol(catalyst.HllTokensAggregate(catalyst.expr(tokens.cast("array<int>")), p))
+    catalyst.aggCol(catalyst.HllTokensAggregate(tokenArray(tokens), SketchKind.Hll(p)))
 
   def hll_agg_hash(hash: Column, p: Int = 14): Column =
-    catalyst.aggCol(catalyst.HllHashAggregate(catalyst.expr(hash.cast("bigint")), p))
+    scalarAgg(hash, SketchKind.Hll(p))
 
   def hll_union_agg(sketches: Column, p: Int = 14): Column =
-    catalyst.aggCol(catalyst.HllUnionAggregate(catalyst.expr(sketches), p))
+    unionAgg(sketches, SketchKind.Hll(p))
 
   def cms_agg_tokens(tokens: Column, depth: Int = 5, width: Int = 65536): Column =
     catalyst.aggCol(catalyst.CmsTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), depth, width))
+      tokenArray(tokens), SketchKind.Cms(depth, width)))
 
   def cms_agg_hash(hash: Column, depth: Int = 5, width: Int = 65536): Column =
-    catalyst.aggCol(catalyst.CmsHashAggregate(
-      catalyst.expr(hash.cast("bigint")), depth, width))
+    scalarAgg(hash, SketchKind.Cms(depth, width))
 
   def cms_union_agg(sketches: Column, depth: Int = 5, width: Int = 65536): Column =
-    catalyst.aggCol(catalyst.CmsUnionAggregate(
-      catalyst.expr(sketches), depth, width))
+    unionAgg(sketches, SketchKind.Cms(depth, width))
 
   /** Theta (KMV) distinct sketch over token arrays — the intersectable
     * distinct counter. Use HLL when only unions/estimates are needed
@@ -96,16 +101,14 @@ object functions {
     */
   def theta_agg_tokens(tokens: Column, k: Int = 4096): Column =
     catalyst.aggCol(catalyst.ThetaTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), k))
+      tokenArray(tokens), SketchKind.Theta(k)))
 
   def theta_agg_hash(hash: Column, k: Int = 4096): Column =
-    catalyst.aggCol(catalyst.ThetaHashAggregate(
-      catalyst.expr(hash.cast("bigint")), k))
+    scalarAgg(hash, SketchKind.Theta(k))
 
   /** Merge pre-built theta sketches stored in a column (load-is-union). */
   def theta_union_agg(sketches: Column, k: Int = 4096): Column =
-    catalyst.aggCol(catalyst.ThetaUnionAggregate(
-      catalyst.expr(sketches), k))
+    unionAgg(sketches, SketchKind.Theta(k))
 
   /** Tuple sketch (theta + additive per-key summary) over (key hash,
     * weight) pairs. Theta answers "how many distinct keys"; tuple
@@ -115,20 +118,19 @@ object functions {
     * Null weights count as 1 (one occurrence).
     */
   def tuple_agg_hash(hash: Column, weight: Column, k: Int = 4096): Column =
-    catalyst.aggCol(catalyst.TupleHashAggregate(
-      catalyst.expr(hash.cast("bigint")), catalyst.expr(weight.cast("bigint")), k))
+    catalyst.aggCol(catalyst.TupleHashAggregate(catalyst.expr(hash.cast("bigint")),
+      catalyst.expr(weight.cast("bigint")), SketchKind.Tuple(k)))
 
   /** Tuple build over token arrays, weight 1 per token occurrence. */
   def tuple_agg_tokens(tokens: Column, k: Int = 4096): Column =
     catalyst.aggCol(catalyst.TupleTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), k))
+      tokenArray(tokens), SketchKind.Tuple(k)))
 
   /** Merge pre-built tuple sketches stored in a column (load-is-union;
     * equal keys sum their summaries).
     */
   def tuple_union_agg(sketches: Column, k: Int = 4096): Column =
-    catalyst.aggCol(catalyst.TupleUnionAggregate(
-      catalyst.expr(sketches), k))
+    unionAgg(sketches, SketchKind.Tuple(k))
 
   /** Misra-Gries frequent-items sketch over token arrays: one pass,
     * <= k entries, DETERMINISTIC two-sided bounds (lb <= true <=
@@ -140,43 +142,27 @@ object functions {
     */
   def freq_agg_tokens(tokens: Column, k: Int = 1024): Column =
     catalyst.aggCol(catalyst.FreqTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), k))
+      tokenArray(tokens), SketchKind.Freq(k, strings = false)))
 
   /** Misra-Gries build over string items (words, urls, sources). */
   def freq_agg_str(item: Column, k: Int = 1024): Column =
-    catalyst.aggCol(catalyst.FreqStrAggregate(
-      catalyst.expr(item.cast("string")), k))
+    scalarAgg(item, SketchKind.Freq(k, strings = true))
 
   /** Merge pre-built freq sketches stored in a column (per-source
     * rollup). `stringItems` must match the stored codec (checked).
     */
   def freq_union_agg(sketches: Column, k: Int = 1024,
                      stringItems: Boolean = false): Column =
-    catalyst.aggCol(catalyst.FreqUnionAggregate(
-      catalyst.expr(sketches), k, stringItems))
+    unionAgg(sketches, SketchKind.Freq(k, stringItems))
 
   def tdigest_agg(values: Column, compression: Double = 100.0): Column =
-    catalyst.aggCol(catalyst.TDigestAggregate(
-      catalyst.expr(values.cast("double")), compression))
+    scalarAgg(values, SketchKind.TDigest(compression))
 
   def kll_agg(values: Column, k: Int = 200): Column =
-    catalyst.aggCol(catalyst.KllAggregate(
-      catalyst.expr(values.cast("double")), k))
+    scalarAgg(values, SketchKind.Kll(k))
 
   def minhash_agg_tokens(tokens: Column, numPerms: Int = 128): Column =
-    catalyst.aggCol(catalyst.MinHashTokensAggregate(
-      catalyst.expr(tokens.cast("array<int>")), numPerms))
-
-  // ---------------- hashing ----------------
-
-  /** Engine-wide 64-bit hash of an int token id (splitmix64). */
-  val token_hash: UserDefinedFunction = udf((t: Int) => Hashing.tokenHash(t))
-
-  /** 64-bit FNV-1a of a string (the reference example's string adapter,
-    * /root/reference/example_test.go:29-46).
-    */
-  val fnv_hash64: UserDefinedFunction = udf((s: String) =>
-    if (s == null) 0L else Hashing.fnv1a64(s))
+    catalyst.aggCol(catalyst.MinHashTokensAggregate(tokenArray(tokens), numPerms))
 
   // ---------------- Bloom scalars ----------------
 

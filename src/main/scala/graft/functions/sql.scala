@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftglue.glue
@@ -22,295 +22,277 @@ import graft.core._
   */
 object sql {
 
-  private def lng(e: Expression, what: String): Long = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
+  private type Builder = Seq[Expression] => Expression
+
+  /** The arguments of one graft_* call. Every parse failure names the
+    * function, the argument count and the usage string.
+    */
+  private final class Args(name: String, usage: String, es: Seq[Expression]) {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"$name: $why (${es.length} arguments given); usage: $name$usage")
+    def col(i: Int): Column = glue.columnOf(es(i))
+    private def literal(i: Int, what: String): Any =
+      if (es(i).foldable) es(i).eval() else fail(s"$what must be a literal")
+    def lng(i: Int, what: String): Long = literal(i, what) match {
       case n: Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"$what must be numeric, got $other")
+      case other => fail(s"$what must be numeric, got $other")
     }
-  }
-  private def dbl(e: Expression, what: String): Double = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
+    def int(i: Int, what: String): Int = {
+      val v = lng(i, what)
+      if (v.isValidInt) v.toInt else fail(s"$what = $v is out of int range")
+    }
+    def dbl(i: Int, what: String): Double = literal(i, what) match {
       case n: Number => n.doubleValue()
       case d: Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be numeric, got $other")
+      case other => fail(s"$what must be numeric, got $other")
+    }
+    def bool(i: Int, what: String): Boolean = literal(i, what) match {
+      case b: java.lang.Boolean => b
+      case n: Number => n.longValue() != 0
+      case other => fail(s"$what must be a boolean, got $other")
     }
   }
   private type Decimal = org.apache.spark.sql.types.Decimal
 
-  // SQL inputs arrive with whatever type the user's column has; the
-  // aggregates read buffers with exact-type casts, so coerce here (the
-  // Column API does the same via .cast) — ExpectsInputTypes would do
-  // this but is private[sql] in Spark 4.
-  private def asLong(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.LongType)
-  private def asDouble(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.DoubleType)
-  private def asString(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.StringType)
-  private def asIntArray(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType))
-  // Vector kernels read ArrayData.toFloatArray: an uncast array<double>
-  // input would CCE (Generic) or read garbage (Unsafe). Coerce like the
-  // other builders do.
-  private def asFloatArray(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      e, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
+  /** A graft_* SQL function. `body` calls the function's Column builder,
+    * so the Column form's casts and defaults are the only ones, and is
+    * defined at the argument counts the function takes — the one arity
+    * check.
+    */
+  private def fn(name: String, usage: String)(
+      body: Args => PartialFunction[Int, Column]): (String, (String, Builder)) =
+    name -> (usage, (es: Seq[Expression]) => {
+      val a = new Args(name, usage, es)
+      glue.convertedExpressionOf(body(a).applyOrElse(es.length,
+        (_: Int) => a.fail("wrong number of arguments")))
+    })
+
+  private val F = functions
+  private val E = expressions
 
   /** name -> (usage, builder) for the aggregate expressions. */
-  val aggregateBuilders: Map[String, (String, Seq[Expression] => Expression)] =
-    Map(
-      "graft_bloom_agg_tokens" -> (
-        "(tokens, capacity, fpr[, maxBits]) - blocked Bloom filter dump",
-        (es: Seq[Expression]) => {
-          val maxBits = if (es.length > 3) lng(es(3), "maxBits") else 0L
-          val (nbits, k) = BloomConfig.optimize(
-            lng(es(1), "capacity"), dbl(es(2), "fpr"), maxBits)
-          catalyst.BloomTokensAggregate(asIntArray(es.head), nbits, k)
-            .toAggregateExpression()
-        }),
-      "graft_bloom_agg_hash" -> (
-        "(hash64, capacity, fpr[, maxBits]) - blocked Bloom filter dump",
-        (es: Seq[Expression]) => {
-          val maxBits = if (es.length > 3) lng(es(3), "maxBits") else 0L
-          val (nbits, k) = BloomConfig.optimize(
-            lng(es(1), "capacity"), dbl(es(2), "fpr"), maxBits)
-          catalyst.BloomHashAggregate(asLong(es.head), nbits, k)
-            .toAggregateExpression()
-        }),
-      "graft_bloom_union_agg" -> (
-        "(dump, capacity, fpr) - union of Bloom dumps",
-        (es: Seq[Expression]) => {
-          val (nbits, k) = BloomConfig.optimize(
-            lng(es(1), "capacity"), dbl(es(2), "fpr"))
-          catalyst.BloomUnionAggregate(es.head, nbits, k)
-            .toAggregateExpression()
-        }),
-      "graft_hll_agg_tokens" -> (
-        "(tokens[, p]) - HyperLogLog sketch",
-        (es: Seq[Expression]) => {
-          val p = if (es.length > 1) lng(es(1), "p").toInt else 14
-          catalyst.HllTokensAggregate(asIntArray(es.head), p).toAggregateExpression()
-        }),
-      "graft_hll_agg_hash" -> (
-        "(hash64[, p]) - HyperLogLog sketch",
-        (es: Seq[Expression]) => {
-          val p = if (es.length > 1) lng(es(1), "p").toInt else 14
-          catalyst.HllHashAggregate(asLong(es.head), p).toAggregateExpression()
-        }),
-      "graft_cms_agg_tokens" -> (
-        "(tokens[, depth, width]) - count-min sketch",
-        (es: Seq[Expression]) => {
-          val d = if (es.length > 1) lng(es(1), "depth").toInt else 5
-          val w = if (es.length > 2) lng(es(2), "width").toInt else 65536
-          catalyst.CmsTokensAggregate(asIntArray(es.head), d, w).toAggregateExpression()
-        }),
-      "graft_cms_agg_hash" -> (
-        "(hash64[, depth, width]) - count-min sketch",
-        (es: Seq[Expression]) => {
-          val d = if (es.length > 1) lng(es(1), "depth").toInt else 5
-          val w = if (es.length > 2) lng(es(2), "width").toInt else 65536
-          catalyst.CmsHashAggregate(asLong(es.head), d, w).toAggregateExpression()
-        }),
-      "graft_theta_agg_tokens" -> (
-        "(tokens[, k]) - theta (KMV) distinct sketch; intersectable",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 4096
-          catalyst.ThetaTokensAggregate(asIntArray(es.head), k).toAggregateExpression()
-        }),
-      "graft_theta_agg_hash" -> (
-        "(hash64[, k]) - theta (KMV) distinct sketch; intersectable",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 4096
-          catalyst.ThetaHashAggregate(asLong(es.head), k).toAggregateExpression()
-        }),
-      "graft_theta_union_agg" -> (
-        "(sketch[, k]) - union of theta sketches",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 4096
-          catalyst.ThetaUnionAggregate(es.head, k).toAggregateExpression()
-        }),
-      "graft_tuple_agg_hash" -> (
-        "(hash64, weight[, k]) - tuple sketch (theta + additive summary)",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 2) lng(es(2), "k").toInt else 4096
-          catalyst.TupleHashAggregate(asLong(es.head), asLong(es(1)), k)
-            .toAggregateExpression()
-        }),
-      "graft_tuple_agg_tokens" -> (
-        "(tokens[, k]) - tuple sketch, weight 1 per token occurrence",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 4096
-          catalyst.TupleTokensAggregate(asIntArray(es.head), k).toAggregateExpression()
-        }),
-      "graft_tuple_union_agg" -> (
-        "(sketch[, k]) - union of tuple sketches (equal keys sum)",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 4096
-          catalyst.TupleUnionAggregate(es.head, k).toAggregateExpression()
-        }),
-      "graft_freq_agg_tokens" -> (
-        "(tokens[, k]) - Misra-Gries frequent-items sketch over raw " +
-          "token ids; deterministic bounds, <= k entries",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 1024
-          catalyst.FreqTokensAggregate(asIntArray(es.head), k).toAggregateExpression()
-        }),
-      "graft_freq_agg_str" -> (
-        "(item[, k]) - Misra-Gries frequent-items sketch over strings",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 1024
-          catalyst.FreqStrAggregate(asString(es.head), k)
-            .toAggregateExpression()
-        }),
-      "graft_freq_union_agg" -> (
-        "(sketch[, k, stringItems]) - merge of freq sketches",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 1024
-          val str = es.length > 2 && lng(es(2), "stringItems") != 0
-          catalyst.FreqUnionAggregate(es.head, k, str).toAggregateExpression()
-        }),
-      "graft_tdigest_agg" -> (
-        "(value[, compression]) - t-digest sketch",
-        (es: Seq[Expression]) => {
-          val c = if (es.length > 1) dbl(es(1), "compression") else 100.0
-          catalyst.TDigestAggregate(asDouble(es.head), c).toAggregateExpression()
-        }),
-      "graft_kll_agg" -> (
-        "(value[, k]) - KLL quantile sketch",
-        (es: Seq[Expression]) => {
-          val k = if (es.length > 1) lng(es(1), "k").toInt else 200
-          catalyst.KllAggregate(asDouble(es.head), k).toAggregateExpression()
-        }),
-      "graft_sketch_panel_agg" -> (
-        "(tokens, capacity, fpr[, p, depth, width]) - fused " +
-          "struct(bloom, hll, cms) in one pass",
-        (es: Seq[Expression]) => {
-          val (nbits, k) = BloomConfig.optimize(
-            lng(es(1), "capacity"), dbl(es(2), "fpr"))
-          val p = if (es.length > 3) lng(es(3), "p").toInt else 14
-          val d = if (es.length > 4) lng(es(4), "depth").toInt else 5
-          val w = if (es.length > 5) lng(es(5), "width").toInt else 65536
-          catalyst.SketchPanelAggregate(asIntArray(es.head), nbits, k, p, d, w)
-            .toAggregateExpression()
-        }),
-      "graft_topk_by_score" -> (
-        "(score, id, k) - per-group top-k array<struct<id,score>>, " +
-          "partial (map-side) top-k instead of a window",
-        (es: Seq[Expression]) => {
-          catalyst.TopKByScoreAggregate(asDouble(es.head), asLong(es(1)),
-            lng(es(2), "k").toInt).toAggregateExpression()
-        }))
+  val aggregateBuilders: Map[String, (String, Builder)] = Map(
+    fn("graft_bloom_agg_tokens",
+       "(tokens, capacity, fpr[, maxBits]) - blocked Bloom filter dump") { a => {
+      case 3 => F.bloom_agg_tokens(a.col(0), a.lng(1, "capacity"), a.dbl(2, "fpr"))
+      case 4 => F.bloom_agg_tokens(a.col(0), a.lng(1, "capacity"), a.dbl(2, "fpr"),
+        a.lng(3, "maxBits"))
+    }},
+    fn("graft_bloom_agg_hash",
+       "(hash64, capacity, fpr[, maxBits]) - blocked Bloom filter dump") { a => {
+      case 3 => F.bloom_agg_hash(a.col(0), a.lng(1, "capacity"), a.dbl(2, "fpr"))
+      case 4 => F.bloom_agg_hash(a.col(0), a.lng(1, "capacity"), a.dbl(2, "fpr"),
+        a.lng(3, "maxBits"))
+    }},
+    fn("graft_bloom_union_agg",
+       "(dump, capacity, fpr) - union of Bloom dumps") { a => {
+      // the Column form takes the geometry the capacity and fpr map to
+      case 3 =>
+        val (nbits, k) =
+          BloomConfig.optimize(a.lng(1, "capacity"), a.dbl(2, "fpr"))
+        F.bloom_union_agg(a.col(0), nbits, k)
+    }},
+    fn("graft_hll_agg_tokens", "(tokens[, p]) - HyperLogLog sketch") { a => {
+      case 1 => F.hll_agg_tokens(a.col(0))
+      case 2 => F.hll_agg_tokens(a.col(0), a.int(1, "p"))
+    }},
+    fn("graft_hll_agg_hash", "(hash64[, p]) - HyperLogLog sketch") { a => {
+      case 1 => F.hll_agg_hash(a.col(0))
+      case 2 => F.hll_agg_hash(a.col(0), a.int(1, "p"))
+    }},
+    fn("graft_hll_union_agg",
+       "(sketch[, p]) - union of HyperLogLog sketches (register max)") { a => {
+      case 1 => F.hll_union_agg(a.col(0))
+      case 2 => F.hll_union_agg(a.col(0), a.int(1, "p"))
+    }},
+    fn("graft_cms_agg_tokens", "(tokens[, depth, width]) - count-min sketch") { a => {
+      case 1 => F.cms_agg_tokens(a.col(0))
+      case 2 => F.cms_agg_tokens(a.col(0), a.int(1, "depth"))
+      case 3 => F.cms_agg_tokens(a.col(0), a.int(1, "depth"), a.int(2, "width"))
+    }},
+    fn("graft_cms_agg_hash", "(hash64[, depth, width]) - count-min sketch") { a => {
+      case 1 => F.cms_agg_hash(a.col(0))
+      case 2 => F.cms_agg_hash(a.col(0), a.int(1, "depth"))
+      case 3 => F.cms_agg_hash(a.col(0), a.int(1, "depth"), a.int(2, "width"))
+    }},
+    fn("graft_cms_union_agg",
+       "(sketch[, depth, width]) - union of count-min sketches (counters add)") { a => {
+      case 1 => F.cms_union_agg(a.col(0))
+      case 2 => F.cms_union_agg(a.col(0), a.int(1, "depth"))
+      case 3 => F.cms_union_agg(a.col(0), a.int(1, "depth"), a.int(2, "width"))
+    }},
+    fn("graft_theta_agg_tokens",
+       "(tokens[, k]) - theta (KMV) distinct sketch; intersectable") { a => {
+      case 1 => F.theta_agg_tokens(a.col(0))
+      case 2 => F.theta_agg_tokens(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_theta_agg_hash",
+       "(hash64[, k]) - theta (KMV) distinct sketch; intersectable") { a => {
+      case 1 => F.theta_agg_hash(a.col(0))
+      case 2 => F.theta_agg_hash(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_theta_union_agg", "(sketch[, k]) - union of theta sketches") { a => {
+      case 1 => F.theta_union_agg(a.col(0))
+      case 2 => F.theta_union_agg(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_tuple_agg_hash",
+       "(hash64, weight[, k]) - tuple sketch (theta + additive summary)") { a => {
+      case 2 => F.tuple_agg_hash(a.col(0), a.col(1))
+      case 3 => F.tuple_agg_hash(a.col(0), a.col(1), a.int(2, "k"))
+    }},
+    fn("graft_tuple_agg_tokens",
+       "(tokens[, k]) - tuple sketch, weight 1 per token occurrence") { a => {
+      case 1 => F.tuple_agg_tokens(a.col(0))
+      case 2 => F.tuple_agg_tokens(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_tuple_union_agg",
+       "(sketch[, k]) - union of tuple sketches (equal keys sum)") { a => {
+      case 1 => F.tuple_union_agg(a.col(0))
+      case 2 => F.tuple_union_agg(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_freq_agg_tokens",
+       "(tokens[, k]) - Misra-Gries frequent-items sketch over raw " +
+         "token ids; deterministic bounds, <= k entries") { a => {
+      case 1 => F.freq_agg_tokens(a.col(0))
+      case 2 => F.freq_agg_tokens(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_freq_agg_str",
+       "(item[, k]) - Misra-Gries frequent-items sketch over strings") { a => {
+      case 1 => F.freq_agg_str(a.col(0))
+      case 2 => F.freq_agg_str(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_freq_union_agg",
+       "(sketch[, k, stringItems]) - merge of freq sketches") { a => {
+      case 1 => F.freq_union_agg(a.col(0))
+      case 2 => F.freq_union_agg(a.col(0), a.int(1, "k"))
+      case 3 => F.freq_union_agg(a.col(0), a.int(1, "k"),
+        a.bool(2, "stringItems"))
+    }},
+    fn("graft_tdigest_agg", "(value[, compression]) - t-digest sketch") { a => {
+      case 1 => F.tdigest_agg(a.col(0))
+      case 2 => F.tdigest_agg(a.col(0), a.dbl(1, "compression"))
+    }},
+    fn("graft_kll_agg", "(value[, k]) - KLL quantile sketch") { a => {
+      case 1 => F.kll_agg(a.col(0))
+      case 2 => F.kll_agg(a.col(0), a.int(1, "k"))
+    }},
+    fn("graft_minhash_agg_tokens",
+       "(tokens[, numPerms]) - MinHash signature of the union of the " +
+         "token arrays, array<bigint>") { a => {
+      case 1 => F.minhash_agg_tokens(a.col(0))
+      case 2 => F.minhash_agg_tokens(a.col(0), a.int(1, "numPerms"))
+    }},
+    fn("graft_sketch_panel_agg",
+       "(tokens, capacity, fpr[, p, depth, width]) - fused " +
+         "struct(bloom, hll, cms) in one pass") { a =>
+      def cap = a.lng(1, "capacity"); def fpr = a.dbl(2, "fpr")
+      def p = a.int(3, "p"); def depth = a.int(4, "depth")
+      val byCount: PartialFunction[Int, Column] = {
+        case 3 => F.sketch_panel_agg(a.col(0), cap, fpr)
+        case 4 => F.sketch_panel_agg(a.col(0), cap, fpr, p)
+        case 5 => F.sketch_panel_agg(a.col(0), cap, fpr, p, depth)
+        case 6 => F.sketch_panel_agg(a.col(0), cap, fpr, p, depth,
+          a.int(5, "width"))
+      }
+      byCount
+    },
+    fn("graft_topk_by_score",
+       "(score, id, k) - per-group top-k array<struct<id,score>>, " +
+         "partial (map-side) top-k instead of a window") { a => {
+      case 3 => F.topk_by_score(a.col(0), a.col(1), a.int(2, "k"))
+    }})
 
   /** name -> (usage, builder) for the native scalar expressions (codegen,
-    * no UDF dispatch — the SQL lift of graft.functions.expressions).
+    * no UDF dispatch — the SQL lift of the graft.functions.expressions
+    * Column forms).
     */
-  val scalarBuilders: Map[String, (String, Seq[Expression] => Expression)] = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{LongType, StringType}
-    Map(
-      "graft_tokenize" -> (
-        "(text) - deterministic token ids, array<int>",
-        (es: Seq[Expression]) =>
-          expressions.Tokenize(Cast(es.head, StringType))),
-      "graft_token_hash" -> (
-        "(token_id) - splitmix64 of an int token",
-        (es: Seq[Expression]) => expressions.TokenHash64(
-          Cast(es.head, org.apache.spark.sql.types.IntegerType))),
-      "graft_fnv64" -> (
-        "(str) - 64-bit FNV-1a",
-        (es: Seq[Expression]) =>
-          expressions.Fnv1a64(Cast(es.head, StringType))),
-      "graft_minhash_signature" -> (
-        "(tokens[, numPerms]) - MinHash signature, array<long>",
-        (es: Seq[Expression]) => expressions.MinhashSignature(
-          asIntArray(es.head),
-          if (es.length > 1) lng(es(1), "numPerms").toInt else 128)),
-      "graft_minhash_bands" -> (
-        "(sig, numBands, rowsPerBand) - LSH band keys, array<long>",
-        (es: Seq[Expression]) => expressions.MinhashBands(es.head,
-          lng(es(1), "numBands").toInt, lng(es(2), "rowsPerBand").toInt)),
-      "graft_simhash" -> (
-        "(tokens) - 64-bit SimHash fingerprint",
-        (es: Seq[Expression]) =>
-          expressions.Simhash64(asIntArray(es.head))),
-      "graft_simhash_buckets" -> (
-        "(fp, maxHamming) - two-level pigeonhole bucket keys, array<long>",
-        (es: Seq[Expression]) => expressions.SimhashBuckets(
-          Cast(es.head, LongType), lng(es(1), "maxHamming").toInt)),
-      "graft_hamming64" -> (
-        "(a, b) - Hamming distance of two int64 fingerprints",
-        (es: Seq[Expression]) => expressions.Hamming64(
-          Cast(es.head, LongType), Cast(es(1), LongType))),
-      "graft_cosine_sim" -> (
-        "(a, b) - cosine similarity of two array<float>",
-        (es: Seq[Expression]) =>
-          expressions.CosineSim(asFloatArray(es.head), asFloatArray(es(1)))),
-      "graft_token_shingles" -> (
-        "(tokens, n) - rolling n-gram shingle hashes, array<long>",
-        (es: Seq[Expression]) => expressions.TokenShingles(
-          asIntArray(es.head), lng(es(1), "n").toInt)),
-      "graft_lang_id" -> (
-        "(text) - heuristic language id",
-        (es: Seq[Expression]) =>
-          expressions.LangId(Cast(es.head, StringType))),
-      "graft_canonical_url" -> (
-        "(url) - canonical URL form (dedup key): fragment/tracking-" +
-          "param/default-port/www/trailing-slash normalization",
-        (es: Seq[Expression]) =>
-          expressions.CanonicalUrl(Cast(es.head, StringType))),
-      "graft_rolling_fp" -> (
-        "(text) - Karp-Rabin rolling-window fingerprint",
-        (es: Seq[Expression]) =>
-          expressions.RollingFingerprint(Cast(es.head, StringType))),
-      "graft_lsh_band_keys" -> (
-        "(emb, numBands, bitsPerBand, dim) - hyperplane band keys",
-        (es: Seq[Expression]) => expressions.LshBandKeys(asFloatArray(es.head),
-          lng(es(1), "numBands").toInt, lng(es(2), "bitsPerBand").toInt,
-          lng(es(3), "dim").toInt)),
-      "graft_word_ngrams" -> (
-        "(text, n) - distinct word n-grams, array<string>",
-        (es: Seq[Expression]) => expressions.WordNgrams(
-          Cast(es.head, StringType), lng(es(1), "n").toInt)),
-      "graft_word_ngrams_all" -> (
-        "(text, n) - ALL word n-grams in position order, duplicates " +
-          "kept (LM occurrence stream), array<string>",
-        (es: Seq[Expression]) => expressions.WordNgramsAll(
-          Cast(es.head, StringType), lng(es(1), "n").toInt)),
-      "graft_seg_token_count" -> (
-        "(text) - BPE-style pre-tokenizer token count (alnum runs + " +
-          "one per other non-space char), long",
-        (es: Seq[Expression]) => expressions.SegTokenCount(
-          Cast(es.head, StringType))),
-      "graft_gopher_signals" -> (
-        "(text) - Gopher quality raw signals, array<long> of 9: " +
-          "[n_words, sum_word_codepoints, n_alpha_words, n_stopwords, " +
-          "n_lines, n_bullet_lines, n_ellipsis_lines, n_hash_chars, " +
-          "n_ellipsis_occurrences]",
-        (es: Seq[Expression]) => expressions.GopherSignals(
-          Cast(es.head, StringType))),
-      "graft_gram_hashes" -> (
-        "(text, n) - position-ordered rolling word-n-gram hashes, " +
-          "array<long> (duplicate-span seeds)",
-        (es: Seq[Expression]) => expressions.GramHashes(
-          Cast(es.head, StringType), lng(es(1), "n").toInt)),
-      "graft_gram_at" -> (
-        "(text, pos, n) - the word n-gram at word index pos, string " +
-          "(span-candidate verifier; null out of range)",
-        (es: Seq[Expression]) => expressions.GramAt(
-          Cast(es.head, StringType),
-          Cast(es(1), org.apache.spark.sql.types.IntegerType),
-          lng(es(2), "n").toInt)))
-  }
+  val scalarBuilders: Map[String, (String, Builder)] = Map(
+    fn("graft_tokenize", "(text) - deterministic token ids, array<int>") { a => {
+      case 1 => E.tokenize(a.col(0))
+    }},
+    fn("graft_token_hash", "(token_id) - splitmix64 of an int token") { a => {
+      case 1 => E.token_hash64(a.col(0))
+    }},
+    fn("graft_fnv64", "(str) - 64-bit FNV-1a") { a => {
+      case 1 => E.fnv1a64(a.col(0))
+    }},
+    fn("graft_minhash_signature",
+       "(tokens[, numPerms]) - MinHash signature, array<long>") { a => {
+      case 1 => F.minhash_signature()(a.col(0))
+      case 2 => F.minhash_signature(a.int(1, "numPerms"))(a.col(0))
+    }},
+    fn("graft_minhash_bands",
+       "(sig, numBands, rowsPerBand) - LSH band keys, array<long>") { a => {
+      case 3 => E.minhash_bands(a.col(0), a.int(1, "numBands"),
+        a.int(2, "rowsPerBand"))
+    }},
+    fn("graft_simhash", "(tokens) - 64-bit SimHash fingerprint") { a => {
+      case 1 => E.simhash64(a.col(0))
+    }},
+    fn("graft_simhash_buckets",
+       "(fp, maxHamming) - two-level pigeonhole bucket keys, array<long>") { a => {
+      case 2 => E.simhash_buckets(a.col(0), a.int(1, "maxHamming"))
+    }},
+    fn("graft_hamming64",
+       "(a, b) - Hamming distance of two int64 fingerprints") { a => {
+      case 2 => E.hamming64(a.col(0), a.col(1))
+    }},
+    fn("graft_cosine_sim",
+       "(a, b) - cosine similarity of two array<float>") { a => {
+      case 2 => E.cosine_sim(a.col(0), a.col(1))
+    }},
+    fn("graft_token_shingles",
+       "(tokens, n) - rolling n-gram shingle hashes, array<long>") { a => {
+      case 2 => E.token_shingles(a.col(0), a.int(1, "n"))
+    }},
+    fn("graft_lang_id", "(text) - heuristic language id") { a => {
+      case 1 => E.lang_id(a.col(0))
+    }},
+    fn("graft_canonical_url",
+       "(url) - canonical URL form (dedup key): fragment/tracking-" +
+         "param/default-port/www/trailing-slash normalization") { a => {
+      case 1 => E.canonical_url(a.col(0))
+    }},
+    fn("graft_rolling_fp",
+       "(text) - Karp-Rabin rolling-window fingerprint") { a => {
+      case 1 => E.rolling_fingerprint(a.col(0))
+    }},
+    fn("graft_lsh_band_keys",
+       "(emb, numBands, bitsPerBand, dim) - hyperplane band keys") { a => {
+      case 4 => E.lsh_band_keys(a.col(0), a.int(1, "numBands"),
+        a.int(2, "bitsPerBand"), a.int(3, "dim"))
+    }},
+    fn("graft_word_ngrams",
+       "(text, n) - distinct word n-grams, array<string>") { a => {
+      case 2 => E.word_ngrams(a.col(0), a.int(1, "n"))
+    }},
+    fn("graft_word_ngrams_all",
+       "(text, n) - ALL word n-grams in position order, duplicates " +
+         "kept (LM occurrence stream), array<string>") { a => {
+      case 2 => E.word_ngrams_all(a.col(0), a.int(1, "n"))
+    }},
+    fn("graft_seg_token_count",
+       "(text) - BPE-style pre-tokenizer token count (alnum runs + " +
+         "one per other non-space char), long") { a => {
+      case 1 => E.seg_token_count(a.col(0))
+    }},
+    fn("graft_gopher_signals",
+       "(text) - Gopher quality raw signals, array<long> of 9: " +
+         "[n_words, sum_word_codepoints, n_alpha_words, n_stopwords, " +
+         "n_lines, n_bullet_lines, n_ellipsis_lines, n_hash_chars, " +
+         "n_ellipsis_occurrences]") { a => {
+      case 1 => E.gopher_signals(a.col(0))
+    }},
+    fn("graft_gram_hashes",
+       "(text, n) - position-ordered rolling word-n-gram hashes, " +
+         "array<long> (duplicate-span seeds)") { a => {
+      case 2 => E.gram_hashes(a.col(0), a.int(1, "n"))
+    }},
+    fn("graft_gram_at",
+       "(text, pos, n) - the word n-gram at word index pos, string " +
+         "(span-candidate verifier; null out of range)") { a => {
+      case 3 => E.gram_at(a.col(0), a.col(1), a.int(2, "n"))
+    }})
 
   /** name -> (usage, builder) for the sketch accessors: each is the
     * `functions` udf val itself, lifted into a SQL builder. Same
@@ -318,8 +300,7 @@ object sql {
     * argument per ROW, so use them on already-aggregated results (one
     * sketch row per group), never on corpus-sized frames.
     */
-  val udfBuilders: Map[String, (String, Seq[Expression] => Expression)] = {
-    val F = functions
+  val udfBuilders: Map[String, (String, Builder)] = {
     Seq(
       "graft_bloom_might_contain" -> (
         "(dump, hash64) - membership test of a dumped Bloom filter",

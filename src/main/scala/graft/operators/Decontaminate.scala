@@ -386,10 +386,11 @@ object Decontaminate {
       if (unionFits) {
         val dump = fresh
           .agg(graft.functions.catalyst.aggCol(
-            graft.functions.catalyst.BloomHashAggregate(
+            graft.functions.catalyst.ScalarAggregate(
               graft.functions.catalyst.expr(
                 F.fnv_hash64_native(col("ng"))),
-              existing.numBits, existing.k)).as("sk"))
+              graft.functions.catalyst.SketchKind.Bloom(
+                existing.numBits, existing.k))).as("sk"))
           .head().getAs[Array[Byte]]("sk")
         existing.union(BloomIO.load(dump))
       } else

@@ -166,7 +166,7 @@ case class GraftRuntimeFilter(spark: SparkSession)
       .map(_.longValue.max(1L)).getOrElse(expectedBuildRows)
     val (nbits, k) = BloomConfig.optimize(capacity, fpr)
     val agg = AggregateExpression(
-      gcat.BloomHashAggregate(new XxHash64(buildKeys), nbits, k),
+      gcat.ScalarAggregate(new XxHash64(buildKeys), gcat.SketchKind.Bloom(nbits, k)),
       aggregate.Complete, isDistinct = false)
     val buildPlan = Aggregate(Nil, Seq(Alias(agg, "graft_rt_bloom")()), build)
     val probeExpr = gexpr.BloomMightContainDump(

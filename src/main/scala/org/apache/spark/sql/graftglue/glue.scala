@@ -2,7 +2,8 @@ package org.apache.spark.sql.graftglue
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.{ExpressionUtils, UserDefinedFunctionUtils}
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter,
+  ExpressionUtils, UserDefinedFunctionUtils}
 import org.apache.spark.sql.expressions.{SparkUserDefinedFunction,
   UserDefinedFunction}
 
@@ -15,6 +16,14 @@ import org.apache.spark.sql.expressions.{SparkUserDefinedFunction,
 object glue {
   def columnOf(e: Expression): Column = ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The expression of a Column with its nested Column nodes converted
+    * too, as a Dataset operator converts it — for an expression handed to
+    * the analyzer directly (a SQL function builder), where
+    * `expressionOf` would leave an unevaluable column node inside it.
+    */
+  def convertedExpressionOf(c: Column): Expression =
+    ColumnNodeToExpressionConverter(c.node)
 
   /** The ScalaUDF a Column-API `udf` val plans as, over analyzer-side
     * children — what `spark.udf.register` builds, so one udf val serves

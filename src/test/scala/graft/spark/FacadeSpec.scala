@@ -269,6 +269,22 @@ class FacadeSpec extends AnyFunSuite {
     words.foreach(coreFreqStr.update(_))
     assert(same(one(words.toDF("x").repartition(3), F.freq_agg_str(x, 64)),
       coreFreqStr.serialize()))
+    // freq union of two disjoint halves, both codecs (exact regime)
+    val (fA, fB) = (FreqSketch.longs(8192), FreqSketch.longs(8192))
+    val (sA, sB) = (FreqSketch.strings(64), FreqSketch.strings(64))
+    tokens.flatten.zip(words).zipWithIndex.foreach { case ((t, w), ix) =>
+      (if (ix % 2 == 0) fA else fB).update(java.lang.Long.valueOf(t.toLong))
+      (if (ix % 2 == 0) sA else sB).update(w)
+    }
+    assert(same(one(Seq(fA.serialize(), fB.serialize()).toDF("x"),
+      F.freq_union_agg(x, 8192)), coreFreq.serialize()))
+    assert(same(one(Seq(sA.serialize(), sB.serialize()).toDF("x"),
+      F.freq_union_agg(x, 64, stringItems = true)), coreFreqStr.serialize()))
+    // a mismatched codec fails loudly
+    val mismatch = intercept[Exception](
+      one(Seq(sA.serialize()).toDF("x"), F.freq_union_agg(x, 64)))
+    assert(causes(mismatch).exists(_.contains("item-type mismatch")),
+      causes(mismatch))
     // t-digest / KLL merges are order-sensitive, so compare estimates
     // (rank-level agreement), not bytes
     val vals = (0 until 4000).map(i => Hashing.toUnitDouble(Hashing.at(3, i)))
@@ -284,5 +300,141 @@ class FacadeSpec extends AnyFunSuite {
       .ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))
     assert(sigDf.head().getSeq[Long](0) ==
       MinHash.signatureOfTokens(tokens.flatten.distinct.toArray, 64).toSeq)
+    // every SQL aggregate returns its Column twin's value over the same
+    // rows, once with default arguments and once with all of them given
+    graft.functions.sql.registerAll(spark)
+    def view(name: String, df: org.apache.spark.sql.DataFrame): String = {
+      df.createOrReplaceTempView(name); name
+    }
+    val tok = view("tok", tokDf)
+    val hsh = view("hsh", hashDf)
+    val vls = view("vls", valDf)
+    val wrd = view("wrd", words.toDF("x").repartition(3))
+    // <= 500 distinct tokens: freq sketches stay exact at k = 1024
+    val ftok = view("ftok", tokens.map(_.map(_ % 500)).toDF("x").repartition(3))
+    // dumps of two disjoint halves of a view, for the unions
+    def dumps(name: String, of: String, build: org.apache.spark.sql.Column) =
+      view(name, Seq(0, 1).map(h => one(spark.table(of)
+        .where(pmod(hash(x), lit(2)) === h), build)).toDF("x"))
+    val twins = Seq(
+      ("graft_bloom_agg_tokens", tok, "x, 8000, 0.01",
+        F.bloom_agg_tokens(x, 8000, 0.01)),
+      ("graft_bloom_agg_tokens", tok, "x, 8000, 0.01, 4096",
+        F.bloom_agg_tokens(x, 8000, 0.01, 4096)),
+      ("graft_bloom_agg_hash", hsh, "x, 8000, 0.01",
+        F.bloom_agg_hash(x, 8000, 0.01)),
+      ("graft_bloom_agg_hash", hsh, "x, 8000, 0.01, 4096",
+        F.bloom_agg_hash(x, 8000, 0.01, 4096)),
+      ("graft_bloom_union_agg", dumps("bd", hsh, F.bloom_agg_hash(x, 8000, 0.01)),
+        "x, 8000, 0.01", F.bloom_union_agg(x, nbits, k)),
+      ("graft_hll_agg_tokens", tok, "x", F.hll_agg_tokens(x)),
+      ("graft_hll_agg_tokens", tok, "x, 12", F.hll_agg_tokens(x, 12)),
+      ("graft_hll_agg_hash", hsh, "x", F.hll_agg_hash(x)),
+      ("graft_hll_agg_hash", hsh, "x, 12", F.hll_agg_hash(x, 12)),
+      ("graft_hll_union_agg", dumps("hd", hsh, F.hll_agg_hash(x)), "x",
+        F.hll_union_agg(x)),
+      ("graft_hll_union_agg", dumps("hd12", hsh, F.hll_agg_hash(x, 12)),
+        "x, 12", F.hll_union_agg(x, 12)),
+      ("graft_cms_agg_tokens", tok, "x", F.cms_agg_tokens(x)),
+      ("graft_cms_agg_tokens", tok, "x, 4, 4096", F.cms_agg_tokens(x, 4, 4096)),
+      ("graft_cms_agg_hash", hsh, "x", F.cms_agg_hash(x)),
+      ("graft_cms_agg_hash", hsh, "x, 4, 4096", F.cms_agg_hash(x, 4, 4096)),
+      ("graft_cms_union_agg", dumps("cd", hsh, F.cms_agg_hash(x)), "x",
+        F.cms_union_agg(x)),
+      ("graft_cms_union_agg", dumps("cd4", hsh, F.cms_agg_hash(x, 4, 4096)),
+        "x, 4, 4096", F.cms_union_agg(x, 4, 4096)),
+      ("graft_theta_agg_tokens", tok, "x", F.theta_agg_tokens(x)),
+      ("graft_theta_agg_tokens", tok, "x, 256", F.theta_agg_tokens(x, 256)),
+      ("graft_theta_agg_hash", hsh, "x", F.theta_agg_hash(x)),
+      ("graft_theta_agg_hash", hsh, "x, 256", F.theta_agg_hash(x, 256)),
+      ("graft_theta_union_agg", dumps("td", hsh, F.theta_agg_hash(x)), "x",
+        F.theta_union_agg(x)),
+      ("graft_theta_union_agg", dumps("td256", hsh, F.theta_agg_hash(x, 256)),
+        "x, 256", F.theta_union_agg(x, 256)),
+      ("graft_tuple_agg_hash", hsh, "x, 1", F.tuple_agg_hash(x, lit(1))),
+      ("graft_tuple_agg_hash", hsh, "x, 1, 256",
+        F.tuple_agg_hash(x, lit(1), 256)),
+      ("graft_tuple_agg_tokens", tok, "x", F.tuple_agg_tokens(x)),
+      ("graft_tuple_agg_tokens", tok, "x, 256", F.tuple_agg_tokens(x, 256)),
+      ("graft_tuple_union_agg", dumps("ud", hsh, F.tuple_agg_hash(x, lit(1))), "x",
+        F.tuple_union_agg(x)),
+      ("graft_tuple_union_agg", dumps("ud256", hsh, F.tuple_agg_hash(x, lit(1), 256)),
+        "x, 256", F.tuple_union_agg(x, 256)),
+      ("graft_freq_agg_tokens", ftok, "x", F.freq_agg_tokens(x)),
+      ("graft_freq_agg_tokens", ftok, "x, 8192", F.freq_agg_tokens(x, 8192)),
+      ("graft_freq_agg_str", wrd, "x", F.freq_agg_str(x)),
+      ("graft_freq_agg_str", wrd, "x, 64", F.freq_agg_str(x, 64)),
+      ("graft_freq_union_agg", dumps("fd", ftok, F.freq_agg_tokens(x)), "x",
+        F.freq_union_agg(x)),
+      ("graft_freq_union_agg", dumps("sd", wrd, F.freq_agg_str(x, 64)),
+        "x, 64, true", F.freq_union_agg(x, 64, stringItems = true)),
+      ("graft_freq_union_agg", "sd", "x, 64, 1",
+        F.freq_union_agg(x, 64, stringItems = true)),
+      ("graft_tdigest_agg", vls, "x", F.tdigest_agg(x)),
+      ("graft_tdigest_agg", vls, "x, 50.0", F.tdigest_agg(x, 50.0)),
+      ("graft_kll_agg", vls, "x", F.kll_agg(x)),
+      ("graft_kll_agg", vls, "x, 100", F.kll_agg(x, 100)),
+      ("graft_minhash_agg_tokens", tok, "x", F.minhash_agg_tokens(x)),
+      ("graft_minhash_agg_tokens", tok, "x, 64", F.minhash_agg_tokens(x, 64)),
+      ("graft_sketch_panel_agg", tok, "x, 8000, 0.01",
+        F.sketch_panel_agg(x, 8000, 0.01)),
+      ("graft_sketch_panel_agg", tok, "x, 8000, 0.01, 12, 4, 4096",
+        F.sketch_panel_agg(x, 8000, 0.01, 12, 4, 4096)),
+      ("graft_topk_by_score", hsh, "x, x, 5", F.topk_by_score(x, x, 5)))
+    assert(twins.map(_._1).toSet ==
+      graft.functions.sql.aggregateBuilders.keySet)
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: org.apache.spark.sql.Row => r.toSeq.map(norm)
+      case xs: scala.collection.Seq[_] => xs.map(norm)
+      case o => o
+    }
+    for ((name, from, args, twin) <- twins) {
+      val got = spark.sql(s"SELECT $name($args) FROM $from").head().get(0)
+      val wantDf = spark.table(from).agg(twin)
+      // the generated column name is the aggregate's prettyName
+      assert(wantDf.columns.head.startsWith(name.stripPrefix("graft_") + "("),
+        wantDf.columns.head)
+      val want = wantDf.head().get(0)
+      val median: Array[Byte] => Double = name match {
+        case "graft_tdigest_agg" => TDigest.deserialize(_).quantile(0.5)
+        case "graft_kll_agg" => KllSketch.deserialize(_).quantile(0.5)
+        case _ => null
+      }
+      if (median == null) assert(norm(got) == norm(want), s"$name($args)")
+      else assert(math.abs(median(got.asInstanceOf[Array[Byte]]) -
+        median(want.asInstanceOf[Array[Byte]])) < 0.05, s"$name($args)")
+    }
+  }
+
+  /** Messages of an exception and its causes: Spark may wrap what a
+    * builder or aggregate throws.
+    */
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("SQL builders reject bad arguments loudly") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.sql.registerAll(spark)
+    TokenDocGen.generateDf(spark, 50, 5L, 2).createOrReplaceTempView("t")
+    // each error names the function, the argument count and the usage
+    def rejects(call: String, count: Int, usage: String): Unit = {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM t").collect())
+      assert(causes(e).exists(m => m.contains(s"$count arguments given") &&
+        m.contains(usage)), causes(e))
+    }
+    // too few arguments
+    rejects("graft_topk_by_score(n_tok, n_tok)", 2,
+      "graft_topk_by_score(score, id, k)")
+    // extra arguments
+    rejects("graft_hll_agg_hash(n_tok, 14, 99)", 3, "graft_hll_agg_hash(hash64[, p])")
+    // a sizing literal outside int range (4294967310 truncates to 14)
+    rejects("graft_hll_agg_tokens(tokens, 4294967310)", 2,
+      "graft_hll_agg_tokens(tokens[, p])")
   }
 }
