@@ -161,14 +161,22 @@ object BlockedBloomFilter {
     * reject nbits > MaxBits. (/root/reference/bloomfilter.go:75-92)
     */
   def apply(nbits: Long, nhashes: Int): BlockedBloomFilter = {
-    var nb = if (nbits < 1) BlockBits.toLong else nbits
     val k = if (nhashes < 2) 2 else nhashes
+    val nblocks = blocksFor(nbits)
+    new BlockedBloomFilter(new Array[Int]((nblocks * BlockWords).toInt), k)
+  }
+
+  /** Block count of a filter of `nbits` bits under the size rules of
+    * [[apply]]; throws for a size it rejects.
+    */
+  def blocksFor(nbits: Long): Long = {
+    var nb = if (nbits < 1) BlockBits.toLong else nbits
     require(nb <= MaxBits, "nbits exceeds MaxBits")
     if (nb % BlockBits != 0) nb += BlockBits - nb % BlockBits
     val nblocks = nb / BlockBits
     require(nblocks * BlockWords.toLong <= Int.MaxValue,
       s"filter of $nb bits exceeds single-JVM buffer; shard the sketch")
-    new BlockedBloomFilter(new Array[Int]((nblocks * BlockWords).toInt), k)
+    nblocks
   }
 
   /** Construct sized by Optimize for (capacity, fpr[, maxBits]). */

@@ -87,9 +87,14 @@ final class CountMinSketch private (
 }
 
 object CountMinSketch {
-  def apply(depth: Int, width: Int): CountMinSketch = {
+  /** The shape rule every count-min sketch is built under. */
+  def requireShape(depth: Int, width: Int): Unit = {
     require(depth >= 1 && depth <= 32, s"CMS depth $depth out of range")
     require(width >= 2, s"CMS width $width too small")
+  }
+
+  def apply(depth: Int, width: Int): CountMinSketch = {
+    requireShape(depth, width)
     new CountMinSketch(depth, width, new Array[Long](depth * width), 0L)
   }
 

@@ -303,8 +303,12 @@ object FreqSketch {
     */
   private def initialCapacity(k: Int): Int = math.min(k * 2, 1 << 16)
 
-  def apply(k: Int, codec: Codec): FreqSketch = {
+  /** The size rule every freq sketch is built under. */
+  def requireK(k: Int): Unit =
     require(k >= 8 && k <= (1 << 24), s"freq sketch k $k out of range [8, 2^24]")
+
+  def apply(k: Int, codec: Codec): FreqSketch = {
+    requireK(k)
     new FreqSketch(k, codec, new java.util.HashMap[AnyRef, Ctr](initialCapacity(k)), 0L, 0L)
   }
 

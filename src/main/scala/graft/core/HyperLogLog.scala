@@ -128,8 +128,12 @@ final class HyperLogLog private (val p: Int, val registers: Array[Byte])
 }
 
 object HyperLogLog {
-  def apply(p: Int): HyperLogLog = {
+  /** The precision rule every HLL is built under. */
+  def requirePrecision(p: Int): Unit =
     require(p >= 4 && p <= 18, s"HLL precision $p out of range [4,18]")
+
+  def apply(p: Int): HyperLogLog = {
+    requirePrecision(p)
     new HyperLogLog(p, new Array[Byte](1 << p))
   }
 
@@ -140,7 +144,7 @@ object HyperLogLog {
     val p = bytes(3).toInt
     // validate BEFORE the length check: Int shifts are mod 32, so a
     // hostile p >= 32 could pass the length check with garbage m
-    require(p >= 4 && p <= 18, s"HLL precision $p out of range [4,18]")
+    requirePrecision(p)
     require(bytes.length == 4 + (1 << p), "truncated HLL sketch")
     val regs = java.util.Arrays.copyOfRange(bytes, 4, bytes.length)
     // register range check: a byte of 0x80 reads as -128 and any value

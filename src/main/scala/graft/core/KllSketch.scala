@@ -194,8 +194,12 @@ object KllSketch {
   final val C = 2.0 / 3.0
   final val MinCap = 8
 
-  def apply(k: Int = 200): KllSketch = {
+  /** The size rule every KLL sketch is built under. */
+  def requireK(k: Int): Unit =
     require(k >= 8 && k <= 65535, s"KLL k=$k out of range")
+
+  def apply(k: Int = 200): KllSketch = {
+    requireK(k)
     new KllSketch(k, ArrayBuffer(new ArrayBuffer[Double]), 0L,
       Double.PositiveInfinity, Double.NegativeInfinity, 0L)
   }

@@ -209,8 +209,12 @@ final class TDigest private (
 }
 
 object TDigest {
-  def apply(compression: Double = 100.0): TDigest = {
+  /** The compression rule every t-digest is built under. */
+  def requireCompression(compression: Double): Unit =
     require(compression >= 20, s"compression $compression too small")
+
+  def apply(compression: Double = 100.0): TDigest = {
+    requireCompression(compression)
     val bufCap = math.max(32, (5 * compression).toInt)
     new TDigest(compression,
       new Array[Double](0), new Array[Double](0), 0,

@@ -193,8 +193,12 @@ object ThetaSketch {
   /** Sample space size 2^63 as a Double (exact: power of two). */
   val SampleSpace: Double = 9.223372036854775808e18
 
-  def apply(k: Int): ThetaSketch = {
+  /** The size rule every theta sketch is built under. */
+  def requireK(k: Int): Unit =
     require(k >= 16 && k <= (1 << 26), s"theta sketch k $k out of range [16, 2^26]")
+
+  def apply(k: Int): ThetaSketch = {
+    requireK(k)
     new ThetaSketch(k, Long.MaxValue, new Array[Long](math.min(k, 8)), 0)
   }
 

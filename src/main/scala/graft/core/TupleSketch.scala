@@ -235,8 +235,12 @@ final class TupleSketch private (
 }
 
 object TupleSketch {
-  def apply(k: Int): TupleSketch = {
+  /** The size rule every tuple sketch is built under. */
+  def requireK(k: Int): Unit =
     require(k >= 16 && k <= (1 << 26), s"tuple sketch k $k out of range [16, 2^26]")
+
+  def apply(k: Int): TupleSketch = {
+    requireK(k)
     new TupleSketch(k, Long.MaxValue,
       new Array[Long](math.min(k, 8)), new Array[Long](math.min(k, 8)), 0)
   }

@@ -48,7 +48,9 @@ object catalyst {
 
   /** One sketch's codec and its sizing parameters. Kinds are case
     * classes, so Catalyst equality and canonicalization still dedupe
-    * identical aggregates.
+    * identical aggregates. A kind applies its core constructor's sizing
+    * rules when it is built, so a bad literal fails while the Column is
+    * built, before any job starts.
     *
     * @param stem  `prettyName` stem of the aggregates over this kind
     * @param input type of the scalar input [[add]] folds in
@@ -71,6 +73,8 @@ object catalyst {
       */
     case class Bloom(nbits: Long, k: Int)
         extends SketchKind[BlockedBloomFilter]("bloom", LongType) {
+      // k below 2 is clamped, not refused (the reference's rule)
+      BlockedBloomFilter.blocksFor(nbits)
       def empty(): BlockedBloomFilter = BlockedBloomFilter(nbits, k)
       def merge(b: BlockedBloomFilter, o: BlockedBloomFilter): BlockedBloomFilter =
         b.union(o)
@@ -88,6 +92,7 @@ object catalyst {
       * must share `p`).
       */
     case class Hll(p: Int) extends SketchKind[HyperLogLog]("hll", LongType) {
+      HyperLogLog.requirePrecision(p)
       def empty(): HyperLogLog = HyperLogLog(p)
       def merge(b: HyperLogLog, o: HyperLogLog): HyperLogLog = b.merge(o)
       def dump(b: HyperLogLog): Array[Byte] = b.serialize()
@@ -100,6 +105,7 @@ object catalyst {
       */
     case class Cms(depth: Int, width: Int)
         extends SketchKind[CountMinSketch]("cms", LongType) {
+      CountMinSketch.requireShape(depth, width)
       def empty(): CountMinSketch = CountMinSketch(depth, width)
       def merge(b: CountMinSketch, o: CountMinSketch): CountMinSketch = b.merge(o)
       def dump(b: CountMinSketch): Array[Byte] = b.serialize()
@@ -112,6 +118,7 @@ object catalyst {
       * cannot intersect.
       */
     case class Theta(k: Int) extends SketchKind[ThetaSketch]("theta", LongType) {
+      ThetaSketch.requireK(k)
       def empty(): ThetaSketch = ThetaSketch(k)
       def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.merge(o)
       def dump(b: ThetaSketch): Array[Byte] = b.serialize()
@@ -124,6 +131,7 @@ object catalyst {
       * A scalar input is a key hash of weight 1.
       */
     case class Tuple(k: Int) extends SketchKind[TupleSketch]("tuple", LongType) {
+      TupleSketch.requireK(k)
       def empty(): TupleSketch = TupleSketch(k)
       def merge(b: TupleSketch, o: TupleSketch): TupleSketch = b.merge(o)
       def dump(b: TupleSketch): Array[Byte] = b.serialize()
@@ -141,6 +149,7 @@ object catalyst {
       */
     case class Freq(k: Int, strings: Boolean)
         extends SketchKind[FreqSketch]("freq", if (strings) StringType else LongType) {
+      FreqSketch.requireK(k)
       def empty(): FreqSketch =
         if (strings) FreqSketch.strings(k) else FreqSketch.longs(k)
       def merge(b: FreqSketch, o: FreqSketch): FreqSketch = b.merge(o)
@@ -154,6 +163,7 @@ object catalyst {
     /** t-digest over doubles. */
     case class TDigest(compression: Double)
         extends SketchKind[graft.core.TDigest]("tdigest", DoubleType) {
+      graft.core.TDigest.requireCompression(compression)
       def empty(): graft.core.TDigest = graft.core.TDigest(compression)
       def merge(b: graft.core.TDigest, o: graft.core.TDigest): graft.core.TDigest =
         b.merge(o)
@@ -165,6 +175,7 @@ object catalyst {
 
     /** KLL quantile sketch over doubles. */
     case class Kll(k: Int) extends SketchKind[KllSketch]("kll", DoubleType) {
+      KllSketch.requireK(k)
       def empty(): KllSketch = KllSketch(k)
       def merge(b: KllSketch, o: KllSketch): KllSketch = b.merge(o)
       def dump(b: KllSketch): Array[Byte] = b.serialize()

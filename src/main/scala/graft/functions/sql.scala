@@ -295,10 +295,11 @@ object sql {
     }})
 
   /** name -> (usage, builder) for the sketch accessors: each is the
-    * `functions` udf val itself, lifted into a SQL builder. Same
-    * contract as the Column form — every call deserializes its sketch
-    * argument per ROW, so use them on already-aggregated results (one
-    * sketch row per group), never on corpus-sized frames.
+    * `functions` udf val itself, lifted into a SQL builder, behind the
+    * same argument-count check as the other builders. Same contract as
+    * the Column form — every call deserializes its sketch argument per
+    * ROW, so use them on already-aggregated results (one sketch row per
+    * group), never on corpus-sized frames.
     */
   val udfBuilders: Map[String, (String, Builder)] = {
     Seq(
@@ -348,7 +349,12 @@ object sql {
         "(sigA, sigB) - MinHash Jaccard estimate", F.minhash_jaccard)
     ).map { case (name, (usage, u)) =>
       val named = u.withName(name)
-      name -> (usage, (es: Seq[Expression]) => glue.udfExpression(named, es))
+      val arity = glue.udfArity(u)
+      name -> (usage, (es: Seq[Expression]) => {
+        if (es.length != arity)
+          new Args(name, usage, es).fail("wrong number of arguments")
+        glue.udfExpression(named, es)
+      })
     }.toMap
   }
 

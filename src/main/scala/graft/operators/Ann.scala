@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
+import graft.store.{Tables => T}
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (array<float>).
@@ -222,9 +223,9 @@ object Ann {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = ivfCentroids(corpus, nlist, iters, idCol, embCol)
-    cents.zipWithIndex.flatMap { case (v, c) =>
-      v.zipWithIndex.map { case (x, p) => (c, p, x) }
-    }.toSeq.toDF("cl", "pos", "v")
+    T.Ivf.Centroids.check(cents.zipWithIndex.flatMap { case (v, c) =>
+        v.zipWithIndex.map { case (x, p) => (c, p, x) }
+      }.toSeq.toDF("cl", "pos", "v"))
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/centroids")
     corpus
@@ -237,10 +238,10 @@ object Ann {
     // exactly what is on disk
     val base = assignedCosineStats(
       spark.read.parquet(s"$dir/lists"), cents).head()
-    Seq((nlist, cents(0).length, base.getLong(0), base.getDouble(1),
-        base.getDouble(2)))
+    T.Ivf.Manifest.check(Seq((nlist, cents(0).length, base.getLong(0),
+        base.getDouble(1), base.getDouble(2)))
       .toDF("nlist", "dim", "n_vecs", "mean_assigned_cosine",
-        "p10_assigned_cosine")
+        "p10_assigned_cosine"))
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/manifest")
   }
@@ -273,7 +274,7 @@ object Ann {
     */
   def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/manifest").head()
+    val m = T.Ivf.Manifest.read(spark, dir).head()
     val cents = readIvfCentroids(spark, dir)
     val now = assignedCosineStats(spark.read.parquet(s"$dir/lists"), cents)
     now.select(
@@ -359,7 +360,7 @@ object Ann {
       val stats = assignedCosineStats(
         assigned.select(col("cl"), col("c_emb")), cents).head()
       if (stats.getLong(0) > 0) { // empty snapshot: nothing to gate
-        val baseline = spark.read.parquet(s"$dir/manifest").head()
+        val baseline = T.Ivf.Manifest.read(spark, dir).head()
           .getAs[Double]("mean_assigned_cosine")
         val snapMean = stats.getDouble(1)
         val drift = baseline - snapMean
@@ -383,7 +384,7 @@ object Ann {
   /** Load the quantizer matrix back (nlist x dim doubles — tiny). */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(s"$dir/centroids")
+    val rows = T.Ivf.Centroids.read(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     val nlist = rows.map(_._1).max + 1
     val dim = rows.map(_._2).max + 1

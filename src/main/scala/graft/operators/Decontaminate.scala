@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.BloomIO
 import graft.functions.{functions => F}
-import graft.store.Store
+import graft.store.{Store, Tables => T}
 
 /** Eval-set decontamination — the canonical LLM-training use of a Bloom
   * filter: training documents that share word n-grams with a held-out
@@ -339,12 +339,12 @@ object Decontaminate {
                      idCol: String = "doc_id"): Unit = {
     val spark = eval.sparkSession
     import spark.implicits._
-    docNgrams(eval, n, textCol, idCol)
-      .select(col("ng")).distinct()
+    T.Eval.Ngrams.check(docNgrams(eval, n, textCol, idCol)
+        .select(col("ng")).distinct())
       .write.mode("overwrite").parquet(s"$dir/ngrams")
-    val storedNg = spark.read.parquet(s"$dir/ngrams")
+    val storedNg = T.Eval.Ngrams.read(spark, dir)
     writeFilter(spark, dir, filterFromNgrams(storedNg, fpr, expectedEvalNgrams))
-    Seq((n, fpr)).toDF("n", "fpr")
+    T.Eval.Manifest.check(Seq((n, fpr)).toDF("n", "fpr"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
   }
 
@@ -366,10 +366,10 @@ object Decontaminate {
                         textCol: String = "text",
                         idCol: String = "doc_id"): Unit = {
     val spark = newEval.sparkSession
-    val mf = spark.read.parquet(s"$dir/manifest").head()
+    val mf = T.Eval.Manifest.read(spark, dir).head()
     val n = mf.getAs[Int]("n")
     val fpr = mf.getAs[Double]("fpr")
-    val stored = spark.read.parquet(s"$dir/ngrams")
+    val stored = T.Eval.Ngrams.read(spark, dir)
     // n-grams genuinely new to the index, pinned (localCheckpoint)
     // BEFORE ngrams/ is appended to — the frame reads that directory
     val fresh = docNgrams(newEval, n, textCol, idCol)
@@ -402,7 +402,7 @@ object Decontaminate {
     // nFresh==0 early return above with a stale filter — permanent
     // false negatives for the new eval docs.
     writeFilter(spark, dir, filter)
-    fresh.write.mode("append").parquet(s"$dir/ngrams")
+    T.Eval.Ngrams.check(fresh).write.mode("append").parquet(s"$dir/ngrams")
   }
 
   /** Replace `filter.bloom` through one `graft.store.Store` swap, so a
@@ -441,10 +441,9 @@ object Decontaminate {
                           idCol: String = "doc_id"): DataFrame = {
     require(minOverlap >= 1, "minOverlap must be >= 1")
     val spark = train.sparkSession
-    val mf = spark.read.parquet(s"$indexDir/manifest").head()
-    val n = mf.getAs[Int]("n")
+    val n = T.Eval.Manifest.read(spark, indexDir).head().getAs[Int]("n")
     val probe = F.bloomProbeAuto(spark, loadEvalFilter(spark, indexDir))
-    val evalNg = spark.read.parquet(s"$indexDir/ngrams")
+    val evalNg = T.Eval.Ngrams.read(spark, indexDir)
     val cands = docNgrams(train, n, textCol, idCol)
       .filter(probe(F.fnv_hash64_native(col("ng"))))
     cands.join(evalNg.hint("shuffle_hash"), Seq("ng"), "left_semi")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
+import graft.store.{Tables => T}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -492,22 +493,15 @@ object Dedup {
                         ngram: Int = 1): Unit = {
     writeDedupIndex(docs, dir, numBands, rowsPerBand, ngram)
     val spark = docs.sparkSession
+    // near-dup pairs recomputed from the persisted bands/ + toksets/:
+    // one band self-join and one verify join over index columns only
     writeClusterLabels(spark, dir, threshold,
-      clusterPairsFromState(spark, dir, threshold))
+      clusterPairsFromFrames(T.Dedup.Bands.read(spark, dir),
+        T.Dedup.toksets(ngram).read(spark, dir), threshold))
   }
 
-  /** Verified near-dup pairs recomputed from an index's persisted
-    * bands/ + toksets/ — one band self-join and one verify join over
-    * index columns only.
-    */
-  private def clusterPairsFromState(spark: org.apache.spark.sql.SparkSession,
-                                    dir: String,
-                                    threshold: Double): DataFrame =
-    clusterPairsFromFrames(spark.read.parquet(s"$dir/bands"),
-      spark.read.parquet(s"$dir/toksets"), threshold)
-
-  /** Layout-agnostic core of [[clusterPairsFromState]] over loaded
-    * bands/toksets frames (directory parquet or bucketed tables).
+  /** Verified near-dup pairs of an index's loaded bands/toksets frames
+    * (directory parquet or bucketed tables).
     */
   private def clusterPairsFromFrames(bands: DataFrame, sets: DataFrame,
                                      threshold: Double): DataFrame = {
@@ -523,11 +517,11 @@ object Dedup {
                                  dir: String, threshold: Double,
                                  pairs: DataFrame): Unit = {
     import spark.implicits._
-    nearDupClusters(pairs)
-      .select(col("id").as("doc_id"), col("cluster_id"))
+    T.Dedup.Labels.check(nearDupClusters(pairs)
+        .select(col("id").as("doc_id"), col("cluster_id")))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/labels")
-    Seq(threshold).toDF("threshold").coalesce(1)
+    T.Dedup.LabelsMeta.check(Seq(threshold).toDF("threshold")).coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/labels_meta")
   }
@@ -556,7 +550,7 @@ object Dedup {
     require(hasClusterLabels(spark, dir),
       s"dedup index at $dir carries no cluster labels — build it with " +
         "writeDedupIndexCC to use the connected-component policy")
-    spark.read.parquet(s"$dir/labels_meta")
+    T.Dedup.LabelsMeta.read(spark, dir)
       .agg(max(col("threshold"))).head().getDouble(0)
   }
 
@@ -571,28 +565,38 @@ object Dedup {
   /** (numBands, rowsPerBand, ngram, nDocs, maxDocId) of an index. */
   def readIndexManifest(spark: org.apache.spark.sql.SparkSession,
                         dir: String): (Int, Int, Int, Long, Long) =
-    manifestOf(spark.read.parquet(s"$dir/manifest"), dir)
+    manifestOf(T.Dedup.Manifest.read(spark, dir), dir)
 
   /** The one reader of a dedup manifest, directory or table layout (one
     * row per appended snapshot): refuses a manifest without the current
-    * [[IndexFormat]] stamp.
+    * [[IndexFormat]] stamp. The rows are collected and folded on the
+    * driver (max of the parameters, sum of the doc counts): one scan
+    * job, no aggregate exchange.
     */
   private def manifestOf(m: DataFrame,
                          where: String): (Int, Int, Int, Long, Long) = {
-    val stamp =
-      if (m.columns.contains("format_version"))
-        min(coalesce(col("format_version"), lit(0)))
-      else lit(0)
-    val r = m.agg(max(col("num_bands")), max(col("rows_per_band")),
-        max(col("ngram")), sum(col("n_docs")), max(col("max_doc_id")), stamp)
-      .head()
-    if (r.getInt(5) < IndexFormat)
+    val rows = m.select(col("num_bands"), col("rows_per_band"), col("ngram"),
+        col("n_docs"), col("max_doc_id"),
+        if (m.columns.contains("format_version")) col("format_version")
+        else lit(null).cast("int"))
+      .collect() // bounded: one row per appended snapshot
+    val stamp = stampOf(rows)
+    if (stamp < IndexFormat)
       throw new IllegalStateException(s"dedup index at $where has " +
-        s"format_version ${r.getInt(5)} (0 = unstamped); this build " +
+        s"format_version $stamp (0 = unstamped); this build " +
         s"reads only version $IndexFormat (sorted toksets) — rebuild " +
         "it with writeDedupIndex")
-    (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))
+    (rows.map(_.getInt(0)).max, rows.map(_.getInt(1)).max,
+      rows.map(_.getInt(2)).max, rows.map(_.getLong(3)).sum,
+      rows.map(_.getLong(4)).max)
   }
+
+  /** The lowest `format_version` of a manifest's rows, in column 5; an
+    * unstamped row (null) or a manifest without rows counts as 0.
+    */
+  private def stampOf(rows: Array[Row]): Int =
+    if (rows.isEmpty) 0
+    else rows.map(r => if (r.isNullAt(5)) 0 else r.getInt(5)).min
 
   /** One stamped manifest row; an all-duplicates snapshot appends zero
     * docs, so a null max id is recorded as -1 (the monotone check stays
@@ -602,10 +606,10 @@ object Dedup {
                           numBands: Int, rowsPerBand: Int, ngram: Int,
                           stats: Row): DataFrame = {
     import spark.implicits._
-    Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
+    T.Dedup.Manifest.check(Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
         if (stats.isNullAt(1)) -1L else stats.getLong(1), IndexFormat))
       .toDF("num_bands", "rows_per_band", "ngram", "n_docs", "max_doc_id",
-        "format_version")
+        "format_version"))
   }
 
   private def writeIndexState(afterExact: DataFrame, dir: String,
@@ -627,16 +631,17 @@ object Dedup {
     afterExact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats =
       try {
-        afterExact
-          .select(col("doc_id"), md5(col("text")).as("content_md5"))
+        T.Dedup.Digests.check(afterExact.select(col("doc_id"),
+            md5(col("text")).as("content_md5")))
           .write.mode(mode).parquet(s"$dir/digests")
         val toks = docTokens(afterExact)
-        tokenSets(toks, ngram).write.mode(mode).parquet(s"$dir/toksets")
+        T.Dedup.toksets(ngram).check(tokenSets(toks, ngram))
+          .write.mode(mode).parquet(s"$dir/toksets")
         // persisted schema stays (doc_id, band): sz is a join-time
         // optimization, selected away here (Catalyst prunes its
         // array_distinct)
-        bandKeys(toks, numBands, rowsPerBand, ngram)
-          .select(col("doc_id"), col("band"))
+        T.Dedup.Bands.check(bandKeys(toks, numBands, rowsPerBand, ngram)
+            .select(col("doc_id"), col("band")))
           .write.mode(mode).parquet(s"$dir/bands")
         afterExact
           .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
@@ -715,9 +720,9 @@ object Dedup {
     val (numBands, rowsPerBand, ngram, _, maxIndexed) =
       readIndexManifest(spark, indexDir)
     incrementalPairsFrom(newDocs,
-      spark.read.parquet(s"$indexDir/digests"),
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/toksets"),
+      T.Dedup.Digests.read(spark, indexDir),
+      T.Dedup.Bands.read(spark, indexDir),
+      T.Dedup.toksets(ngram).read(spark, indexDir),
       numBands, rowsPerBand, ngram, maxIndexed, threshold)
   }
 
@@ -967,13 +972,13 @@ object Dedup {
     import spark.implicits._
     val (nb, rpb, ng, nDocs, maxId) = readIndexManifest(spark, indexDir)
     graft.sources.BucketedTables.writeBucketed(
-      spark.read.parquet(s"$indexDir/digests"),
+      T.Dedup.Digests.read(spark, indexDir),
       s"${tablePrefix}_digests", "content_md5", numBuckets)
     graft.sources.BucketedTables.writeBucketed(
-      spark.read.parquet(s"$indexDir/toksets"),
+      T.Dedup.toksets(ng).read(spark, indexDir),
       s"${tablePrefix}_toksets", "doc_id", numBuckets)
     graft.sources.BucketedTables.writeBucketed(
-      spark.read.parquet(s"$indexDir/bands"),
+      T.Dedup.Bands.read(spark, indexDir),
       s"${tablePrefix}_bands", "band", numBuckets)
     // one consolidated manifest row (the directory may hold one per
     // appended snapshot)
@@ -982,7 +987,7 @@ object Dedup {
       s"${tablePrefix}_manifest")
     if (hasClusterLabels(spark, indexDir)) {
       graft.sources.BucketedTables.writeBucketed(
-        spark.read.parquet(s"$indexDir/labels"),
+        T.Dedup.Labels.read(spark, indexDir),
         s"${tablePrefix}_labels", "doc_id", numBuckets)
       graft.sources.BucketedTables.saveTable(
         Seq(readLabelsThreshold(spark, indexDir)).toDF("threshold"),
@@ -1010,8 +1015,8 @@ object Dedup {
     val (numBands, rowsPerBand, ngram, _, _) =
       readIndexManifest(spark, indexDir)
     nearDupHitsFrom(docs,
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/toksets"),
+      T.Dedup.Bands.read(spark, indexDir),
+      T.Dedup.toksets(ngram).read(spark, indexDir),
       numBands, rowsPerBand, ngram, threshold)
   }
 
@@ -1104,7 +1109,7 @@ object Dedup {
       case None => newDocs // empty snapshot
       case Some(st) =>
         val (drops, newLabels) = ccOverIncrementalPairs(
-          spark.read.parquet(s"$indexDir/labels"),
+          T.Dedup.Labels.read(spark, indexDir),
           st.pairsVsCorpus, st.pairsWithin, st.maxIndexed)
         val kept = st.newExact
           .join(drops.withColumnRenamed("id", "doc_id"),
@@ -1118,7 +1123,8 @@ object Dedup {
           val pinnedLabels = newLabels.localCheckpoint()
           writeIndexState(st.newExact, indexDir, st.numBands,
             st.rowsPerBand, st.ngram, append = true)
-          pinnedLabels.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          T.Dedup.Labels.check(pinnedLabels)
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$indexDir/labels")
           materialized
         } else kept
@@ -1323,42 +1329,69 @@ object Dedup {
       dim: Int, append: Boolean): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    if (append) {
-      val m = spark.read.parquet(s"$dir/manifest")
-        .agg(max(col("num_bands")), max(col("bits_per_band")),
-          max(col("dim"))).head()
-      require(m.getInt(0) == numBands && m.getInt(1) == bitsPerBand &&
-        (dim <= 0 || m.getInt(2) == dim),
-        s"embedding index at $dir was built with (numBands=${m.getInt(0)}, " +
-          s"bitsPerBand=${m.getInt(1)}, dim=${m.getInt(2)}); cannot append " +
+    val stored = if (append) Some(readEmbManifest(spark, dir)) else None
+    stored.foreach { m =>
+      require(m.numBands == numBands && m.bitsPerBand == bitsPerBand &&
+        (dim <= 0 || m.dim == dim),
+        s"embedding index at $dir was built with (numBands=${m.numBands}, " +
+          s"bitsPerBand=${m.bitsPerBand}, dim=${m.dim}); cannot append " +
           s"($numBands, $bitsPerBand, $dim)")
     }
     val mode = if (append) org.apache.spark.sql.SaveMode.Append
                else org.apache.spark.sql.SaveMode.Overwrite
     val d = if (dim > 0) dim else Ann.dimOf(embeddings, embCol)
-    if (append) {
-      // validate the INFERRED dim too: with the default dim=-1 the
-      // require above is vacuous, and appending band keys computed
-      // under a different hyperplane set corrupts the index silently
-      val storedDim = spark.read.parquet(s"$dir/manifest")
-        .agg(max(col("dim"))).head().getInt(0)
-      require(storedDim == d,
-        s"embedding index at $dir holds dim=$storedDim vectors; cannot " +
+    // validate the INFERRED dim too: with the default dim=-1 the require
+    // above is vacuous, and appending band keys computed under a
+    // different hyperplane set corrupts the index silently
+    stored.foreach { m =>
+      require(m.dim == d,
+        s"embedding index at $dir holds dim=${m.dim} vectors; cannot " +
           s"append dim=$d")
     }
     val v = embeddings.select(col(idCol).as("vid"), col(embCol).as("emb"))
     v.write.mode(mode).parquet(s"$dir/vectors")
-    v.select(col("vid"),
+    T.EmbDedup.Bands.check(v.select(col("vid"),
         explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
-          .as("band"))
+          .as("band")))
       .write.mode(mode).parquet(s"$dir/bands")
     val stats = v.agg(count(lit(1)), max(col("vid"))).head()
-    Seq((numBands, bitsPerBand, d, stats.getLong(0),
-        if (stats.isNullAt(1)) -1L else stats.getLong(1)))
-      .toDF("num_bands", "bits_per_band", "dim", "n_vecs", "max_vid")
+    T.EmbDedup.Manifest.check(Seq((numBands, bitsPerBand, d,
+        stats.getLong(0), if (stats.isNullAt(1)) -1L else stats.getLong(1),
+        EmbIndexFormat))
+      .toDF("num_bands", "bits_per_band", "dim", "n_vecs", "max_vid",
+        "format_version"))
       .coalesce(1)
       .write.mode(mode)
       .parquet(s"$dir/manifest")
+  }
+
+  /** On-disk format of the embedding dedup index, stamped in every
+    * manifest row as `format_version`; an index written before the
+    * stamp existed is refused, as the text index refuses one.
+    */
+  private val EmbIndexFormat = 1
+
+  /** Folded manifest of an embedding dedup index (one row per appended
+    * snapshot).
+    */
+  private case class EmbManifest(numBands: Int, bitsPerBand: Int, dim: Int,
+                                 maxVid: Long)
+
+  /** The one reader of an embedding dedup manifest: collects its rows,
+    * folds them on the driver and refuses a manifest without the
+    * current [[EmbIndexFormat]] stamp.
+    */
+  private def readEmbManifest(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): EmbManifest = {
+    val rows = T.EmbDedup.Manifest.read(spark, dir)
+      .collect() // bounded: one row per appended snapshot
+    val stamp = stampOf(rows)
+    if (stamp < EmbIndexFormat)
+      throw new IllegalStateException(s"embedding dedup index at $dir " +
+        s"has format_version $stamp (0 = unstamped); this build reads " +
+        s"only version $EmbIndexFormat — rebuild it with writeEmbDedupIndex")
+    EmbManifest(rows.map(_.getInt(0)).max, rows.map(_.getInt(1)).max,
+      rows.map(_.getInt(2)).max, rows.map(_.getLong(4)).max)
   }
 
   /** Dedup new vectors against a persisted embedding index: drop any new
@@ -1408,11 +1441,8 @@ object Dedup {
                                   embCol: String):
       Option[EmbIncrementalState] = {
     val spark = newEmbs.sparkSession
-    val m = spark.read.parquet(s"$indexDir/manifest")
-      .agg(max(col("num_bands")), max(col("bits_per_band")),
-        max(col("dim")), max(col("max_vid"))).head()
-    val (numBands, bitsPerBand, d, maxVid) =
-      (m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3))
+    val EmbManifest(numBands, bitsPerBand, d, maxVid) =
+      readEmbManifest(spark, indexDir)
     val newMinRow = newEmbs.agg(min(col(idCol))).head()
     if (newMinRow.isNullAt(0)) return None
     require(newMinRow.getLong(0) > maxVid,
@@ -1425,7 +1455,7 @@ object Dedup {
     require(newDim == d,
       s"snapshot embedding dim $newDim != index dim $d at $indexDir")
     val corpusVecs = spark.read.parquet(s"$indexDir/vectors")
-    val corpusBands = spark.read.parquet(s"$indexDir/bands")
+    val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
     val newV = newEmbs.select(col(idCol).as("vid"), col(embCol).as("emb"))
     val newBands = newV.select(col("vid"),
       explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
@@ -1483,7 +1513,7 @@ object Dedup {
     writeEmbDedupIndex(embeddings, dir, numBands, bitsPerBand, idCol,
       embCol, dim)
     val spark = embeddings.sparkSession
-    val bands = spark.read.parquet(s"$dir/bands")
+    val bands = T.EmbDedup.Bands.read(spark, dir)
     val vecs = spark.read.parquet(s"$dir/vectors")
     val pairs = bands.as("x")
       .join(bands.as("y"), col("x.band") === col("y.band") &&
@@ -1512,7 +1542,7 @@ object Dedup {
       case None => newEmbs // empty snapshot
       case Some(st) =>
         val (drops, newLabels) = ccOverIncrementalPairs(
-          spark.read.parquet(s"$indexDir/labels"),
+          T.Dedup.Labels.read(spark, indexDir),
           st.pairsVsCorpus, st.pairsWithin, st.maxVid)
         val kept = newEmbs.join(drops.withColumnRenamed("id", idCol),
           Seq(idCol), "left_anti")
@@ -1521,7 +1551,8 @@ object Dedup {
           val pinnedLabels = newLabels.localCheckpoint()
           writeEmbDedupIndexUnguarded(newEmbs, indexDir, st.numBands,
             st.bitsPerBand, idCol, embCol, st.dim, append = true)
-          pinnedLabels.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          T.Dedup.Labels.check(pinnedLabels)
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$indexDir/labels")
           materialized
         } else kept
@@ -1549,17 +1580,15 @@ object Dedup {
                             idCol: String = "vec_id",
                             embCol: String = "embedding"): DataFrame = {
     val spark = embs.sparkSession
-    val m = spark.read.parquet(s"$indexDir/manifest")
-      .agg(max(col("num_bands")), max(col("bits_per_band")),
-        max(col("dim"))).head()
-    val (numBands, bitsPerBand, d) = (m.getInt(0), m.getInt(1), m.getInt(2))
+    val EmbManifest(numBands, bitsPerBand, d, _) =
+      readEmbManifest(spark, indexDir)
     if (!embs.isStreaming) {
       val ed = Ann.dimOf(embs, embCol)
       require(ed == d,
         s"embedding dim $ed != index dim $d at $indexDir — cosine over " +
           "the common prefix would silently return wrong hits")
     }
-    val corpusBands = spark.read.parquet(s"$indexDir/bands")
+    val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
       .select(col("vid").as("corpus_id"), col("band"))
     val corpusVecs = spark.read.parquet(s"$indexDir/vectors")
       .select(col("vid").as("corpus_id"), col("emb").as("__cemb"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.store.Store
+import graft.store.{Store, Tables => T}
 
 /** Corpus drift monitors — compare two snapshots of the training corpus
   * (crawl N vs crawl N+1, or any two id/source slices) BEFORE a model is
@@ -122,30 +122,32 @@ object Drift {
         .localCheckpoint(true)
       sw.write.mode("overwrite")
         .parquet(s"$dir/v=$newVer/source_counts")
-      sw.groupBy(col("w")).agg(sum(col("c")).as("c"))
+      T.Drift.Counts.check(sw.groupBy(col("w")).agg(sum(col("c")).as("c")))
         .write.mode("overwrite").parquet(s"$dir/v=$newVer/counts")
     } else {
-      wordsOf(docs).groupBy(col("w")).agg(count(lit(1)).as("c"))
+      T.Drift.Counts.check(
+          wordsOf(docs).groupBy(col("w")).agg(count(lit(1)).as("c")))
         .write.mode("overwrite").parquet(s"$dir/v=$newVer/counts")
     }
     val lens = docs
       .select(size(graft.functions.functions.tokenize(col("text")))
         .as("n_tok"))
       .localCheckpoint(true)
-    lens.groupBy(col("n_tok")).agg(count(lit(1)).as("cnt"))
+    T.Drift.Lengths.check(
+        lens.groupBy(col("n_tok")).agg(count(lit(1)).as("cnt")))
       .write.mode("overwrite").parquet(s"$dir/v=$newVer/lengths")
     val blob = lens
       .agg(graft.functions.functions
         .kll_agg(col("n_tok").cast("double"), kllK))
       .head().getAs[Array[Byte]](0)
-    Seq((lens.count(), blob)).toDF("n_docs", "kll")
+    T.Drift.LengthSketch.check(Seq((lens.count(), blob)).toDF("n_docs", "kll"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/v=$newVer/length_sketch")
     // commit: pointer swap, then GC superseded versions (crash
     // leftovers included: a staged-but-never-committed version is
     // invisible to readers)
     Store.swap(spark, dir, "_current") { next =>
-      Seq(newVer).toDF("version").coalesce(1)
+      T.Drift.Current.check(Seq(newVer).toDF("version")).coalesce(1)
         .write.mode("overwrite").parquet(next)
     }
     Store.gc(spark, dir, "v=", Set(newVer))
@@ -161,14 +163,14 @@ object Drift {
     // every superseded v= dir, so a lazy frame held across a baseline
     // rewrite would FileNotFound mid-evaluation — the internal
     // *VsReference paths checkpoint for the same reason (ADVICE r05 #3)
-    spark.read.parquet(s"${liveReferenceDir(spark, dir)}/counts")
+    T.Drift.Counts.read(spark, liveReferenceDir(spark, dir))
       .localCheckpoint(true)
 
   private def currentVersion(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Option[Long] = {
     if (!Store.fs(spark, dir).exists(
         new org.apache.hadoop.fs.Path(s"$dir/_current"))) None
-    else Some(spark.read.parquet(s"$dir/_current")
+    else Some(T.Drift.Current.read(spark, dir)
       .head().getAs[Long]("version"))
   }
 
@@ -336,8 +338,9 @@ object Drift {
   def sourceDriftVsReference(snapshot: DataFrame,
                              dir: String): DataFrame = {
     val spark = snapshot.sparkSession
-    val ca = spark.read
-      .parquet(s"${liveReferenceDir(spark, dir)}/source_counts")
+    // inferred: the `source` column has the writing corpus' type
+    val live = liveReferenceDir(spark, dir)
+    val ca = spark.read.parquet(s"$live/source_counts")
       .select(col("source"), col("w"), col("c").as("c_a"))
     val cb = snapshot
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
@@ -445,10 +448,10 @@ object Drift {
     val F = graft.functions.functions
     val live = liveReferenceDir(spark, dir)
     // pinned: a later writeReferenceCounts GCs this version's files
-    val va = spark.read.parquet(s"$live/lengths")
+    val va = T.Drift.Lengths.read(spark, live)
       .select(col("n_tok"), col("cnt").as("cnt_a"))
       .localCheckpoint(true)
-    val meta = spark.read.parquet(s"$live/length_sketch").head()
+    val meta = T.Drift.LengthSketch.read(spark, live).head()
     val nA = meta.getAs[Long]("n_docs")
     val a = graft.core.KllSketch.deserialize(meta.getAs[Array[Byte]]("kll"))
     val lb = snapshot
@@ -570,11 +573,11 @@ object Drift {
     val spark = emb.sparkSession
     val n = emb.count()
     Store.swap(spark, dir, "sums") { next =>
-      emb.select(posexplode(col(embCol)).as(Seq("dim", "v")))
-        .groupBy(col("dim"))
-        .agg(sum(round(col("v").cast("double") * 1024).cast("bigint"))
-          .as("s"))
-        .withColumn("n_vecs", lit(n))
+      T.Drift.Sums.check(emb.select(posexplode(col(embCol)).as(Seq("dim", "v")))
+          .groupBy(col("dim"))
+          .agg(sum(round(col("v").cast("double") * 1024).cast("bigint"))
+            .as("s"))
+          .withColumn("n_vecs", lit(n)))
         .coalesce(1)
         .write.mode("overwrite").parquet(next)
     }
@@ -587,7 +590,7 @@ object Drift {
                                 embCol: String = "embedding"): DataFrame = {
     val spark = snapshot.sparkSession
     Store.heal(spark, dir, "sums")
-    val ref = spark.read.parquet(s"$dir/sums").localCheckpoint(true)
+    val ref = T.Drift.Sums.read(spark, dir).localCheckpoint(true)
     val nA = ref.head().getAs[Long]("n_vecs")
     val sb = snapshot
       .select(posexplode(col(embCol)).as(Seq("dim", "v")))
@@ -616,7 +619,7 @@ object Drift {
                              dir: String): DataFrame = {
     val spark = windowed.sparkSession
     Store.heal(spark, dir, "sums")
-    val ref = spark.read.parquet(s"$dir/sums")
+    val ref = T.Drift.Sums.read(spark, dir)
       .select(col("dim"), col("s").as("s_a"), col("n_vecs").as("n_a"))
       .localCheckpoint(true)
     val keys = Seq("win_start", "win_end")
@@ -691,10 +694,10 @@ object Drift {
   def windowedLengthDrift(windowed: DataFrame, dir: String): DataFrame = {
     val spark = windowed.sparkSession
     val live = liveReferenceDir(spark, dir)
-    val va = spark.read.parquet(s"$live/lengths")
+    val va = T.Drift.Lengths.read(spark, live)
       .select(col("n_tok"), col("cnt").as("cnt_a"))
       .localCheckpoint(true)
-    val nA = spark.read.parquet(s"$live/length_sketch")
+    val nA = T.Drift.LengthSketch.read(spark, live)
       .head().getAs[Long]("n_docs")
     val keys = Seq("win_start", "win_end")
     val w = windowed.select(keys.map(col) ++

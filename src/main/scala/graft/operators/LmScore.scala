@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{expressions => E}
-import graft.store.Store
+import graft.store.{Store, Tables => T}
 import graft.store.Store.BatchLog
 
 /** CCNet-style n-gram language-model quality scoring (Wenzek et al.
@@ -265,12 +265,7 @@ object LmScore {
     require(order >= 2, s"order must be >= 2, got $order")
     val spark = ref.sparkSession
     import spark.implicits._
-    contextCounts(ref, order, textCol)
-      .write.mode("overwrite").parquet(s"$dir/uni/batch_id=0")
-    ngramCounts(ref, order, textCol)
-      .write.mode("overwrite").parquet(s"$dir/big/batch_id=0")
-    if (order > 2) unigramCounts(ref, textCol)
-      .write.mode("overwrite").parquet(s"$dir/words/batch_id=0")
+    writeBatch(ref, dir, 0L, textCol, order)
     // build-time drift baseline (the IVF manifest-baseline pattern,
     // Ann.scala appendToIvfIndex): the top-DriftHeadK unigram counts +
     // the full total, read back from the unigram table JUST written
@@ -280,15 +275,16 @@ object LmScore {
     // appends and compactions (same semantic as IVF: drift is measured
     // against what the model was validated on, not against whatever it
     // has absorbed since).
-    val uniTable = spark.read.parquet(
-      if (order > 2) s"$dir/words/batch_id=0" else s"$dir/uni/batch_id=0")
+    val uniTable =
+      if (order > 2) T.Lm.Words.readAt(spark, s"$dir/words/batch_id=0")
+      else T.Lm.Uni.readAt(spark, s"$dir/uni/batch_id=0")
     val total = uniTable.agg(coalesce(sum(col("c1")), lit(0L)))
       .head().getLong(0)
-    uniTable.orderBy(col("c1").desc, col("w").asc).limit(DriftHeadK)
-      .withColumn("total_words", lit(total))
+    T.Lm.DriftBaseline.check(uniTable.orderBy(col("c1").desc, col("w").asc)
+        .limit(DriftHeadK).withColumn("total_words", lit(total)))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/drift_baseline")
-    Seq(order).toDF("order")
+    T.Lm.Manifest.check(Seq(order).toDF("order"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
     BatchLog.commit(spark, dir, Set(0L), -1L)
   }
@@ -303,18 +299,29 @@ object LmScore {
                       textCol: String = "text"): Unit = {
     require(batchId > 0, "batchId 0 is the initial build; use > 0")
     val spark = newRef.sparkSession
-    val order = spark.read.parquet(s"$dir/manifest")
-      .head().getAs[Int]("order")
+    val order = readOrder(spark, dir)
     BatchLog.append(spark, dir, batchId) {
       driftGate(newRef, dir, textCol)
-      contextCounts(newRef, order, textCol)
-        .write.mode("overwrite").parquet(s"$dir/uni/batch_id=$batchId")
-      ngramCounts(newRef, order, textCol)
-        .write.mode("overwrite").parquet(s"$dir/big/batch_id=$batchId")
-      if (order > 2) unigramCounts(newRef, textCol)
-        .write.mode("overwrite").parquet(s"$dir/words/batch_id=$batchId")
+      writeBatch(newRef, dir, batchId, textCol, order)
     }
   }
+
+  /** The count tables of reference batch `batchId`, each OVERWRITING its
+    * `batch_id=` directory (a replay after a crash rewrites it whole).
+    */
+  private def writeBatch(ref: DataFrame, dir: String, batchId: Long,
+                         textCol: String, order: Int): Unit = {
+    T.Lm.Uni.check(contextCounts(ref, order, textCol))
+      .write.mode("overwrite").parquet(s"$dir/uni/batch_id=$batchId")
+    T.Lm.Big.check(ngramCounts(ref, order, textCol))
+      .write.mode("overwrite").parquet(s"$dir/big/batch_id=$batchId")
+    if (order > 2) T.Lm.Words.check(unigramCounts(ref, textCol))
+      .write.mode("overwrite").parquet(s"$dir/words/batch_id=$batchId")
+  }
+
+  private def readOrder(spark: org.apache.spark.sql.SparkSession,
+                        dir: String): Int =
+    T.Lm.Manifest.read(spark, dir).head().getAs[Int]("order")
 
   /** Drift gate on model appends (the engine's no-silent-degradation
     * rule applied to its own model, mirroring the IVF append gate at
@@ -348,7 +355,7 @@ object LmScore {
         new org.apache.hadoop.fs.Path(s"$dir/drift_baseline"))) return
     val tol = spark.conf.get("spark.graft.lm.driftTolerance", "0.25")
       .toDouble
-    val head = spark.read.parquet(s"$dir/drift_baseline")
+    val head = T.Lm.DriftBaseline.read(spark, dir)
       .collect() // bounded: DriftHeadK rows
     if (head.isEmpty) return // empty build corpus: nothing to gate against
     val totRef = head.head.getAs[Long]("total_words")
@@ -415,23 +422,22 @@ object LmScore {
     */
   private def modelCounts(spark: org.apache.spark.sql.SparkSession,
                           dir: String): ModelCounts = {
-    val order = spark.read.parquet(s"$dir/manifest")
-      .head().getAs[Int]("order")
+    val order = readOrder(spark, dir)
     val committed = BatchLog.read(spark, dir)._1.toSeq
     require(committed.nonEmpty, s"no committed batches at $dir")
     // lazily checkpointed: the summed context table feeds both the
     // vocab scalar and the scoring join (see scoreDocs), and the local
     // loader reads it twice (count guard + collect)
-    val uni = spark.read.parquet(s"$dir/uni")
+    val uni = T.Lm.Uni.read(spark, dir)
       .filter(col("batch_id").isin(committed: _*))
       .groupBy(col("w")).agg(sum(col("c1")).as("c1"))
       .localCheckpoint(false)
-    val big = spark.read.parquet(s"$dir/big")
+    val big = T.Lm.Big.read(spark, dir)
       .filter(col("batch_id").isin(committed: _*))
       .groupBy(col("ng")).agg(sum(col("c2")).as("c2"))
     val vocab =
       if (order == 2) uni.agg(count(lit(1)).as("__v"))
-      else spark.read.parquet(s"$dir/words")
+      else T.Lm.Words.read(spark, dir)
         .filter(col("batch_id").isin(committed: _*))
         .agg(countDistinct(col("w")).as("__v"))
     ModelCounts(order, uni, big, vocab)
@@ -453,17 +459,19 @@ object LmScore {
     */
   def compactLmModel(spark: org.apache.spark.sql.SparkSession,
                      dir: String): Unit = {
-    val sides = Seq(("uni", "w", "c1"), ("big", "ng", "c2")) ++
+    val sides = Seq(T.Lm.Uni, T.Lm.Big) ++
       (if (Store.fs(spark, dir).exists(
         new org.apache.hadoop.fs.Path(s"$dir/words")))
-        Seq(("words", "w", "c1")) else Nil)
-    BatchLog.compact(spark, dir, sides.map(t => s"$dir/${t._1}")) {
+        Seq(T.Lm.Words) else Nil)
+    BatchLog.compact(spark, dir, sides.map(t => s"$dir/${t.name}")) {
       (committed, newId) =>
-        sides.foreach { case (side, key, cnt) =>
-          spark.read.parquet(s"$dir/$side")
-            .filter(col("batch_id").isin(committed.toSeq: _*))
-            .groupBy(col(key)).agg(sum(col(cnt)).as(cnt))
-            .write.mode("overwrite").parquet(s"$dir/$side/batch_id=$newId")
+        sides.foreach { t =>
+          // (key, count): every count table has that shape
+          val Array(key, cnt) = t.schema.fieldNames
+          t.check(t.read(spark, dir)
+              .filter(col("batch_id").isin(committed.toSeq: _*))
+              .groupBy(col(key)).agg(sum(col(cnt)).as(cnt)))
+            .write.mode("overwrite").parquet(s"$dir/${t.name}/batch_id=$newId")
         }
     }
   }

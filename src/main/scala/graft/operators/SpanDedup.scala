@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{expressions => E}
+import graft.store.{Tables => T}
 
 /** Substring-level exact deduplication: find verbatim runs of >= minLen
   * word tokens shared across documents and either report them as spans
@@ -158,11 +159,12 @@ object SpanDedup {
     }
     val mode = if (append) org.apache.spark.sql.SaveMode.Append
                else org.apache.spark.sql.SaveMode.Overwrite
-    distinctGrams(docs, minLen, textCol).write.mode(mode)
+    T.Span.Grams.check(distinctGrams(docs, minLen, textCol)).write.mode(mode)
       .parquet(s"$dir/grams")
-    val n = spark.read.parquet(s"$dir/grams").count()
+    val n = T.Span.Grams.read(spark, dir).count()
     graft.store.Store.swap(spark, dir, "manifest") { next =>
-      Seq((minLen, n)).toDF("min_len", "n_grams").coalesce(1)
+      T.Span.Manifest.check(Seq((minLen, n)).toDF("min_len", "n_grams"))
+        .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(next)
     }
   }
@@ -171,7 +173,7 @@ object SpanDedup {
   def readSpanIndexMinLen(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Int = {
     graft.store.Store.heal(spark, dir, "manifest")
-    spark.read.parquet(s"$dir/manifest")
+    T.Span.Manifest.read(spark, dir)
       .agg(max(col("min_len"))).head().getInt(0)
   }
 
@@ -249,7 +251,7 @@ object SpanDedup {
                       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     val minLen = readSpanIndexMinLen(spark, indexDir)
-    spanHitsFrom(docs, spark.read.parquet(s"$indexDir/grams"), minLen,
+    spanHitsFrom(docs, T.Span.Grams.read(spark, indexDir), minLen,
       textCol, idCol)
   }
 
@@ -373,7 +375,7 @@ object SpanDedup {
     import spark.implicits._
     val minLen = readSpanIndexMinLen(spark, indexDir)
     graft.sources.BucketedTables.writeBucketed(
-      spark.read.parquet(s"$indexDir/grams").distinct(),
+      T.Span.Grams.read(spark, indexDir).distinct(),
       s"${tablePrefix}_grams", "gh", numBuckets)
     val n = spark.table(s"${tablePrefix}_grams").count()
     graft.sources.BucketedTables.saveTable(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.core.Hashing
 import graft.store.Store.BatchLog
+import graft.store.{Tables => T}
 
 /** Text-analysis operators for training-data pipelines: quality metrics,
   * token statistics, language ID, and content fingerprints.
@@ -459,22 +460,22 @@ object TextAnalysis {
     import spark.implicits._
     perSourceSketchesMass(docs, n, thetaK, tupleK, freqK)
       .write.mode("overwrite").parquet(s"$dir/sketches/batch_id=0")
-    Seq((n, thetaK, tupleK, freqK)).toDF("n", "theta_k", "tuple_k", "freq_k")
+    T.Overlap.Manifest.check(Seq((n, thetaK, tupleK, freqK))
+        .toDF("n", "theta_k", "tuple_k", "freq_k"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
     // log LAST: a crash mid-build leaves no committed log -> no index
     BatchLog.commit(spark, dir, Set(0L), -1L)
   }
 
   /** Stored build parameters; `tuple_k`/`freq_k` tolerant of older
-    * indexes (missing column reads as 0 = that sketch family absent).
+    * indexes (a missing column reads as null, taken as 0 = that sketch
+    * family absent).
     */
   private def overlapManifest(spark: org.apache.spark.sql.SparkSession,
                               dir: String): (Int, Int, Int, Int) = {
-    val df = spark.read.parquet(s"$dir/manifest")
-    val r = df.head()
-    val tk = if (df.columns.contains("tuple_k")) r.getAs[Int]("tuple_k") else 0
-    val fk = if (df.columns.contains("freq_k")) r.getAs[Int]("freq_k") else 0
-    (r.getAs[Int]("n"), r.getAs[Int]("theta_k"), tk, fk)
+    val r = T.Overlap.Manifest.read(spark, dir).head()
+    def orZero(i: Int): Int = if (r.isNullAt(i)) 0 else r.getInt(i)
+    (r.getInt(0), r.getInt(1), orZero(2), orZero(3))
   }
 
   /** The per-source union of all COMMITTED batches — the frame every

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.BloomConfig
 import graft.functions.{functions => F}
+import graft.store.Store.Table
+import graft.store.{Tables => T}
 
 /** Resumable sketch checkpoints with per-partition lineage and metrics.
   *
@@ -12,7 +14,7 @@ import graft.functions.{functions => F}
   * §1.2). A checkpoint table holds ONE ROW PER (group, partition-range)
   * partial sketch, with lineage columns:
   *
-  *   group_key     : the aggregation key (e.g. source)
+  *   group_key     : the aggregation key (e.g. source), as a string
   *   part_id       : input partition id the partial was built from
   *   snapshot_id   : caller-supplied id of the input snapshot
   *   row_count     : rows folded into this partial
@@ -49,24 +51,27 @@ object SketchCheckpoint {
     sum(col("n_tok")).as("token_count"),
     graft.functions.catalyst.buildMillis().as("build_ms"))
 
-  private def writePartials(tokenDocs: DataFrame, groupCol: String,
-                            ckptDir: String, snapshotId: String,
-                            sketchAggs: Seq[Column])(
+  private def writePartials(table: Table, tokenDocs: DataFrame,
+                            groupCol: String, ckptDir: String,
+                            snapshotId: String, sketchAggs: Seq[Column])(
                             post: DataFrame => DataFrame): Unit = {
     val aggs = sketchAggs ++ lineageAggs
-    post(tokenDocs
+    table.check(post(tokenDocs
         .withColumn("part_id", spark_partition_id())
-        .groupBy(col(groupCol).as("group_key"), col("part_id"))
+        .groupBy(col(groupCol).cast("string").as("group_key"), col("part_id"))
         .agg(aggs.head, aggs.tail: _*))
-      .withColumn("snapshot_id", lit(snapshotId))
+      .withColumn("snapshot_id", lit(snapshotId)))
       .write.mode("overwrite")
       .parquet(s"$ckptDir/snapshot=$snapshotId")
   }
 
-  private def snapshots(spark: SparkSession, ckptDir: String,
+  /** The partials of `snapshotIds` (every snapshot when empty), read with
+    * the declared schema of `table`: opening a checkpoint starts no job.
+    */
+  private def snapshots(table: Table, spark: SparkSession, ckptDir: String,
                         snapshotIds: Seq[String]): DataFrame =
-    if (snapshotIds.isEmpty) spark.read.parquet(ckptDir)
-    else spark.read.parquet(
+    if (snapshotIds.isEmpty) table.readAt(spark, ckptDir)
+    else table.readAt(spark,
       snapshotIds.map(id => s"$ckptDir/snapshot=$id"): _*)
 
   private def resumeWith(partials: DataFrame,
@@ -84,8 +89,8 @@ object SketchCheckpoint {
   def writeBloomPartials(tokenDocs: DataFrame, groupCol: String,
                          capacity: Long, fpr: Double,
                          ckptDir: String, snapshotId: String): Unit =
-    writePartials(tokenDocs, groupCol, ckptDir, snapshotId,
-      Seq(F.bloom_agg_tokens(col("tokens"), capacity, fpr)
+    writePartials(T.Checkpoint.Bloom, tokenDocs, groupCol, ckptDir,
+      snapshotId, Seq(F.bloom_agg_tokens(col("tokens"), capacity, fpr)
         .as("sketch")))(identity)
 
   /** Read one or more snapshots of partials and union them into final
@@ -97,13 +102,16 @@ object SketchCheckpoint {
                   capacity: Long, fpr: Double,
                   snapshotIds: Seq[String] = Nil): DataFrame = {
     val (nbits, k) = BloomConfig.optimize(capacity, fpr)
-    resumeWith(snapshots(spark, ckptDir, snapshotIds),
+    resumeWith(snapshots(T.Checkpoint.Bloom, spark, ckptDir, snapshotIds),
       Seq(F.bloom_union_agg(col("sketch"), nbits, k).as("sketch")))
   }
 
-  /** Lineage/metrics view of a checkpoint directory. */
+  /** Lineage/metrics view of a checkpoint directory (either flavor: the
+    * lineage columns are shared, and a panel checkpoint's missing
+    * `sketch` column reads as null, unused here).
+    */
   def lineage(spark: SparkSession, ckptDir: String): DataFrame =
-    spark.read.parquet(ckptDir)
+    T.Checkpoint.Bloom.readAt(spark, ckptDir)
       .groupBy(col("group_key"))
       .agg(
         count(lit(1)).as("n_partials"),
@@ -126,9 +134,9 @@ object SketchCheckpoint {
                          ckptDir: String, snapshotId: String,
                          p: Int = 14, depth: Int = 5,
                          width: Int = 65536): Unit =
-    writePartials(tokenDocs, groupCol, ckptDir, snapshotId,
-      Seq(F.sketch_panel_agg(col("tokens"), capacity, fpr, p, depth, width)
-        .as("panel"))) { df =>
+    writePartials(T.Checkpoint.Panel, tokenDocs, groupCol, ckptDir,
+      snapshotId, Seq(F.sketch_panel_agg(col("tokens"), capacity, fpr, p,
+        depth, width).as("panel"))) { df =>
       df.select(col("group_key"), col("part_id"),
         col("panel.bloom").as("bloom"), col("panel.hll").as("hll"),
         col("panel.cms").as("cms"),
@@ -143,7 +151,7 @@ object SketchCheckpoint {
                   p: Int = 14, depth: Int = 5, width: Int = 65536,
                   snapshotIds: Seq[String] = Nil): DataFrame = {
     val (nbits, k) = BloomConfig.optimize(capacity, fpr)
-    resumeWith(snapshots(spark, ckptDir, snapshotIds), Seq(
+    resumeWith(snapshots(T.Checkpoint.Panel, spark, ckptDir, snapshotIds), Seq(
       F.bloom_union_agg(col("bloom"), nbits, k).as("bloom"),
       F.hll_union_agg(col("hll"), p).as("hll"),
       F.cms_union_agg(col("cms"), depth, width).as("cms")))

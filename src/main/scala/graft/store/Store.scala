@@ -1,7 +1,9 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+  StructType}
 
 /** The one commit protocol every persisted index uses. A live file or
   * directory `dir/name` is never rewritten in place: the new value is
@@ -13,10 +15,73 @@ import org.apache.spark.sql.SparkSession
   * `name.next` beside a live `name` means the swap never started, so it
   * is dropped. A crash at any step therefore leaves the old value or the
   * new one live, never neither.
+  *
+  * Every table graft persists is a [[Table]] with a declared schema
+  * (the catalog is [[Tables]]): writers check, readers pin. A reader
+  * passes the declared schema to Spark, so opening a table lists its
+  * files and starts no job; a table directory with no data files is
+  * refused with the table's name, as schema inference refuses it.
   */
 object Store {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** A persisted parquet table `dir/name` with a declared schema.
+    * Partition columns (`batch_id=`, `snapshot=`) are not part of it:
+    * they come from the directory names, not from the files.
+    */
+  final case class Table(name: String, schema: StructType) {
+
+    /** `df`, once its columns are exactly the declared ones: same names,
+      * types and order, nullability ignored (a file read makes every
+      * column nullable anyway). Looks at the plan only, so it costs the
+      * driver nothing.
+      */
+    def check(df: DataFrame): DataFrame = {
+      require(shape(df.schema) == shape(schema),
+        s"table $name is declared as ${schema.simpleString}; refusing " +
+          s"to write ${df.schema.simpleString}")
+      df
+    }
+
+    /** `dir/name`, read with the declared schema. */
+    def read(spark: SparkSession, dir: String): DataFrame =
+      readAt(spark, s"$dir/$name")
+
+    /** The table stored at `paths` (its own directory, or some of its
+      * partition directories), read with the declared schema. A column
+      * missing from the files (one an older writer did not have) reads
+      * as null. A missing path fails as Spark fails it; a path with no
+      * data files is refused, since an index directory without files is
+      * a broken write, not an empty table (a written empty frame still
+      * leaves one file).
+      */
+    def readAt(spark: SparkSession, paths: String*): DataFrame = {
+      val df = spark.read.schema(schema).parquet(paths: _*)
+      // the file index is listed when the relation resolves, so this
+      // reads the listing it already holds
+      if (df.inputFiles.isEmpty)
+        throw new IllegalStateException(s"table $name at " +
+          s"${paths.mkString(", ")} has no data files; it was never " +
+          "written or its write did not finish")
+      df
+    }
+  }
+
+  object Table {
+    /** A table declared by a DDL column list, e.g. "w STRING, c BIGINT". */
+    def apply(name: String, ddl: String): Table =
+      Table(name, StructType.fromDDL(ddl))
+  }
+
+  /** `dt` with every nullability flag set and field metadata dropped. */
+  private def shape(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => StructField(f.name, shape(f.dataType))))
+    case a: ArrayType => ArrayType(shape(a.elementType))
+    case m: MapType => MapType(shape(m.keyType), shape(m.valueType))
+    case other => other
+  }
 
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -73,16 +138,15 @@ object Store {
     */
   object BatchLog {
 
-    /** (committed ids, folded_up_to); a log without the column reads -1. */
+    /** (committed ids, folded_up_to); a log written before the column
+      * existed reads it as null, which means -1.
+      */
     def read(spark: SparkSession, dir: String): (Set[Long], Long) = {
       heal(spark, dir, "batches")
-      val df = spark.read.parquet(s"$dir/batches")
-      val rows = df.collect() // bounded: one row per committed batch
-      val folded =
-        if (df.columns.contains("folded_up_to"))
-          rows.map(_.getAs[Long]("folded_up_to")).max
-        else -1L
-      (rows.map(_.getAs[Long]("batch_id")).toSet, folded)
+      // bounded: one row per committed batch
+      val rows = Tables.Batches.read(spark, dir).collect()
+      val folded = rows.map(r => if (r.isNullAt(1)) -1L else r.getLong(1))
+      (rows.map(_.getLong(0)).toSet, (-1L +: folded).max)
     }
 
     /** Replace the log with `ids`, as one [[swap]]. */
@@ -90,7 +154,8 @@ object Store {
                foldedUpTo: Long): Unit = {
       import spark.implicits._
       swap(spark, dir, "batches") { next =>
-        ids.toSeq.sorted.map((_, foldedUpTo)).toDF("batch_id", "folded_up_to")
+        Tables.Batches.check(ids.toSeq.sorted.map((_, foldedUpTo))
+            .toDF("batch_id", "folded_up_to"))
           .coalesce(1).write.mode("overwrite").parquet(next)
       }
     }

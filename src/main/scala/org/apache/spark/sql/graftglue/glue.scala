@@ -34,4 +34,8 @@ object glue {
                     children: Seq[Expression]): Expression =
     UserDefinedFunctionUtils.toScalaUDF(
       u.asInstanceOf[SparkUserDefinedFunction], children)
+
+  /** The number of arguments a Column-API `udf` val takes. */
+  def udfArity(u: UserDefinedFunction): Int =
+    u.asInstanceOf[SparkUserDefinedFunction].inputEncoders.length
 }

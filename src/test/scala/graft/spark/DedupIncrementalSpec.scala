@@ -4,7 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import org.apache.spark.graftsupport.Jobs
+import graft.operators.{Decontaminate, Dedup}
+import graft.plans.SketchCheckpoint
+import graft.sources.TokenDocGen
 
 /** Incremental corpus dedup: deduping a new snapshot against the
   * persisted index must equal a fresh batch run over the union —
@@ -449,5 +452,46 @@ class DedupIncrementalSpec extends AnyFunSuite {
       Dedup.dedupIncremental(df(s3cc), dir, appendToIndex = true)
     }
     assert(e.getMessage.contains("cluster labels"), e.getMessage)
+  }
+
+  test("opening an index or a checkpoint starts no schema-inference job") {
+    val dir = Files.createTempDirectory("graft-dedup-idx-open").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    val evalDir = Files.createTempDirectory("graft-eval-idx-open").toString
+    Decontaminate.writeEvalIndex(df(s1.take(3)), evalDir, n = 3)
+    val ckpt = Files.createTempDirectory("graft-ckpt-open").toString
+    val (cap, fpr) = (10000L, 0.01)
+    SketchCheckpoint.writePanelPartials(
+      TokenDocGen.generateDf(spark, 400, 7L, 4), "source", cap, fpr, ckpt, "s1")
+    val (_, jobs) = Jobs.recorded(spark.sparkContext) {
+      Dedup.dedupIncremental(df(s2), dir).collect()
+      Decontaminate.contaminatedVsIndex(df(s2), evalDir).collect()
+      SketchCheckpoint.resumePanel(spark, ckpt, cap, fpr).collect()
+    }
+    assert(jobs.nonEmpty)
+    // a parquet read that infers its schema runs a footer-reading job
+    // named after the read's call site
+    val inferred = jobs.flatten.filter(_.startsWith("parquet at"))
+    assert(inferred.isEmpty, inferred)
+  }
+
+  test("an embedding index without the format_version stamp is refused loudly") {
+    val embs = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val snap = Seq((5L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
+    val dir = Files.createTempDirectory("graft-emb-idx-old").toString
+    Dedup.writeEmbDedupIndex(embs, dir, numBands = 8)
+    // rewrite the manifest as an index written before the stamp existed
+    val m = spark.read.parquet(s"$dir/manifest").drop("format_version")
+    spark.createDataFrame(java.util.Arrays.asList(m.collect(): _*), m.schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
+    val refusals = Seq(
+      () => Dedup.embDedupIncremental(snap, dir, 0.9).collect(),
+      () => Dedup.embNearDupHitsVsIndex(snap, dir, 0.9).collect(),
+      () => Dedup.writeEmbDedupIndex(snap, dir, numBands = 8, append = true))
+    refusals.foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("writeEmbDedupIndex"), e.getMessage)
+    }
   }
 }

@@ -1,8 +1,9 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graftsupport.Jobs
 import graft.functions.{functions => F}
 import graft.sources.TokenDocGen
 
@@ -436,5 +437,43 @@ class FacadeSpec extends AnyFunSuite {
     // a sizing literal outside int range (4294967310 truncates to 14)
     rejects("graft_hll_agg_tokens(tokens, 4294967310)", 2,
       "graft_hll_agg_tokens(tokens[, p])")
+    // udf accessors, extra and missing arguments
+    rejects("graft_hll_estimate(graft_hll_agg_tokens(tokens), 3)", 2,
+      "graft_hll_estimate(sketch)")
+    rejects("graft_kll_quantile(graft_kll_agg(n_tok))", 1,
+      "graft_kll_quantile(sketch, q)")
+  }
+
+  test("a bad sizing literal fails before any job starts") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.sql.registerAll(spark)
+    TokenDocGen.generateDf(spark, 50, 5L, 2).createOrReplaceTempView("t")
+    val tokens = col("tokens")
+    val value = col("n_tok").cast("double")
+    val (_, jobs) = Jobs.recorded(spark.sparkContext) {
+      val columns = Seq[(() => Column, String)](
+        (() => F.hll_agg_tokens(tokens, 99), "HLL precision 99"),
+        (() => F.hll_union_agg(col("s"), 3), "HLL precision 3"),
+        (() => F.cms_agg_tokens(tokens, 0), "CMS depth 0"),
+        (() => F.cms_agg_tokens(tokens, 4, 1), "CMS width 1"),
+        (() => F.theta_agg_tokens(tokens, 8), "theta sketch k 8"),
+        (() => F.tuple_agg_tokens(tokens, 8), "tuple sketch k 8"),
+        (() => F.freq_agg_tokens(tokens, 4), "freq sketch k 4"),
+        (() => F.tdigest_agg(value, 5.0), "compression 5.0"),
+        (() => F.kll_agg(value, 4), "KLL k=4"),
+        (() => F.bloom_union_agg(col("s"), Long.MaxValue, 3), "MaxBits"))
+      columns.foreach { case (build, why) =>
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains(why), e.getMessage)
+      }
+      val e = intercept[Exception](
+        spark.sql("SELECT graft_hll_agg_tokens(tokens, 99) FROM t").collect())
+      assert(causes(e).exists(_.contains("HLL precision 99")), causes(e))
+    }
+    assert(jobs.isEmpty, s"jobs started: $jobs")
   }
 }

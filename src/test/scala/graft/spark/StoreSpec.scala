@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Decontaminate, SpanDedup}
-import graft.store.Store
+import graft.operators.{Decontaminate, Dedup, SpanDedup}
+import graft.store.{Store, Tables}
 import graft.store.Store.BatchLog
 
 /** Local filesystem under the `crashfs` scheme that throws, instead of
@@ -154,5 +154,73 @@ class StoreSpec extends AnyFunSuite {
     assert(f.rename(new Path(dir, "manifest"), new Path(dir, "manifest.next")))
     assert(SpanDedup.readSpanIndexMinLen(spark, dir) == 8)
     assert(f.exists(new Path(dir, "manifest")))
+  }
+
+  test("declared tables: a writer's frame must match, an empty table is refused") {
+    // nullability is ignored: a local Seq's longs are non-nullable
+    Tables.Batches.check(Seq((1L, -1L)).toDF("batch_id", "folded_up_to"))
+    val misfits = Seq(
+      Seq(1).toDF("batch_id"),                                  // type, arity
+      Seq((-1L, 1L)).toDF("folded_up_to", "batch_id"),          // order
+      Seq((1L, -1L)).toDF("batch_id", "folded"))                // name
+    misfits.foreach { df =>
+      val e = intercept[IllegalArgumentException](Tables.Batches.check(df))
+      assert(e.getMessage.contains(Tables.Batches.schema.simpleString) &&
+        e.getMessage.contains(df.schema.simpleString), e.getMessage)
+    }
+    // shingle toksets are declared array<bigint>, token ids array<int>:
+    // both writers pass their check and both readers open their index
+    val docs = Seq((0L, "a b c d e f", "s")).toDF("doc_id", "text", "source")
+    val snap = Seq((1L, "a b c d e g", "s")).toDF("doc_id", "text", "source")
+    for (ngram <- Seq(1, 2)) {
+      val idx = tmp(s"graft-store-ngram$ngram")
+      Dedup.writeDedupIndex(docs, idx, ngram = ngram)
+      assert(Dedup.dedupIncremental(snap, idx).count() == 1L)
+    }
+    // an index table directory without data files is a broken write:
+    // refused with the table's name, empty or holding only a marker
+    val dir = tmp("graft-store-empty")
+    Dedup.writeDedupIndex(docs, dir)
+    val f = Store.fs(spark, dir)
+    for (marker <- Seq(false, true)) {
+      assert(f.delete(new Path(dir, "manifest"), true))
+      assert(f.mkdirs(new Path(dir, "manifest")))
+      if (marker) f.create(new Path(dir, "manifest/_SUCCESS")).close()
+      val e = intercept[IllegalStateException](
+        Dedup.readIndexManifest(spark, dir))
+      assert(e.getMessage.contains("table manifest"), e.getMessage)
+    }
+  }
+
+  test("source scan: graft's own tables are read with their declared schema") {
+    // caller-typed tables keep inference; one line each, with the reason
+    val allowed = Map(
+      ("operators/Ann.scala", "/lists") -> "the caller's id and vector columns",
+      ("operators/Dedup.scala", "/vectors") -> "the caller's vector column",
+      ("operators/Drift.scala", "/source_counts") -> "the caller's source column",
+      ("operators/TextAnalysis.scala", "/sketches") -> "the caller's source column")
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"sources not found from ${root.getAbsolutePath}")
+    val read = """\.read\s*\.parquet\(""".r
+    val found = for {
+      sub <- Seq("operators", "plans", "store")
+      file <- Option(new java.io.File(root, sub).listFiles()).toSeq.flatten
+      if file.getName.endsWith(".scala") && file.getName != "Store.scala"
+      text = new String(java.nio.file.Files.readAllBytes(file.toPath), UTF_8)
+      m <- read.findAllMatchIn(text)
+    } yield {
+      val line = text.substring(m.start).takeWhile(_ != '\n')
+      (s"$sub/${file.getName}", line)
+    }
+    val stray = found.filterNot { case (file, line) =>
+      allowed.keys.exists { case (f, table) => f == file && line.contains(table) }
+    }
+    assert(stray.isEmpty, "inferred reads of declared tables (read them " +
+      s"through graft.store.Tables): ${stray.mkString("; ")}")
+    val used = allowed.keySet.filter { case (f, table) =>
+      found.exists { case (file, line) => file == f && line.contains(table) }
+    }
+    assert(used == allowed.keySet,
+      s"allowlist entries with no read left: ${allowed.keySet -- used}")
   }
 }
