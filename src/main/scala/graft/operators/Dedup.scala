@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
@@ -126,6 +126,17 @@ object Dedup {
     least(sa, sb).cast("double") >=
       lit(threshold) * greatest(sa, sb).cast("double") - lit(1e-9)
 
+  /** Exact Jaccard |A∩B| / |A∪B| from the intersection and the two set
+    * sizes. Two empty sets (texts without a token, or null texts) have
+    * an empty union: the result is null, which no threshold filter
+    * keeps, so they are not a pair — as in [[jaccardPairs]], whose
+    * posting join never sees an empty set (it explodes to no rows).
+    */
+  private def jaccard(common: Column, sa: Column, sb: Column): Column = {
+    val union = sa + sb - common
+    when(union > 0, common / union)
+  }
+
   /** Exact verification of candidate (a, b) pairs against token sets:
     * joins both sides' sets, computes exact Jaccard, keeps >= threshold.
     * Both joins shuffle the same tokenSets subplan on doc_id -> one
@@ -158,8 +169,7 @@ object Dedup {
       .withColumn("common",
         graft.functions.expressions.sorted_intersect_size(
           col("ta"), col("tb")))
-      .withColumn("jaccard",
-        col("common") / (col("sa") + col("sb") - col("common")))
+      .withColumn("jaccard", jaccard(col("common"), col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
 
@@ -550,8 +560,8 @@ object Dedup {
     require(hasClusterLabels(spark, dir),
       s"dedup index at $dir carries no cluster labels — build it with " +
         "writeDedupIndexCC to use the connected-component policy")
-    T.Dedup.LabelsMeta.read(spark, dir)
-      .agg(max(col("threshold"))).head().getDouble(0)
+    graft.store.Store.maxOf[Double](T.Dedup.LabelsMeta.read(spark, dir),
+      "threshold", s"dedup index labels_meta at $dir")
   }
 
   /** On-disk format of the text dedup index, stamped in every manifest
@@ -655,8 +665,9 @@ object Dedup {
     * FROM THE INDEX MANIFEST (passing them would invite a silent
     * mismatch that misses near-dups), and the monotone-id precondition
     * (every new doc_id > every indexed doc_id) is enforced against the
-    * manifest's max_doc_id — one cheap aggregation over the NEW
-    * snapshot only. With `appendToIndex` the new snapshot's exact-tier
+    * manifest's max_doc_id — the snapshot's min id is observed on the
+    * exact tier's one pass over it, before anything is returned or
+    * appended. With `appendToIndex` the new snapshot's exact-tier
     * survivors are appended to the index, so successive snapshots
     * compose: index(s1) + incremental(s2, append) is a valid index for
     * incremental(s3).
@@ -675,16 +686,7 @@ object Dedup {
     incrementalPairs(newDocs, indexDir, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
-        // pairwise policy: drop the (always-new) larger endpoint of
-        // every verified pair, against the corpus and within the new
-        // snapshot alike
-        val dropVsCorpus =
-          st.pairsVsCorpus.select(col("b").as("doc_id")).distinct()
-        val dropWithin =
-          st.pairsWithin.select(col("b").as("doc_id")).distinct()
-        val kept = st.newExact
-          .join(dropVsCorpus, Seq("doc_id"), "left_anti")
-          .join(dropWithin, Seq("doc_id"), "left_anti")
+        val kept = pairwiseKept(st)
         if (appendToIndex) {
           requireNoLabels(newDocs.sparkSession, indexDir)
           // MATERIALIZE the result before extending the index: each
@@ -714,6 +716,21 @@ object Dedup {
       pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
       numBands: Int, rowsPerBand: Int, ngram: Int, maxIndexed: Long)
 
+  /** The pairwise drop policy: drop the (always-new) larger endpoint
+    * of every verified pair, against the corpus and within the new
+    * snapshot alike — one anti-join against both drop sets.
+    */
+  private def pairwiseKept(st: IncrementalState): DataFrame =
+    without(st.newExact, st.pairsVsCorpus.select(col("b").as("doc_id"))
+      .union(st.pairsWithin.select(col("b").as("doc_id"))))
+
+  /** `docs` less the rows whose doc_id is in `drops`, in `docs`' column
+    * order (a USING join would move doc_id to the front).
+    */
+  private def without(docs: DataFrame, drops: DataFrame): DataFrame =
+    docs.join(drops, Seq("doc_id"), "left_anti")
+      .select(docs.columns.map(c => col(s"`$c`")): _*)
+
   private def incrementalPairs(newDocs: DataFrame, indexDir: String,
                                threshold: Double): Option[IncrementalState] = {
     val spark = newDocs.sparkSession
@@ -724,6 +741,26 @@ object Dedup {
       T.Dedup.Bands.read(spark, indexDir),
       T.Dedup.toksets(ngram).read(spark, indexDir),
       numBands, rowsPerBand, ngram, maxIndexed, threshold)
+  }
+
+  /** Bound on the wait for an [[Observation]] of an action that has
+    * already returned: its metrics come through the listener bus.
+    */
+  private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
+
+  /** Min doc_id of `docs` as observed by `obs` on an action that has
+    * already run, or None for an empty snapshot. Spark reports a row
+    * without fields when the observed node never ran (an empty input
+    * optimized away, or a stage dropped by adaptive empty-relation
+    * propagation); that case, and a wait past [[ObservationWait]], fall
+    * back to a separate aggregation, so the check is never skipped.
+    */
+  private def observedMinId(obs: Observation, docs: DataFrame): Option[Long] = {
+    val row = scala.util.Try(
+        scala.concurrent.Await.result(obs.future, ObservationWait))
+      .toOption.filter(_.length == 1)
+      .getOrElse(docs.agg(min(col("doc_id"))).head())
+    if (row.isNullAt(0)) None else Some(row.getLong(0))
   }
 
   /** Core of [[incrementalPairs]] over already-loaded corpus state —
@@ -737,37 +774,49 @@ object Dedup {
                                    ngram: Int, maxIndexed: Long,
                                    threshold: Double):
       Option[IncrementalState] = {
-    val newMinRow = newDocs.agg(min(col("doc_id"))).head()
-    if (newMinRow.isNullAt(0)) return None // empty snapshot
-    val newMin = newMinRow.getLong(0)
+    // exact tier, ONE pass over the snapshot: md5 once, drop content
+    // already in the corpus (left-anti on content_md5), then keep the
+    // min doc_id of each remaining content group. The snapshot is
+    // shuffled once, on content_md5: with broadcast corpus digests that
+    // exchange feeds the window; a shuffled anti-join (or one meeting the
+    // bucketed digests table's buckets) already partitions on
+    // content_md5, and the window reuses it.
+    // A null text has a null digest: it never matches a corpus digest
+    // and never groups with another null-text row, so it always
+    // survives; a null doc_id is never dropped by the group min either.
+    // The snapshot's min doc_id for the monotone-id check is observed on
+    // the same pass instead of a separate aggregation.
+    //
+    // localCheckpoint (NOT Dataset.persist) the survivors, eagerly: the
+    // toksets, the band keys, the final keep join and the index append
+    // all read them, and uncached each would re-run the pass (and its
+    // index-sized digest join). Dataset.persist would register the plan
+    // in the session CacheManager, which holds it with STRONG references
+    // until an explicit unpersist — a leak per call in long-lived
+    // sessions, since the lazy result cannot release it. localCheckpoint
+    // stores RDD blocks that ContextCleaner reclaims once the result
+    // frame is garbage-collected, is snapshot-sized by contract, and
+    // cuts the plan away from the index files (required by the append
+    // path, whose index write would otherwise invalidate this subtree).
+    val ids = Observation()
+    val newExact = newDocs.observe(ids, min(col("doc_id")).as("min_id"))
+      .withColumn("content_md5", md5(col("text")))
+      .join(corpusDigests.select(col("content_md5")), Seq("content_md5"),
+        "left_anti")
+      .withColumn("keep_id",
+        min(col("doc_id")).over(Window.partitionBy(col("content_md5"))))
+      .filter(col("content_md5").isNull ||
+        coalesce(col("doc_id") === col("keep_id"), lit(true)))
+      .select(newDocs.columns.map(c => col(s"`$c`")): _*)
+      .localCheckpoint()
+    val newMin = observedMinId(ids, newDocs) match {
+      case Some(m) => m
+      case None => return None // empty snapshot
+    }
     require(newMin > maxIndexed,
       s"incremental dedup requires new doc_ids above the indexed corpus " +
         s"(min new id $newMin <= max indexed id $maxIndexed); batch-equal " +
         s"results are only guaranteed for monotone snapshot ids")
-
-    // exact tier (a): content already in the corpus -> drop
-    val newDigests = newDocs
-      .select(col("doc_id"), md5(col("text")).as("content_md5"))
-    val dupOfCorpus = newDigests
-      .join(corpusDigests.select(col("content_md5")), Seq("content_md5"))
-      .select(col("doc_id"))
-    val notInCorpus = newDocs.join(dupOfCorpus, Seq("doc_id"), "left_anti")
-    // exact tier (b): dedup the remaining new docs among themselves.
-    // localCheckpoint (NOT Dataset.persist) the survivors: they feed
-    // four downstream plan branches (toksets, band keys, within-new
-    // pairs, final keep join), and uncached each branch would re-run
-    // the corpus-digest anti-join — an index-sized scan per branch.
-    // Dataset.persist would register the plan in the session
-    // CacheManager, which holds it with STRONG references until an
-    // explicit unpersist — a leak per call in long-lived sessions,
-    // since the lazy result cannot release it. localCheckpoint stores
-    // RDD blocks that ContextCleaner reclaims once the result frame is
-    // garbage-collected, is snapshot-sized by contract, and cuts the
-    // plan away from the index files (required by the append path,
-    // whose index write would otherwise invalidate this subtree).
-    val newExact = notInCorpus
-      .join(exactDropIds(notInCorpus), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
 
     val newToks = docTokens(newExact)
     val newSets = tokenSets(newToks, ngram)
@@ -864,12 +913,7 @@ object Dedup {
       spark.table(s"${tablePrefix}_toksets"),
       nb, rpb, ng, maxId, threshold) match {
       case None => newDocs // empty snapshot
-      case Some(st) =>
-        st.newExact
-          .join(st.pairsVsCorpus.select(col("b").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          .join(st.pairsWithin.select(col("b").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
+      case Some(st) => pairwiseKept(st)
     }
   }
 
@@ -919,8 +963,9 @@ object Dedup {
       s"table index $tablePrefix carries no cluster labels — build it " +
         "with writeDedupIndexTablesCC (or compact a CC directory index) " +
         "to use the connected-component policy")
-    spark.table(s"${tablePrefix}_labels_meta")
-      .agg(max(col("threshold"))).head().getDouble(0)
+    graft.store.Store.maxOf[Double](
+      spark.table(s"${tablePrefix}_labels_meta"), "threshold",
+      s"table ${tablePrefix}_labels_meta")
   }
 
   /** [[dedupIncrementalCC]] against a bucketed-table index: identical
@@ -949,8 +994,7 @@ object Dedup {
         val (drops, _) = ccOverIncrementalPairs(
           spark.table(s"${tablePrefix}_labels"),
           st.pairsVsCorpus, st.pairsWithin, maxId)
-        st.newExact.join(drops.withColumnRenamed("id", "doc_id"),
-          Seq("doc_id"), "left_anti")
+        without(st.newExact, drops.withColumnRenamed("id", "doc_id"))
     }
   }
 
@@ -1071,7 +1115,7 @@ object Dedup {
         graft.functions.expressions.sorted_intersect_size(
           col("tokset"), col("ctokset")))
       .withColumn("jaccard",
-        col("common") / (col("set_size") + col("csz") - col("common")))
+        jaccard(col("common"), col("set_size"), col("csz")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_id"), col("corpus_id"),
         round(col("jaccard"), 4).as("jaccard"))
@@ -1111,9 +1155,8 @@ object Dedup {
         val (drops, newLabels) = ccOverIncrementalPairs(
           T.Dedup.Labels.read(spark, indexDir),
           st.pairsVsCorpus, st.pairsWithin, st.maxIndexed)
-        val kept = st.newExact
-          .join(drops.withColumnRenamed("id", "doc_id"),
-            Seq("doc_id"), "left_anti")
+        val kept =
+          without(st.newExact, drops.withColumnRenamed("id", "doc_id"))
         if (appendToIndex) {
           // same materialize-before-append discipline as
           // dedupIncremental; cc is already checkpointed by

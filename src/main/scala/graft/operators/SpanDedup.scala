@@ -173,8 +173,8 @@ object SpanDedup {
   def readSpanIndexMinLen(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Int = {
     graft.store.Store.heal(spark, dir, "manifest")
-    T.Span.Manifest.read(spark, dir)
-      .agg(max(col("min_len"))).head().getInt(0)
+    graft.store.Store.maxOf[Int](T.Span.Manifest.read(spark, dir),
+      "min_len", s"span index manifest at $dir")
   }
 
   /** Distinct (rolling-hash, md5) gram keys of a corpus — the stored
@@ -329,8 +329,8 @@ object SpanDedup {
   /** Stored gram length of a table-layout span index. */
   def readSpanIndexMinLenTables(spark: org.apache.spark.sql.SparkSession,
                                 tablePrefix: String): Int =
-    spark.table(s"${tablePrefix}_manifest")
-      .agg(max(col("min_len"))).head().getInt(0)
+    graft.store.Store.maxOf[Int](spark.table(s"${tablePrefix}_manifest"),
+      "min_len", s"table ${tablePrefix}_manifest")
 
   /** [[spanHitsVsIndex]] against a bucketed-table index: identical
     * hits, with the corpus-sized gram table read pre-partitioned on

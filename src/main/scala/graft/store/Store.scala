@@ -83,6 +83,20 @@ object Store {
     case other => other
   }
 
+  /** Largest non-null `column` value of a small table (a manifest or a
+    * meta table, one row per write), collected and folded on the
+    * driver: one scan job, no aggregate exchange. A table without such
+    * a value is refused, naming `where`.
+    */
+  def maxOf[T: Ordering](df: DataFrame, column: String, where: String): T = {
+    val vs = df.select(column).collect().toSeq
+      .filterNot(_.isNullAt(0)).map(_.getAs[T](0))
+    if (vs.isEmpty)
+      throw new IllegalStateException(s"$where holds no $column value; " +
+        "it was written empty or its write did not finish")
+    vs.max
+  }
+
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -4,8 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.graftsupport.Jobs
-import graft.operators.{Decontaminate, Dedup}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.graftsupport.{Jobs, Plans}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import graft.operators.{Decontaminate, Dedup, SpanDedup}
 import graft.plans.SketchCheckpoint
 import graft.sources.TokenDocGen
 
@@ -493,5 +495,129 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException](call())
       assert(e.getMessage.contains("writeEmbDedupIndex"), e.getMessage)
     }
+  }
+
+  /** Every file under `dir`, by relative path, with its bytes. */
+  private def contents(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+      .toMap
+  }
+
+  test("docs without tokens never pair, against the corpus or each other") {
+    // punctuation-only and null texts have empty token sets: their
+    // union is empty, Jaccard is 0/0, and they must not pair
+    val dir = Files.createTempDirectory("graft-dedup-idx-empty").toString
+    Dedup.writeDedupIndex(df(s1 :+ ((10L, "!!!", "src1"))), dir)
+    val snap = Seq[(Long, String, String)]((20L, "???", "src2"),
+      (21L, null, "src0"), (22L, null, "src1"), (23L, "...", "src2"))
+      .toDF("doc_id", "text", "source")
+    assert(keptIds(Dedup.dedupIncremental(snap, dir)) == Seq(20L, 21L, 22L, 23L))
+    assert(Dedup.nearDupHitsVsIndex(snap, dir).count() == 0)
+  }
+
+  test("one-pass exact tier: fixed answers, column order, empty snapshot") {
+    val dir = Files.createTempDirectory("graft-dedup-idx-pass").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    val rows = Seq[(Long, String, String)](
+      doc(31L, words(2000 to 2030, "e")),   // within-snapshot dup of 30
+      doc(30L, words(2000 to 2030, "e")),   // kept: min id of its group
+      doc(32L, words(100 to 140, "u")),     // copy of corpus doc 0
+      doc(33L, words(100 to 140, "u")),     // the same corpus copy again
+      (34L, null, "src1"), (35L, null, "src2"), // null texts: both kept
+      doc(36L, words(2100 to 2140, "f")))   // unique
+    // an unusual column order must come back unchanged
+    val snap = df(rows).select("text", "source", "doc_id")
+    val kept = Dedup.dedupIncremental(snap, dir)
+    assert(kept.columns.toSeq == Seq("text", "source", "doc_id"))
+    val expected = Seq(30L, 34L, 35L, 36L)
+    assert(keptIds(kept) == expected)
+    // the same answer as a batch run over the union
+    assert(keptIds(Dedup.dedupDocs(df(s1 ++ rows))).filter(_ >= 30L) ==
+      expected)
+    // an empty snapshot is handed back as it is, on both policies
+    val empty = df(Seq.empty)
+    assert(Dedup.dedupIncremental(empty, dir) eq empty)
+    assert(Dedup.dedupIncremental(empty, dir, appendToIndex = true) eq empty)
+    val ccDir = Files.createTempDirectory("graft-dedup-cc-pass").toString
+    Dedup.writeDedupIndexCC(df(ccCorpus), ccDir, threshold = 0.9)
+    assert(Dedup.dedupIncrementalCC(empty, ccDir) eq empty)
+  }
+
+  test("an overlapping snapshot is refused before the index is touched") {
+    val dir = Files.createTempDirectory("graft-dedup-idx-refuse").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    val before = contents(dir)
+    // new content under an indexed id, and a snapshot that is nothing
+    // but a corpus copy (its exact tier keeps no row at all)
+    val overlapping = Seq(
+      Seq(doc(9L, words(3000 to 3010, "r")), doc(40L, words(3100 to 3110, "r"))),
+      Seq(doc(5L, words(100 to 140, "u"))))
+    for (rows <- overlapping) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.dedupIncremental(df(rows), dir, appendToIndex = true)
+      }
+      assert(e.getMessage.contains("monotone"), e.getMessage)
+      assert(contents(dir) == before, "the refused append changed the index")
+    }
+  }
+
+  test("the exact tier scans a persisted snapshot once") {
+    val dir = Files.createTempDirectory("graft-dedup-idx-scan").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    val snap = df(s2).persist()
+    try {
+      snap.count()
+      val (kept, plans) = Plans.recorded(spark) {
+        Dedup.dedupIncremental(snap, dir)
+      }
+      // one pass computes the digests, the corpus anti-join, the
+      // within-snapshot min ids and the observed min id together
+      val scans = plans.map { case (action, plan) =>
+        action -> Plans.nodes(plan).count(_.isInstanceOf[InMemoryTableScanExec])
+      }.filter(_._2 > 0)
+      assert(scans.map(_._2).sum == 1, scans)
+      assert(keptIds(kept) == Seq(12L, 15L, 18L))
+    } finally snap.unpersist()
+  }
+
+  test("one-row index reads run one job; an empty one is refused") {
+    val dir = Files.createTempDirectory("graft-dedup-meta").toString
+    Dedup.writeDedupIndexCC(df(ccCorpus), dir, threshold = 0.9)
+    val spanDir = Files.createTempDirectory("graft-span-meta").toString
+    SpanDedup.writeSpanIndex(df(s1), spanDir, minLen = 8)
+    try {
+      Dedup.writeDedupIndexTablesCC(df(ccCorpus), "graft_meta", 4,
+        threshold = 0.9)
+      SpanDedup.writeSpanIndexTables(df(s1), "graft_spmeta", 4, minLen = 8)
+      val reads = Seq[(String, () => Any, Any)](
+        ("labels threshold", () => Dedup.readLabelsThreshold(spark, dir), 0.9),
+        ("table labels threshold",
+          () => Dedup.readLabelsThresholdTables(spark, "graft_meta"), 0.9),
+        ("span min len", () => SpanDedup.readSpanIndexMinLen(spark, spanDir), 8),
+        ("table span min len",
+          () => SpanDedup.readSpanIndexMinLenTables(spark, "graft_spmeta"), 8))
+      for ((what, read, expected) <- reads) {
+        val (v, jobs) = Jobs.recorded(spark.sparkContext)(read())
+        assert(v == expected, what)
+        assert(jobs.size == 1, s"$what: $jobs")
+      }
+    } finally {
+      Seq("digests", "bands", "toksets", "manifest", "labels", "labels_meta")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_meta_$t"))
+      Seq("grams", "manifest")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_spmeta_$t"))
+    }
+    // a table written without a row is a broken write: refused by name
+    Seq.empty[Double].toDF("threshold")
+      .write.mode("overwrite").parquet(s"$dir/labels_meta")
+    val e = intercept[IllegalStateException](Dedup.readLabelsThreshold(spark, dir))
+    assert(e.getMessage.contains("labels_meta"), e.getMessage)
+    Seq.empty[(Int, Long)].toDF("min_len", "n_grams")
+      .write.mode("overwrite").parquet(s"$spanDir/manifest")
+    val e2 = intercept[IllegalStateException](
+      SpanDedup.readSpanIndexMinLen(spark, spanDir))
+    assert(e2.getMessage.contains("manifest"), e2.getMessage)
   }
 }

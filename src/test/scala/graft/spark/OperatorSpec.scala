@@ -533,6 +533,24 @@ class OperatorSpec extends AnyFunSuite {
     assert(cc == Seq(4L, 11L), s"CC keeps one per component: $cc")
   }
 
+  test("near-dup dedup: two docs without tokens are not a pair") {
+    // empty token sets have an empty union, so Jaccard is 0/0: they
+    // must never verify as a pair, nor fail the ANSI division
+    val docs = Seq[(Long, String, String)]((0L, "!!!", "s"),
+        (1L, "???", "s"), (2L, null, "s"), (3L, null, "s"),
+        (4L, "alpha beta gamma delta", "s"))
+      .toDF("doc_id", "text", "source")
+    for (kept <- Seq(Dedup.dedupDocs(docs), Dedup.dedupDocsCC(docs)))
+      assert(kept.select("doc_id").as[Long].collect().sorted.toSeq ==
+        (0L to 4L))
+    // the prefix-filter join never sees an empty set, and LSH agrees
+    val sets = Seq((0L, Array.empty[Int]), (1L, Array.empty[Int]),
+        (2L, Array(1, 2, 3)))
+      .toDF("doc_id", "tokens")
+    assert(Dedup.jaccardPairs(sets, 0.5).count() == 0)
+    assert(Dedup.minhashLshPairs(sets, 0.5).count() == 0)
+  }
+
   test("keepBestPerCluster keeps the top-scored doc, ties to min id") {
     // components: {1,2,3} scores (5,9,9) -> keep 2 (top score, tie to
     // the smaller id); {10,11} scores (1,4) -> keep 11 (quality beats
