@@ -2,7 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator,
+  CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -184,6 +188,196 @@ object catalyst {
     }
   }
   import SketchKind._
+
+  /** One sketch readback: a core method behind the Column function
+    * `name` and the SQL function `graft_name`. Its arguments are the
+    * sketch bytes, then at most one of: a second sketch, an int64 hash,
+    * a double q or x, a string item. `read` takes their non-null Catalyst
+    * values (`b` unused by one-argument ops) and loads the sketches.
+    */
+  sealed abstract class Accessor(val name: String, val usage: String,
+      val dataType: DataType, val inputs: DataType*)(
+      val read: (Any, Any) => Any) extends Product with Serializable {
+    /** `read` may return null: the core method has no SQL value. */
+    def nullResult: Boolean = false
+    /** The op's Column over its arguments. */
+    def apply(args: Column*): Column = col(SketchAccessor(this, args.map(expr)))
+  }
+
+  object Accessor {
+    private def bloom(b: Array[Byte]) = BloomIO.load(b)
+    private def hll(b: Array[Byte]) = HyperLogLog.deserialize(b)
+    private def cms(b: Array[Byte]) = CountMinSketch.deserialize(b)
+    private def theta(b: Array[Byte]) = ThetaSketch.deserialize(b)
+    private def tuple(b: Array[Byte]) = TupleSketch.deserialize(b)
+    private def freq(b: Array[Byte]) = FreqSketch.deserialize(b)
+    private def tdigest(b: Array[Byte]) = graft.core.TDigest.deserialize(b)
+    private def kll(b: Array[Byte]) = KllSketch.deserialize(b)
+    private def load[S](core: Array[Byte] => S, v: Any): S =
+      core(v.asInstanceOf[Array[Byte]])
+
+    /** An op over one sketch, loaded by `core`. */
+    sealed abstract class Of[S](name: String, usage: String, t: DataType,
+        core: Array[Byte] => S)(f: S => Any)
+        extends Accessor(name, usage, t, BinaryType)((a, _) => f(load(core, a)))
+    /** An op over one sketch and a scalar of type `arg` (Catalyst value V). */
+    sealed abstract class With[S, V](name: String, usage: String, t: DataType,
+        arg: DataType, core: Array[Byte] => S)(f: (S, V) => Any)
+        extends Accessor(name, usage, t, BinaryType, arg)((a, v) =>
+          f(load(core, a), v.asInstanceOf[V]))
+    /** A set operation over two sketches of one kind: a sketch. */
+    sealed abstract class Pair[S](name: String, usage: String,
+        core: Array[Byte] => S)(f: (S, S) => Array[Byte])
+        extends Accessor(name, usage, BinaryType, BinaryType, BinaryType)(
+          (a, b) => f(load(core, a), load(core, b)))
+
+    case object BloomMightContain extends With[BlockedBloomFilter, Long](
+      "bloom_might_contain", "(dump, hash64) - membership test of a " +
+        "dumped Bloom filter", BooleanType, LongType, bloom)(_.has(_))
+    case object BloomCardinality extends Of("bloom_cardinality", "(dump) - " +
+      "cardinality estimate of a dumped Bloom filter; null when saturated",
+      DoubleType, bloom)({ f =>
+      val c = f.cardinality
+      if (c.isInfinite) null else c
+    }) { override def nullResult: Boolean = true }
+    case object BloomUnion extends Pair("bloom_union",
+      "(a, b) - Bloom filter dump of the union", bloom)(
+      (f, g) => BloomIO.dump(f.union(g)))
+    case object BloomIntersect extends Pair("bloom_intersect",
+      "(a, b) - Bloom filter dump of the intersection", bloom)(
+      (f, g) => BloomIO.dump(f.intersect(g)))
+    case object BloomNumBits extends Of("bloom_num_bits",
+      "(dump) - bits of a dumped Bloom filter", LongType, bloom)(_.numBits)
+    case object BloomIsEmpty extends Of("bloom_is_empty",
+      "(dump) - true when no bit is set", BooleanType, bloom)(_.isEmpty)
+    case object BloomFprate extends With[BlockedBloomFilter, Long](
+      "bloom_fprate", "(dump, nkeys) - modeled false-positive rate after " +
+        "nkeys inserts", DoubleType, LongType, bloom)(
+      (f, n) => BloomConfig.fpRateAfter(n, f.numBits, f.k))
+    case object HllEstimate extends Of("hll_estimate",
+      "(sketch) - HyperLogLog distinct estimate", DoubleType, hll)(_.estimate)
+    case object HllMerge extends Pair("hll_merge",
+      "(a, b) - HyperLogLog sketch of the union", hll)(_.merge(_).serialize())
+    case object CmsEstimate extends With[CountMinSketch, Long]("cms_estimate",
+      "(sketch, hash64) - count-min frequency estimate", LongType, LongType,
+      cms)(_.estimate(_))
+    case object CmsTotal extends Of("cms_total",
+      "(sketch) - total count-min weight", LongType, cms)(_.total)
+    case object ThetaEstimate extends Of("theta_estimate",
+      "(sketch) - theta distinct estimate", DoubleType, theta)(_.estimate)
+    case object ThetaRetained extends Of("theta_retained", "(sketch) - " +
+      "retained entries (the exact distinct count below k)", IntegerType,
+      theta)(_.retained)
+    case object ThetaUnion extends Pair("theta_union",
+      "(a, b) - theta sketch of the union", theta)(_.merge(_).serialize())
+    case object ThetaIntersect extends Pair("theta_intersect",
+      "(a, b) - theta sketch of the intersection", theta)(
+      _.intersect(_).serialize())
+    case object ThetaANotB extends Pair("theta_a_not_b",
+      "(a, b) - theta sketch of a minus b", theta)(_.aNotB(_).serialize())
+    case object TupleEstimate extends Of("tuple_estimate",
+      "(sketch) - tuple-sketch distinct-key estimate", DoubleType, tuple)(
+      _.estimate)
+    case object TupleSumEstimate extends Of("tuple_sum_estimate",
+      "(sketch) - tuple-sketch total-weight estimate", DoubleType, tuple)(
+      _.sumEstimate)
+    case object TupleRetained extends Of("tuple_retained",
+      "(sketch) - retained keys of a tuple sketch", IntegerType, tuple)(
+      _.retained)
+    case object TupleUnion extends Pair("tuple_union", "(a, b) - tuple " +
+      "sketch of the union, equal keys summed", tuple)(_.merge(_).serialize())
+    case object TupleIntersect extends Pair("tuple_intersect", "(a, b) - " +
+      "tuple sketch of the shared keys, summaries summed", tuple)(
+      _.intersect(_).serialize())
+    case object TupleANotB extends Pair("tuple_a_not_b", "(a, b) - tuple " +
+      "sketch of a's keys absent from b, a's summaries", tuple)(
+      _.aNotB(_).serialize())
+    // items render as strings (decimal for token-id sketches); callers
+    // read the struct fields by their names
+    case object FreqEntries extends Of("freq_entries",
+      "(sketch) - array<struct<item, lower bound, upper bound>>",
+      ArrayType(StructType(Seq(StructField("_1", StringType),
+        StructField("_2", LongType, nullable = false),
+        StructField("_3", LongType, nullable = false)))), freq)(s =>
+      new GenericArrayData(s.entries.map { case (item, lb) => InternalRow(
+        UTF8String.fromString(s.codec.render(item)), lb, lb + s.maxError) }))
+    case object FreqLowerBound extends With[FreqSketch, UTF8String](
+      "freq_lower_bound", "(sketch, item) - lower bound on the item's " +
+        "weight (0 if absent)", LongType, StringType, freq)((s, i) =>
+      s.lowerBound(if (s.codec.tag == 0)
+        java.lang.Long.valueOf(i.toString.toLong) else i.toString))
+    case object FreqMaxError extends Of("freq_max_error",
+      "(sketch) - max error of every freq-sketch bound", LongType, freq)(
+      _.maxError)
+    case object FreqStreamWeight extends Of("freq_stream_weight",
+      "(sketch) - total freq-sketch weight", LongType, freq)(_.streamWeight)
+    case object FreqMerge extends Pair("freq_merge",
+      "(a, b) - freq sketch of both streams", freq)(_.merge(_).serialize())
+    case object TdigestQuantile extends With[graft.core.TDigest, Double](
+      "tdigest_quantile", "(sketch, q) - t-digest quantile", DoubleType,
+      DoubleType, tdigest)(_.quantile(_))
+    case object TdigestCdf extends With[graft.core.TDigest, Double](
+      "tdigest_cdf", "(sketch, x) - t-digest fraction of values <= x",
+      DoubleType, DoubleType, tdigest)(_.cdf(_))
+    case object KllQuantile extends With[KllSketch, Double]("kll_quantile",
+      "(sketch, q) - KLL quantile", DoubleType, DoubleType, kll)(_.quantile(_))
+    case object KllRank extends With[KllSketch, Double]("kll_rank",
+      "(sketch, x) - KLL fraction of values <= x", DoubleType, DoubleType,
+      kll)(_.rank(_))
+
+    /** Every op: the one list the Column and SQL surfaces derive from
+      * (lazy: an op's constructor reads this object's loaders).
+      */
+    lazy val all: Seq[Accessor] = Seq(BloomMightContain, BloomCardinality,
+      BloomUnion, BloomIntersect, BloomNumBits, BloomIsEmpty, BloomFprate,
+      HllEstimate, HllMerge, CmsEstimate, CmsTotal, ThetaEstimate,
+      ThetaRetained, ThetaUnion, ThetaIntersect, ThetaANotB, TupleEstimate,
+      TupleSumEstimate, TupleRetained, TupleUnion, TupleIntersect,
+      TupleANotB, FreqEntries, FreqLowerBound, FreqMaxError,
+      FreqStreamWeight, FreqMerge, TdigestQuantile, TdigestCdf, KllQuantile,
+      KllRank)
+  }
+
+  /** Any [[Accessor]] op over its arguments: the one expression behind
+    * every sketch readback. Implicit casts bring the arguments to the
+    * op's types (a decimal literal q becomes a double), a null argument
+    * gives null, and generated code calls the op through a reference
+    * object, as expressions.BloomMightContainDump does.
+    */
+  case class SketchAccessor(op: Accessor, children: Seq[Expression])
+      extends Expression with ImplicitCastInputTypes {
+    override def prettyName: String = "graft_" + op.name
+    override def inputTypes = op.inputs
+    override def dataType: DataType = op.dataType
+    override def nullable: Boolean = op.nullResult || children.exists(_.nullable)
+    override def nullIntolerant: Boolean = true
+    override protected def stringArgs: Iterator[Any] = children.iterator
+    override def eval(input: InternalRow): Any = {
+      val args = children.map(_.eval(input))
+      if (args.contains(null)) null else op.read(args.head, args.lift(1).orNull)
+    }
+
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("graftOp", op, classOf[Accessor].getName)
+      val args = children.map(_.genCode(ctx))
+      val result = ctx.freshName("result")
+      val call = (args.map(_.value.toString) :+ "null").take(2).mkString(", ")
+      import CodeGenerator.{boxedType, defaultValue, javaType}
+      ev.copy(code = code"""
+        |${args.map(_.code).reduce(_ + _)}
+        |boolean ${ev.isNull} = ${args.map(_.isNull).mkString(" || ")};
+        |${javaType(dataType)} ${ev.value} = ${defaultValue(dataType)};
+        |if (!${ev.isNull}) {
+        |  Object $result = $ref.read().apply($call);
+        |  ${ev.isNull} = $result == null;
+        |  if (!${ev.isNull}) ${ev.value} = (${boxedType(dataType)}) $result;
+        |}""".stripMargin)
+    }
+
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): SketchAccessor = copy(children = c)
+  }
 
   /** A sketch aggregate whose buffer, merge and BinaryType wire output
     * come from its kind.

@@ -672,6 +672,23 @@ object expressions {
         l: Expression, r: Expression): Hamming64 = copy(left = l, right = r)
   }
 
+  /** MinHash Jaccard estimate of two signatures (array<bigint> -> double). */
+  case class MinhashJaccard(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def prettyName: String = "graft_minhash_jaccard"
+    override def dataType: DataType = DoubleType
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      graft.core.MinHash.estimateJaccard(
+        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray(),
+        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray())
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) =>
+        s"graft.core.MinHash.estimateJaccard($a.toLongArray(), $b.toLongArray())")
+    override protected def withNewChildrenInternal(
+        l: Expression, r: Expression): MinhashJaccard = copy(left = l, right = r)
+  }
+
   /** Cosine similarity of two float vectors (array<float> -> double). */
   case class CosineSim(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -836,8 +853,8 @@ object expressions {
 
   // Column wrappers
 
-  // wrappers cast inputs explicitly (no ExpectsInputTypes coercion:
-  // AbstractDataType is private[sql] in Spark 4)
+  // wrappers cast inputs explicitly (catalyst.SketchAccessor shows the
+  // ImplicitCastInputTypes alternative)
 
   def token_hash64(c: Column): Column =
     catalyst.aggColExpr(TokenHash64(catalyst.expr(c.cast("int"))))
@@ -922,6 +939,9 @@ object expressions {
   def hamming64(a: Column, b: Column): Column =
     catalyst.aggColExpr(Hamming64(
       catalyst.expr(a.cast("bigint")), catalyst.expr(b.cast("bigint"))))
+
+  def minhash_jaccard(a: Column, b: Column): Column =
+    catalyst.aggColExpr(MinhashJaccard(longArr(a), longArr(b)))
 
   // vector kernels read ArrayData.toFloatArray — coerce array<double>
   // (or any numeric array) inputs so they don't CCE / read garbage

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.core._
-import catalyst.SketchKind
+import catalyst.{SketchKind, Accessor => A}
 
 /** Column-level API of the sketch engine.
   *
@@ -15,11 +13,11 @@ import catalyst.SketchKind
   * Cardinality->bloom_cardinality, Optimize->BloomConfig.optimize at plan
   * time, Dump/Load->the BinaryType column values themselves).
   *
-  * Probe-side note (scale): `bloomProbe(filter)` captures a driver-side
-  * deserialized filter in the UDF closure, so executors deserialize ONCE
-  * per task via closure/broadcast — the Spark analog of the reference's
-  * "share one filter among readers". The bytes-column variants
-  * (`bloom_might_contain`) deserialize per row and are meant for small
+  * Probe-side note (scale): `bloomProbe(filter)` binds a driver-side
+  * deserialized filter into the plan (or a broadcast), so executors
+  * deserialize ONCE per task — the Spark analog of the reference's
+  * "share one filter among readers". The bytes-column accessors
+  * (`bloom_might_contain`) load per row and are meant for small
   * aggregated results (one sketch row per group), not per-row probes of a
   * big table.
   */
@@ -203,188 +201,48 @@ object functions {
   /** Codegen FNV-1a 64 string hash. */
   def fnv_hash64_native(c: Column): Column = expressions.fnv1a64(c)
 
-  // ---------------- udf-form scalar accessors ----------------
+  // ---------------- sketch accessors ----------------
   //
-  // SMALL RESULTS ONLY: each call deserializes its sketch argument per
-  // ROW (BloomIO.load / *.deserialize inside a ScalaUDF — no codegen,
-  // full encoder tax). They exist for driver-side readbacks over
-  // already-aggregated frames (one sketch row per group; SparkEntry
-  // uses them on <= 20-row results). Anything corpus-sized has a
-  // native twin — use it:
-  //  - probing rows against a filter  -> [[bloomProbe]] /
-  //    [[bloomProbeBroadcast]] / [[bloomProbeAuto]] (codegen
-  //    expressions.BloomProbe; the filter is loaded ONCE per plan)
-  //  - building/merging filters over rows -> the catalyst.scala
-  //    aggregates (bloom_agg_* — partial/final merge, no per-row dump)
-  //  - set algebra over MANY filters -> load once driver-side
-  //    (BloomIO.load) and use the core BlockedBloomFilter methods
-  // PlanSpec asserts no ScalaUDF reaches a hot path.
+  // catalyst.Accessor ops, planned as the native catalyst.SketchAccessor
+  // and registered by `sql` as graft_<name>; a null argument gives null.
+  // SMALL RESULTS ONLY: each call still loads its sketches per ROW, so
+  // read already-aggregated frames (one sketch row per group) and use
+  // [[bloomProbeAuto]] / the aggregates above for corpus-sized work.
 
-  /** Per-row variant over a sketch-bytes column (small results only —
-    * see section note; corpus-sized probes use [[bloomProbeAuto]]).
-    */
-  val bloom_might_contain: UserDefinedFunction =
-    udf((dump: Array[Byte], h: Long) => BloomIO.load(dump).has(h))
-
-  /** Cardinality MLE of a dumped filter
-    * (/root/reference/bloomfilter.go:111-140 semantics; +Inf becomes null
-    * to stay SQL-friendly).
-    */
-  val bloom_cardinality: UserDefinedFunction =
-    udf((dump: Array[Byte]) => {
-      val c = BloomIO.load(dump).cardinality
-      if (c.isInfinite) None else Some(c)
-    })
-
-  val bloom_union: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) => {
-      val f = BloomIO.load(a)
-      BloomIO.dump(f.union(BloomIO.load(b)))
-    })
-
-  val bloom_intersect: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) => {
-      val f = BloomIO.load(a)
-      BloomIO.dump(f.intersect(BloomIO.load(b)))
-    })
-
-  val bloom_num_bits: UserDefinedFunction =
-    udf((dump: Array[Byte]) => BloomIO.load(dump).numBits)
-
-  val bloom_is_empty: UserDefinedFunction =
-    udf((dump: Array[Byte]) => BloomIO.load(dump).isEmpty)
-
-  /** Modeled FPR after nkeys inserts (/root/reference/optimize.go:133-141). */
-  val bloom_fprate: UserDefinedFunction =
-    udf((dump: Array[Byte], nkeys: Long) => {
-      val f = BloomIO.load(dump)
-      BloomConfig.fpRateAfter(nkeys, f.numBits, f.k)
-    })
-
-  // ---------------- sketch scalars ----------------
-  //
-  // Same contract as the Bloom accessors above: these read back
-  // ALREADY-AGGREGATED sketch columns (one row per group — built by the
-  // native catalyst.scala aggregates hll_agg_* / cms_agg_* /
-  // tdigest_agg_* / kll_agg_*), so the per-row deserialization cost is
-  // paid once per GROUP, never per input row. Do not map them over
-  // corpus-sized frames.
-
-  val hll_estimate: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => HyperLogLog.deserialize(bytes).estimate)
-
-  val hll_merge: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      HyperLogLog.deserialize(a).merge(HyperLogLog.deserialize(b)).serialize())
-
-  val cms_estimate: UserDefinedFunction =
-    udf((bytes: Array[Byte], h: Long) =>
-      CountMinSketch.deserialize(bytes).estimate(h))
-
-  val cms_total: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => CountMinSketch.deserialize(bytes).total)
-
-  /** Distinct estimate of a theta sketch (native build twin:
-    * [[theta_agg_tokens]]/[[theta_agg_hash]] — this accessor reads
-    * already-aggregated per-group rows only, like [[hll_estimate]]).
-    */
-  val theta_estimate: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => ThetaSketch.deserialize(bytes).estimate)
-
-  /** Retained-entry count (exact distinct when below k). */
-  val theta_retained: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => ThetaSketch.deserialize(bytes).retained)
-
-  /** Pairwise set operations over two serialized theta sketches: the
-    * result is itself a sketch, so expressions compose
-    * (|A ∩ B| = theta_estimate(theta_intersect(a, b))). Per-group rows
-    * only, same contract as every sketch scalar in this block.
-    */
-  val theta_union: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      ThetaSketch.deserialize(a).merge(ThetaSketch.deserialize(b)).serialize())
-
-  val theta_intersect: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      ThetaSketch.deserialize(a).intersect(ThetaSketch.deserialize(b)).serialize())
-
-  val theta_a_not_b: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      ThetaSketch.deserialize(a).aNotB(ThetaSketch.deserialize(b)).serialize())
-
-  /** Tuple-sketch accessors and pair algebra — same per-group-rows-only
-    * contract as the theta block above (native build twins:
-    * [[tuple_agg_hash]]/[[tuple_agg_tokens]]/[[tuple_union_agg]]).
-    */
-  val tuple_estimate: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => TupleSketch.deserialize(bytes).estimate)
-
-  /** Horvitz–Thompson total-weight estimate (exact in exact mode). */
-  val tuple_sum_estimate: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => TupleSketch.deserialize(bytes).sumEstimate)
-
-  val tuple_retained: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => TupleSketch.deserialize(bytes).retained)
-
-  val tuple_union: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      TupleSketch.deserialize(a).merge(TupleSketch.deserialize(b)).serialize())
-
-  /** Shared keys, summaries summed across both sides ("mass of the
-    * shared vocabulary in either input").
-    */
-  val tuple_intersect: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      TupleSketch.deserialize(a).intersect(TupleSketch.deserialize(b)).serialize())
-
-  /** A's keys absent from B, A's summaries kept ("mass unique to A"). */
-  val tuple_a_not_b: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      TupleSketch.deserialize(a).aNotB(TupleSketch.deserialize(b)).serialize())
-
-  /** Freq-sketch accessors — same per-group-rows-only contract as the
-    * theta/tuple blocks (native build twins: [[freq_agg_tokens]]/
-    * [[freq_agg_str]]/[[freq_union_agg]]). Items render as strings
-    * (decimal for token-id sketches).
-    */
-  val freq_entries: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => {
-      val s = FreqSketch.deserialize(bytes)
-      s.entries.map { case (item, lb) =>
-        (s.codec.render(item), lb, lb + s.maxError)
-      }.toSeq
-    })
-
-  /** Lower bound on a string item's true weight (0 if absent). */
-  val freq_lower_bound: UserDefinedFunction =
-    udf((bytes: Array[Byte], item: String) => {
-      val s = FreqSketch.deserialize(bytes)
-      val key: AnyRef =
-        if (s.codec.tag == 0) java.lang.Long.valueOf(item.toLong) else item
-      s.lowerBound(key)
-    })
-
-  val freq_max_error: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => FreqSketch.deserialize(bytes).maxError)
-
-  val freq_stream_weight: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => FreqSketch.deserialize(bytes).streamWeight)
-
-  val freq_merge: UserDefinedFunction =
-    udf((a: Array[Byte], b: Array[Byte]) =>
-      FreqSketch.deserialize(a).merge(FreqSketch.deserialize(b)).serialize())
-
-  val tdigest_quantile: UserDefinedFunction =
-    udf((bytes: Array[Byte], q: Double) => TDigest.deserialize(bytes).quantile(q))
-
-  val tdigest_cdf: UserDefinedFunction =
-    udf((bytes: Array[Byte], x: Double) => TDigest.deserialize(bytes).cdf(x))
-
-  val kll_quantile: UserDefinedFunction =
-    udf((bytes: Array[Byte], q: Double) => KllSketch.deserialize(bytes).quantile(q))
-
-  val kll_rank: UserDefinedFunction =
-    udf((bytes: Array[Byte], x: Double) => KllSketch.deserialize(bytes).rank(x))
+  def bloom_might_contain(dump: Column, hash: Column): Column =
+    A.BloomMightContain(dump, hash)
+  def bloom_cardinality(dump: Column): Column = A.BloomCardinality(dump)
+  def bloom_union(a: Column, b: Column): Column = A.BloomUnion(a, b)
+  def bloom_intersect(a: Column, b: Column): Column = A.BloomIntersect(a, b)
+  def bloom_num_bits(dump: Column): Column = A.BloomNumBits(dump)
+  def bloom_is_empty(dump: Column): Column = A.BloomIsEmpty(dump)
+  def bloom_fprate(dump: Column, nkeys: Column): Column = A.BloomFprate(dump, nkeys)
+  def hll_estimate(sketch: Column): Column = A.HllEstimate(sketch)
+  def hll_merge(a: Column, b: Column): Column = A.HllMerge(a, b)
+  def cms_estimate(sketch: Column, hash: Column): Column = A.CmsEstimate(sketch, hash)
+  def cms_total(sketch: Column): Column = A.CmsTotal(sketch)
+  def theta_estimate(sketch: Column): Column = A.ThetaEstimate(sketch)
+  def theta_retained(sketch: Column): Column = A.ThetaRetained(sketch)
+  def theta_union(a: Column, b: Column): Column = A.ThetaUnion(a, b)
+  def theta_intersect(a: Column, b: Column): Column = A.ThetaIntersect(a, b)
+  def theta_a_not_b(a: Column, b: Column): Column = A.ThetaANotB(a, b)
+  def tuple_estimate(sketch: Column): Column = A.TupleEstimate(sketch)
+  def tuple_sum_estimate(sketch: Column): Column = A.TupleSumEstimate(sketch)
+  def tuple_retained(sketch: Column): Column = A.TupleRetained(sketch)
+  def tuple_union(a: Column, b: Column): Column = A.TupleUnion(a, b)
+  def tuple_intersect(a: Column, b: Column): Column = A.TupleIntersect(a, b)
+  def tuple_a_not_b(a: Column, b: Column): Column = A.TupleANotB(a, b)
+  def freq_entries(sketch: Column): Column = A.FreqEntries(sketch)
+  def freq_lower_bound(sketch: Column, item: Column): Column =
+    A.FreqLowerBound(sketch, item)
+  def freq_max_error(sketch: Column): Column = A.FreqMaxError(sketch)
+  def freq_stream_weight(sketch: Column): Column = A.FreqStreamWeight(sketch)
+  def freq_merge(a: Column, b: Column): Column = A.FreqMerge(a, b)
+  def tdigest_quantile(sketch: Column, q: Column): Column =
+    A.TdigestQuantile(sketch, q)
+  def tdigest_cdf(sketch: Column, x: Column): Column = A.TdigestCdf(sketch, x)
+  def kll_quantile(sketch: Column, q: Column): Column = A.KllQuantile(sketch, q)
+  def kll_rank(sketch: Column, x: Column): Column = A.KllRank(sketch, x)
 
   // ---------------- MinHash / SimHash / vector scalars ----------------
   //
@@ -396,8 +254,8 @@ object functions {
   def minhash_signature(numPerms: Int = 128)(tokens: Column): Column =
     expressions.minhash_signature(tokens, numPerms)
 
-  val minhash_jaccard: UserDefinedFunction =
-    udf((a: Array[Long], b: Array[Long]) => MinHash.estimateJaccard(a, b))
+  def minhash_jaccard(a: Column, b: Column): Column =
+    expressions.minhash_jaccard(a, b)
 
   /** LSH band keys for a signature: array of (band << 56) ^ bandHash —
     * explode + groupBy on these to get candidate pairs.

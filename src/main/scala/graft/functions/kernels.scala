@@ -11,8 +11,8 @@ import graft.core.{Hashing, MinHash, SimHash}
   * `graft.functions.kernels.m(...)` — the same pattern the round-1 probe
   * expressions use with graft.core.Hashing. Each kernel reads Spark's
   * ArrayData directly (toIntArray/toFloatArray are array copies, not
-  * per-element boxing) so the per-row ExpressionEncoder tax of the udf()
-  * path (~6x the kernel itself, BASELINE.md finding 1) never appears.
+  * per-element boxing) so the per-row ExpressionEncoder tax of a Scala
+  * udf, ~6x the kernel itself (BASELINE.md finding 1), never appears.
   */
 object kernels {
 

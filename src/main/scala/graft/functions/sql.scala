@@ -8,9 +8,10 @@ import graft.core._
 
 /** SQL surface: every sketch operator callable from `spark.sql(...)`.
   *
-  * One table of graft_* functions — aggregates, native scalar
-  * expressions, and the `functions` udf accessors — each with its usage
-  * string, and two entry points that register all of it:
+  * One table of graft_* functions in three parts — aggregates, native
+  * scalar expressions and sketch accessors (the [[catalyst.Accessor]]
+  * ops) — each with its usage string and each built from its Column
+  * form, and two entry points that register all of it:
   *  - `GraftExtensions` (for `spark.sql.extensions=graft.functions.
   *    GraftExtensions` in spark-submit conf) at session build;
   *  - `sql.registerAll(spark)` at runtime into a live session.
@@ -66,6 +67,11 @@ object sql {
       glue.convertedExpressionOf(body(a).applyOrElse(es.length,
         (_: Int) => a.fail("wrong number of arguments")))
     })
+
+  /** A graft_* SQL function over `arity` column arguments. */
+  private def columns(name: String, usage: String, arity: Int)(
+      build: Seq[Column] => Column): (String, (String, Builder)) =
+    fn(name, usage) { a => { case n if n == arity => build((0 until n).map(a.col)) } }
 
   private val F = functions
   private val E = expressions
@@ -207,15 +213,11 @@ object sql {
     * Column forms).
     */
   val scalarBuilders: Map[String, (String, Builder)] = Map(
-    fn("graft_tokenize", "(text) - deterministic token ids, array<int>") { a => {
-      case 1 => E.tokenize(a.col(0))
-    }},
-    fn("graft_token_hash", "(token_id) - splitmix64 of an int token") { a => {
-      case 1 => E.token_hash64(a.col(0))
-    }},
-    fn("graft_fnv64", "(str) - 64-bit FNV-1a") { a => {
-      case 1 => E.fnv1a64(a.col(0))
-    }},
+    columns("graft_tokenize", "(text) - deterministic token ids, array<int>", 1)(
+      c => E.tokenize(c(0))),
+    columns("graft_token_hash", "(token_id) - splitmix64 of an int token", 1)(
+      c => E.token_hash64(c(0))),
+    columns("graft_fnv64", "(str) - 64-bit FNV-1a", 1)(c => E.fnv1a64(c(0))),
     fn("graft_minhash_signature",
        "(tokens[, numPerms]) - MinHash signature, array<long>") { a => {
       case 1 => F.minhash_signature()(a.col(0))
@@ -226,37 +228,33 @@ object sql {
       case 3 => E.minhash_bands(a.col(0), a.int(1, "numBands"),
         a.int(2, "rowsPerBand"))
     }},
-    fn("graft_simhash", "(tokens) - 64-bit SimHash fingerprint") { a => {
-      case 1 => E.simhash64(a.col(0))
-    }},
+    columns("graft_simhash", "(tokens) - 64-bit SimHash fingerprint", 1)(
+      c => E.simhash64(c(0))),
     fn("graft_simhash_buckets",
        "(fp, maxHamming) - two-level pigeonhole bucket keys, array<long>") { a => {
       case 2 => E.simhash_buckets(a.col(0), a.int(1, "maxHamming"))
     }},
-    fn("graft_hamming64",
-       "(a, b) - Hamming distance of two int64 fingerprints") { a => {
-      case 2 => E.hamming64(a.col(0), a.col(1))
-    }},
-    fn("graft_cosine_sim",
-       "(a, b) - cosine similarity of two array<float>") { a => {
-      case 2 => E.cosine_sim(a.col(0), a.col(1))
-    }},
+    columns("graft_hamming64",
+       "(a, b) - Hamming distance of two int64 fingerprints", 2)(
+      c => E.hamming64(c(0), c(1))),
+    columns("graft_minhash_jaccard", "(sigA, sigB) - MinHash Jaccard estimate",
+      2)(c => E.minhash_jaccard(c(0), c(1))),
+    columns("graft_cosine_sim",
+       "(a, b) - cosine similarity of two array<float>", 2)(
+      c => E.cosine_sim(c(0), c(1))),
     fn("graft_token_shingles",
        "(tokens, n) - rolling n-gram shingle hashes, array<long>") { a => {
       case 2 => E.token_shingles(a.col(0), a.int(1, "n"))
     }},
-    fn("graft_lang_id", "(text) - heuristic language id") { a => {
-      case 1 => E.lang_id(a.col(0))
-    }},
-    fn("graft_canonical_url",
+    columns("graft_lang_id", "(text) - heuristic language id", 1)(
+      c => E.lang_id(c(0))),
+    columns("graft_canonical_url",
        "(url) - canonical URL form (dedup key): fragment/tracking-" +
-         "param/default-port/www/trailing-slash normalization") { a => {
-      case 1 => E.canonical_url(a.col(0))
-    }},
-    fn("graft_rolling_fp",
-       "(text) - Karp-Rabin rolling-window fingerprint") { a => {
-      case 1 => E.rolling_fingerprint(a.col(0))
-    }},
+         "param/default-port/www/trailing-slash normalization", 1)(
+      c => E.canonical_url(c(0))),
+    columns("graft_rolling_fp",
+       "(text) - Karp-Rabin rolling-window fingerprint", 1)(
+      c => E.rolling_fingerprint(c(0))),
     fn("graft_lsh_band_keys",
        "(emb, numBands, bitsPerBand, dim) - hyperplane band keys") { a => {
       case 4 => E.lsh_band_keys(a.col(0), a.int(1, "numBands"),
@@ -271,18 +269,15 @@ object sql {
          "kept (LM occurrence stream), array<string>") { a => {
       case 2 => E.word_ngrams_all(a.col(0), a.int(1, "n"))
     }},
-    fn("graft_seg_token_count",
+    columns("graft_seg_token_count",
        "(text) - BPE-style pre-tokenizer token count (alnum runs + " +
-         "one per other non-space char), long") { a => {
-      case 1 => E.seg_token_count(a.col(0))
-    }},
-    fn("graft_gopher_signals",
+         "one per other non-space char), long", 1)(
+      c => E.seg_token_count(c(0))),
+    columns("graft_gopher_signals",
        "(text) - Gopher quality raw signals, array<long> of 9: " +
          "[n_words, sum_word_codepoints, n_alpha_words, n_stopwords, " +
          "n_lines, n_bullet_lines, n_ellipsis_lines, n_hash_chars, " +
-         "n_ellipsis_occurrences]") { a => {
-      case 1 => E.gopher_signals(a.col(0))
-    }},
+         "n_ellipsis_occurrences]", 1)(c => E.gopher_signals(c(0))),
     fn("graft_gram_hashes",
        "(text, n) - position-ordered rolling word-n-gram hashes, " +
          "array<long> (duplicate-span seeds)") { a => {
@@ -294,76 +289,20 @@ object sql {
       case 3 => E.gram_at(a.col(0), a.col(1), a.int(2, "n"))
     }})
 
-  /** name -> (usage, builder) for the sketch accessors: each is the
-    * `functions` udf val itself, lifted into a SQL builder, behind the
-    * same argument-count check as the other builders. Same contract as
-    * the Column form — every call deserializes its sketch argument per
-    * ROW, so use them on already-aggregated results (one sketch row per
-    * group), never on corpus-sized frames.
+  /** name -> (usage, builder) for the sketch accessors: `graft_<name>`
+    * per [[catalyst.Accessor]] op, the op's Column form. Each call loads
+    * its sketches per ROW: for already-aggregated results only.
     */
-  val udfBuilders: Map[String, (String, Builder)] = {
-    Seq(
-      "graft_bloom_might_contain" -> (
-        "(dump, hash64) - membership test of a dumped Bloom filter",
-        F.bloom_might_contain),
-      "graft_bloom_cardinality" -> (
-        "(dump) - cardinality estimate of a dumped Bloom filter; null " +
-          "when saturated", F.bloom_cardinality),
-      "graft_bloom_fprate" -> (
-        "(dump, nkeys) - modeled false-positive rate after nkeys inserts",
-        F.bloom_fprate),
-      "graft_hll_estimate" -> (
-        "(sketch) - HyperLogLog distinct estimate", F.hll_estimate),
-      "graft_cms_estimate" -> (
-        "(sketch, hash64) - count-min frequency estimate", F.cms_estimate),
-      "graft_theta_estimate" -> (
-        "(sketch) - theta distinct estimate", F.theta_estimate),
-      "graft_theta_intersect" -> (
-        "(a, b) - theta sketch of the intersection", F.theta_intersect),
-      "graft_theta_a_not_b" -> (
-        "(a, b) - theta sketch of a minus b", F.theta_a_not_b),
-      "graft_tuple_estimate" -> (
-        "(sketch) - tuple-sketch distinct-key estimate", F.tuple_estimate),
-      "graft_tuple_sum_estimate" -> (
-        "(sketch) - tuple-sketch total-weight estimate",
-        F.tuple_sum_estimate),
-      "graft_tuple_intersect" -> (
-        "(a, b) - tuple sketch of the shared keys, summaries summed",
-        F.tuple_intersect),
-      "graft_tuple_a_not_b" -> (
-        "(a, b) - tuple sketch of a's keys absent from b, a's summaries",
-        F.tuple_a_not_b),
-      "graft_freq_entries" -> (
-        "(sketch) - array<struct<item, lower bound, upper bound>>",
-        F.freq_entries),
-      "graft_freq_lower_bound" -> (
-        "(sketch, item) - lower bound on the item's weight (0 if absent)",
-        F.freq_lower_bound),
-      "graft_freq_max_error" -> (
-        "(sketch) - max error of every freq-sketch bound", F.freq_max_error),
-      "graft_tdigest_quantile" -> (
-        "(sketch, q) - t-digest quantile", F.tdigest_quantile),
-      "graft_kll_quantile" -> (
-        "(sketch, q) - KLL quantile", F.kll_quantile),
-      "graft_minhash_jaccard" -> (
-        "(sigA, sigB) - MinHash Jaccard estimate", F.minhash_jaccard)
-    ).map { case (name, (usage, u)) =>
-      val named = u.withName(name)
-      val arity = glue.udfArity(u)
-      name -> (usage, (es: Seq[Expression]) => {
-        if (es.length != arity)
-          new Args(name, usage, es).fail("wrong number of arguments")
-        glue.udfExpression(named, es)
-      })
-    }.toMap
-  }
+  val accessorBuilders: Map[String, (String, Builder)] =
+    catalyst.Accessor.all.map(op =>
+      columns("graft_" + op.name, op.usage, op.inputs.length)(op(_: _*))).toMap
 
   /** Every graft_* SQL function as (id, info, builder): the one table
     * behind both entry points, so they cannot drift apart.
     */
   private[functions] def all: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] =
-    (aggregateBuilders ++ scalarBuilders ++ udfBuilders).toSeq.map {
+    (aggregateBuilders ++ scalarBuilders ++ accessorBuilders).toSeq.map {
       case (name, (usage, builder)) =>
         // DESCRIBE FUNCTION <name> shows the usage string
         (FunctionIdentifier(name),

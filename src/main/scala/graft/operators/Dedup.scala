@@ -1479,6 +1479,22 @@ object Dedup {
       pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
       numBands: Int, bitsPerBand: Int, dim: Int, maxVid: Long)
 
+  /** One pass over a snapshot: null-vector count, min and max vector
+    * length, then `extra`. Refuses a null vector or a dim other than the
+    * index's `d` on any row (the kernels compare common PREFIXes).
+    */
+  private def checkDims(embs: DataFrame, embCol: String, d: Int,
+                        indexDir: String, extra: Column*): Row = {
+    val v = col(embCol)
+    val r = embs.agg(count(when(v.isNull, 1)),
+      Seq(min(size(v)), max(size(v))) ++ extra: _*).head()
+    require(r.getLong(0) == 0,
+      s"snapshot has ${r.getLong(0)} null $embCol vectors")
+    require(r.isNullAt(1) || (r.getInt(1) == d && r.getInt(2) == d),
+      s"snapshot embedding dim ${r.get(1)}..${r.get(2)} != index dim $d at $indexDir")
+    r
+  }
+
   private def embIncrementalPairs(newEmbs: DataFrame, indexDir: String,
                                   threshold: Double, idCol: String,
                                   embCol: String):
@@ -1486,17 +1502,11 @@ object Dedup {
     val spark = newEmbs.sparkSession
     val EmbManifest(numBands, bitsPerBand, d, maxVid) =
       readEmbManifest(spark, indexDir)
-    val newMinRow = newEmbs.agg(min(col(idCol))).head()
-    if (newMinRow.isNullAt(0)) return None
-    require(newMinRow.getLong(0) > maxVid,
+    val newMin = checkDims(newEmbs, embCol, d, indexDir, min(col(idCol)))
+    if (newMin.isNullAt(3)) return None
+    require(newMin.getLong(3) > maxVid,
       s"incremental embedding dedup requires new ids above the indexed " +
-        s"corpus (min new ${newMinRow.getLong(0)} <= max indexed $maxVid)")
-    // the cosine/band kernels compute over the common PREFIX of
-    // mismatched vectors — a snapshot from a different embedding model
-    // must fail here, not return plausible wrong similarities
-    val newDim = Ann.dimOf(newEmbs, embCol)
-    require(newDim == d,
-      s"snapshot embedding dim $newDim != index dim $d at $indexDir")
+        s"corpus (min new ${newMin.getLong(3)} <= max indexed $maxVid)")
     val corpusVecs = spark.read.parquet(s"$indexDir/vectors")
     val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
     val newV = newEmbs.select(col(idCol).as("vid"), col(embCol).as("emb"))
@@ -1625,12 +1635,7 @@ object Dedup {
     val spark = embs.sparkSession
     val EmbManifest(numBands, bitsPerBand, d, _) =
       readEmbManifest(spark, indexDir)
-    if (!embs.isStreaming) {
-      val ed = Ann.dimOf(embs, embCol)
-      require(ed == d,
-        s"embedding dim $ed != index dim $d at $indexDir — cosine over " +
-          "the common prefix would silently return wrong hits")
-    }
+    if (!embs.isStreaming) checkDims(embs, embCol, d, indexDir)
     val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
       .select(col("vid").as("corpus_id"), col("band"))
     val corpusVecs = spark.read.parquet(s"$indexDir/vectors")

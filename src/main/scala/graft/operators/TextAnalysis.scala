@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.core.Hashing
 import graft.store.Store.BatchLog
 import graft.store.{Tables => T}

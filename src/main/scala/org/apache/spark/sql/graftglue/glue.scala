@@ -3,9 +3,7 @@ package org.apache.spark.sql.graftglue
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter,
-  ExpressionUtils, UserDefinedFunctionUtils}
-import org.apache.spark.sql.expressions.{SparkUserDefinedFunction,
-  UserDefinedFunction}
+  ExpressionUtils}
 
 /** Minimal bridge into Spark's `private[sql]` Column<->Expression
   * converters (org.apache.spark.sql.classic.ExpressionUtils). Lives under
@@ -24,18 +22,4 @@ object glue {
     */
   def convertedExpressionOf(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
-
-  /** The ScalaUDF a Column-API `udf` val plans as, over analyzer-side
-    * children — what `spark.udf.register` builds, so one udf val serves
-    * both the Column API and SQL. (`expressionOf(u(cols))` is not a
-    * substitute: it leaves an unresolved column node that fails codegen.)
-    */
-  def udfExpression(u: UserDefinedFunction,
-                    children: Seq[Expression]): Expression =
-    UserDefinedFunctionUtils.toScalaUDF(
-      u.asInstanceOf[SparkUserDefinedFunction], children)
-
-  /** The number of arguments a Column-API `udf` val takes. */
-  def udfArity(u: UserDefinedFunction): Int =
-    u.asInstanceOf[SparkUserDefinedFunction].inputEncoders.length
 }

@@ -497,6 +497,34 @@ class DedupIncrementalSpec extends AnyFunSuite {
     }
   }
 
+  test("an embedding snapshot is checked in one pass: any wrong-dim or null vector is refused") {
+    // both readers of an embedding index: incremental dedup and the hits screen
+    val embs = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val dir = Files.createTempDirectory("graft-emb-idx-dim").toString
+    Dedup.writeEmbDedupIndex(embs, dir, numBands = 8)
+    def snap(vs: Array[Float]*) = vs.zipWithIndex
+      .map { case (v, i) => (10L + i, v) }.toDF("vec_id", "embedding")
+    val ok = Array(0f, 0f, 1f, 0f)
+    // the wrong vector comes after a right one: a check of the first row
+    // alone accepts it, and the kernels would compare common prefixes
+    for ((bad, why) <- Seq(
+        snap(ok, Array(0f, 0f, 1f)) -> "dim 3..4 != index dim 4",
+        snap(ok, Array(0f, 0f, 1f, 0f, 1f)) -> "dim 4..5 != index dim 4",
+        snap(ok, null) -> "1 null embedding")) {
+      for (call <- Seq(() => Dedup.embDedupIncremental(bad, dir, 0.9).collect(),
+          () => Dedup.embNearDupHitsVsIndex(bad, dir, 0.9).collect())) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(why), e.getMessage)
+      }
+    }
+    // before any pair work: one manifest read, one pass over the snapshot
+    val (_, actions) = Plans.recorded(spark)(
+      Dedup.embDedupIncremental(snap(ok, ok), dir, 0.9))
+    assert(actions.map(_._1) == Seq("collect", "head"), actions.map(_._1))
+    assert(Dedup.embDedupIncremental(snap(), dir, 0.9).isEmpty)
+  }
+
   /** Every file under `dir`, by relative path, with its bytes. */
   private def contents(dir: String): Map[String, Seq[Byte]] = {
     val root = java.nio.file.Paths.get(dir)

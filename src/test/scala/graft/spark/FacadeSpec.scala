@@ -155,6 +155,150 @@ class FacadeSpec extends AnyFunSuite {
       "12)) FROM t").head().getDouble(0) == extHll)
   }
 
+  test("every sketch accessor: one op list, the same value on both surfaces") {
+    import graft.core._
+    import graft.functions.catalyst.Accessor
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // sketches built by the core classes, over overlapping halves of one stream
+    val hs = (0 until 300).map(i => Hashing.tokenHash(i))
+    val (a, b) = (hs.take(200), hs.drop(100))
+    val (nbits, k) = BloomConfig.optimize(1000, 0.01)
+    def bloom(xs: Seq[Long]) = {
+      val f = BlockedBloomFilter(nbits, k); xs.foreach(f.add); BloomIO.dump(f)
+    }
+    def hll(xs: Seq[Long]) = { val s = HyperLogLog(12); xs.foreach(s.add); s.serialize() }
+    def theta(xs: Seq[Long]) = { val s = ThetaSketch(64); xs.foreach(s.add); s.serialize() }
+    def tuple(xs: Seq[Long]) = {
+      val s = TupleSketch(64); xs.foreach(h => s.add(h, 1 + (h & 3))); s.serialize()
+    }
+    def freq(n: Int) = {
+      val s = FreqSketch.strings(8)
+      // one heavy item over more light ones than k: bounds are not exact
+      (0 until n).foreach(i => s.update(if (i % 3 == 0) "w1" else s"w${i % 17}"))
+      s.serialize()
+    }
+    val cmsSk = CountMinSketch(4, 256); a.foreach(h => cmsSk.add(h))
+    val vals = (0 until 1000).map(i => Hashing.toUnitDouble(Hashing.at(5, i)))
+    val td = TDigest(100.0); val kl = KllSketch(200)
+    vals.foreach { v => td.add(v); kl.add(v) }
+    val sk = Map("bl_a" -> bloom(a), "bl_b" -> bloom(b), "hll_a" -> hll(a),
+      "hll_b" -> hll(b), "cms" -> cmsSk.serialize(), "th_a" -> theta(a),
+      "th_b" -> theta(b), "tu_a" -> tuple(a), "tu_b" -> tuple(b),
+      "fq_a" -> freq(300), "fq_b" -> freq(500), "td" -> td.serialize(),
+      "kll" -> kl.serialize())
+    val (h, n, q, x, item) = (hs(7), 150L, 0.5, 0.25, "w1")
+    // the core method itself, over a fresh load of each argument
+    def bl(c: String) = BloomIO.load(sk(c))
+    def hl(c: String) = HyperLogLog.deserialize(sk(c))
+    def th(c: String) = ThetaSketch.deserialize(sk(c))
+    def tu(c: String) = TupleSketch.deserialize(sk(c))
+    def fq(c: String) = FreqSketch.deserialize(sk(c))
+    val cases: Seq[(String, String, Any)] = Seq(
+      ("bloom_might_contain", "bl_a, h", bl("bl_a").has(h)),
+      ("bloom_cardinality", "bl_a", bl("bl_a").cardinality),
+      ("bloom_union", "bl_a, bl_b", BloomIO.dump(bl("bl_a").union(bl("bl_b")))),
+      ("bloom_intersect", "bl_a, bl_b",
+        BloomIO.dump(bl("bl_a").intersect(bl("bl_b")))),
+      ("bloom_num_bits", "bl_a", bl("bl_a").numBits),
+      ("bloom_is_empty", "bl_a", bl("bl_a").isEmpty),
+      ("bloom_fprate", "bl_a, n", BloomConfig.fpRateAfter(n, nbits, k)),
+      ("hll_estimate", "hll_a", hl("hll_a").estimate),
+      ("hll_merge", "hll_a, hll_b", hl("hll_a").merge(hl("hll_b")).serialize()),
+      ("cms_estimate", "cms, h", CountMinSketch.deserialize(sk("cms")).estimate(h)),
+      ("cms_total", "cms", 200L),
+      ("theta_estimate", "th_a", th("th_a").estimate),
+      ("theta_retained", "th_a", th("th_a").retained),
+      ("theta_union", "th_a, th_b", th("th_a").merge(th("th_b")).serialize()),
+      ("theta_intersect", "th_a, th_b",
+        th("th_a").intersect(th("th_b")).serialize()),
+      ("theta_a_not_b", "th_a, th_b", th("th_a").aNotB(th("th_b")).serialize()),
+      ("tuple_estimate", "tu_a", tu("tu_a").estimate),
+      ("tuple_sum_estimate", "tu_a", tu("tu_a").sumEstimate),
+      ("tuple_retained", "tu_a", tu("tu_a").retained),
+      ("tuple_union", "tu_a, tu_b", tu("tu_a").merge(tu("tu_b")).serialize()),
+      ("tuple_intersect", "tu_a, tu_b",
+        tu("tu_a").intersect(tu("tu_b")).serialize()),
+      ("tuple_a_not_b", "tu_a, tu_b", tu("tu_a").aNotB(tu("tu_b")).serialize()),
+      ("freq_entries", "fq_a", {
+        val s = fq("fq_a")
+        s.entries.toSeq.map { case (i, lb) =>
+          Seq(s.codec.render(i), lb, lb + s.maxError) }
+      }),
+      ("freq_lower_bound", "fq_a, item", fq("fq_a").lowerBound(item)),
+      ("freq_max_error", "fq_a", fq("fq_a").maxError),
+      ("freq_stream_weight", "fq_a", 300L),
+      ("freq_merge", "fq_a, fq_b", fq("fq_a").merge(fq("fq_b")).serialize()),
+      // a decimal literal q is cast to the op's double
+      ("tdigest_quantile", "td, 0.5", TDigest.deserialize(sk("td")).quantile(q)),
+      ("tdigest_cdf", "td, x", TDigest.deserialize(sk("td")).cdf(x)),
+      ("kll_quantile", "kll, 0.5", KllSketch.deserialize(sk("kll")).quantile(q)),
+      ("kll_rank", "kll, x", KllSketch.deserialize(sk("kll")).rank(x)))
+    assert(cases.map(_._1) == Accessor.all.map(_.name))
+    // the case covers both values and results of every kind
+    assert(bl("bl_a").has(h) && !bl("bl_a").isEmpty && fq("fq_a").maxError > 0 &&
+      fq("fq_a").lowerBound(item) > 0)
+    val names = sk.keys.toSeq.sorted
+    val schema = StructType(names.map(StructField(_, BinaryType)) ++ Seq(
+      StructField("h", LongType), StructField("n", LongType),
+      StructField("x", DoubleType), StructField("item", StringType)) ++
+      Seq(BinaryType, LongType, DoubleType, StringType)
+        .map(t => StructField("null_" + t.typeName, t)))
+    val row = Row.fromSeq(names.map(sk) ++ Seq(h, n, x, item, null, null, null, null))
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: Row => r.toSeq.map(norm)
+      case xs: scala.collection.Seq[_] => xs.map(norm)
+      case o => o
+    }
+    def describe(spark: SparkSession, name: String): String =
+      spark.sql(s"DESCRIBE FUNCTION $name").collect()
+        .map(_.getString(0)).mkString("\n")
+    def check(spark: SparkSession): Unit = {
+      // an RDD-backed view runs generated code; a local one is folded
+      // by the optimizer through the interpreted eval
+      val views = Seq(
+        "gen" -> spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema),
+        "local" -> spark.createDataFrame(java.util.Arrays.asList(row), schema))
+      for ((view, df) <- views) {
+        df.createOrReplaceTempView("sk")
+        for ((op, (name, args, want)) <- Accessor.all.zip(cases)) {
+          val argList = args.split(", ").toSeq
+          val method = F.getClass.getMethod(name, argList.map(_ => classOf[Column]): _*)
+          def both(as: Seq[String]): Seq[Any] = {
+            val viaSql = spark.sql(s"SELECT graft_$name(${as.mkString(", ")}) FROM sk")
+            val viaCol = df.select(method.invoke(F, as.map(expr): _*).asInstanceOf[Column])
+            assert(viaCol.schema.head.dataType == op.dataType, s"$view $name")
+            assert(viaCol.columns.head == viaSql.columns.head, s"$view $name")
+            Seq(viaSql, viaCol).map(_.head().get(0))
+          }
+          for (got <- both(argList))
+            assert(norm(got) == norm(want), s"$view $name($args)")
+          // a null in any argument gives null, never a failed task
+          for (i <- argList.indices;
+               got <- both(argList.updated(i, "null_" + op.inputs(i).typeName)))
+            assert(got == null, s"$view $name with a null argument $i")
+        }
+      }
+      // a saturated filter's +Inf cardinality is null on both surfaces
+      val full = BlockedBloomFilter(nbits, k); full.fill()
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(Row(BloomIO.dump(full))), 1), StructType(Seq(StructField("d", BinaryType))))
+        .createOrReplaceTempView("full")
+      assert(spark.sql("SELECT graft_bloom_cardinality(d) FROM full").head().isNullAt(0))
+      assert(spark.table("full").select(F.bloom_cardinality(col("d"))).head().isNullAt(0))
+      for (op <- Accessor.all) {
+        val u = describe(spark, "graft_" + op.name)
+        assert(u.contains("graft_" + op.name + op.usage), u)
+      }
+    }
+    val ext = freshSession(withGraftExtensions = true)
+    try check(ext) finally ext.stop()
+    val rt = freshSession(withGraftExtensions = false)
+    graft.functions.sql.registerAll(rt)
+    check(rt)
+  }
+
   test("typed Dataset view works through Dataset.groupByKey") {
     val spark = SparkSession.builder()
       .master("local[2]")

@@ -326,6 +326,70 @@ class PlanSpec extends AnyFunSuite {
         s"$name plan must not dispatch UDFs:\n$plan")
   }
 
+  test("declared queries that read sketches back plan no ScalaUDF") {
+    import spark.implicits._
+    import org.apache.spark.graftsupport.Plans
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    // the two tables these queries read, small
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-sf").toString
+    (0L until 120L).map { i =>
+      val text = (0 until 20).map(j => s"w${(i * 7 + j * j) % 31}").mkString(" ")
+      (i, text, "en", s"src${i % 4}", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    (0L until 200L).map(i => (i, i % 37, s"e${i % 3}"))
+      .toDF("event_id", "user_id", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    for (q <- Seq("q03_source_distinct_tokens", "q20_events_user_hll",
+        "q65_source_overlap", "q68_novelty_vs_sketches",
+        "q69_token_mass_overlap", "q74_novelty_mass", "q75_freq_sketch",
+        "q76_trending_grams", "q77_mixture_preview")) {
+      // every action the query runs, its own collect included
+      val (_, plans) = Plans.recorded(spark) {
+        graft.SparkEntry.queries(q)(spark, dir).collect()
+      }
+      assert(plans.nonEmpty, q)
+      val udfs = plans.flatMap { case (_, p) => Plans.nodes(p) }
+        .flatMap(_.expressions).flatMap(_.collect { case u: ScalaUDF => u })
+      assert(udfs.isEmpty, s"$q plans a ScalaUDF: $udfs")
+    }
+  }
+
+  test("source scan: no Scala udf under src/main outside two declared queries") {
+    // sketch readbacks are catalyst.SketchAccessor ops; one line each,
+    // with the reason, for the udfs left
+    val allowed = Map(
+      ("SparkEntry.scala", "udf((t: String) => cms.estimate") ->
+        "q04 probes its driver-built CMS per event type; the query is frozen",
+      ("SparkEntry.scala", "udf((w: String) => cms.estimate") ->
+        "q28 probes its driver-built CMS per heavy hitter; the query is frozen")
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"sources not found from ${root.getAbsolutePath}")
+    def scala(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scala(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val udf = """\budf\s*\(|UserDefinedFunction""".r
+    val found = for {
+      file <- scala(root)
+      text = new String(java.nio.file.Files.readAllBytes(file.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      m <- udf.findAllMatchIn(text)
+    } yield {
+      val start = text.lastIndexOf('\n', m.start) + 1
+      (file.getName, text.substring(start).takeWhile(_ != '\n').trim)
+    }
+    val stray = found.filterNot { case (file, line) =>
+      allowed.keys.exists { case (f, code) => f == file && line.contains(code) }
+    }
+    assert(stray.isEmpty, s"Scala udfs (use a native expression): ${stray.mkString("; ")}")
+    val used = allowed.keySet.filter { case (f, code) =>
+      found.exists { case (file, line) => file == f && line.contains(code) }
+    }
+    assert(used == allowed.keySet,
+      s"allowlist entries with no udf left: ${allowed.keySet -- used}")
+  }
+
   test("dedup self-joins reuse their exchanges (band shuffle computed once)") {
     // at sf0.001 everything broadcast-joins (no exchange at all) — force
     // the shuffle-join shape a large table gets; under AQE, reuse shows
