@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
-import graft.store.{Tables => T}
+import graft.store.{Store, Tables => T}
+import graft.store.Store.Location
+import graft.store.Store.Location.{Catalog, Dir}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -463,10 +465,18 @@ object Dedup {
   // tokset row per exact-survivor doc; incremental joins touch only the
   // index and the (small) new snapshot — the corpus text is never read.
   // All three joins are equi-joins on uniform keys (md5, band hash,
-  // doc_id); at scale use [[writeDedupIndexTables]] /
-  // [[dedupIncrementalTables]], which bucket each index table on
-  // exactly its join key so repeated snapshots join exchange-free on
-  // the corpus side (PlanSpec-asserted).
+  // doc_id).
+  //
+  // An index lives at one [[Location]], and every operator below is
+  // written once over it. A directory is the WRITE side: it takes the
+  // appends that compose snapshots. A catalog table prefix (the
+  // `*Tables` entry points) is the READ side: each table is bucketed on
+  // exactly the key its join probes (see graft.store.Tables), so every
+  // snapshot run shuffles ONLY the snapshot side and the corpus side
+  // reads its buckets in place (PlanSpec-asserted). The one corpus
+  // shuffle is paid when the tables are written or compacted from a
+  // directory, and amortized over every later snapshot. The catalog
+  // layout takes no appends.
 
   /** Persist the dedup index of a corpus under `dir`:
     * digests/ (doc_id, content_md5), bands/ (doc_id, band) and
@@ -477,13 +487,30 @@ object Dedup {
     * record that lets [[dedupIncremental]] take its parameters FROM the
     * index (a band/ngram mismatch would silently miss near-dups) and
     * check the monotone-id precondition without scanning the index.
+    * A fresh write drops the cluster labels of an earlier CC build.
     */
   def writeDedupIndex(docs: DataFrame, dir: String,
                       numBands: Int = 32, rowsPerBand: Int = 4,
-                      ngram: Int = 1, append: Boolean = false): Unit = {
-    if (append) requireNoLabels(docs.sparkSession, dir)
+                      ngram: Int = 1, append: Boolean = false): Unit =
+    writeIndex(docs, Dir(dir), numBands, rowsPerBand, ngram, append)
+
+  /** [[writeDedupIndex]] as managed tables
+    * `<prefix>_digests/_bands/_toksets/_manifest`, bucketed into
+    * `numBuckets` buckets (the read side of an index).
+    */
+  def writeDedupIndexTables(docs: DataFrame, tablePrefix: String,
+                            numBuckets: Int,
+                            numBands: Int = 32, rowsPerBand: Int = 4,
+                            ngram: Int = 1): Unit =
+    writeIndex(docs, Catalog(tablePrefix, numBuckets), numBands,
+      rowsPerBand, ngram, append = false)
+
+  private def writeIndex(docs: DataFrame, at: Location, numBands: Int,
+                         rowsPerBand: Int, ngram: Int,
+                         append: Boolean): Unit = {
+    prepareWrite(docs.sparkSession, at, append)
     val afterExact = docs.join(exactDropIds(docs), Seq("doc_id"), "left_anti")
-    writeIndexState(afterExact, dir, numBands, rowsPerBand, ngram, append)
+    writeIndexState(afterExact, at, numBands, rowsPerBand, ngram, append)
   }
 
   /** [[writeDedupIndex]] plus persisted CLUSTER LABELS: after the
@@ -500,68 +527,101 @@ object Dedup {
   def writeDedupIndexCC(docs: DataFrame, dir: String,
                         threshold: Double = 0.9,
                         numBands: Int = 32, rowsPerBand: Int = 4,
-                        ngram: Int = 1): Unit = {
-    writeDedupIndex(docs, dir, numBands, rowsPerBand, ngram)
-    val spark = docs.sparkSession
-    // near-dup pairs recomputed from the persisted bands/ + toksets/:
-    // one band self-join and one verify join over index columns only
-    writeClusterLabels(spark, dir, threshold,
-      clusterPairsFromFrames(T.Dedup.Bands.read(spark, dir),
-        T.Dedup.toksets(ngram).read(spark, dir), threshold))
-  }
+                        ngram: Int = 1): Unit =
+    writeIndexCC(docs, Dir(dir), threshold, numBands, rowsPerBand, ngram)
 
-  /** Verified near-dup pairs of an index's loaded bands/toksets frames
-    * (directory parquet or bucketed tables).
+  /** [[writeDedupIndexCC]] as managed tables; the labels table
+    * `<prefix>_labels` is bucketed on doc_id, the contraction join's
+    * probe key.
     */
-  private def clusterPairsFromFrames(bands: DataFrame, sets: DataFrame,
-                                     threshold: Double): DataFrame = {
+  def writeDedupIndexTablesCC(docs: DataFrame, tablePrefix: String,
+                              numBuckets: Int, threshold: Double = 0.9,
+                              numBands: Int = 32, rowsPerBand: Int = 4,
+                              ngram: Int = 1): Unit =
+    writeIndexCC(docs, Catalog(tablePrefix, numBuckets), threshold,
+      numBands, rowsPerBand, ngram)
+
+  private def writeIndexCC(docs: DataFrame, at: Location, threshold: Double,
+                           numBands: Int, rowsPerBand: Int,
+                           ngram: Int): Unit = {
+    writeIndex(docs, at, numBands, rowsPerBand, ngram, append = false)
+    val spark = docs.sparkSession
+    // near-dup pairs recomputed from the persisted bands + toksets: one
+    // band self-join and one verify join over index columns only
+    val bands = T.Dedup.Bands.read(spark, at)
+    val sets = T.Dedup.toksets(ngram).read(spark, at)
     val cands = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    verifyJaccard2(cands, sets, sets, threshold).select(col("a"), col("b"))
+    writeClusterLabels(at, threshold,
+      verifyJaccard2(cands, sets, sets, threshold).select(col("a"), col("b")))
   }
 
-  private def writeClusterLabels(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, threshold: Double,
+  private def writeClusterLabels(at: Location, threshold: Double,
                                  pairs: DataFrame): Unit = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    T.Dedup.Labels.check(nearDupClusters(pairs)
-        .select(col("id").as("doc_id"), col("cluster_id")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/labels")
-    T.Dedup.LabelsMeta.check(Seq(threshold).toDF("threshold")).coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$dir/labels_meta")
+    T.Dedup.Labels.write(nearDupClusters(pairs)
+      .select(col("id").as("doc_id"), col("cluster_id")), at)
+    T.Dedup.LabelsMeta.write(Seq(threshold).toDF("threshold").coalesce(1), at)
   }
 
   /** True iff `dir` holds a CC-labeled index (labels_meta present). */
   def hasClusterLabels(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = {
-    graft.store.Store.fs(spark, dir)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/labels_meta"))
-  }
+                       dir: String): Boolean = hasLabels(spark, Dir(dir))
+
+  /** True iff the table-layout index carries cluster labels. */
+  def hasClusterLabelsTables(spark: org.apache.spark.sql.SparkSession,
+                             tablePrefix: String): Boolean =
+    hasLabels(spark, Catalog(tablePrefix))
+
+  private def hasLabels(spark: org.apache.spark.sql.SparkSession,
+                        at: Location): Boolean =
+    at.exists(spark, T.Dedup.LabelsMeta)
 
   /** A pairwise-policy append on a CC-labeled index would leave the
     * stored labels missing the new snapshot — every later CC call would
     * silently cluster against stale state. Fail loudly instead.
     */
   private def requireNoLabels(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Unit =
-    require(!hasClusterLabels(spark, dir),
-      s"index at $dir carries cluster labels; append through the CC " +
+                              at: Location): Unit =
+    require(!hasLabels(spark, at),
+      s"index at $at carries cluster labels; append through the CC " +
         "path (dedupIncrementalCC / embDedupIncrementalCC) so the " +
         "labels stay consistent with the appended state")
 
+  /** Ready `at` for a write of index state, text or embedding: an
+    * append must keep the labels consistent ([[requireNoLabels]]); a
+    * fresh write drops the labels of an earlier CC build, `labels_meta`
+    * (the marker [[hasLabels]] looks for) first. Kept, they would make
+    * the CC operators contract the new corpus's pairs against the old
+    * corpus's clusters.
+    */
+  private def prepareWrite(spark: org.apache.spark.sql.SparkSession,
+                           at: Location, append: Boolean): Unit =
+    if (append) requireNoLabels(spark, at)
+    else Seq(T.Dedup.LabelsMeta, T.Dedup.Labels).foreach(at.drop(spark, _))
+
   /** Verify threshold the index's cluster labels were built at. */
   def readLabelsThreshold(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Double = {
-    require(hasClusterLabels(spark, dir),
-      s"dedup index at $dir carries no cluster labels — build it with " +
-        "writeDedupIndexCC to use the connected-component policy")
-    graft.store.Store.maxOf[Double](T.Dedup.LabelsMeta.read(spark, dir),
-      "threshold", s"dedup index labels_meta at $dir")
+                          dir: String): Double =
+    labelsThreshold(spark, Dir(dir))
+
+  /** Verify threshold of a table-layout index's cluster labels. */
+  def readLabelsThresholdTables(spark: org.apache.spark.sql.SparkSession,
+                                tablePrefix: String): Double =
+    labelsThreshold(spark, Catalog(tablePrefix))
+
+  private def labelsThreshold(spark: org.apache.spark.sql.SparkSession,
+                              at: Location): Double = {
+    require(hasLabels(spark, at),
+      s"dedup index at $at carries no cluster labels — build it with " +
+        "writeDedupIndexCC or writeDedupIndexTablesCC (or compact a CC " +
+        "directory index) to use the connected-component policy")
+    Store.maxOf[Double](T.Dedup.LabelsMeta.read(spark, at), "threshold",
+      at.of(T.Dedup.LabelsMeta))
   }
 
   /** On-disk format of the text dedup index, stamped in every manifest
@@ -575,24 +635,21 @@ object Dedup {
   /** (numBands, rowsPerBand, ngram, nDocs, maxDocId) of an index. */
   def readIndexManifest(spark: org.apache.spark.sql.SparkSession,
                         dir: String): (Int, Int, Int, Long, Long) =
-    manifestOf(T.Dedup.Manifest.read(spark, dir), dir)
+    manifestAt(spark, Dir(dir))
 
-  /** The one reader of a dedup manifest, directory or table layout (one
-    * row per appended snapshot): refuses a manifest without the current
-    * [[IndexFormat]] stamp. The rows are collected and folded on the
-    * driver (max of the parameters, sum of the doc counts): one scan
-    * job, no aggregate exchange.
+  /** The one reader of a dedup manifest (one row per appended
+    * snapshot): refuses a manifest without the current [[IndexFormat]]
+    * stamp. The rows are collected and folded on the driver (max of the
+    * parameters, sum of the doc counts): one scan job, no aggregate
+    * exchange.
     */
-  private def manifestOf(m: DataFrame,
-                         where: String): (Int, Int, Int, Long, Long) = {
-    val rows = m.select(col("num_bands"), col("rows_per_band"), col("ngram"),
-        col("n_docs"), col("max_doc_id"),
-        if (m.columns.contains("format_version")) col("format_version")
-        else lit(null).cast("int"))
+  private def manifestAt(spark: org.apache.spark.sql.SparkSession,
+                         at: Location): (Int, Int, Int, Long, Long) = {
+    val rows = T.Dedup.Manifest.read(spark, at)
       .collect() // bounded: one row per appended snapshot
     val stamp = stampOf(rows)
     if (stamp < IndexFormat)
-      throw new IllegalStateException(s"dedup index at $where has " +
+      throw new IllegalStateException(s"dedup index at $at has " +
         s"format_version $stamp (0 = unstamped); this build " +
         s"reads only version $IndexFormat (sorted toksets) — rebuild " +
         "it with writeDedupIndex")
@@ -616,48 +673,77 @@ object Dedup {
                           numBands: Int, rowsPerBand: Int, ngram: Int,
                           stats: Row): DataFrame = {
     import spark.implicits._
-    T.Dedup.Manifest.check(Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
+    Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
         if (stats.isNullAt(1)) -1L else stats.getLong(1), IndexFormat))
       .toDF("num_bands", "rows_per_band", "ngram", "n_docs", "max_doc_id",
-        "format_version"))
+        "format_version")
   }
 
-  private def writeIndexState(afterExact: DataFrame, dir: String,
+  private def writeIndexState(afterExact: DataFrame, at: Location,
                               numBands: Int, rowsPerBand: Int, ngram: Int,
                               append: Boolean): Unit = {
     val spark = afterExact.sparkSession
     if (append) {
       // appended state must be band-compatible with what is already there
-      val (nb, rpb, ng, _, _) = readIndexManifest(spark, dir)
+      val (nb, rpb, ng, _, _) = manifestAt(spark, at)
       require(nb == numBands && rpb == rowsPerBand && ng == ngram,
-        s"index at $dir was built with (numBands=$nb, rowsPerBand=$rpb, " +
+        s"index at $at was built with (numBands=$nb, rowsPerBand=$rpb, " +
           s"ngram=$ng); cannot append ($numBands, $rowsPerBand, $ngram)")
     }
-    val mode = if (append) org.apache.spark.sql.SaveMode.Append
-               else org.apache.spark.sql.SaveMode.Overwrite
     // four actions read afterExact (digests, toksets, bands, stats);
     // all run inside this method, so an explicit persist+unpersist is
     // safe and avoids four recomputations of the exact-tier anti-join
     afterExact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats =
       try {
-        T.Dedup.Digests.check(afterExact.select(col("doc_id"),
-            md5(col("text")).as("content_md5")))
-          .write.mode(mode).parquet(s"$dir/digests")
+        T.Dedup.Digests.write(afterExact.select(col("doc_id"),
+          md5(col("text")).as("content_md5")), at, append)
         val toks = docTokens(afterExact)
-        T.Dedup.toksets(ngram).check(tokenSets(toks, ngram))
-          .write.mode(mode).parquet(s"$dir/toksets")
+        T.Dedup.toksets(ngram).write(tokenSets(toks, ngram), at, append)
         // persisted schema stays (doc_id, band): sz is a join-time
         // optimization, selected away here (Catalyst prunes its
         // array_distinct)
-        T.Dedup.Bands.check(bandKeys(toks, numBands, rowsPerBand, ngram)
-            .select(col("doc_id"), col("band")))
-          .write.mode(mode).parquet(s"$dir/bands")
+        T.Dedup.Bands.write(bandKeys(toks, numBands, rowsPerBand, ngram)
+          .select(col("doc_id"), col("band")), at, append)
         afterExact
           .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
       } finally afterExact.unpersist()
-    manifestRow(spark, numBands, rowsPerBand, ngram, stats)
-      .coalesce(1).write.mode(mode).parquet(s"$dir/manifest")
+    T.Dedup.Manifest.write(
+      manifestRow(spark, numBands, rowsPerBand, ngram, stats).coalesce(1),
+      at, append)
+  }
+
+  /** Fold a DIRECTORY dedup index — including every snapshot appended
+    * to it and its cluster labels, if any — into fresh bucketed tables
+    * under `tablePrefix`: the delta-fold path that lets snapshots
+    * compose without giving up the exchange-free corpus side. The
+    * directory layout is the WRITE side (cheap appends via
+    * [[dedupIncremental]]/[[dedupIncrementalCC]] with appendToIndex);
+    * the table layout is the READ side (exchange-free screens); this
+    * compaction moves accumulated state from one to the other, paying
+    * the corpus shuffle once per compaction instead of once per
+    * snapshot query. After it, the table-backed operators answer
+    * exactly like the directory-backed ones (PlanSpec-asserted).
+    */
+  def compactDedupIndexTables(spark: org.apache.spark.sql.SparkSession,
+                              indexDir: String, tablePrefix: String,
+                              numBuckets: Int): Unit =
+    compact(spark, Dir(indexDir), Catalog(tablePrefix, numBuckets))
+
+  /** Copy every table of the index at `from` to `to`, the manifest
+    * folded to one row (`from` may hold one per appended snapshot).
+    */
+  private def compact(spark: org.apache.spark.sql.SparkSession,
+                      from: Location, to: Location): Unit = {
+    val (nb, rpb, ng, nDocs, maxId) = manifestAt(spark, from)
+    prepareWrite(spark, to, append = false)
+    Seq(T.Dedup.Digests, T.Dedup.toksets(ng), T.Dedup.Bands)
+      .foreach(t => t.write(t.read(spark, from), to))
+    T.Dedup.Manifest.write(manifestRow(spark, nb, rpb, ng, Row(nDocs, maxId)), to)
+    // labels_meta last: it marks the labels present
+    if (hasLabels(spark, from))
+      Seq(T.Dedup.Labels, T.Dedup.LabelsMeta)
+        .foreach(t => t.write(t.read(spark, from), to))
   }
 
   /** Dedup a new snapshot against a persisted corpus index (see above),
@@ -683,21 +769,40 @@ object Dedup {
   def dedupIncremental(newDocs: DataFrame, indexDir: String,
                        threshold: Double = 0.9,
                        appendToIndex: Boolean = false): DataFrame =
-    incrementalPairs(newDocs, indexDir, threshold) match {
+    incremental(newDocs, Dir(indexDir), threshold, appendToIndex)
+
+  /** [[dedupIncremental]] against a table-layout index: identical
+    * semantics and drop policy, with the corpus side of the
+    * digest/band/tokset joins read pre-partitioned. Read-only: keep
+    * accumulating snapshots in a directory index and fold them in with
+    * [[compactDedupIndexTables]].
+    */
+  def dedupIncrementalTables(newDocs: DataFrame, tablePrefix: String,
+                             threshold: Double = 0.9): DataFrame =
+    incremental(newDocs, Catalog(tablePrefix), threshold, appendToIndex = false)
+
+  private def incremental(newDocs: DataFrame, at: Location, threshold: Double,
+                          appendToIndex: Boolean): DataFrame =
+    incrementalPairs(newDocs, at, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
-        val kept = pairwiseKept(st)
+        // the pairwise drop policy: drop the (always-new) larger
+        // endpoint of every verified pair, against the corpus and within
+        // the new snapshot alike — one anti-join against both drop sets
+        val kept = without(st.newExact,
+          st.pairsVsCorpus.select(col("b").as("doc_id"))
+            .union(st.pairsWithin.select(col("b").as("doc_id"))))
         if (appendToIndex) {
-          requireNoLabels(newDocs.sparkSession, indexDir)
+          requireNoLabels(newDocs.sparkSession, at)
           // MATERIALIZE the result before extending the index: each
-          // append refreshes Spark's file index/caches for indexDir, so
+          // append refreshes Spark's file index/caches for the index, so
           // a lazy RESULT evaluated afterwards would re-read the index
           // with the new snapshot inside and drop every new doc as a
           // duplicate of itself. newExact is already checkpointed (no
           // index-file lineage), so the appends cannot invalidate it
           // mid-write.
           val materialized = kept.localCheckpoint()
-          writeIndexState(st.newExact, indexDir, st.numBands,
+          writeIndexState(st.newExact, at, st.numBands,
             st.rowsPerBand, st.ngram, append = true)
           materialized
         } else kept
@@ -716,32 +821,12 @@ object Dedup {
       pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
       numBands: Int, rowsPerBand: Int, ngram: Int, maxIndexed: Long)
 
-  /** The pairwise drop policy: drop the (always-new) larger endpoint
-    * of every verified pair, against the corpus and within the new
-    * snapshot alike — one anti-join against both drop sets.
-    */
-  private def pairwiseKept(st: IncrementalState): DataFrame =
-    without(st.newExact, st.pairsVsCorpus.select(col("b").as("doc_id"))
-      .union(st.pairsWithin.select(col("b").as("doc_id"))))
-
   /** `docs` less the rows whose doc_id is in `drops`, in `docs`' column
     * order (a USING join would move doc_id to the front).
     */
   private def without(docs: DataFrame, drops: DataFrame): DataFrame =
     docs.join(drops, Seq("doc_id"), "left_anti")
       .select(docs.columns.map(c => col(s"`$c`")): _*)
-
-  private def incrementalPairs(newDocs: DataFrame, indexDir: String,
-                               threshold: Double): Option[IncrementalState] = {
-    val spark = newDocs.sparkSession
-    val (numBands, rowsPerBand, ngram, _, maxIndexed) =
-      readIndexManifest(spark, indexDir)
-    incrementalPairsFrom(newDocs,
-      T.Dedup.Digests.read(spark, indexDir),
-      T.Dedup.Bands.read(spark, indexDir),
-      T.Dedup.toksets(ngram).read(spark, indexDir),
-      numBands, rowsPerBand, ngram, maxIndexed, threshold)
-  }
 
   /** Bound on the wait for an [[Observation]] of an action that has
     * already returned: its metrics come through the listener bus.
@@ -763,17 +848,17 @@ object Dedup {
     if (row.isNullAt(0)) None else Some(row.getLong(0))
   }
 
-  /** Core of [[incrementalPairs]] over already-loaded corpus state —
-    * shared by the directory index and the bucketed-table index.
+  /** The one opener of a dedup index for incremental dedup: reads the
+    * manifest and the corpus digests, bands and toksets at `at`, then
+    * runs the exact tier and both near-dup tiers of the snapshot.
     */
-  private def incrementalPairsFrom(newDocs: DataFrame,
-                                   corpusDigests: DataFrame,
-                                   corpusBands: DataFrame,
-                                   corpusSets: DataFrame,
-                                   numBands: Int, rowsPerBand: Int,
-                                   ngram: Int, maxIndexed: Long,
-                                   threshold: Double):
-      Option[IncrementalState] = {
+  private def incrementalPairs(newDocs: DataFrame, at: Location,
+                               threshold: Double): Option[IncrementalState] = {
+    val spark = newDocs.sparkSession
+    val (numBands, rowsPerBand, ngram, _, maxIndexed) = manifestAt(spark, at)
+    val corpusDigests = T.Dedup.Digests.read(spark, at)
+    val corpusBands = T.Dedup.Bands.read(spark, at)
+    val corpusSets = T.Dedup.toksets(ngram).read(spark, at)
     // exact tier, ONE pass over the snapshot: md5 once, drop content
     // already in the corpus (left-anti on content_md5), then keep the
     // min doc_id of each remaining content group. The snapshot is
@@ -856,189 +941,6 @@ object Dedup {
       numBands, rowsPerBand, ngram, maxIndexed))
   }
 
-  /** The BUCKETED-TABLE form of the dedup index — the 100-TB layout the
-    * directory index's docs promise: digests bucketed by content_md5,
-    * bands by band, toksets by doc_id (each bucketed on exactly the key
-    * its incremental join probes), so every snapshot dedup run shuffles
-    * ONLY the snapshot side — the corpus side of all three joins reads
-    * its buckets in place, exchange-free (PlanSpec-asserted). The one
-    * corpus shuffle happens at THIS write and is amortized over every
-    * later snapshot. Tables are Spark managed tables
-    * `<prefix>_digests/_bands/_toksets/_manifest`.
-    */
-  def writeDedupIndexTables(docs: DataFrame, tablePrefix: String,
-                            numBuckets: Int,
-                            numBands: Int = 32, rowsPerBand: Int = 4,
-                            ngram: Int = 1): Unit = {
-    val spark = docs.sparkSession
-    val afterExact = docs.join(exactDropIds(docs), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats =
-      try {
-        graft.sources.BucketedTables.writeBucketed(
-          afterExact.select(col("doc_id"), md5(col("text")).as("content_md5")),
-          s"${tablePrefix}_digests", "content_md5", numBuckets)
-        val toks = docTokens(afterExact)
-        graft.sources.BucketedTables.writeBucketed(
-          tokenSets(toks, ngram), s"${tablePrefix}_toksets", "doc_id",
-          numBuckets)
-        graft.sources.BucketedTables.writeBucketed(
-          bandKeys(toks, numBands, rowsPerBand, ngram)
-            .select(col("doc_id"), col("band")),
-          s"${tablePrefix}_bands", "band", numBuckets)
-        afterExact
-          .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
-      } finally afterExact.unpersist()
-    graft.sources.BucketedTables.saveTable(
-      manifestRow(spark, numBands, rowsPerBand, ngram, stats),
-      s"${tablePrefix}_manifest")
-  }
-
-  /** [[dedupIncremental]] against a bucketed-table index
-    * ([[writeDedupIndexTables]]): identical semantics and drop policy,
-    * but the corpus side of the digest/band/tokset joins is read
-    * pre-partitioned — zero corpus-side exchange per snapshot. Appends
-    * are not supported on the table layout (Spark cannot append into
-    * managed bucketed tables transactionally here); use the directory
-    * index for composing snapshots, or rebuild the tables.
-    */
-  def dedupIncrementalTables(newDocs: DataFrame, tablePrefix: String,
-                             threshold: Double = 0.9): DataFrame = {
-    val spark = newDocs.sparkSession
-    val (nb, rpb, ng, _, maxId) =
-      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
-    incrementalPairsFrom(newDocs,
-      spark.table(s"${tablePrefix}_digests"),
-      spark.table(s"${tablePrefix}_bands"),
-      spark.table(s"${tablePrefix}_toksets"),
-      nb, rpb, ng, maxId, threshold) match {
-      case None => newDocs // empty snapshot
-      case Some(st) => pairwiseKept(st)
-    }
-  }
-
-  /** [[writeDedupIndexTables]] plus persisted CLUSTER LABELS — the
-    * table twin of [[writeDedupIndexCC]]: within-corpus near-dup pairs
-    * are recomputed from the just-written bucketed bands/toksets
-    * tables (their band self-join and verify join run on the bucketed
-    * layout, so the one-off labeling pass is itself corpus-side
-    * exchange-light) and their connected components stored as
-    * `<prefix>_labels` bucketed by doc_id (the contraction join's
-    * probe key) with the threshold in `<prefix>_labels_meta`.
-    */
-  def writeDedupIndexTablesCC(docs: DataFrame, tablePrefix: String,
-                              numBuckets: Int, threshold: Double = 0.9,
-                              numBands: Int = 32, rowsPerBand: Int = 4,
-                              ngram: Int = 1): Unit = {
-    writeDedupIndexTables(docs, tablePrefix, numBuckets, numBands,
-      rowsPerBand, ngram)
-    val spark = docs.sparkSession
-    writeClusterLabelsTables(spark, tablePrefix, numBuckets, threshold,
-      clusterPairsFromFrames(spark.table(s"${tablePrefix}_bands"),
-        spark.table(s"${tablePrefix}_toksets"), threshold))
-  }
-
-  private def writeClusterLabelsTables(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, numBuckets: Int, threshold: Double,
-      pairs: DataFrame): Unit = {
-    import spark.implicits._
-    graft.sources.BucketedTables.writeBucketed(
-      nearDupClusters(pairs)
-        .select(col("id").as("doc_id"), col("cluster_id")),
-      s"${tablePrefix}_labels", "doc_id", numBuckets)
-    graft.sources.BucketedTables.saveTable(
-      Seq(threshold).toDF("threshold"), s"${tablePrefix}_labels_meta")
-  }
-
-  /** True iff the table-layout index carries cluster labels. */
-  def hasClusterLabelsTables(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String): Boolean =
-    spark.catalog.tableExists(s"${tablePrefix}_labels_meta")
-
-  /** Verify threshold of a table-layout index's cluster labels. */
-  def readLabelsThresholdTables(spark: org.apache.spark.sql.SparkSession,
-                                tablePrefix: String): Double = {
-    require(hasClusterLabelsTables(spark, tablePrefix),
-      s"table index $tablePrefix carries no cluster labels — build it " +
-        "with writeDedupIndexTablesCC (or compact a CC directory index) " +
-        "to use the connected-component policy")
-    graft.store.Store.maxOf[Double](
-      spark.table(s"${tablePrefix}_labels_meta"), "threshold",
-      s"table ${tablePrefix}_labels_meta")
-  }
-
-  /** [[dedupIncrementalCC]] against a bucketed-table index: identical
-    * connected-component drop policy (shared [[ccOverIncrementalPairs]]
-    * core over the stored labels), with the corpus side of the
-    * digest/band/tokset joins read pre-partitioned and the labels
-    * table bucketed on its contraction key. READ-ONLY like
-    * [[dedupIncrementalTables]] — the table layout takes no appends;
-    * keep accumulating snapshots in a directory index
-    * ([[dedupIncrementalCC]] with appendToIndex) and fold them in
-    * periodically with [[compactDedupIndexTables]].
-    */
-  def dedupIncrementalTablesCC(newDocs: DataFrame,
-                               tablePrefix: String): DataFrame = {
-    val spark = newDocs.sparkSession
-    val threshold = readLabelsThresholdTables(spark, tablePrefix)
-    val (nb, rpb, ng, _, maxId) =
-      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
-    incrementalPairsFrom(newDocs,
-      spark.table(s"${tablePrefix}_digests"),
-      spark.table(s"${tablePrefix}_bands"),
-      spark.table(s"${tablePrefix}_toksets"),
-      nb, rpb, ng, maxId, threshold) match {
-      case None => newDocs // empty snapshot
-      case Some(st) =>
-        val (drops, _) = ccOverIncrementalPairs(
-          spark.table(s"${tablePrefix}_labels"),
-          st.pairsVsCorpus, st.pairsWithin, maxId)
-        without(st.newExact, drops.withColumnRenamed("id", "doc_id"))
-    }
-  }
-
-  /** Fold a DIRECTORY dedup index — including every snapshot appended
-    * to it and its cluster labels, if any — into fresh bucketed tables
-    * under `tablePrefix`: the delta-fold path that lets snapshots
-    * compose without giving up the exchange-free corpus side. The
-    * directory layout is the WRITE side (cheap appends via
-    * [[dedupIncremental]]/[[dedupIncrementalCC]] with appendToIndex);
-    * the table layout is the READ side (exchange-free screens); this
-    * compaction moves accumulated state from one to the other, paying
-    * the corpus shuffle once per compaction instead of once per
-    * snapshot query. After it, the table-backed operators answer
-    * exactly like the directory-backed ones (PlanSpec-asserted).
-    */
-  def compactDedupIndexTables(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, tablePrefix: String,
-                              numBuckets: Int): Unit = {
-    import spark.implicits._
-    val (nb, rpb, ng, nDocs, maxId) = readIndexManifest(spark, indexDir)
-    graft.sources.BucketedTables.writeBucketed(
-      T.Dedup.Digests.read(spark, indexDir),
-      s"${tablePrefix}_digests", "content_md5", numBuckets)
-    graft.sources.BucketedTables.writeBucketed(
-      T.Dedup.toksets(ng).read(spark, indexDir),
-      s"${tablePrefix}_toksets", "doc_id", numBuckets)
-    graft.sources.BucketedTables.writeBucketed(
-      T.Dedup.Bands.read(spark, indexDir),
-      s"${tablePrefix}_bands", "band", numBuckets)
-    // one consolidated manifest row (the directory may hold one per
-    // appended snapshot)
-    graft.sources.BucketedTables.saveTable(
-      manifestRow(spark, nb, rpb, ng, Row(nDocs, maxId)),
-      s"${tablePrefix}_manifest")
-    if (hasClusterLabels(spark, indexDir)) {
-      graft.sources.BucketedTables.writeBucketed(
-        T.Dedup.Labels.read(spark, indexDir),
-        s"${tablePrefix}_labels", "doc_id", numBuckets)
-      graft.sources.BucketedTables.saveTable(
-        Seq(readLabelsThreshold(spark, indexDir)).toDF("threshold"),
-        s"${tablePrefix}_labels_meta")
-    }
-  }
-
   /** Verified near-dup HITS of a docs frame against a persisted corpus
     * index: (doc_id, corpus_id, jaccard) for every (doc, indexed doc)
     * pair at or above the threshold — the screen tier of
@@ -1054,38 +956,24 @@ object Dedup {
     * batch caller's .distinct()).
     */
   def nearDupHitsVsIndex(docs: DataFrame, indexDir: String,
-                         threshold: Double = 0.9): DataFrame = {
-    val spark = docs.sparkSession
-    val (numBands, rowsPerBand, ngram, _, _) =
-      readIndexManifest(spark, indexDir)
-    nearDupHitsFrom(docs,
-      T.Dedup.Bands.read(spark, indexDir),
-      T.Dedup.toksets(ngram).read(spark, indexDir),
-      numBands, rowsPerBand, ngram, threshold)
-  }
+                         threshold: Double = 0.9): DataFrame =
+    nearDupHits(docs, Dir(indexDir), threshold)
 
-  /** [[nearDupHitsVsIndex]] against a bucketed-table index
-    * ([[writeDedupIndexTables]]) — on a stream, the static corpus side
-    * of both joins additionally arrives pre-partitioned on its key.
+  /** [[nearDupHitsVsIndex]] against a table-layout index — on a stream,
+    * the static corpus side of both joins additionally arrives
+    * pre-partitioned on its key.
     */
   def nearDupHitsVsTables(docs: DataFrame, tablePrefix: String,
-                          threshold: Double = 0.9): DataFrame = {
-    val spark = docs.sparkSession
-    val (nb, rpb, ng, _, _) =
-      manifestOf(spark.table(s"${tablePrefix}_manifest"), tablePrefix)
-    nearDupHitsFrom(docs,
-      spark.table(s"${tablePrefix}_bands"),
-      spark.table(s"${tablePrefix}_toksets"),
-      nb, rpb, ng, threshold)
-  }
+                          threshold: Double = 0.9): DataFrame =
+    nearDupHits(docs, Catalog(tablePrefix), threshold)
 
-  private def nearDupHitsFrom(docs: DataFrame, bands: DataFrame,
-                              sets: DataFrame, numBands: Int,
-                              rowsPerBand: Int, ngram: Int,
-                              threshold: Double): DataFrame = {
-    val corpusBands = bands
+  private def nearDupHits(docs: DataFrame, at: Location,
+                          threshold: Double): DataFrame = {
+    val spark = docs.sparkSession
+    val (numBands, rowsPerBand, ngram, _, _) = manifestAt(spark, at)
+    val corpusBands = T.Dedup.Bands.read(spark, at)
       .select(col("doc_id").as("corpus_id"), col("band"))
-    val corpusSets = sets
+    val corpusSets = T.Dedup.toksets(ngram).read(spark, at)
       .select(col("doc_id").as("corpus_id"), col("tokset").as("ctokset"),
         col("set_size").as("csz"))
     val toks = docTokens(docs)
@@ -1146,14 +1034,30 @@ object Dedup {
     * (cluster_id != doc_id), never silent.
     */
   def dedupIncrementalCC(newDocs: DataFrame, indexDir: String,
-                         appendToIndex: Boolean = false): DataFrame = {
+                         appendToIndex: Boolean = false): DataFrame =
+    incrementalCC(newDocs, Dir(indexDir), appendToIndex)
+
+  /** [[dedupIncrementalCC]] against a table-layout index: identical
+    * connected-component drop policy, with the corpus side of the
+    * digest/band/tokset joins read pre-partitioned and the labels
+    * table bucketed on its contraction key. READ-ONLY like
+    * [[dedupIncrementalTables]]: keep accumulating snapshots in a
+    * directory index ([[dedupIncrementalCC]] with appendToIndex) and
+    * fold them in periodically with [[compactDedupIndexTables]].
+    */
+  def dedupIncrementalTablesCC(newDocs: DataFrame,
+                               tablePrefix: String): DataFrame =
+    incrementalCC(newDocs, Catalog(tablePrefix), appendToIndex = false)
+
+  private def incrementalCC(newDocs: DataFrame, at: Location,
+                            appendToIndex: Boolean): DataFrame = {
     val spark = newDocs.sparkSession
-    val threshold = readLabelsThreshold(spark, indexDir)
-    incrementalPairs(newDocs, indexDir, threshold) match {
+    val threshold = labelsThreshold(spark, at)
+    incrementalPairs(newDocs, at, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
         val (drops, newLabels) = ccOverIncrementalPairs(
-          T.Dedup.Labels.read(spark, indexDir),
+          T.Dedup.Labels.read(spark, at),
           st.pairsVsCorpus, st.pairsWithin, st.maxIndexed)
         val kept =
           without(st.newExact, drops.withColumnRenamed("id", "doc_id"))
@@ -1164,11 +1068,9 @@ object Dedup {
           val materialized = kept.localCheckpoint()
           // cut lineage off labels/ BEFORE overwriting it
           val pinnedLabels = newLabels.localCheckpoint()
-          writeIndexState(st.newExact, indexDir, st.numBands,
+          writeIndexState(st.newExact, at, st.numBands,
             st.rowsPerBand, st.ngram, append = true)
-          T.Dedup.Labels.check(pinnedLabels)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$indexDir/labels")
+          T.Dedup.Labels.write(pinnedLabels, at)
           materialized
         } else kept
     }
@@ -1348,7 +1250,8 @@ object Dedup {
     * the index must not carry cluster labels (same guard as the text
     * twin [[writeDedupIndex]]: a raw append on a CC-labeled index would
     * silently stale labels/ — append through
-    * [[embDedupIncrementalCC]], which remaps them).
+    * [[embDedupIncrementalCC]], which remaps them). A fresh write drops
+    * the cluster labels of an earlier CC build.
     */
   def writeEmbDedupIndex(embeddings: DataFrame, dir: String,
                          numBands: Int = 64, bitsPerBand: Int = 4,
@@ -1356,7 +1259,7 @@ object Dedup {
                          embCol: String = "embedding",
                          dim: Int = -1,
                          append: Boolean = false): Unit = {
-    if (append) requireNoLabels(embeddings.sparkSession, dir)
+    prepareWrite(embeddings.sparkSession, Dir(dir), append)
     writeEmbDedupIndexUnguarded(embeddings, dir, numBands, bitsPerBand,
       idCol, embCol, dim, append)
   }
@@ -1380,8 +1283,6 @@ object Dedup {
           s"bitsPerBand=${m.bitsPerBand}, dim=${m.dim}); cannot append " +
           s"($numBands, $bitsPerBand, $dim)")
     }
-    val mode = if (append) org.apache.spark.sql.SaveMode.Append
-               else org.apache.spark.sql.SaveMode.Overwrite
     val d = if (dim > 0) dim else Ann.dimOf(embeddings, embCol)
     // validate the INFERRED dim too: with the default dim=-1 the require
     // above is vacuous, and appending band keys computed under a
@@ -1391,28 +1292,32 @@ object Dedup {
         s"embedding index at $dir holds dim=${m.dim} vectors; cannot " +
           s"append dim=$d")
     }
-    val v = embeddings.select(col(idCol).as("vid"), col(embCol).as("emb"))
-    v.write.mode(mode).parquet(s"$dir/vectors")
-    T.EmbDedup.Bands.check(v.select(col("vid"),
-        explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
-          .as("band")))
-      .write.mode(mode).parquet(s"$dir/bands")
+    // stored as array<float>, the type the band and cosine kernels
+    // cast every vector to, so no stored value differs from what they
+    // compute on
+    val v = embeddings.select(col(idCol).as("vid"),
+      col(embCol).cast("array<float>").as("emb"))
+    val at = Dir(dir)
+    T.EmbDedup.Vectors.write(v, at, append)
+    T.EmbDedup.Bands.write(v.select(col("vid"),
+      explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
+        .as("band")), at, append)
     val stats = v.agg(count(lit(1)), max(col("vid"))).head()
-    T.EmbDedup.Manifest.check(Seq((numBands, bitsPerBand, d,
+    T.EmbDedup.Manifest.write(Seq((numBands, bitsPerBand, d,
         stats.getLong(0), if (stats.isNullAt(1)) -1L else stats.getLong(1),
         EmbIndexFormat))
       .toDF("num_bands", "bits_per_band", "dim", "n_vecs", "max_vid",
-        "format_version"))
-      .coalesce(1)
-      .write.mode(mode)
-      .parquet(s"$dir/manifest")
+        "format_version").coalesce(1), at, append)
   }
 
   /** On-disk format of the embedding dedup index, stamped in every
     * manifest row as `format_version`; an index written before the
-    * stamp existed is refused, as the text index refuses one.
+    * stamp existed is refused, as the text index refuses one. Version 2
+    * declares its vectors `array<float>`; a version-1 index may hold
+    * the caller's `array<double>`, which the declared read would not
+    * read as written, so it is refused too.
     */
-  private val EmbIndexFormat = 1
+  private val EmbIndexFormat = 2
 
   /** Folded manifest of an embedding dedup index (one row per appended
     * snapshot).
@@ -1458,7 +1363,7 @@ object Dedup {
         val kept = newEmbs.join(dropVsCorpus, Seq(idCol), "left_anti")
           .join(dropWithin, Seq(idCol), "left_anti")
         if (appendToIndex) {
-          requireNoLabels(newEmbs.sparkSession, indexDir)
+          requireNoLabels(newEmbs.sparkSession, Dir(indexDir))
           // materialize BEFORE the append (see dedupIncremental: the
           // write refreshes the index path, and a lazy result would
           // re-read the index with the new vectors inside and drop
@@ -1507,7 +1412,7 @@ object Dedup {
     require(newMin.getLong(3) > maxVid,
       s"incremental embedding dedup requires new ids above the indexed " +
         s"corpus (min new ${newMin.getLong(3)} <= max indexed $maxVid)")
-    val corpusVecs = spark.read.parquet(s"$indexDir/vectors")
+    val corpusVecs = T.EmbDedup.Vectors.read(spark, indexDir)
     val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
     val newV = newEmbs.select(col(idCol).as("vid"), col(embCol).as("emb"))
     val newBands = newV.select(col("vid"),
@@ -1567,7 +1472,7 @@ object Dedup {
       embCol, dim)
     val spark = embeddings.sparkSession
     val bands = T.EmbDedup.Bands.read(spark, dir)
-    val vecs = spark.read.parquet(s"$dir/vectors")
+    val vecs = T.EmbDedup.Vectors.read(spark, dir)
     val pairs = bands.as("x")
       .join(bands.as("y"), col("x.band") === col("y.band") &&
         col("x.vid") < col("y.vid"))
@@ -1576,7 +1481,7 @@ object Dedup {
       .join(vecs.select(col("vid").as("b"), col("emb").as("eb")), Seq("b"))
       .filter(F.cosine_sim(col("ea"), col("eb")) >= threshold)
       .select(col("a"), col("b"))
-    writeClusterLabels(spark, dir, threshold, pairs)
+    writeClusterLabels(Dir(dir), threshold, pairs)
   }
 
   /** Incremental embedding dedup with the CONNECTED-COMPONENT drop
@@ -1604,9 +1509,7 @@ object Dedup {
           val pinnedLabels = newLabels.localCheckpoint()
           writeEmbDedupIndexUnguarded(newEmbs, indexDir, st.numBands,
             st.bitsPerBand, idCol, embCol, st.dim, append = true)
-          T.Dedup.Labels.check(pinnedLabels)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$indexDir/labels")
+          T.Dedup.Labels.write(pinnedLabels, Dir(indexDir))
           materialized
         } else kept
     }
@@ -1638,7 +1541,7 @@ object Dedup {
     if (!embs.isStreaming) checkDims(embs, embCol, d, indexDir)
     val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
       .select(col("vid").as("corpus_id"), col("band"))
-    val corpusVecs = spark.read.parquet(s"$indexDir/vectors")
+    val corpusVecs = T.EmbDedup.Vectors.read(spark, indexDir)
       .select(col("vid").as("corpus_id"), col("emb").as("__cemb"))
     embs
       .select(col(idCol), col(embCol).as("__emb"),

@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{expressions => E}
-import graft.store.{Tables => T}
+import graft.store.{Store, Tables => T}
+import graft.store.Store.Location
+import graft.store.Store.Location.{Catalog, Dir}
 
 /** Substring-level exact deduplication: find verbatim runs of >= minLen
   * word tokens shared across documents and either report them as spans
@@ -139,6 +141,16 @@ object SpanDedup {
   // md5 for the exact verify — so membership joins are narrow and
   // appends are trivially load-is-union (duplicate rows cannot change
   // a semi-join's answer, but they widen it; writes dedupe anyway).
+  //
+  // Like the dedup index, it lives at one [[Location]] and every
+  // operator is written once over it: a directory is the WRITE side
+  // (cheap load-is-union appends), a catalog table prefix (the
+  // `*Tables` entry points) the READ side. The gram table scales with
+  // corpus token count — far bigger than any snapshot — so the catalog
+  // layout buckets it on gh (the screen join's probe key): every later
+  // screen shuffles ONLY the snapshot side and the corpus-sized gram
+  // table reads its buckets in place (PlanSpec-asserted), its one
+  // shuffle paid at write/compaction and amortized over every snapshot.
 
   /** Persist the span-gram index of a corpus under `dir`: grams/
     * (gh, gk) distinct, manifest/ (min_len, n_grams). With `append`,
@@ -148,48 +160,86 @@ object SpanDedup {
   def writeSpanIndex(docs: DataFrame, dir: String, minLen: Int = 50,
                      textCol: String = "text",
                      idCol: String = "doc_id",
-                     append: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+                     append: Boolean = false): Unit =
+    writeIndex(docs, Dir(dir), minLen, textCol, append)
+
+  /** [[writeSpanIndex]] as managed tables `<prefix>_grams`, bucketed on
+    * `gh` into `numBuckets` buckets, and `<prefix>_manifest`.
+    */
+  def writeSpanIndexTables(docs: DataFrame, tablePrefix: String,
+                           numBuckets: Int, minLen: Int = 50,
+                           textCol: String = "text"): Unit =
+    writeIndex(docs, Catalog(tablePrefix, numBuckets), minLen, textCol,
+      append = false)
+
+  private def writeIndex(docs: DataFrame, at: Location, minLen: Int,
+                         textCol: String, append: Boolean): Unit = {
+    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
     if (append) {
-      val stored = readSpanIndexMinLen(spark, dir)
+      val stored = minLenAt(docs.sparkSession, at)
       require(stored == minLen,
-        s"span index at $dir was built with minLen=$stored; cannot " +
+        s"span index at $at was built with minLen=$stored; cannot " +
           s"append minLen=$minLen")
     }
-    val mode = if (append) org.apache.spark.sql.SaveMode.Append
-               else org.apache.spark.sql.SaveMode.Overwrite
-    T.Span.Grams.check(distinctGrams(docs, minLen, textCol)).write.mode(mode)
-      .parquet(s"$dir/grams")
-    val n = T.Span.Grams.read(spark, dir).count()
-    graft.store.Store.swap(spark, dir, "manifest") { next =>
-      T.Span.Manifest.check(Seq((minLen, n)).toDF("min_len", "n_grams"))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(next)
-    }
-  }
-
-  /** Stored gram length of a span index. */
-  def readSpanIndexMinLen(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Int = {
-    graft.store.Store.heal(spark, dir, "manifest")
-    graft.store.Store.maxOf[Int](T.Span.Manifest.read(spark, dir),
-      "min_len", s"span index manifest at $dir")
-  }
-
-  /** Distinct (rolling-hash, md5) gram keys of a corpus — the stored
-    * payload of both index layouts.
-    */
-  private def distinctGrams(docs: DataFrame, minLen: Int,
-                            textCol: String): DataFrame =
-    docs.select(col(textCol).as("__text"),
+    // (rolling-hash, md5) keys of every distinct gram of the corpus
+    val grams = docs.select(col(textCol).as("__text"),
         posexplode(E.gram_hashes(col(textCol), minLen)).as(Seq("pos", "gh")))
       .select(col("gh"),
         md5(E.gram_at(col("__text"), col("pos"), minLen)).as("gk"))
       .distinct()
+    commitGrams(grams, at, minLen, append)
+  }
 
-  /** Screen core shared by the index layouts: seed on the rolling-hash
-    * join, verify with the row-local gram-md5 equality.
+  /** Write `grams` at `at`, then replace the manifest with the stored
+    * gram count.
+    */
+  private def commitGrams(grams: DataFrame, at: Location, minLen: Int,
+                          append: Boolean): Unit = {
+    val spark = grams.sparkSession
+    import spark.implicits._
+    T.Span.Grams.write(grams, at, append)
+    val n = T.Span.Grams.read(spark, at).count()
+    T.Span.Manifest.replace(
+      Seq((minLen, n)).toDF("min_len", "n_grams").coalesce(1), at)
+  }
+
+  /** Stored gram length of a span index. */
+  def readSpanIndexMinLen(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Int = minLenAt(spark, Dir(dir))
+
+  /** Stored gram length of a table-layout span index. */
+  def readSpanIndexMinLenTables(spark: org.apache.spark.sql.SparkSession,
+                                tablePrefix: String): Int =
+    minLenAt(spark, Catalog(tablePrefix))
+
+  private def minLenAt(spark: org.apache.spark.sql.SparkSession,
+                       at: Location): Int = {
+    at.heal(spark, T.Span.Manifest)
+    Store.maxOf[Int](T.Span.Manifest.read(spark, at), "min_len",
+      s"span index ${at.of(T.Span.Manifest)}")
+  }
+
+  /** Fold a DIRECTORY span index — every appended snapshot included —
+    * into fresh bucketed tables under `tablePrefix`, deduplicating the
+    * cross-append gram rows the load-is-union appends may have
+    * accumulated (they widen the directory screens harmlessly; the
+    * compacted table stores each gram once). Directory = write side,
+    * tables = read side; the gram-table shuffle is paid once per
+    * compaction, not once per snapshot screen.
+    */
+  def compactSpanIndexTables(spark: org.apache.spark.sql.SparkSession,
+                             indexDir: String, tablePrefix: String,
+                             numBuckets: Int): Unit =
+    compact(spark, Dir(indexDir), Catalog(tablePrefix, numBuckets))
+
+  private def compact(spark: org.apache.spark.sql.SparkSession,
+                      from: Location, to: Location): Unit =
+    commitGrams(T.Span.Grams.read(spark, from).distinct(), to,
+      minLenAt(spark, from), append = false)
+
+  /** The one opener of a span index: its gram length, and the verified
+    * hits of `docs` against its grams — seeded on the rolling-hash
+    * join, verified with the row-local gram-md5 equality.
     *
     * The verify is md5-equality written as `startsWith` over the
     * fixed-length (32-char) md5 hex strings ON PURPOSE: an `===` here
@@ -201,37 +251,20 @@ object SpanDedup {
     * runs on gh alone and the md5 is computed only for seed-matched
     * candidate pairs (PlanSpec pins both properties).
     */
-  private def spanHitsFrom(docs: DataFrame, grams: DataFrame, minLen: Int,
-                           textCol: String, idCol: String): DataFrame = {
+  private def screen(docs: DataFrame, at: Location, textCol: String,
+                     idCol: String): (DataFrame, Int) = {
+    val spark = docs.sparkSession
+    val minLen = minLenAt(spark, at)
+    val grams = T.Span.Grams.read(spark, at)
     val seeds = docs.select(col(idCol), col(textCol).as("__text"),
       posexplode(E.gram_hashes(col(textCol), minLen))
         .as(Seq("pos", "gh")))
-    seeds.join(grams,
+    (seeds.join(grams,
         seeds("gh") === grams("gh") &&
           md5(E.gram_at(seeds("__text"), seeds("pos"), minLen))
             .startsWith(grams("gk")))
-      .select(seeds(idCol), seeds("pos"), grams("gk"))
+      .select(seeds(idCol), seeds("pos"), grams("gk")), minLen)
   }
-
-  /** Maximal-span merge over verified hits (batch consumers). */
-  private def spansFromHits(hits: DataFrame, minLen: Int,
-                            idCol: String): DataFrame =
-    spansFromCovered(
-      hits.select(col(idCol).as("__id"), col("gk"),
-          explode(sequence(col("pos"), col("pos") + lit(minLen - 1)))
-            .as("idx"))
-        .groupBy(col("__id"), col("idx")).agg(min(col("gk")).as("mgk")),
-      idCol)
-
-  /** Excision over verified hits (batch consumers). */
-  private def exciseFromHits(docs: DataFrame, hits: DataFrame,
-                             minLen: Int, textCol: String,
-                             idCol: String): DataFrame =
-    exciseFromCovered(docs,
-      hits.select(col(idCol).as("__id"),
-        explode(sequence(col("pos"), col("pos") + lit(minLen - 1)))
-          .as("idx")),
-      textCol, idCol)
 
   /** Verified covered gram STARTS of a docs frame against a persisted
     * span index: (doc_id, pos, gk) for every position whose gram
@@ -248,12 +281,18 @@ object SpanDedup {
     */
   def spanHitsVsIndex(docs: DataFrame, indexDir: String,
                       textCol: String = "text",
-                      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    val minLen = readSpanIndexMinLen(spark, indexDir)
-    spanHitsFrom(docs, T.Span.Grams.read(spark, indexDir), minLen,
-      textCol, idCol)
-  }
+                      idCol: String = "doc_id"): DataFrame =
+    screen(docs, Dir(indexDir), textCol, idCol)._1
+
+  /** [[spanHitsVsIndex]] against a table-layout index: identical hits,
+    * with the corpus-sized gram table read pre-partitioned on gh — zero
+    * corpus-side exchange per screen. Same streaming-safety as the
+    * directory form (one stateless stream-static join).
+    */
+  def spanHitsVsTables(docs: DataFrame, tablePrefix: String,
+                       textCol: String = "text",
+                       idCol: String = "doc_id"): DataFrame =
+    screen(docs, Catalog(tablePrefix), textCol, idCol)._1
 
   /** Maximal spans of a snapshot's docs covered by CORPUS grams (the
     * batch consumer of [[spanHitsVsIndex]]): same output shape as
@@ -265,8 +304,24 @@ object SpanDedup {
   def duplicateSpansVsIndex(docs: DataFrame, indexDir: String,
                             textCol: String = "text",
                             idCol: String = "doc_id"): DataFrame =
-    spansFromHits(spanHitsVsIndex(docs, indexDir, textCol, idCol),
-      readSpanIndexMinLen(docs.sparkSession, indexDir), idCol)
+    duplicateSpansAt(docs, Dir(indexDir), textCol, idCol)
+
+  /** [[duplicateSpansVsIndex]] on the table layout. */
+  def duplicateSpansVsTables(docs: DataFrame, tablePrefix: String,
+                             textCol: String = "text",
+                             idCol: String = "doc_id"): DataFrame =
+    duplicateSpansAt(docs, Catalog(tablePrefix), textCol, idCol)
+
+  private def duplicateSpansAt(docs: DataFrame, at: Location,
+                               textCol: String, idCol: String): DataFrame = {
+    val (hits, minLen) = screen(docs, at, textCol, idCol)
+    spansFromCovered(
+      hits.select(col(idCol).as("__id"), col("gk"),
+          explode(sequence(col("pos"), col("pos") + lit(minLen - 1)))
+            .as("idx"))
+        .groupBy(col("__id"), col("idx")).agg(min(col("gk")).as("mgk")),
+      idCol)
+  }
 
   /** Excised-text variant: every doc with its duplicate-span tokens
     * removed — (doc_id, clean_text, n_removed), where clean_text is the
@@ -293,94 +348,22 @@ object SpanDedup {
   def exciseSpansVsIndex(docs: DataFrame, indexDir: String,
                          textCol: String = "text",
                          idCol: String = "doc_id"): DataFrame =
-    exciseFromHits(docs,
-      spanHitsVsIndex(docs, indexDir, textCol, idCol),
-      readSpanIndexMinLen(docs.sparkSession, indexDir), textCol, idCol)
-
-  // ----------------- bucketed-table span index -----------------
-  //
-  // The 100-TB read layout, mirroring the dedup index's split: the
-  // directory index is the WRITE side (cheap load-is-union appends),
-  // these tables are the READ side. The gram table scales with corpus
-  // token count — far bigger than any snapshot — so bucketing it on gh
-  // (the screen join's probe key) means every later screen shuffles
-  // ONLY the snapshot side; the corpus-sized gram table reads its
-  // buckets in place (PlanSpec-asserted), its one shuffle paid at
-  // write/compaction and amortized over every snapshot.
-
-  /** Write the span-gram index as a managed table bucketed on `gh`:
-    * `<prefix>_grams` + `<prefix>_manifest` (min_len, n_grams).
-    */
-  def writeSpanIndexTables(docs: DataFrame, tablePrefix: String,
-                           numBuckets: Int, minLen: Int = 50,
-                           textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    graft.sources.BucketedTables.writeBucketed(
-      distinctGrams(docs, minLen, textCol),
-      s"${tablePrefix}_grams", "gh", numBuckets)
-    val n = spark.table(s"${tablePrefix}_grams").count()
-    graft.sources.BucketedTables.saveTable(
-      Seq((minLen, n)).toDF("min_len", "n_grams"),
-      s"${tablePrefix}_manifest")
-  }
-
-  /** Stored gram length of a table-layout span index. */
-  def readSpanIndexMinLenTables(spark: org.apache.spark.sql.SparkSession,
-                                tablePrefix: String): Int =
-    graft.store.Store.maxOf[Int](spark.table(s"${tablePrefix}_manifest"),
-      "min_len", s"table ${tablePrefix}_manifest")
-
-  /** [[spanHitsVsIndex]] against a bucketed-table index: identical
-    * hits, with the corpus-sized gram table read pre-partitioned on
-    * gh — zero corpus-side exchange per screen. Same streaming-safety
-    * as the directory form (one stateless stream-static join).
-    */
-  def spanHitsVsTables(docs: DataFrame, tablePrefix: String,
-                       textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    spanHitsFrom(docs, spark.table(s"${tablePrefix}_grams"),
-      readSpanIndexMinLenTables(spark, tablePrefix), textCol, idCol)
-  }
-
-  /** [[duplicateSpansVsIndex]] on the table layout. */
-  def duplicateSpansVsTables(docs: DataFrame, tablePrefix: String,
-                             textCol: String = "text",
-                             idCol: String = "doc_id"): DataFrame =
-    spansFromHits(spanHitsVsTables(docs, tablePrefix, textCol, idCol),
-      readSpanIndexMinLenTables(docs.sparkSession, tablePrefix), idCol)
+    exciseSpansAt(docs, Dir(indexDir), textCol, idCol)
 
   /** [[exciseSpansVsIndex]] on the table layout. */
   def exciseSpansVsTables(docs: DataFrame, tablePrefix: String,
                           textCol: String = "text",
                           idCol: String = "doc_id"): DataFrame =
-    exciseFromHits(docs,
-      spanHitsVsTables(docs, tablePrefix, textCol, idCol),
-      readSpanIndexMinLenTables(docs.sparkSession, tablePrefix),
-      textCol, idCol)
+    exciseSpansAt(docs, Catalog(tablePrefix), textCol, idCol)
 
-  /** Fold a DIRECTORY span index — every appended snapshot included —
-    * into fresh bucketed tables under `tablePrefix`, deduplicating the
-    * cross-append gram rows the load-is-union appends may have
-    * accumulated (they widen the directory screens harmlessly; the
-    * compacted table stores each gram once). Directory = write side,
-    * tables = read side; the gram-table shuffle is paid once per
-    * compaction, not once per snapshot screen.
-    */
-  def compactSpanIndexTables(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String, tablePrefix: String,
-                             numBuckets: Int): Unit = {
-    import spark.implicits._
-    val minLen = readSpanIndexMinLen(spark, indexDir)
-    graft.sources.BucketedTables.writeBucketed(
-      T.Span.Grams.read(spark, indexDir).distinct(),
-      s"${tablePrefix}_grams", "gh", numBuckets)
-    val n = spark.table(s"${tablePrefix}_grams").count()
-    graft.sources.BucketedTables.saveTable(
-      Seq((minLen, n)).toDF("min_len", "n_grams"),
-      s"${tablePrefix}_manifest")
+  private def exciseSpansAt(docs: DataFrame, at: Location, textCol: String,
+                            idCol: String): DataFrame = {
+    val (hits, minLen) = screen(docs, at, textCol, idCol)
+    exciseFromCovered(docs,
+      hits.select(col(idCol).as("__id"),
+        explode(sequence(col("pos"), col("pos") + lit(minLen - 1)))
+          .as("idx")),
+      textCol, idCol)
   }
 
   /** Shared reconstruction step of the excision variants: drop covered

@@ -42,13 +42,10 @@ object BucketedTables {
 
   /** Write `df` as a managed parquet table bucketed by `keyCol`. */
   def writeBucketed(df: DataFrame, table: String, keyCol: String,
-                    numBuckets: Int,
-                    sortCol: Option[String] = None): Unit = {
+                    numBuckets: Int): Unit = {
     replaceTable(df.sparkSession, table)
-    val w = df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(numBuckets, keyCol)
-    sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(table)
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .bucketBy(numBuckets, keyCol).saveAsTable(table)
   }
 
   def read(spark: SparkSession, table: String): DataFrame =

@@ -1,9 +1,10 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
   StructType}
+import graft.sources.BucketedTables
 
 /** The one commit protocol every persisted index uses. A live file or
   * directory `dir/name` is never rewritten in place: the new value is
@@ -21,16 +22,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
   * passes the declared schema to Spark, so opening a table lists its
   * files and starts no job; a table directory with no data files is
   * refused with the table's name, as schema inference refuses it.
+  * Where an index's tables live is one [[Location]]: a directory or a
+  * catalog table prefix, both behind the same read, write and drop.
   */
 object Store {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** A persisted parquet table `dir/name` with a declared schema.
+  /** A persisted parquet table `name` with a declared schema.
     * Partition columns (`batch_id=`, `snapshot=`) are not part of it:
-    * they come from the directory names, not from the files.
+    * they come from the directory names, not from the files. At a
+    * catalog [[Location]] the table is bucketed on `bucketKey`, the key
+    * its readers join or group on, so they read it unshuffled.
     */
-  final case class Table(name: String, schema: StructType) {
+  final case class Table(name: String, schema: StructType,
+                         bucketKey: Option[String] = None) {
+
+    /** This table bucketed on `key` at a catalog location. */
+    def bucketedBy(key: String): Table = copy(bucketKey = Some(key))
 
     /** `df`, once its columns are exactly the declared ones: same names,
       * types and order, nullability ignored (a file read makes every
@@ -46,7 +55,22 @@ object Store {
 
     /** `dir/name`, read with the declared schema. */
     def read(spark: SparkSession, dir: String): DataFrame =
-      readAt(spark, s"$dir/$name")
+      read(spark, Location.Dir(dir))
+
+    /** This table at `at`. A directory is read with the declared schema
+      * ([[readAt]]); a catalog table keeps its bucketing and is refused
+      * by name unless its schema is the declared one.
+      */
+    def read(spark: SparkSession, at: Location): DataFrame = at match {
+      case Location.Dir(dir) => readAt(spark, s"$dir/$name")
+      case c: Location.Catalog =>
+        val df = spark.table(c.of(this))
+        if (shape(df.schema) != shape(schema))
+          throw new IllegalStateException(s"table ${c.of(this)} is " +
+            s"declared as ${schema.simpleString}; it holds " +
+            s"${df.schema.simpleString}")
+        df
+    }
 
     /** The table stored at `paths` (its own directory, or some of its
       * partition directories), read with the declared schema. A column
@@ -66,12 +90,88 @@ object Store {
           "written or its write did not finish")
       df
     }
+
+    /** Write `df`, once [[check]]ed, as this table at `at`: replacing
+      * it, or with `append` adding to it. A catalog table is replaced
+      * through [[BucketedTables.replaceTable]], which heals a crashed
+      * earlier write, and takes no appends.
+      */
+    def write(df: DataFrame, at: Location, append: Boolean = false): Unit =
+      at match {
+        case Location.Dir(dir) =>
+          check(df).write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
+            .parquet(s"$dir/$name")
+        case c: Location.Catalog =>
+          require(!append, s"table ${c.of(this)} takes no appends: append " +
+            "to a directory index and compact it into the catalog")
+          bucketKey match {
+            case Some(k) =>
+              BucketedTables.writeBucketed(check(df), c.of(this), k, c.numBuckets)
+            case None => BucketedTables.saveTable(check(df), c.of(this))
+          }
+      }
+
+    /** Replace this table at `at` in one commit: a [[swap]] of its
+      * directory, or a catalog [[write]].
+      */
+    def replace(df: DataFrame, at: Location): Unit = at match {
+      case Location.Dir(dir) =>
+        swap(df.sparkSession, dir, name) { next =>
+          check(df).write.mode(SaveMode.Overwrite).parquet(next)
+        }
+      case _ => write(df, at)
+    }
   }
 
   object Table {
     /** A table declared by a DDL column list, e.g. "w STRING, c BIGINT". */
     def apply(name: String, ddl: String): Table =
       Table(name, StructType.fromDDL(ddl))
+  }
+
+  /** Where an index's declared tables live. Every operator over an
+    * index is written once, over a location.
+    */
+  sealed trait Location {
+    /** Table `t` here, as messages name it. */
+    def of(t: Table): String
+    def exists(spark: SparkSession, t: Table): Boolean
+    /** Remove table `t` here, if it is present. */
+    def drop(spark: SparkSession, t: Table): Unit
+    /** Roll a crashed [[Table.replace]] of `t` forward or back. */
+    def heal(spark: SparkSession, t: Table): Unit
+  }
+
+  object Location {
+    /** One subdirectory `dir/<name>` per table. */
+    final case class Dir(dir: String) extends Location {
+      override def toString: String = dir
+      def of(t: Table): String = s"$dir/${t.name}"
+      def exists(spark: SparkSession, t: Table): Boolean =
+        fs(spark, dir).exists(new Path(of(t)))
+      def drop(spark: SparkSession, t: Table): Unit =
+        if (exists(spark, t))
+          require(fs(spark, dir).delete(new Path(of(t)), true),
+            s"drop: delete failed for ${of(t)}")
+      def heal(spark: SparkSession, t: Table): Unit = Store.heal(spark, dir, t.name)
+    }
+
+    /** One managed catalog table `<prefix>_<name>` per table, bucketed
+      * into `numBuckets` buckets on its [[Table.bucketKey]]; a location
+      * that is only read needs no bucket count.
+      */
+    final case class Catalog(prefix: String, numBuckets: Int = 0)
+        extends Location {
+      override def toString: String = s"tables ${prefix}_*"
+      def of(t: Table): String = s"${prefix}_${t.name}"
+      def exists(spark: SparkSession, t: Table): Boolean =
+        spark.catalog.tableExists(of(t))
+      def drop(spark: SparkSession, t: Table): Unit =
+        BucketedTables.replaceTable(spark, of(t))
+      // a catalog write replaces its table in place and heals an
+      // orphaned location itself
+      def heal(spark: SparkSession, t: Table): Unit = ()
+    }
   }
 
   /** `dt` with every nullability flag set and field metadata dropped. */

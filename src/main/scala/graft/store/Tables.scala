@@ -7,42 +7,51 @@ import graft.store.Store.Table
   * against its entry, readers pass it to Spark (see [[Store.Table]]).
   *
   * Tables whose column types follow the caller's frame keep schema
-  * inference; they are the allowlist of StoreSpec's source scan:
-  * embedding `vectors` and IVF `lists` (the caller's id and vector
-  * columns), overlap `sketches` and drift `source_counts` (the caller's
-  * `source` column).
+  * inference; they are the allowlist of StoreSpec's source scan: IVF
+  * `lists` (the caller's id and vector columns), overlap `sketches` and
+  * drift `source_counts` (the caller's `source` column).
+  *
+  * A table an index also keeps at a catalog location declares its
+  * bucket key, the key its readers probe; manifests and `labels_meta`
+  * stay unbucketed.
   */
 object Tables {
 
   /** The exactly-once batch log of [[Store.BatchLog]]. */
   val Batches = Table("batches", "batch_id BIGINT, folded_up_to BIGINT")
 
-  /** Text dedup index (`Dedup.writeDedupIndex`). */
+  /** Text dedup index (`Dedup.writeDedupIndex`, or
+    * `Dedup.writeDedupIndexTables` at a catalog location).
+    */
   object Dedup {
     /** One row per appended snapshot, stamped with `format_version`. */
     val Manifest = Table("manifest", "num_bands INT, rows_per_band INT, " +
       "ngram INT, n_docs BIGINT, max_doc_id BIGINT, format_version INT")
     val Digests = Table("digests", "doc_id BIGINT, content_md5 STRING")
-    val Bands = Table("bands", "doc_id BIGINT, band BIGINT")
+      .bucketedBy("content_md5")
+    val Bands = Table("bands", "doc_id BIGINT, band BIGINT").bucketedBy("band")
     /** Sorted distinct elements per doc: token ids at `ngram` 1,
       * shingle hashes above it.
       */
     def toksets(ngram: Int): Table = Table("toksets",
       s"doc_id BIGINT, tokset ARRAY<${if (ngram == 1) "INT" else "BIGINT"}>, " +
-        "set_size INT")
+        "set_size INT").bucketedBy("doc_id")
     /** Cluster labels of a CC index, text or embedding (ids are vector
       * ids there), and the verify threshold they were built at.
       */
-    val Labels = Table("labels", "doc_id BIGINT, cluster_id BIGINT")
+    val Labels =
+      Table("labels", "doc_id BIGINT, cluster_id BIGINT").bucketedBy("doc_id")
     val LabelsMeta = Table("labels_meta", "threshold DOUBLE")
   }
 
-  /** Embedding dedup index (`Dedup.writeEmbDedupIndex`); its `vectors`
-    * table holds the caller's vectors and keeps inference.
+  /** Embedding dedup index (`Dedup.writeEmbDedupIndex`). Its vectors
+    * are stored as `array<float>`, the type every vector kernel computes
+    * in, whatever numeric array the caller passed.
     */
   object EmbDedup {
     val Manifest = Table("manifest", "num_bands INT, bits_per_band INT, " +
       "dim INT, n_vecs BIGINT, max_vid BIGINT, format_version INT")
+    val Vectors = Table("vectors", "vid BIGINT, emb ARRAY<FLOAT>")
     val Bands = Table("bands", "vid BIGINT, band BIGINT")
   }
 
@@ -84,9 +93,11 @@ object Tables {
       Table("manifest", "n INT, theta_k INT, tuple_k INT, freq_k INT")
   }
 
-  /** Span-gram index (`SpanDedup.writeSpanIndex`). */
+  /** Span-gram index (`SpanDedup.writeSpanIndex`, or
+    * `SpanDedup.writeSpanIndexTables` at a catalog location).
+    */
   object Span {
-    val Grams = Table("grams", "gh BIGINT, gk STRING")
+    val Grams = Table("grams", "gh BIGINT, gk STRING").bucketedBy("gh")
     val Manifest = Table("manifest", "min_len INT, n_grams BIGINT")
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core._
+import graft.functions.catalyst.SketchKind
 import graft.sources.TokenDoc
 
 /** Sketch maintenance over Structured Streaming.
@@ -46,7 +47,10 @@ object StreamingSketches {
                         fpr: Double, p: Int = 14,
                         stateTtl: Option[java.time.Duration] = None):
       Dataset[SketchUpdate] = {
+    // built here, outside the state closure: a bad sizing literal fails
+    // at this call, not inside a task
     val (nbits, k) = BloomConfig.optimize(capacity, fpr)
+    val (bk, hk) = (SketchKind.Bloom(nbits, k), SketchKind.Hll(p))
     implicit val stateEnc = Encoders.product[SketchState]
     implicit val outEnc = Encoders.product[SketchUpdate]
     implicit val strEnc = Encoders.STRING
@@ -61,16 +65,11 @@ object StreamingSketches {
             val last = state.get
             state.remove()
             SketchUpdate(source, last.rows, last.tokens,
-              BloomIO.load(last.bloom).cardinality,
-              HyperLogLog.deserialize(last.hll).estimate,
+              bk.load(last.bloom).cardinality, hk.load(last.hll).estimate,
               last.bloom, last.hll)
           } else {
-            val bloom =
-              if (state.exists) BloomIO.load(state.get.bloom)
-              else BlockedBloomFilter(nbits, k)
-            val hll =
-              if (state.exists) HyperLogLog.deserialize(state.get.hll)
-              else HyperLogLog(p)
+            val bloom = if (state.exists) bk.load(state.get.bloom) else bk.empty()
+            val hll = if (state.exists) hk.load(state.get.hll) else hk.empty()
             var nRows = if (state.exists) state.get.rows else 0L
             var nTok = if (state.exists) state.get.tokens else 0L
             rows.foreach { d =>
@@ -83,8 +82,8 @@ object StreamingSketches {
               nRows += 1
               nTok += d.tokens.length
             }
-            val bloomBytes = BloomIO.dump(bloom)
-            val hllBytes = hll.serialize()
+            val bloomBytes = bk.dump(bloom)
+            val hllBytes = hk.dump(hll)
             state.update(SketchState(bloomBytes, hllBytes, nRows, nTok))
             stateTtl.foreach(ttl =>
               state.setTimeoutDuration(ttl.toMillis))
@@ -308,12 +307,13 @@ object StreamingSketches {
   def corpusKeyFilter(keys: org.apache.spark.sql.DataFrame,
                       capacity: Long, fpr: Double): BlockedBloomFilter = {
     import org.apache.spark.sql.functions.col
+    val (nbits, k) = BloomConfig.optimize(capacity, fpr)
     val bytes = keys.agg(
         graft.functions.functions.bloom_agg_hash(
           graft.functions.functions.fnv_hash64_native(col(keys.columns.head)),
           capacity, fpr).as("f"))
       .head().getAs[Array[Byte]]("f")
-    BloomIO.load(bytes)
+    SketchKind.Bloom(nbits, k).load(bytes)
   }
 
   /** Streaming eval-set decontamination: drop stream rows whose text
@@ -502,6 +502,7 @@ object StreamingSketches {
                          compression: Double = 100.0,
                          stateTtl: Option[java.time.Duration] = None):
       Dataset[QuantileUpdate] = {
+    val tk = SketchKind.TDigest(compression) // outside the state closure
     implicit val stateEnc = Encoders.BINARY
     implicit val outEnc = Encoders.product[QuantileUpdate]
     implicit val strEnc = Encoders.STRING
@@ -513,16 +514,14 @@ object StreamingSketches {
           if (state.hasTimedOut) {
             // idle past TTL: emit the final snapshot and drop the state
             val bytes = state.get
-            val td = TDigest.deserialize(bytes)
+            val td = tk.load(bytes)
             state.remove()
             QuantileUpdate(key, td.total, td.quantile(0.5),
               td.quantile(0.99), bytes)
           } else {
-            val td =
-              if (state.exists) TDigest.deserialize(state.get)
-              else TDigest(compression)
+            val td = if (state.exists) tk.load(state.get) else tk.empty()
             rows.foreach(r => td.add(valueFn(r)))
-            val bytes = td.serialize()
+            val bytes = tk.dump(td)
             state.update(bytes)
             stateTtl.foreach(ttl => state.setTimeoutDuration(ttl.toMillis))
             QuantileUpdate(key, td.total, td.quantile(0.5),

@@ -427,6 +427,50 @@ class DedupIncrementalSpec extends AnyFunSuite {
     }
   }
 
+  test("a fresh index write drops an earlier build's cluster labels") {
+    // a CC build of one corpus, then a plain build of another at the same
+    // place: the CC policy must not contract the new corpus's pairs
+    // against the old corpus's clusters
+    def refusesCC(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains("carries no cluster labels"), e.getMessage)
+    }
+    val dir = Files.createTempDirectory("graft-dedup-relabel").toString
+    Dedup.writeDedupIndexCC(df(ccCorpus), dir, threshold = 0.9)
+    Dedup.writeDedupIndex(df(s1), dir)
+    assert(!Dedup.hasClusterLabels(spark, dir))
+    refusesCC(Dedup.dedupIncrementalCC(df(s2), dir).collect())
+    assert(keptIds(Dedup.dedupIncremental(df(s2), dir, appendToIndex = true)) ==
+      Seq(12L, 15L, 18L))
+    // the embedding index shares the labels tables
+    val embDir = Files.createTempDirectory("graft-emb-relabel").toString
+    val embs = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0.99f, 0.1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    Dedup.writeEmbDedupIndexCC(embs, embDir, threshold = 0.9, numBands = 8)
+    Dedup.writeEmbDedupIndex(embs, embDir, numBands = 8)
+    assert(!Dedup.hasClusterLabels(spark, embDir))
+    refusesCC(Dedup.embDedupIncrementalCC(
+      Seq((5L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding"), embDir))
+    try {
+      // the same on one table prefix, written fresh or compacted into
+      for (p <- Seq("graft_relabel", "graft_relabel2"))
+        Dedup.writeDedupIndexTablesCC(df(ccCorpus), p, 4, threshold = 0.9)
+      Dedup.writeDedupIndexTables(df(s1), "graft_relabel", 4)
+      Dedup.compactDedupIndexTables(spark, dir, "graft_relabel2", 4)
+      for (p <- Seq("graft_relabel", "graft_relabel2")) {
+        assert(!Dedup.hasClusterLabelsTables(spark, p), p)
+        refusesCC(Dedup.dedupIncrementalTablesCC(df(s2), p))
+      }
+      assert(keptIds(Dedup.dedupIncrementalTables(df(s2), "graft_relabel")) ==
+        Seq(12L, 15L, 18L))
+    } finally {
+      for (p <- Seq("graft_relabel", "graft_relabel2");
+           t <- Seq("digests", "bands", "toksets", "manifest",
+             "labels", "labels_meta"))
+        spark.sql(s"DROP TABLE IF EXISTS ${p}_$t")
+    }
+  }
+
   test("incremental CC composes across appends; labels-less index rejected") {
     val dir = Files.createTempDirectory("graft-dedup-cc-idx2").toString
     Dedup.writeDedupIndexCC(df(ccCorpus), dir, threshold = 0.9)
@@ -465,8 +509,13 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val (cap, fpr) = (10000L, 0.01)
     SketchCheckpoint.writePanelPartials(
       TokenDocGen.generateDf(spark, 400, 7L, 4), "source", cap, fpr, ckpt, "s1")
+    val embDir = Files.createTempDirectory("graft-emb-idx-open").toString
+    Dedup.writeEmbDedupIndex(Seq((0L, Array(1f, 0f, 0f, 0f)),
+      (1L, Array(0f, 1f, 0f, 0f))).toDF("vec_id", "embedding"), embDir, numBands = 8)
+    val embSnap = Seq((5L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
     val (_, jobs) = Jobs.recorded(spark.sparkContext) {
       Dedup.dedupIncremental(df(s2), dir).collect()
+      Dedup.embDedupIncremental(embSnap, embDir, 0.9).collect()
       Decontaminate.contaminatedVsIndex(df(s2), evalDir).collect()
       SketchCheckpoint.resumePanel(spark, ckpt, cap, fpr).collect()
     }
@@ -483,17 +532,22 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val snap = Seq((5L, Array(0f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
     val dir = Files.createTempDirectory("graft-emb-idx-old").toString
     Dedup.writeEmbDedupIndex(embs, dir, numBands = 8)
-    // rewrite the manifest as an index written before the stamp existed
-    val m = spark.read.parquet(s"$dir/manifest").drop("format_version")
-    spark.createDataFrame(java.util.Arrays.asList(m.collect(): _*), m.schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
-    val refusals = Seq(
-      () => Dedup.embDedupIncremental(snap, dir, 0.9).collect(),
-      () => Dedup.embNearDupHitsVsIndex(snap, dir, 0.9).collect(),
-      () => Dedup.writeEmbDedupIndex(snap, dir, numBands = 8, append = true))
-    refusals.foreach { call =>
-      val e = intercept[IllegalStateException](call())
-      assert(e.getMessage.contains("writeEmbDedupIndex"), e.getMessage)
+    // rewrite the manifest as an index written before the stamp existed,
+    // then as a version-1 index (its vectors may be array<double>)
+    for (stamp <- Seq(None, Some(1))) {
+      val m = spark.read.parquet(s"$dir/manifest").drop("format_version")
+      val old = spark.createDataFrame(
+        java.util.Arrays.asList(m.collect(): _*), m.schema)
+      stamp.fold(old)(v => old.withColumn("format_version", lit(v)))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/manifest")
+      val refusals = Seq(
+        () => Dedup.embDedupIncremental(snap, dir, 0.9).collect(),
+        () => Dedup.embNearDupHitsVsIndex(snap, dir, 0.9).collect(),
+        () => Dedup.writeEmbDedupIndex(snap, dir, numBands = 8, append = true))
+      refusals.foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains("writeEmbDedupIndex"), e.getMessage)
+      }
     }
   }
 

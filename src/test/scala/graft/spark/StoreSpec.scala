@@ -192,11 +192,58 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("catalog location: checked writes, no appends, a misdeclared table refused by name") {
+    import Store.Location.Catalog
+    val at = Catalog("graft_store_cat", 2)
+    try {
+      val e = intercept[IllegalArgumentException](Tables.Dedup.Digests.write(
+        Seq((1L, 2L)).toDF("doc_id", "content_md5"), at))
+      assert(e.getMessage.contains("table digests is declared"), e.getMessage)
+      val digests = Seq((1L, "a")).toDF("doc_id", "content_md5")
+      Tables.Dedup.Digests.write(digests, at)
+      assert(Tables.Dedup.Digests.read(spark, at).count() == 1)
+      assert(at.exists(spark, Tables.Dedup.Digests))
+      val e2 = intercept[IllegalArgumentException](
+        Tables.Dedup.Digests.write(digests, at, append = true))
+      assert(e2.getMessage.contains("takes no appends"), e2.getMessage)
+      // a table some other writer left under the declared name
+      Seq((1L, 2L)).toDF("doc_id", "content_md5")
+        .write.saveAsTable("graft_store_cat_bands")
+      val e3 = intercept[IllegalStateException](Tables.Dedup.Bands.read(spark, at))
+      assert(e3.getMessage.contains("graft_store_cat_bands"), e3.getMessage)
+      Seq(Tables.Dedup.Digests, Tables.Dedup.Bands).foreach(at.drop(spark, _))
+      assert(!at.exists(spark, Tables.Dedup.Digests) &&
+        !at.exists(spark, Tables.Dedup.Bands))
+    } finally Seq("digests", "bands").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS graft_store_cat_$t"))
+  }
+
+  test("source scan: operators and plans open index tables only through a location") {
+    // catalog tables are a Store.Location, like directories: an operator
+    // that names one itself is a second copy of the index code
+    val calls = """spark\.table\(|saveAsTable|bucketBy|BucketedTables\.|catalog\.tableExists""".r
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"sources not found from ${root.getAbsolutePath}")
+    val files = for {
+      sub <- Seq("operators", "plans")
+      file <- Option(new java.io.File(root, sub).listFiles()).toSeq.flatten
+      if file.getName.endsWith(".scala")
+    } yield (sub, file)
+    assert(files.exists(_._2.getName == "Dedup.scala"), files)
+    val found = for {
+      (sub, file) <- files
+      (line, n) <- new String(java.nio.file.Files.readAllBytes(file.toPath), UTF_8)
+        .split('\n').zipWithIndex
+      if calls.findFirstIn(line).nonEmpty
+    } yield s"$sub/${file.getName}:${n + 1}: ${line.trim}"
+    assert(found.isEmpty, "catalog calls outside graft.store (write the " +
+      s"operator over a Store.Location): ${found.mkString("; ")}")
+  }
+
   test("source scan: graft's own tables are read with their declared schema") {
     // caller-typed tables keep inference; one line each, with the reason
     val allowed = Map(
       ("operators/Ann.scala", "/lists") -> "the caller's id and vector columns",
-      ("operators/Dedup.scala", "/vectors") -> "the caller's vector column",
       ("operators/Drift.scala", "/source_counts") -> "the caller's source column",
       ("operators/TextAnalysis.scala", "/sketches") -> "the caller's source column")
     val root = new java.io.File("src/main/scala/graft")

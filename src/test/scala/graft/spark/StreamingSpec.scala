@@ -71,6 +71,18 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a bad sketch sizing literal fails at the call, not inside a task") {
+    import spark.implicits._
+    val docs = TokenDocGen.generate(spark, 10, 3L, 2)
+    val e = intercept[IllegalArgumentException](
+      StreamingSketches.perSourceSketches(docs, 1000, 0.01, p = 99))
+    assert(e.getMessage.contains("precision 99"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      StreamingSketches.perKeyQuantiles[TokenDoc](docs, _.source,
+        _.n_tok.toDouble, compression = 1.0))
+    assert(e2.getMessage.contains("compression"), e2.getMessage)
+  }
+
   test("streaming priority sample: any prefix equals the batch operator") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
