@@ -92,6 +92,40 @@ object catalyst {
       def add(b: BlockedBloomFilter, v: Any): Unit = b.add(v.asInstanceOf[Long])
     }
 
+    /** `numShards` (a power of two) Bloom filters of `nbitsPerShard`
+      * bits, each holding the keys whose top hash bits select it
+      * (sharded.shardOf); the wire format is the shard count, then every
+      * shard's reference dump.
+      */
+    case class BloomSharded(numShards: Int, nbitsPerShard: Long, k: Int)
+        extends SketchKind[Array[BlockedBloomFilter]]("bloom_sharded", LongType) {
+      require(Integer.bitCount(numShards) == 1, "numShards must be a power of 2")
+      BlockedBloomFilter.blocksFor(nbitsPerShard)
+      def empty(): Array[BlockedBloomFilter] =
+        Array.fill(numShards)(BlockedBloomFilter(nbitsPerShard, k))
+      def merge(b: Array[BlockedBloomFilter],
+                o: Array[BlockedBloomFilter]): Array[BlockedBloomFilter] = {
+        var i = 0
+        while (i < b.length) { b(i).union(o(i)); i += 1 }
+        b
+      }
+      def dump(b: Array[BlockedBloomFilter]): Array[Byte] = {
+        val out = new java.io.ByteArrayOutputStream()
+        val dos = new java.io.DataOutputStream(out)
+        dos.writeInt(b.length)
+        b.foreach(f => BloomIO.dumpTo(dos, f))
+        out.toByteArray
+      }
+      def load(bytes: Array[Byte]): Array[BlockedBloomFilter] = {
+        val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+        Array.fill(in.readInt())(BloomIO.loadFrom(in))
+      }
+      def add(b: Array[BlockedBloomFilter], v: Any): Unit = {
+        val h = v.asInstanceOf[Long]
+        b(sharded.shardOf(h, numShards)).add(h)
+      }
+    }
+
     /** HyperLogLog of precision `p`; union is register-max (all inputs
       * must share `p`).
       */

@@ -1,46 +1,363 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator,
+  CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import graft.core.{BlockedBloomFilter, Hashing}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.core.{BlockedBloomFilter, Hashing, MinHash}
 
 /** Native scalar expressions with codegen — these stay inside
   * whole-stage-generated code, so a scan -> hash -> probe pipeline runs
   * without UDF boxing or per-row closure dispatch.
+  *
+  * The stateless kernels are one op list, [[Kernel]], evaluated by one
+  * expression, [[KernelExpression]]; the Column API and SQL derive from
+  * the list. The classes written out below hold state (a filter, a
+  * cache, centroids, a word list) or pick their kernel from the child
+  * types.
   */
 object expressions {
 
-  /** splitmix64 of an int token id (the engine-wide token hash). */
-  case class TokenHash64(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "token_hash64"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      Hashing.tokenHash(v.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.core.Hashing.splitmix64((long)($c))")
-    override protected def withNewChildInternal(c: Expression): TokenHash64 =
-      copy(child = c)
+  /** One column argument of a [[Kernel]] op: the type the Column form
+    * casts it to, and whether the kernel itself takes a null (a text op
+    * that reads null as empty) or a null argument gives a null result.
+    */
+  final case class In(dataType: DataType, takesNull: Boolean = false)
+
+  /** One int literal of a [[Kernel]] op, checked against [min, max] when
+    * the expression is built; `default` is what SQL passes when the
+    * literal is left out.
+    */
+  final case class Lit(name: String, min: Int, max: Int = Int.MaxValue,
+                       default: Option[Int] = None) {
+    def check(op: String, v: Int): Unit = require(v >= min && v <= max,
+      s"$op: $name must be " +
+        (if (max == Int.MaxValue) s">= $min" else s"in [$min, $max]") +
+        s", got $v")
   }
 
-  /** FNV-1a 64 of a string (the reference's string-key adapter,
-    * /root/reference/example_test.go:29-46).
+  /** One stateless native kernel: a static method behind the Column
+    * function `prettyName` and the SQL function `sqlName`, over column
+    * `inputs` and int `literals`. `eval` takes the Catalyst values of the
+    * (at most two) columns, `b` unused by one-column ops; `call` is the
+    * same call as Java text over the generated argument values, with the
+    * literals inlined.
     */
-  case class Fnv1a64(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "fnv1a64"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      Hashing.fnv1a64(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
+  sealed abstract class Kernel(val prettyName: String, val sqlName: String,
+      val usage: String, val dataType: DataType, val inputs: In*)(
+      method: String, val literals: Lit*) extends Product with Serializable {
+    /** The kernel may return null for non-null arguments. */
+    def nullResult: Boolean = false
+    def eval(a: Any, b: Any, l: Seq[Int]): Any
+    def call(args: Seq[String], l: Seq[Int]): String =
+      s"$method(${(args ++ l.map(_.toString)).mkString(", ")})"
+    /** The op's Column: `args` cast to the op's input types. */
+    def apply(args: Column*)(l: Int*): Column =
+      catalyst.aggColExpr(KernelExpression(this, l, args.zip(inputs).map {
+        case (c, in) => catalyst.expr(c.cast(in.dataType))
+      }))
+  }
+
+  object Kernel {
+    private val text = In(StringType)
+    // null text behaves as empty
+    private val textOrEmpty = In(StringType, takesNull = true)
+    private val int = In(IntegerType)
+    private val long = In(LongType)
+    // the array kernels read elements positionally (getInt, getLong,
+    // toFloatArray), so a mistyped array column is cast, never read at
+    // the wrong stride
+    private val ints = In(ArrayType(IntegerType))
+    private val longs = In(ArrayType(LongType))
+    private val floats = In(ArrayType(FloatType))
+    private val longArray = ArrayType(LongType, containsNull = false)
+    private val stringArray = ArrayType(StringType, containsNull = false)
+    private def k(method: String) = "graft.functions.kernels." + method
+    private def str(v: Any) = v.asInstanceOf[UTF8String]
+    private def arr(v: Any) = v.asInstanceOf[ArrayData]
+    private val n = Lit("n", 1)
+    private val numPerms = Lit("numPerms", 1, 512, default = Some(128))
+    private val dim = Lit("dim", 1)
+
+    /** splitmix64 of an int token id (the engine-wide token hash). */
+    case object TokenHash64 extends Kernel("token_hash64", "graft_token_hash",
+      "(token_id) - splitmix64 of an int token", LongType, int)(
+      "graft.core.Hashing.splitmix64") {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = Hashing.tokenHash(a.asInstanceOf[Int])
+      override def call(args: Seq[String], l: Seq[Int]): String =
+        super.call(args.map(c => s"(long)($c)"), l)
+    }
+    /** FNV-1a 64 of a string (the reference's string-key adapter). */
+    case object Fnv1a64 extends Kernel("fnv1a64", "graft_fnv64",
+      "(str) - 64-bit FNV-1a", LongType, text)("graft.core.Hashing.fnv1a64") {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = Hashing.fnv1a64(str(a).getBytes)
+      override def call(args: Seq[String], l: Seq[Int]): String =
+        super.call(args.map(_ + ".getBytes()"), l)
+    }
+    /** Distinct word n-grams — native because the higher-order-function
+      * formulation re-evaluates the tokenize subtree per window.
+      */
+    case object WordNgrams extends Kernel("graft_word_ngrams",
+      "graft_word_ngrams", "(text, n) - distinct word n-grams, array<string>",
+      stringArray, textOrEmpty)(k("wordNgrams"), n) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.wordNgrams(str(a), l(0))
+    }
+    /** The n-gram occurrence stream for language-model counts. */
+    case object WordNgramsAll extends Kernel("graft_word_ngrams_all",
+      "graft_word_ngrams_all", "(text, n) - ALL word n-grams in position " +
+        "order, duplicates kept (LM occurrence stream), array<string>",
+      stringArray, textOrEmpty)(k("wordNgramsAll"), n) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.wordNgramsAll(str(a), l(0))
+    }
+    /** The duplicate-span seed stream; short text gives an empty array. */
+    case object GramHashes extends Kernel("graft_gram_hashes",
+      "graft_gram_hashes", "(text, n) - position-ordered rolling " +
+        "word-n-gram hashes, array<long> (duplicate-span seeds)",
+      longArray, textOrEmpty)(k("gramHashes"), n) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.gramHashes(str(a), l(0))
+    }
+    /** The exact verifier for hash-seeded span candidates. */
+    case object GramAt extends Kernel("graft_gram_at", "graft_gram_at",
+      "(text, pos, n) - the word n-gram at word index pos, string " +
+        "(span-candidate verifier; null out of range)",
+      StringType, textOrEmpty, int)(k("gramAt"), n) {
+      override def nullResult: Boolean = true
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.gramAt(str(a), b.asInstanceOf[Int], l(0))
+    }
+    case object SegTokenCount extends Kernel("graft_seg_token_count",
+      "graft_seg_token_count", "(text) - BPE-style pre-tokenizer token " +
+        "count (alnum runs + one per other non-space char), long",
+      LongType, textOrEmpty)(k("segTokenCount")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.segTokenCount(str(a))
+    }
+    /** Every Gopher quality-rule signal in one text pass. */
+    case object GopherSignals extends Kernel("graft_gopher_signals",
+      "graft_gopher_signals", "(text) - Gopher quality raw signals, " +
+        "array<long> of 9: [n_words, sum_word_codepoints, n_alpha_words, " +
+        "n_stopwords, n_lines, n_bullet_lines, n_ellipsis_lines, " +
+        "n_hash_chars, n_ellipsis_occurrences]",
+      longArray, textOrEmpty)(k("gopherSignals")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.gopherSignals(str(a))
+    }
+    /** The native form of TokenDocs.tokenize. */
+    case object Tokenize extends Kernel("graft_tokenize", "graft_tokenize",
+      "(text) - deterministic token ids, array<int>",
+      ArrayType(IntegerType, containsNull = false), textOrEmpty)(
+      k("tokenizeArrayOrEmpty")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.tokenizeArrayOrEmpty(str(a))
+    }
+    case object MinhashSignature extends Kernel("minhash_signature",
+      "graft_minhash_signature",
+      "(tokens[, numPerms]) - MinHash signature, array<long>", longArray,
+      ints)(k("minhashSignature"), numPerms) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.minhashSignature(arr(a), l(0))
+    }
+    case object MinhashBands extends Kernel("minhash_bands",
+      "graft_minhash_bands",
+      "(sig, numBands, rowsPerBand) - LSH band keys, array<long>", longArray,
+      longs)(k("minhashBands"), Lit("numBands", 1), Lit("rowsPerBand", 1)) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.minhashBands(arr(a), l(0), l(1))
+    }
+    case object TokenShingles extends Kernel("token_shingles",
+      "graft_token_shingles",
+      "(tokens, n) - rolling n-gram shingle hashes, array<long>", longArray,
+      ints)(k("tokenShingles"), n) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.tokenShingles(arr(a), l(0))
+    }
+    case object MinhashSignatureHashes extends Kernel(
+      "minhash_signature_hashes", "graft_minhash_signature_hashes",
+      "(hashes[, numPerms]) - MinHash signature over pre-hashed set " +
+        "elements, array<long>", longArray, longs)(
+      k("minhashSignatureHashes"), numPerms) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.minhashSignatureHashes(arr(a), l(0))
+    }
+    case object Simhash64 extends Kernel("simhash64", "graft_simhash",
+      "(tokens) - 64-bit SimHash fingerprint", LongType, ints)(k("simhash64")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.simhash64(arr(a))
+    }
+    /** The native form of TextAnalysis.detectLang. */
+    case object LangId extends Kernel("graft_lang_id", "graft_lang_id",
+      "(text) - heuristic language id", StringType, text)(k("langId")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.langId(str(a))
+    }
+    /** The URL-dedup key; rules in kernels.canonicalUrl. */
+    case object CanonicalUrl extends Kernel("graft_canonical_url",
+      "graft_canonical_url", "(url) - canonical URL form (dedup key): " +
+        "fragment/tracking-param/default-port/www/trailing-slash " +
+        "normalization", StringType, text)(k("canonicalUrl")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.canonicalUrl(str(a))
+    }
+    /** The native form of TextAnalysis.rollingFingerprint. */
+    case object RollingFingerprint extends Kernel("graft_rolling_fp",
+      "graft_rolling_fp", "(text) - Karp-Rabin rolling-window fingerprint",
+      LongType, text)(k("rollingFp")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.rollingFp(str(a))
+    }
+    case object Simhash64Hashes extends Kernel("simhash64_hashes",
+      "graft_simhash_hashes", "(hashes) - 64-bit SimHash over pre-hashed " +
+        "elements, weighted by multiplicity", LongType, longs)(
+      k("simhash64Hashes")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.simhash64Hashes(arr(a))
+    }
+    case object Hamming64 extends Kernel("hamming64", "graft_hamming64",
+      "(a, b) - Hamming distance of two int64 fingerprints", IntegerType,
+      long, long)("java.lang.Long.bitCount") {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
+      override def call(args: Seq[String], l: Seq[Int]): String =
+        super.call(Seq(args.mkString(" ^ ")), l)
+    }
+    case object MinhashJaccard extends Kernel("graft_minhash_jaccard",
+      "graft_minhash_jaccard", "(sigA, sigB) - MinHash Jaccard estimate",
+      DoubleType, longs, longs)("graft.core.MinHash.estimateJaccard") {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        MinHash.estimateJaccard(arr(a).toLongArray(), arr(b).toLongArray())
+      override def call(args: Seq[String], l: Seq[Int]): String =
+        super.call(args.map(_ + ".toLongArray()"), l)
+    }
+    case object CosineSim extends Kernel("cosine_sim", "graft_cosine_sim",
+      "(a, b) - cosine similarity of two array<float>", DoubleType, floats,
+      floats)(k("cosineF")) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any = kernels.cosineF(arr(a), arr(b))
+    }
+    /** (maxHamming+1)^2 keys per fingerprint, see kernels.simhashBucketKeys. */
+    case object SimhashBuckets extends Kernel("simhash_buckets",
+      "graft_simhash_buckets",
+      "(fp, maxHamming) - two-level pigeonhole bucket keys, array<long>",
+      longArray, long)(k("simhashBucketKeys"), Lit("maxHamming", 0, 31)) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.simhashBucketKeys(a.asInstanceOf[Long], l(0))
+    }
+    /** Each key packs the band index above its bits: at most 56 of them. */
+    case object LshBandKeys extends Kernel("lsh_band_keys",
+      "graft_lsh_band_keys",
+      "(emb, numBands, bitsPerBand, dim) - hyperplane band keys", longArray,
+      floats)(k("lshBandKeys"), Lit("numBands", 1), Lit("bitsPerBand", 1, 56),
+      dim) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.lshBandKeys(arr(a), l(0), l(1), l(2))
+    }
+    /** Planes are derived from (nbits, dim) and cached per JVM, so the
+      * plan carries two ints, not the plane matrix.
+      */
+    case object LshSignature extends Kernel("lsh_signature",
+      "graft_lsh_signature",
+      "(emb, nbits, dim) - random-hyperplane sign signature, long", LongType,
+      floats)(k("lshSignature"), Lit("nbits", 1, 64), dim) {
+      def eval(a: Any, b: Any, l: Seq[Int]): Any =
+        kernels.lshSignature(arr(a), l(0), l(1))
+    }
+
+    /** Every op: the one list the Column and SQL surfaces derive from
+      * (lazy: an op's constructor reads this object's argument types).
+      */
+    lazy val all: Seq[Kernel] = Seq(TokenHash64, Fnv1a64, WordNgrams,
+      WordNgramsAll, GramHashes, GramAt, SegTokenCount, GopherSignals,
+      Tokenize, MinhashSignature, MinhashBands, TokenShingles,
+      MinhashSignatureHashes, Simhash64, LangId, CanonicalUrl,
+      RollingFingerprint, Simhash64Hashes, Hamming64, MinhashJaccard,
+      CosineSim, SimhashBuckets, LshBandKeys, LshSignature)
+  }
+
+  /** Any [[Kernel]] op over its column arguments and int literals: the
+    * one expression behind every stateless kernel. The literals are
+    * checked here, so a bad one fails while the Column or the SQL call is
+    * built, before any job. Generated code calls the static method in
+    * place, the layout Spark's Unary/BinaryExpression.nullSafeCodeGen
+    * emits when every argument is null-strict.
+    */
+  case class KernelExpression(op: Kernel, literals: Seq[Int],
+                              children: Seq[Expression]) extends Expression {
+    require(children.length == op.inputs.length &&
+      literals.length == op.literals.length,
+      s"${op.prettyName} takes ${op.inputs.length} columns and " +
+        s"${op.literals.length} literals")
+    op.literals.zip(literals).foreach { case (l, v) => l.check(op.prettyName, v) }
+
+    private lazy val strict: Seq[Boolean] = op.inputs.map(!_.takesNull)
+    override def prettyName: String = op.prettyName
+    override def dataType: DataType = op.dataType
+    override def nullable: Boolean = op.nullResult ||
+      children.zip(strict).exists { case (c, s) => s && c.nullable }
+    override def foldable: Boolean = children.forall(_.foldable)
+    override protected def stringArgs: Iterator[Any] =
+      children.iterator ++ literals.iterator
+
+    override def eval(input: InternalRow): Any = {
+      val args = children.map(_.eval(input))
+      if (args.zip(strict).exists { case (v, s) => s && v == null }) null
+      else op.eval(args.head, args.lift(1).orNull, literals)
+    }
+
     override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.core.Hashing.fnv1a64($c.getBytes())")
-    override protected def withNewChildInternal(c: Expression): Fnv1a64 =
-      copy(child = c)
+                                     ev: ExprCode): ExprCode = {
+      val args = children.map(_.genCode(ctx))
+      val codes = args.map(_.code).reduceLeft((a, b) => code"$a\n$b")
+      if (strict.forall(identity)) strictCode(ctx, args, codes, ev)
+      else {
+        // a null-strict argument guards the call, a null-taking one is
+        // passed as null; the argument list starts on its own line
+        val texts = args.zip(strict).map { case (a, s) =>
+          if (s) s"${a.value}" else s"${a.isNull} ? null : ${a.value}"
+        }
+        val guards = args.zip(strict).collect { case (a, true) =>
+          s"${a.isNull} ? null :\n" }.mkString
+        val call = op.call(("\n" + texts.head) +: texts.tail, literals)
+        val isNull =
+          if (nullable) s"boolean ${ev.isNull} = ${ev.value} == null;\n" else ""
+        val code = code"""
+          |$codes
+          |${CodeGenerator.javaClass(dataType).getName} ${ev.value} = $guards$call;
+          |$isNull""".stripMargin
+        if (nullable) ev.copy(code = code)
+        else ev.copy(code = code, isNull = FalseLiteral)
+      }
+    }
+
+    /** The call once every argument is non-null, laid out as
+      * Unary/BinaryExpression.nullSafeCodeGen lays it out: each argument
+      * is computed only when those before it are not null.
+      */
+    private def strictCode(ctx: CodegenContext, args: Seq[ExprCode],
+                           codes: Block, ev: ExprCode): ExprCode = {
+      import CodeGenerator.{defaultValue, javaType}
+      val assign =
+        s"${ev.value} = ${op.call(args.map(_.value.toString), literals)};"
+      if (!nullable) ev.copy(code = code"""
+        $codes
+        ${javaType(dataType)} ${ev.value} = ${defaultValue(dataType)};
+        $assign""", isNull = FalseLiteral)
+      else if (args.length == 1) ev.copy(code = code"""
+        ${args.head.code}
+        boolean ${ev.isNull} = ${args.head.isNull};
+        ${javaType(dataType)} ${ev.value} = ${defaultValue(dataType)};
+        ${ctx.nullSafeExec(nullable = true, args.head.isNull.toString)(assign)}
+      """)
+      else {
+        val body = children.zip(args).foldRight(s"""
+          ${ev.isNull} = false; // resultCode could change nullability.
+          $assign
+        """) { case ((c, a), inner) =>
+          a.code.toString + ctx.nullSafeExec(c.nullable, a.isNull.toString)(inner)
+        }
+        ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        ${javaType(dataType)} ${ev.value} = ${defaultValue(dataType)};
+        $body
+      """)
+      }
+    }
+
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): KernelExpression = copy(children = c)
   }
 
   /** Membership probe against a plan-time-bound filter. The deserialized
@@ -186,8 +503,6 @@ object expressions {
 
     override protected def doGenCode(ctx: CodegenContext,
                                      ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
       val ref = ctx.addReferenceObj("graftBmc", this, getClass.getName)
       val dGen = left.genCode(ctx)
       val hGen = right.genCode(ctx)
@@ -205,193 +520,6 @@ object expressions {
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): BloomMightContainDump =
       copy(left = l, right = r)
-  }
-
-  /** Distinct word n-grams of a text column, array<string> — native
-    * because the higher-order-function formulation re-evaluates the
-    * tokenize subtree per window (see kernels.wordNgrams).
-    */
-  case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-    // plan-time guard for ALL construction paths (Column API + SQL
-    // registry): the kernel's window loop would emit [""] for n < 1
-    require(n >= 1, s"ngram length must be >= 1, got $n")
-    override def prettyName: String = "graft_word_ngrams"
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.wordNgrams(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |$tpe ${ev.value} = graft.functions.kernels.wordNgrams(
-              |  ${c.isNull} ? null : ${c.value}, $n);
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): WordNgrams =
-      copy(child = c)
-  }
-
-  /** All word n-grams in position order, duplicates kept (string ->
-    * array<string>) — the n-gram occurrence stream for language-model
-    * counts, see kernels.wordNgramsAll.
-    */
-  case class WordNgramsAll(child: Expression, n: Int) extends UnaryExpression {
-    require(n >= 1, s"ngram length must be >= 1, got $n")
-    override def prettyName: String = "graft_word_ngrams_all"
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.wordNgramsAll(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |$tpe ${ev.value} = graft.functions.kernels.wordNgramsAll(
-              |  ${c.isNull} ? null : ${c.value}, $n);
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): WordNgramsAll =
-      copy(child = c)
-  }
-
-  /** Position-ordered rolling word-n-gram hashes (string ->
-    * array<long>), the duplicate-span seed stream — see
-    * kernels.gramHashes. Null / short text -> empty array.
-    */
-  case class GramHashes(child: Expression, n: Int) extends UnaryExpression {
-    require(n >= 1, s"gram length must be >= 1, got $n")
-    override def prettyName: String = "graft_gram_hashes"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.gramHashes(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |$tpe ${ev.value} = graft.functions.kernels.gramHashes(
-              |  ${c.isNull} ? null : ${c.value}, $n);
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): GramHashes =
-      copy(child = c)
-  }
-
-  /** The word n-gram starting at a word index ((string, int) -> string),
-    * the exact verifier for hash-seeded span candidates — see
-    * kernels.gramAt. Null on null/out-of-range inputs.
-    */
-  case class GramAt(left: Expression, right: Expression, n: Int)
-      extends BinaryExpression {
-    require(n >= 1, s"gram length must be >= 1, got $n")
-    override def prettyName: String = "graft_gram_at"
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val p = right.eval(input)
-      if (p == null) null
-      else kernels.gramAt(left.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        p.asInstanceOf[Int], n)
-    }
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      val l = left.genCode(ctx)
-      val r = right.genCode(ctx)
-      val u = classOf[org.apache.spark.unsafe.types.UTF8String].getName
-      ev.copy(code =
-        code"""
-              |${l.code}
-              |${r.code}
-              |$u ${ev.value} = ${r.isNull} ? null :
-              |  graft.functions.kernels.gramAt(
-              |    ${l.isNull} ? null : ${l.value}, ${r.value}, $n);
-              |boolean ${ev.isNull} = ${ev.value} == null;
-              |""".stripMargin)
-    }
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): GramAt = copy(left = l, right = r)
-  }
-
-  /** BPE-style pre-tokenizer token count (string -> long), see
-    * kernels.segTokenCount. Null text counts 0.
-    */
-  case class SegTokenCount(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_seg_token_count"
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.segTokenCount(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |long ${ev.value} = graft.functions.kernels.segTokenCount(
-              |  ${c.isNull} ? null : ${c.value});
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): SegTokenCount =
-      copy(child = c)
-  }
-
-  /** All Gopher quality-rule raw signals (string -> array<long> of 9,
-    * see kernels.gopherSignals) in one codegen kernel call — the
-    * battery's per-doc work is one text pass instead of a dozen
-    * CodegenFallback higher-order-function evaluations. Null text
-    * behaves as empty (0 words, 1 line).
-    */
-  case class GopherSignals(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_gopher_signals"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.gopherSignals(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |$tpe ${ev.value} = graft.functions.kernels.gopherSignals(
-              |  ${c.isNull} ? null : ${c.value});
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): GopherSignals =
-      copy(child = c)
   }
 
   /** Blocklisted word/phrase occurrences (string -> array<string> of
@@ -434,8 +562,6 @@ object expressions {
         .asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
     override protected def doGenCode(ctx: CodegenContext,
                                      ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
       val ref = ctx.addReferenceObj("graftBlk", this, getClass.getName)
       val c = child.genCode(ctx)
       val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
@@ -448,176 +574,6 @@ object expressions {
         isNull = FalseLiteral)
     }
     override protected def withNewChildInternal(c: Expression): BlocklistMatches =
-      copy(child = c)
-  }
-
-  /** Deterministic tokenizer (string -> array<int>), the native form of
-    * TokenDocs.tokenize — inside codegen, no udf dispatch. NULL text
-    * tokenizes to the EMPTY array (TokenDocs.tokenize(null) contract),
-    * so n_tok/size stay non-null downstream.
-    */
-  case class Tokenize(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_tokenize"
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullable: Boolean = false
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-      kernels.tokenizeArrayOrEmpty(child.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-      val c = child.genCode(ctx)
-      val tpe = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-      ev.copy(code =
-        code"""
-              |${c.code}
-              |$tpe ${ev.value} = graft.functions.kernels.tokenizeArrayOrEmpty(
-              |  ${c.isNull} ? null : ${c.value});
-              |""".stripMargin,
-        isNull = FalseLiteral)
-    }
-    override protected def withNewChildInternal(c: Expression): Tokenize =
-      copy(child = c)
-  }
-
-  /** MinHash signature of a token array (array<int> -> array<long>). */
-  case class MinhashSignature(child: Expression, numPerms: Int)
-      extends UnaryExpression {
-    override def prettyName: String = "minhash_signature"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.minhashSignature(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], numPerms)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.minhashSignature($c, $numPerms)")
-    override protected def withNewChildInternal(c: Expression): MinhashSignature =
-      copy(child = c)
-  }
-
-  /** LSH band keys of a MinHash signature (array<long> -> array<long>). */
-  case class MinhashBands(child: Expression, numBands: Int, rowsPerBand: Int)
-      extends UnaryExpression {
-    override def prettyName: String = "minhash_bands"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.minhashBands(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        numBands, rowsPerBand)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.minhashBands($c, $numBands, $rowsPerBand)")
-    override protected def withNewChildInternal(c: Expression): MinhashBands =
-      copy(child = c)
-  }
-
-  /** Rolling n-gram shingle hashes (array<int> -> array<long>). */
-  case class TokenShingles(child: Expression, n: Int)
-      extends UnaryExpression {
-    require(n >= 1, "shingle size must be >= 1")
-    override def prettyName: String = "token_shingles"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.tokenShingles(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.tokenShingles($c, $n)")
-    override protected def withNewChildInternal(c: Expression): TokenShingles =
-      copy(child = c)
-  }
-
-  /** MinHash signature over pre-hashed elements (array<long> -> array<long>). */
-  case class MinhashSignatureHashes(child: Expression, numPerms: Int)
-      extends UnaryExpression {
-    override def prettyName: String = "minhash_signature_hashes"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.minhashSignatureHashes(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], numPerms)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.minhashSignatureHashes($c, $numPerms)")
-    override protected def withNewChildInternal(
-        c: Expression): MinhashSignatureHashes = copy(child = c)
-  }
-
-  /** SimHash fingerprint of a token array (array<int> -> long). */
-  case class Simhash64(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "simhash64"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.simhash64(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.kernels.simhash64($c)")
-    override protected def withNewChildInternal(c: Expression): Simhash64 =
-      copy(child = c)
-  }
-
-  /** Heuristic language ID (string -> string), native form of
-    * TextAnalysis.detectLang.
-    */
-  case class LangId(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_lang_id"
-    override def dataType: DataType = StringType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.langId(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.kernels.langId($c)")
-    override protected def withNewChildInternal(c: Expression): LangId =
-      copy(child = c)
-  }
-
-  /** Canonical URL form (string -> string) — the URL-dedup key; rules
-    * and the SQL-replicability contract in kernels.canonicalUrl.
-    */
-  case class CanonicalUrl(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_canonical_url"
-    override def dataType: DataType = StringType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.canonicalUrl(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.kernels.canonicalUrl($c)")
-    override protected def withNewChildInternal(c: Expression): CanonicalUrl =
-      copy(child = c)
-  }
-
-  /** Karp-Rabin rolling-window fingerprint (string -> long), native form
-    * of TextAnalysis.rollingFingerprint.
-    */
-  case class RollingFingerprint(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "graft_rolling_fp"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.rollingFp(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.kernels.rollingFp($c)")
-    override protected def withNewChildInternal(c: Expression): RollingFingerprint =
-      copy(child = c)
-  }
-
-  /** SimHash over pre-hashed elements (array<long> -> long). */
-  case class Simhash64Hashes(child: Expression) extends UnaryExpression {
-    override def prettyName: String = "simhash64_hashes"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.simhash64Hashes(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.kernels.simhash64Hashes($c)")
-    override protected def withNewChildInternal(c: Expression): Simhash64Hashes =
       copy(child = c)
   }
 
@@ -656,109 +612,6 @@ object expressions {
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): SortedIntersectSize =
       copy(left = l, right = r)
-  }
-
-  /** Hamming distance of two 64-bit fingerprints. */
-  case class Hamming64(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def prettyName: String = "hamming64"
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"java.lang.Long.bitCount($a ^ $b)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Hamming64 = copy(left = l, right = r)
-  }
-
-  /** MinHash Jaccard estimate of two signatures (array<bigint> -> double). */
-  case class MinhashJaccard(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def prettyName: String = "graft_minhash_jaccard"
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      graft.core.MinHash.estimateJaccard(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray(),
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray())
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.core.MinHash.estimateJaccard($a.toLongArray(), $b.toLongArray())")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): MinhashJaccard = copy(left = l, right = r)
-  }
-
-  /** Cosine similarity of two float vectors (array<float> -> double). */
-  case class CosineSim(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def prettyName: String = "cosine_sim"
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      kernels.cosineF(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.kernels.cosineF($a, $b)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): CosineSim = copy(left = l, right = r)
-  }
-
-  /** Two-level pigeonhole bucket keys for SimHash (long -> array<long>),
-    * (maxHamming+1)^2 keys per fingerprint — see kernels.simhashBucketKeys.
-    */
-  case class SimhashBuckets(child: Expression, maxHamming: Int)
-      extends UnaryExpression {
-    // plan-time, for all construction paths (Column API + SQL registry)
-    require(maxHamming >= 0 && maxHamming <= 31,
-      s"maxHamming must be in [0,31], got $maxHamming")
-    override def prettyName: String = "simhash_buckets"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.simhashBucketKeys(v.asInstanceOf[Long], maxHamming)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.simhashBucketKeys($c, $maxHamming)")
-    override protected def withNewChildInternal(c: Expression): SimhashBuckets =
-      copy(child = c)
-  }
-
-  /** Banded hyperplane LSH keys (array<float> -> array<long>). */
-  case class LshBandKeys(child: Expression, numBands: Int, bitsPerBand: Int,
-                         dim: Int) extends UnaryExpression {
-    override def prettyName: String = "lsh_band_keys"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.lshBandKeys(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        numBands, bitsPerBand, dim)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.lshBandKeys($c, $numBands, $bitsPerBand, $dim)")
-    override protected def withNewChildInternal(c: Expression): LshBandKeys =
-      copy(child = c)
-  }
-
-  /** Random-hyperplane sign signature (array<float> -> long). Planes are
-    * derived from (nbits, dim) deterministically and cached per JVM, so
-    * the plan carries two ints, not the plane matrix.
-    */
-  case class LshSignature(child: Expression, nbits: Int, dim: Int)
-      extends UnaryExpression {
-    override def prettyName: String = "lsh_signature"
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(v: Any): Any =
-      kernels.lshSignature(
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], nbits, dim)
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.kernels.lshSignature($c, $nbits, $dim)")
-    override protected def withNewChildInternal(c: Expression): LshSignature =
-      copy(child = c)
   }
 
   /** Nearest-centroid assignment for IVF indexes (array<float> -> int).
@@ -851,81 +704,24 @@ object expressions {
       copy(child = c)
   }
 
-  // Column wrappers
+  // Column forms of the kernels and classes above that have no
+  // `functions` twin
 
-  // wrappers cast inputs explicitly (catalyst.SketchAccessor shows the
-  // ImplicitCastInputTypes alternative)
-
-  def token_hash64(c: Column): Column =
-    catalyst.aggColExpr(TokenHash64(catalyst.expr(c.cast("int"))))
-
-  def fnv1a64(c: Column): Column =
-    catalyst.aggColExpr(Fnv1a64(catalyst.expr(c.cast("string"))))
-
-  def bloom_probe(filter: BlockedBloomFilter)(hash: Column): Column =
-    catalyst.aggColExpr(BloomProbe(filter, catalyst.expr(hash.cast("bigint"))))
-
-  def bloom_probe_broadcast(
-      bcast: org.apache.spark.broadcast.Broadcast[BlockedBloomFilter])(
-      hash: Column): Column =
-    catalyst.aggColExpr(
-      BloomProbeBroadcast(bcast, catalyst.expr(hash.cast("bigint"))))
-
-  def tokenize(c: Column): Column =
-    catalyst.aggColExpr(Tokenize(catalyst.expr(c.cast("string"))))
-
-  def canonical_url(c: Column): Column =
-    catalyst.aggColExpr(CanonicalUrl(catalyst.expr(c.cast("string"))))
-
-  def word_ngrams(c: Column, n: Int): Column =
-    catalyst.aggColExpr(WordNgrams(catalyst.expr(c.cast("string")), n))
-
-  def word_ngrams_all(c: Column, n: Int): Column =
-    catalyst.aggColExpr(WordNgramsAll(catalyst.expr(c.cast("string")), n))
-
-  def gopher_signals(c: Column): Column =
-    catalyst.aggColExpr(GopherSignals(catalyst.expr(c.cast("string"))))
+  def word_ngrams(c: Column, n: Int): Column = Kernel.WordNgrams(c)(n)
+  def word_ngrams_all(c: Column, n: Int): Column = Kernel.WordNgramsAll(c)(n)
+  def gram_hashes(c: Column, n: Int): Column = Kernel.GramHashes(c)(n)
+  def gram_at(text: Column, pos: Column, n: Int): Column =
+    Kernel.GramAt(text, pos)(n)
+  def seg_token_count(c: Column): Column = Kernel.SegTokenCount(c)()
+  def gopher_signals(c: Column): Column = Kernel.GopherSignals(c)()
+  def canonical_url(c: Column): Column = Kernel.CanonicalUrl(c)()
+  def lang_id(c: Column): Column = Kernel.LangId(c)()
+  def rolling_fingerprint(c: Column): Column = Kernel.RollingFingerprint(c)()
+  def simhash64_hashes(c: Column): Column = Kernel.Simhash64Hashes(c)()
 
   def blocklist_matches(c: Column, words: Seq[String]): Column =
     catalyst.aggColExpr(
       BlocklistMatches(catalyst.expr(c.cast("string")), words))
-
-  def gram_hashes(c: Column, n: Int): Column =
-    catalyst.aggColExpr(GramHashes(catalyst.expr(c.cast("string")), n))
-
-  def gram_at(text: Column, pos: Column, n: Int): Column =
-    catalyst.aggColExpr(GramAt(catalyst.expr(text.cast("string")),
-      catalyst.expr(pos.cast("int")), n))
-
-  def seg_token_count(c: Column): Column =
-    catalyst.aggColExpr(SegTokenCount(catalyst.expr(c.cast("string"))))
-
-  // token/hash array kernels read getInt/getLong positionally — coerce
-  // like the float wrappers below, or a mistyped array column (e.g.
-  // tokens stored as array<bigint>) reads at the wrong stride: silent
-  // garbage, not an error
-  private def intArr(c: Column): Expression =
-    catalyst.expr(c.cast("array<int>"))
-  private def longArr(c: Column): Expression =
-    catalyst.expr(c.cast("array<bigint>"))
-
-  def minhash_signature(c: Column, numPerms: Int): Column =
-    catalyst.aggColExpr(MinhashSignature(intArr(c), numPerms))
-
-  def minhash_bands(c: Column, numBands: Int, rowsPerBand: Int): Column =
-    catalyst.aggColExpr(MinhashBands(longArr(c), numBands, rowsPerBand))
-
-  def simhash64(c: Column): Column =
-    catalyst.aggColExpr(Simhash64(intArr(c)))
-
-  def token_shingles(c: Column, n: Int): Column =
-    catalyst.aggColExpr(TokenShingles(intArr(c), n))
-
-  def simhash64_hashes(c: Column): Column =
-    catalyst.aggColExpr(Simhash64Hashes(longArr(c)))
-
-  def minhash_signature_hashes(c: Column, numPerms: Int): Column =
-    catalyst.aggColExpr(MinhashSignatureHashes(longArr(c), numPerms))
 
   /** No cast wrapper on purpose: the expression type-checks its
     * children at plan time (two array<int> or two array<long>), and the
@@ -936,23 +732,8 @@ object expressions {
     catalyst.aggColExpr(SortedIntersectSize(catalyst.expr(a),
       catalyst.expr(b)))
 
-  def hamming64(a: Column, b: Column): Column =
-    catalyst.aggColExpr(Hamming64(
-      catalyst.expr(a.cast("bigint")), catalyst.expr(b.cast("bigint"))))
-
-  def minhash_jaccard(a: Column, b: Column): Column =
-    catalyst.aggColExpr(MinhashJaccard(longArr(a), longArr(b)))
-
-  // vector kernels read ArrayData.toFloatArray — coerce array<double>
-  // (or any numeric array) inputs so they don't CCE / read garbage
   private def floatArr(c: Column): Expression =
     catalyst.expr(c.cast("array<float>"))
-
-  def cosine_sim(a: Column, b: Column): Column =
-    catalyst.aggColExpr(CosineSim(floatArr(a), floatArr(b)))
-
-  def lsh_signature(c: Column, nbits: Int, dim: Int): Column =
-    catalyst.aggColExpr(LshSignature(floatArr(c), nbits, dim))
 
   def ivf_assign(c: Column, centroids: Array[Array[Double]]): Column =
     catalyst.aggColExpr(IvfAssign(floatArr(c), centroids))
@@ -960,17 +741,4 @@ object expressions {
   def ivf_probes(c: Column, centroids: Array[Array[Double]],
                  nprobe: Int): Column =
     catalyst.aggColExpr(IvfProbes(floatArr(c), centroids, nprobe))
-
-  def lang_id(c: Column): Column =
-    catalyst.aggColExpr(LangId(catalyst.expr(c.cast("string"))))
-
-  def rolling_fingerprint(c: Column): Column =
-    catalyst.aggColExpr(RollingFingerprint(catalyst.expr(c.cast("string"))))
-
-  def simhash_buckets(c: Column, maxHamming: Int): Column =
-    catalyst.aggColExpr(SimhashBuckets(catalyst.expr(c.cast("bigint")), maxHamming))
-
-  def lsh_band_keys(c: Column, numBands: Int, bitsPerBand: Int,
-                    dim: Int): Column =
-    catalyst.aggColExpr(LshBandKeys(floatArr(c), numBands, bitsPerBand, dim))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{col, explode, posexplode}
 import org.apache.spark.sql.types._
@@ -38,61 +35,34 @@ object sharded {
     if (numShards == 1) 0
     else (h >>> (64 - Integer.numberOfTrailingZeros(numShards))).toInt
 
+  /** The sharded build over token arrays: its buffer, merge and wire
+    * format come from its kind, and its output is one reference-format
+    * dump per shard.
+    */
   case class BloomShardedAggregate(
       child: Expression, numShards: Int, nbitsPerShard: Long, k: Int,
       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-      extends TypedImperativeAggregate[Array[BlockedBloomFilter]]
-      with UnaryLike[Expression] {
-    require(Integer.bitCount(numShards) == 1, "numShards must be a power of 2")
+      extends catalyst.TokenArrayAggregate[Array[BlockedBloomFilter]] {
+    val kind: catalyst.SketchKind.BloomSharded =
+      catalyst.SketchKind.BloomSharded(numShards, nbitsPerShard, k)
     override def prettyName: String = "bloom_agg_sharded"
     override def dataType: DataType = ArrayType(BinaryType, false)
-    override def nullable: Boolean = false
 
-    def createAggregationBuffer(): Array[BlockedBloomFilter] =
-      Array.fill(numShards)(BlockedBloomFilter(nbitsPerShard, k))
-
-    override def update(b: Array[BlockedBloomFilter],
-                        input: InternalRow): Array[BlockedBloomFilter] = {
-      val v = child.eval(input)
-      if (v != null) {
-        val arr = v.asInstanceOf[ArrayData]
-        var i = 0
-        val n = arr.numElements()
-        while (i < n) {
-          if (!arr.isNullAt(i)) {
-            val h = Hashing.tokenHash(arr.getInt(i))
-            b(shardOf(h, numShards)).add(h)
-          }
-          i += 1
-        }
-      }
-      b
-    }
-
-    def merge(a: Array[BlockedBloomFilter],
-              b: Array[BlockedBloomFilter]): Array[BlockedBloomFilter] = {
+    protected def updateArray(b: Array[BlockedBloomFilter],
+                              arr: ArrayData): Unit = {
       var i = 0
-      while (i < a.length) { a(i).union(b(i)); i += 1 }
-      a
+      val n = arr.numElements()
+      while (i < n) {
+        if (!arr.isNullAt(i)) {
+          val h = Hashing.tokenHash(arr.getInt(i))
+          b(shardOf(h, numShards)).add(h)
+        }
+        i += 1
+      }
     }
 
-    def eval(b: Array[BlockedBloomFilter]): Any =
+    override def eval(b: Array[BlockedBloomFilter]): Any =
       new GenericArrayData(b.map(f => BloomIO.dump(f): Any))
-
-    def serialize(b: Array[BlockedBloomFilter]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val dos = new java.io.DataOutputStream(out)
-      dos.writeInt(b.length)
-      b.foreach(f => BloomIO.dumpTo(dos, f))
-      out.toByteArray
-    }
-
-    def deserialize(bytes: Array[Byte]): Array[BlockedBloomFilter] = {
-      val in = new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val n = in.readInt()
-      Array.fill(n)(BloomIO.loadFrom(in))
-    }
 
     def withNewMutableAggBufferOffset(o: Int): BloomShardedAggregate =
       copy(mutableAggBufferOffset = o)

@@ -9,9 +9,10 @@ import graft.core._
 /** SQL surface: every sketch operator callable from `spark.sql(...)`.
   *
   * One table of graft_* functions in three parts — aggregates, native
-  * scalar expressions and sketch accessors (the [[catalyst.Accessor]]
-  * ops) — each with its usage string and each built from its Column
-  * form, and two entry points that register all of it:
+  * scalar kernels (the [[expressions.Kernel]] ops) and sketch accessors
+  * (the [[catalyst.Accessor]] ops) — each with its usage string and each
+  * built from its Column form, and two entry points that register all
+  * of it:
   *  - `GraftExtensions` (for `spark.sql.extensions=graft.functions.
   *    GraftExtensions` in spark-submit conf) at session build;
   *  - `sql.registerAll(spark)` at runtime into a live session.
@@ -74,7 +75,6 @@ object sql {
     fn(name, usage) { a => { case n if n == arity => build((0 until n).map(a.col)) } }
 
   private val F = functions
-  private val E = expressions
 
   /** name -> (usage, builder) for the aggregate expressions. */
   val aggregateBuilders: Map[String, (String, Builder)] = Map(
@@ -208,86 +208,23 @@ object sql {
       case 3 => F.topk_by_score(a.col(0), a.col(1), a.int(2, "k"))
     }})
 
-  /** name -> (usage, builder) for the native scalar expressions (codegen,
-    * no UDF dispatch — the SQL lift of the graft.functions.expressions
-    * Column forms).
+  /** name -> (usage, builder) for the native scalar kernels: `sqlName`
+    * per [[expressions.Kernel]] op, the op's Column form over its column
+    * arguments, then its int literals (a literal with a default may be
+    * left out).
     */
-  val scalarBuilders: Map[String, (String, Builder)] = Map(
-    columns("graft_tokenize", "(text) - deterministic token ids, array<int>", 1)(
-      c => E.tokenize(c(0))),
-    columns("graft_token_hash", "(token_id) - splitmix64 of an int token", 1)(
-      c => E.token_hash64(c(0))),
-    columns("graft_fnv64", "(str) - 64-bit FNV-1a", 1)(c => E.fnv1a64(c(0))),
-    fn("graft_minhash_signature",
-       "(tokens[, numPerms]) - MinHash signature, array<long>") { a => {
-      case 1 => F.minhash_signature()(a.col(0))
-      case 2 => F.minhash_signature(a.int(1, "numPerms"))(a.col(0))
-    }},
-    fn("graft_minhash_bands",
-       "(sig, numBands, rowsPerBand) - LSH band keys, array<long>") { a => {
-      case 3 => E.minhash_bands(a.col(0), a.int(1, "numBands"),
-        a.int(2, "rowsPerBand"))
-    }},
-    columns("graft_simhash", "(tokens) - 64-bit SimHash fingerprint", 1)(
-      c => E.simhash64(c(0))),
-    fn("graft_simhash_buckets",
-       "(fp, maxHamming) - two-level pigeonhole bucket keys, array<long>") { a => {
-      case 2 => E.simhash_buckets(a.col(0), a.int(1, "maxHamming"))
-    }},
-    columns("graft_hamming64",
-       "(a, b) - Hamming distance of two int64 fingerprints", 2)(
-      c => E.hamming64(c(0), c(1))),
-    columns("graft_minhash_jaccard", "(sigA, sigB) - MinHash Jaccard estimate",
-      2)(c => E.minhash_jaccard(c(0), c(1))),
-    columns("graft_cosine_sim",
-       "(a, b) - cosine similarity of two array<float>", 2)(
-      c => E.cosine_sim(c(0), c(1))),
-    fn("graft_token_shingles",
-       "(tokens, n) - rolling n-gram shingle hashes, array<long>") { a => {
-      case 2 => E.token_shingles(a.col(0), a.int(1, "n"))
-    }},
-    columns("graft_lang_id", "(text) - heuristic language id", 1)(
-      c => E.lang_id(c(0))),
-    columns("graft_canonical_url",
-       "(url) - canonical URL form (dedup key): fragment/tracking-" +
-         "param/default-port/www/trailing-slash normalization", 1)(
-      c => E.canonical_url(c(0))),
-    columns("graft_rolling_fp",
-       "(text) - Karp-Rabin rolling-window fingerprint", 1)(
-      c => E.rolling_fingerprint(c(0))),
-    fn("graft_lsh_band_keys",
-       "(emb, numBands, bitsPerBand, dim) - hyperplane band keys") { a => {
-      case 4 => E.lsh_band_keys(a.col(0), a.int(1, "numBands"),
-        a.int(2, "bitsPerBand"), a.int(3, "dim"))
-    }},
-    fn("graft_word_ngrams",
-       "(text, n) - distinct word n-grams, array<string>") { a => {
-      case 2 => E.word_ngrams(a.col(0), a.int(1, "n"))
-    }},
-    fn("graft_word_ngrams_all",
-       "(text, n) - ALL word n-grams in position order, duplicates " +
-         "kept (LM occurrence stream), array<string>") { a => {
-      case 2 => E.word_ngrams_all(a.col(0), a.int(1, "n"))
-    }},
-    columns("graft_seg_token_count",
-       "(text) - BPE-style pre-tokenizer token count (alnum runs + " +
-         "one per other non-space char), long", 1)(
-      c => E.seg_token_count(c(0))),
-    columns("graft_gopher_signals",
-       "(text) - Gopher quality raw signals, array<long> of 9: " +
-         "[n_words, sum_word_codepoints, n_alpha_words, n_stopwords, " +
-         "n_lines, n_bullet_lines, n_ellipsis_lines, n_hash_chars, " +
-         "n_ellipsis_occurrences]", 1)(c => E.gopher_signals(c(0))),
-    fn("graft_gram_hashes",
-       "(text, n) - position-ordered rolling word-n-gram hashes, " +
-         "array<long> (duplicate-span seeds)") { a => {
-      case 2 => E.gram_hashes(a.col(0), a.int(1, "n"))
-    }},
-    fn("graft_gram_at",
-       "(text, pos, n) - the word n-gram at word index pos, string " +
-         "(span-candidate verifier; null out of range)") { a => {
-      case 3 => E.gram_at(a.col(0), a.col(1), a.int(2, "n"))
-    }})
+  val scalarBuilders: Map[String, (String, Builder)] =
+    expressions.Kernel.all.map { op =>
+      val cols = op.inputs.length
+      val most = cols + op.literals.length
+      val least = most - op.literals.count(_.default.nonEmpty)
+      fn(op.sqlName, op.usage) { a => {
+        case n if n >= least && n <= most =>
+          val literals = op.literals.zipWithIndex.map { case (l, i) =>
+            if (cols + i < n) a.int(cols + i, l.name) else l.default.get }
+          op((0 until cols).map(a.col): _*)(literals: _*)
+      }}
+    }.toMap
 
   /** name -> (usage, builder) for the sketch accessors: `graft_<name>`
     * per [[catalyst.Accessor]] op, the op's Column form. Each call loads

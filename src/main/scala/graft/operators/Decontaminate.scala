@@ -47,10 +47,8 @@ object Decontaminate {
     * WINDOW — O(len^2) per document, measured as 42 s to explode 36M
     * n-grams at 32 cores vs ~2 s for the kernel.
     */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 1, "ngram length must be >= 1")
+  def wordNgrams(text: Column, n: Int): Column =
     graft.functions.expressions.word_ngrams(text, n)
-  }
 
   /** Bloom filter over the eval corpus's distinct n-grams (fnv1a64 of
     * the space-joined n-gram string), built with the partial->final

@@ -110,7 +110,7 @@ object Dedup {
   private def tokenSets(tokenDocs: DataFrame, ngram: Int = 1): DataFrame = {
     val elems =
       if (ngram == 1) col("tokens")
-      else graft.functions.expressions.token_shingles(col("tokens"), ngram)
+      else F.token_shingles(col("tokens"), ngram)
     tokenDocs.select(col("doc_id"),
         array_sort(array_distinct(elems)).as("tokset"))
       .withColumn("set_size", size(col("tokset")))
@@ -242,11 +242,11 @@ object Dedup {
     val numPerms = numBands * rowsPerBand
     val elems =
       if (ngram == 1) col("tokens")
-      else graft.functions.expressions.token_shingles(col("tokens"), ngram)
+      else F.token_shingles(col("tokens"), ngram)
     val sigExpr =
       if (ngram == 1) F.minhash_signature(numPerms)(col("tokens"))
-      else graft.functions.expressions.minhash_signature_hashes(
-        graft.functions.expressions.token_shingles(col("tokens"), ngram),
+      else F.minhash_signature_hashes(
+        F.token_shingles(col("tokens"), ngram),
         numPerms)
     tokenDocs.select(col("doc_id"), col("tokens"))
       .withColumn("sz", size(array_distinct(elems)))
@@ -313,7 +313,7 @@ object Dedup {
   private def simhashFp(ngram: Int): Column =
     if (ngram == 1) F.simhash64(col("tokens"))
     else graft.functions.expressions.simhash64_hashes(
-      graft.functions.expressions.token_shingles(col("tokens"), ngram))
+      F.token_shingles(col("tokens"), ngram))
 
   private def simhashKeyed(tokenDocs: DataFrame, maxHamming: Int,
                            ngram: Int = 1): DataFrame =
@@ -979,12 +979,12 @@ object Dedup {
     val toks = docTokens(docs)
     val elems =
       if (ngram == 1) col("tokens")
-      else graft.functions.expressions.token_shingles(col("tokens"), ngram)
+      else F.token_shingles(col("tokens"), ngram)
     val sigExpr =
       if (ngram == 1)
         F.minhash_signature(numBands * rowsPerBand)(col("tokens"))
-      else graft.functions.expressions.minhash_signature_hashes(
-        graft.functions.expressions.token_shingles(col("tokens"), ngram),
+      else F.minhash_signature_hashes(
+        F.token_shingles(col("tokens"), ngram),
         numBands * rowsPerBand)
     val withSets = toks
       .select(col("doc_id"),

@@ -159,7 +159,6 @@ object SpanDedup {
     */
   def writeSpanIndex(docs: DataFrame, dir: String, minLen: Int = 50,
                      textCol: String = "text",
-                     idCol: String = "doc_id",
                      append: Boolean = false): Unit =
     writeIndex(docs, Dir(dir), minLen, textCol, append)
 

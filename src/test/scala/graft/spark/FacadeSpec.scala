@@ -299,6 +299,160 @@ class FacadeSpec extends AnyFunSuite {
     check(rt)
   }
 
+  test("every native kernel: one op list, the same value on both surfaces") {
+    import graft.core.{Hashing, MinHash}
+    import graft.functions.{expressions => E, kernels}
+    import graft.functions.expressions.Kernel
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.sql.registerAll(spark)
+    val sig = (0 until 16).map(i => Hashing.at(3, i))
+    val input = Seq(
+      ("text", StringType, "The cat sat on the mat. • hello ... world # ok"),
+      ("url", StringType, "http://www.Example.com:80/a/?utm_source=x&b=2#frag"),
+      ("tok", IntegerType, 42), ("pos", IntegerType, 1),
+      ("tokens", ArrayType(IntegerType, false), Seq(1, 2, 3, 2, 5)),
+      ("hashes", ArrayType(LongType, false), Seq(7L, -3L, 7L, 99L)),
+      ("sig", ArrayType(LongType, false), sig),
+      ("sig2", ArrayType(LongType, false),
+        sig.zipWithIndex.map { case (h, i) => if (i % 3 == 0) h + 1 else h }),
+      ("fp", LongType, 123456789L), ("fp2", LongType, 987654321L),
+      ("emb", ArrayType(FloatType, false), Seq(0.5f, -1f, 2f, 0.25f)),
+      ("emb2", ArrayType(FloatType, false), Seq(1f, 0f, -2f, 0.5f)))
+    // the Catalyst value of each input, as a kernel reads it
+    val value: Map[String, Any] = input.map { case (name, _, v) => name -> (v match {
+      case s: String => UTF8String.fromString(s)
+      case xs: Seq[_] => new GenericArrayData(xs.toArray[Any])
+      case o => o
+    })}.toMap
+    def text(v: Any) = v.asInstanceOf[UTF8String]
+    def arr(v: Any) = v.asInstanceOf[GenericArrayData]
+    // per op: its arguments (columns, then literals), its Column form over
+    // the column arguments, the kernel called directly and the unaliased
+    // column name, written out: callers read result columns by that name
+    val cases: Seq[(String, Seq[Column] => Column, Seq[Any] => Any, String)] = Seq(
+      ("tok", c => F.token_hash64(c(0)),
+        a => Hashing.splitmix64(a(0).asInstanceOf[Int].toLong),
+        "token_hash64(CAST(tok AS INT))"),
+      ("text", c => F.fnv_hash64_native(c(0)), a => Hashing.fnv1a64(text(a(0)).getBytes),
+        "fnv1a64(CAST(text AS STRING))"),
+      ("text, 2", c => E.word_ngrams(c(0), 2), a => kernels.wordNgrams(text(a(0)), 2),
+        "graft_word_ngrams(CAST(text AS STRING))"),
+      ("text, 2", c => E.word_ngrams_all(c(0), 2),
+        a => kernels.wordNgramsAll(text(a(0)), 2),
+        "graft_word_ngrams_all(CAST(text AS STRING))"),
+      ("text, 2", c => E.gram_hashes(c(0), 2), a => kernels.gramHashes(text(a(0)), 2),
+        "graft_gram_hashes(CAST(text AS STRING))"),
+      ("text, pos, 2", c => E.gram_at(c(0), c(1), 2),
+        a => kernels.gramAt(text(a(0)), a(1).asInstanceOf[Int], 2),
+        "graft_gram_at(CAST(text AS STRING), CAST(pos AS INT))"),
+      ("text", c => E.seg_token_count(c(0)), a => kernels.segTokenCount(text(a(0))),
+        "graft_seg_token_count(CAST(text AS STRING))"),
+      ("text", c => E.gopher_signals(c(0)), a => kernels.gopherSignals(text(a(0))),
+        "graft_gopher_signals(CAST(text AS STRING))"),
+      ("text", c => F.tokenize(c(0)), a => kernels.tokenizeArrayOrEmpty(text(a(0))),
+        "graft_tokenize(CAST(text AS STRING))"),
+      ("tokens, 16", c => F.minhash_signature(16)(c(0)),
+        a => kernels.minhashSignature(arr(a(0)), 16), "minhash_signature(tokens)"),
+      ("sig, 4, 4", c => F.minhash_bands(4, 4)(c(0)),
+        a => kernels.minhashBands(arr(a(0)), 4, 4), "minhash_bands(sig)"),
+      ("tokens, 2", c => F.token_shingles(c(0), 2),
+        a => kernels.tokenShingles(arr(a(0)), 2), "token_shingles(tokens)"),
+      ("hashes, 16", c => F.minhash_signature_hashes(c(0), 16),
+        a => kernels.minhashSignatureHashes(arr(a(0)), 16),
+        "minhash_signature_hashes(hashes)"),
+      ("tokens", c => F.simhash64(c(0)), a => kernels.simhash64(arr(a(0))),
+        "simhash64(tokens)"),
+      ("text", c => E.lang_id(c(0)), a => kernels.langId(text(a(0))),
+        "graft_lang_id(CAST(text AS STRING))"),
+      ("url", c => E.canonical_url(c(0)), a => kernels.canonicalUrl(text(a(0))),
+        "graft_canonical_url(CAST(url AS STRING))"),
+      ("text", c => E.rolling_fingerprint(c(0)), a => kernels.rollingFp(text(a(0))),
+        "graft_rolling_fp(CAST(text AS STRING))"),
+      ("hashes", c => E.simhash64_hashes(c(0)), a => kernels.simhash64Hashes(arr(a(0))),
+        "simhash64_hashes(hashes)"),
+      ("fp, fp2", c => F.hamming64(c(0), c(1)),
+        a => java.lang.Long.bitCount(a(0).asInstanceOf[Long] ^ a(1).asInstanceOf[Long]),
+        "hamming64(CAST(fp AS BIGINT), CAST(fp2 AS BIGINT))"),
+      ("sig, sig2", c => F.minhash_jaccard(c(0), c(1)),
+        a => MinHash.estimateJaccard(arr(a(0)).toLongArray(), arr(a(1)).toLongArray()),
+        "graft_minhash_jaccard(sig, sig2)"),
+      ("emb, emb2", c => F.cosine_sim(c(0), c(1)),
+        a => kernels.cosineF(arr(a(0)), arr(a(1))), "cosine_sim(emb, emb2)"),
+      ("fp, 3", c => F.simhash_buckets(c(0), 3),
+        a => kernels.simhashBucketKeys(a(0).asInstanceOf[Long], 3),
+        "simhash_buckets(CAST(fp AS BIGINT))"),
+      ("emb, 4, 8, 4", c => F.lsh_band_keys(c(0), 4, 8, 4),
+        a => kernels.lshBandKeys(arr(a(0)), 4, 8, 4), "lsh_band_keys(emb)"),
+      ("emb, 16, 4", c => F.lsh_signature(c(0), 16, 4),
+        a => kernels.lshSignature(arr(a(0)), 16, 4), "lsh_signature(emb)"))
+    assert(cases.length == Kernel.all.length)
+    // the text ops read a null text as empty; every other argument is
+    // null in, null out
+    assert(Kernel.all.filter(_.inputs.exists(_.takesNull)).map(_.prettyName) ==
+      Seq("graft_word_ngrams", "graft_word_ngrams_all", "graft_gram_hashes",
+        "graft_gram_at", "graft_seg_token_count", "graft_gopher_signals",
+        "graft_tokenize"))
+    assert(Kernel.GramAt.inputs.map(_.takesNull) == Seq(true, false))
+    val schema = StructType(input.flatMap { case (name, t, _) =>
+      Seq(StructField(name, t), StructField("null_" + name, t)) })
+    val row = Row.fromSeq(input.flatMap { case (_, _, v) => Seq(v, null) })
+    def norm(v: Any): Any = v match {
+      case g: GenericArrayData => g.array.toSeq.map(norm)
+      case s: UTF8String => s.toString
+      case xs: scala.collection.Seq[_] => xs.map(norm)
+      case o => o
+    }
+    // an RDD-backed view runs generated code; a local one is folded by
+    // the optimizer through the interpreted eval
+    for ((view, df) <- Seq(
+        "gen" -> spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema),
+        "local" -> spark.createDataFrame(java.util.Arrays.asList(row), schema))) {
+      df.createOrReplaceTempView("k")
+      for ((op, (args, column, direct, name)) <- Kernel.all.zip(cases)) {
+        val (cols, lits) = args.split(", ").toSeq.splitAt(op.inputs.length)
+        // the full call, then one call per argument with that column null
+        val calls = cols +: cols.indices.map(i => cols.updated(i, "null_" + cols(i)))
+        val viaSql = spark.sql("SELECT " + calls.map(c =>
+          s"${op.sqlName}(${(c ++ lits).mkString(", ")})").mkString(", ") + " FROM k")
+        val viaCol = df.select(calls.map(c => column(c.map(col))): _*)
+        for (got <- Seq(viaSql, viaCol)) {
+          assert(got.columns.head == name, s"$view ${op.prettyName}")
+          assert(got.schema.head.dataType == op.dataType, s"$view ${op.prettyName}")
+          val r = got.head()
+          val full = cols.map(value)
+          assert(norm(r.get(0)) == norm(direct(full)), s"$view ${op.prettyName}($args)")
+          for (i <- cols.indices) {
+            val want = if (op.inputs(i).takesNull) norm(direct(full.updated(i, null)))
+                       else null
+            assert(norm(r.get(i + 1)) == want,
+              s"$view ${op.prettyName} with a null argument $i")
+          }
+        }
+      }
+    }
+    // the SQL default numPerms is the Column default, 128
+    for ((op, c, arg) <- Seq((Kernel.MinhashSignature, F.minhash_signature()(col("tokens")),
+        "tokens"), (Kernel.MinhashSignatureHashes, F.minhash_signature_hashes(col("hashes")),
+        "hashes"))) {
+      val want = spark.table("k").select(c).head().get(0)
+      assert(spark.sql(s"SELECT ${op.sqlName}($arg) FROM k").head().get(0) == want)
+      assert(spark.sql(s"SELECT ${op.sqlName}($arg, 128) FROM k").head().get(0) == want)
+    }
+    for (op <- Kernel.all) {
+      val u = spark.sql(s"DESCRIBE FUNCTION ${op.sqlName}").collect()
+        .map(_.getString(0)).mkString("\n")
+      assert(u.contains(op.sqlName + op.usage), u)
+    }
+  }
+
   test("typed Dataset view works through Dataset.groupByKey") {
     val spark = SparkSession.builder()
       .master("local[2]")
@@ -609,14 +763,34 @@ class FacadeSpec extends AnyFunSuite {
         (() => F.freq_agg_tokens(tokens, 4), "freq sketch k 4"),
         (() => F.tdigest_agg(value, 5.0), "compression 5.0"),
         (() => F.kll_agg(value, 4), "KLL k=4"),
-        (() => F.bloom_union_agg(col("s"), Long.MaxValue, 3), "MaxBits"))
+        (() => F.bloom_union_agg(col("s"), Long.MaxValue, 3), "MaxBits"),
+        // kernel literals, checked when the expression is built
+        (() => F.minhash_signature(-1)(tokens), "numPerms must be in [1, 512], got -1"),
+        (() => F.minhash_signature_hashes(col("h"), 600),
+          "numPerms must be in [1, 512], got 600"),
+        (() => F.minhash_bands(0, 4)(col("s")), "numBands must be >= 1, got 0"),
+        (() => F.minhash_bands(4, 0)(col("s")), "rowsPerBand must be >= 1, got 0"),
+        (() => F.token_shingles(tokens, 0), "n must be >= 1, got 0"),
+        (() => F.simhash_buckets(col("h"), 32), "maxHamming must be in [0, 31], got 32"),
+        (() => F.lsh_band_keys(col("e"), 0, 8, 4), "numBands must be >= 1, got 0"),
+        (() => F.lsh_band_keys(col("e"), 2, 60, 4), "bitsPerBand must be in [1, 56], got 60"),
+        (() => F.lsh_band_keys(col("e"), 4, 8, 0), "dim must be >= 1, got 0"),
+        (() => F.lsh_signature(col("e"), 128, 4), "nbits must be in [1, 64], got 128"),
+        (() => F.lsh_signature(col("e"), 0, 4), "nbits must be in [1, 64], got 0"))
       columns.foreach { case (build, why) =>
         val e = intercept[IllegalArgumentException](build())
         assert(e.getMessage.contains(why), e.getMessage)
       }
-      val e = intercept[Exception](
-        spark.sql("SELECT graft_hll_agg_tokens(tokens, 99) FROM t").collect())
-      assert(causes(e).exists(_.contains("HLL precision 99")), causes(e))
+      for ((call, why) <- Seq(
+          ("graft_hll_agg_tokens(tokens, 99)", "HLL precision 99"),
+          ("graft_minhash_signature(tokens, 1000)", "numPerms must be in [1, 512]"),
+          ("graft_minhash_signature(tokens, -1)", "numPerms must be in [1, 512]"),
+          ("graft_minhash_bands(array(1L, 2L), 0, 4)", "numBands must be >= 1"),
+          ("graft_lsh_band_keys(array(1.0, 2.0), 2, 60, 4)",
+            "bitsPerBand must be in [1, 56]"))) {
+        val e = intercept[Exception](spark.sql(s"SELECT $call FROM t").collect())
+        assert(causes(e).exists(_.contains(why)), causes(e))
+      }
     }
     assert(jobs.isEmpty, s"jobs started: $jobs")
   }

@@ -390,6 +390,93 @@ class PlanSpec extends AnyFunSuite {
       s"allowlist entries with no udf left: ${allowed.keySet -- used}")
   }
 
+  test("every kernel op codegens to its static call, literals inlined") {
+    import graft.functions.{expressions => E}
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.execution.debug.codegenString
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("text", StringType),
+      StructField("tok", IntegerType), StructField("pos", IntegerType),
+      StructField("tokens", ArrayType(IntegerType)),
+      StructField("hashes", ArrayType(LongType)), StructField("fp", LongType),
+      StructField("emb", ArrayType(FloatType))))
+    val row = Row("a b c", 1, 0, Seq(1, 2), Seq(3L, 4L), 5L, Seq(1f, 2f))
+    // an RDD-backed frame, so the projection runs whole-stage codegen
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
+    val (t, h) = (col("text"), col("hashes"))
+    // `@` stands for a generated argument
+    val k = "graft.functions.kernels."
+    val calls: Seq[(Column, String)] = Seq(
+      F.token_hash64(col("tok")) -> "graft.core.Hashing.splitmix64((long)(@))",
+      F.fnv_hash64_native(t) -> "graft.core.Hashing.fnv1a64(@.getBytes())",
+      E.word_ngrams(t, 3) -> s"${k}wordNgrams(@, 3)",
+      E.word_ngrams_all(t, 4) -> s"${k}wordNgramsAll(@, 4)",
+      E.gram_hashes(t, 5) -> s"${k}gramHashes(@, 5)",
+      E.gram_at(t, col("pos"), 6) -> s"${k}gramAt(@, @, 6)",
+      E.seg_token_count(t) -> s"${k}segTokenCount(@)",
+      E.gopher_signals(t) -> s"${k}gopherSignals(@)",
+      F.tokenize(t) -> s"${k}tokenizeArrayOrEmpty(@)",
+      F.minhash_signature(32)(col("tokens")) -> s"${k}minhashSignature(@, 32)",
+      F.minhash_bands(16, 8)(h) -> s"${k}minhashBands(@, 16, 8)",
+      F.token_shingles(col("tokens"), 7) -> s"${k}tokenShingles(@, 7)",
+      F.minhash_signature_hashes(h, 64) -> s"${k}minhashSignatureHashes(@, 64)",
+      F.simhash64(col("tokens")) -> s"${k}simhash64(@)",
+      E.lang_id(t) -> s"${k}langId(@)",
+      E.canonical_url(t) -> s"${k}canonicalUrl(@)",
+      E.rolling_fingerprint(t) -> s"${k}rollingFp(@)",
+      E.simhash64_hashes(h) -> s"${k}simhash64Hashes(@)",
+      F.hamming64(col("fp"), col("fp")) -> "java.lang.Long.bitCount(@ ^ @)",
+      F.minhash_jaccard(h, h) ->
+        "graft.core.MinHash.estimateJaccard(@.toLongArray(), @.toLongArray())",
+      F.cosine_sim(col("emb"), col("emb")) -> s"${k}cosineF(@, @)",
+      F.simhash_buckets(col("fp"), 9) -> s"${k}simhashBucketKeys(@, 9)",
+      F.lsh_band_keys(col("emb"), 4, 10, 2) -> s"${k}lshBandKeys(@, 4, 10, 2)",
+      F.lsh_signature(col("emb"), 11, 2) -> s"${k}lshSignature(@, 11, 2)")
+    assert(calls.length == E.Kernel.all.length)
+    for ((c, call) <- calls) {
+      val code = codegenString(df.select(c).queryExecution.executedPlan)
+      val pattern = call.split("@", -1).map(java.util.regex.Pattern.quote)
+        .mkString("[^;]+?").r
+      assert(pattern.findFirstIn(code).nonEmpty, s"no $call in:\n$code")
+      // called in place: not through a reference to the op
+      assert(!code.contains("expressions$Kernel"), code)
+    }
+  }
+
+  test("source scan: stateless kernels are Kernel ops, not expression classes") {
+    // one line each, with the reason, for the classes that stay
+    val allowed = Map(
+      "BloomProbe" -> "holds a filter",
+      "BloomProbeBroadcast" -> "holds a broadcast filter",
+      "ShardedProbe" -> "holds a sharded filter",
+      "ShardedProbeBroadcast" -> "holds a broadcast sharded filter",
+      "BloomMightContainDump" -> "caches the filter it loaded",
+      "BlocklistMatches" -> "holds the normalized word list",
+      "IvfAssign" -> "holds the centroids",
+      "IvfProbes" -> "holds the centroids",
+      "SortedIntersectSize" -> "picks its kernel from the child types")
+    val root = new java.io.File("src/main/scala/graft/functions")
+    assert(root.isDirectory, s"sources not found from ${root.getAbsolutePath}")
+    val decl = """case class (\w+)\([^)]*\)\s*extends (?:Unary|Binary)Expression""".r
+    val found = for {
+      file <- Option(root.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+      text = new String(java.nio.file.Files.readAllBytes(file.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      m <- decl.findAllMatchIn(text)
+    } yield m.group(1)
+    val stray = found.filterNot(allowed.contains)
+    assert(stray.isEmpty,
+      s"stateless expression classes (add a Kernel op instead): ${stray.mkString(", ")}")
+    assert(found.toSet == allowed.keySet,
+      s"allowlist entries with no class left: ${allowed.keySet -- found}")
+    // every extends is a declaration the pattern saw
+    val extendsCount = root.listFiles().filter(_.getName.endsWith(".scala")).map { f =>
+      "extends (Unary|Binary)Expression".r.findAllMatchIn(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).length
+    }.sum
+    assert(extendsCount == found.length, s"$extendsCount extends, ${found.length} classes")
+  }
+
   test("dedup self-joins reuse their exchanges (band shuffle computed once)") {
     // at sf0.001 everything broadcast-joins (no exchange at all) — force
     // the shuffle-join shape a large table gets; under AQE, reuse shows
