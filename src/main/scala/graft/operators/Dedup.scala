@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{functions => F}
 import graft.store.{Store, Tables => T}
-import graft.store.Store.Location
+import graft.store.Store.{Location, Table}
 import graft.store.Store.Location.{Catalog, Dir}
 
 /** Deduplication operators for training-data pipelines.
@@ -107,14 +108,21 @@ object Dedup {
     * Persisted toksets (dedup indexes) inherit the sorted form; element
     * sets, and therefore every Jaccard value, are unchanged.
     */
-  private def tokenSets(tokenDocs: DataFrame, ngram: Int = 1): DataFrame = {
-    val elems =
-      if (ngram == 1) col("tokens")
-      else F.token_shingles(col("tokens"), ngram)
+  private def tokenSets(tokenDocs: DataFrame, ngram: Int = 1): DataFrame =
     tokenDocs.select(col("doc_id"),
-        array_sort(array_distinct(elems)).as("tokset"))
+        array_sort(array_distinct(elements(ngram))).as("tokset"))
       .withColumn("set_size", size(col("tokset")))
-  }
+
+  /** A doc's Jaccard elements: its token ids at ngram 1, its shingle
+    * hashes above.
+    */
+  private def elements(ngram: Int): Column =
+    if (ngram == 1) col("tokens") else F.token_shingles(col("tokens"), ngram)
+
+  /** The MinHash signature of a doc's [[elements]]. */
+  private def minhashOf(numPerms: Int, ngram: Int): Column =
+    if (ngram == 1) F.minhash_signature(numPerms)(col("tokens"))
+    else F.minhash_signature_hashes(elements(ngram), numPerms)
 
   /** Size-compatibility residual for a Jaccard threshold: J(A,B) ≤
     * min(|A|,|B|)/max(|A|,|B|), so any pair with min < t·max can never
@@ -141,39 +149,39 @@ object Dedup {
 
   /** Exact verification of candidate (a, b) pairs against token sets:
     * joins both sides' sets, computes exact Jaccard, keeps >= threshold.
-    * Both joins shuffle the same tokenSets subplan on doc_id -> one
-    * computation, one ReusedExchange.
+    * The a-side and b-side sets may come from different tables
+    * (incremental dedup verifies new docs against the STORED corpus
+    * toksets); given the same tokenSets subplan, both joins shuffle it on
+    * doc_id -> one computation, one ReusedExchange.
     */
-  private def verifyJaccard(cands: DataFrame, sets: DataFrame,
-                            threshold: Double): DataFrame =
-    verifyJaccard2(cands, sets, sets, threshold)
-
-  /** Two-sided variant: the a-side and b-side sets may come from
-    * different tables (incremental dedup verifies new docs against the
-    * STORED corpus toksets).
-    */
-  private def verifyJaccard2(cands: DataFrame, setsA: DataFrame,
-                             setsB: DataFrame, threshold: Double): DataFrame =
-    cands
+  private def verifyJaccard(cands: DataFrame, setsA: DataFrame,
+                            setsB: DataFrame, threshold: Double): DataFrame =
+    atJaccard(cands
       .join(setsA.as("sa0"), col("a") === col("sa0.doc_id"))
       .join(setsB.as("sb0"), col("b") === col("sb0.doc_id"))
       .select(col("a"), col("b"),
         col("sa0.tokset").as("ta"), col("sa0.set_size").as("sa"),
-        col("sb0.tokset").as("tb"), col("sb0.set_size").as("sb"))
-      // size screen first: candidates whose set sizes already cap
-      // Jaccard under the threshold never pay the merge walk (the LSH
-      // callers pre-filter at the band join too; this covers the
-      // callers whose candidates arrive size-blind, e.g. the
-      // incremental vs-corpus tier)
-      .filter(sizeCompatible(col("sa"), col("sb"), threshold))
+        col("sb0.tokset").as("tb"), col("sb0.set_size").as("sb")),
+      "ta", "sa", "tb", "sb", threshold)
+      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
+
+  /** The rows of `df` whose sorted sets `ta` and `tb` (sizes `sa`, `sb`)
+    * are at Jaccard >= threshold, with it as `jaccard`.
+    */
+  private def atJaccard(df: DataFrame, ta: String, sa: String, tb: String,
+                        sb: String, threshold: Double): DataFrame =
+    // size screen first: candidates whose set sizes already cap
+    // Jaccard under the threshold never pay the merge walk (the LSH
+    // callers pre-filter at the band join too; this covers the
+    // callers whose candidates arrive size-blind, e.g. the
+    // incremental vs-corpus tier)
+    df.filter(sizeCompatible(col(sa), col(sb), threshold))
       // exact |A∩B| via the sorted merge walk (tokenSets sorts) — same
       // count array_intersect produced, no per-pair hash set
       .withColumn("common",
-        graft.functions.expressions.sorted_intersect_size(
-          col("ta"), col("tb")))
-      .withColumn("jaccard", jaccard(col("common"), col("sa"), col("sb")))
+        graft.functions.expressions.sorted_intersect_size(col(ta), col(tb)))
+      .withColumn("jaccard", jaccard(col("common"), col(sa), col(sb)))
       .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
 
   /** Exact pairwise Jaccard over token sets, emitting pairs with
     * similarity >= threshold — via df-ordered prefix filtering.
@@ -218,7 +226,7 @@ object Dedup {
           sizeCompatible(col("x.set_size"), col("y.set_size"), threshold))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    verifyJaccard(cands, sets, threshold)
+    verifyJaccard(cands, sets, sets, threshold)
   }
 
   /** MinHash + LSH near-dup pairs, verified with exact Jaccard.
@@ -238,22 +246,12 @@ object Dedup {
     * away and Catalyst prunes the array_distinct underneath.
     */
   private[operators] def bandKeys(tokenDocs: DataFrame, numBands: Int,
-                                  rowsPerBand: Int, ngram: Int): DataFrame = {
-    val numPerms = numBands * rowsPerBand
-    val elems =
-      if (ngram == 1) col("tokens")
-      else F.token_shingles(col("tokens"), ngram)
-    val sigExpr =
-      if (ngram == 1) F.minhash_signature(numPerms)(col("tokens"))
-      else F.minhash_signature_hashes(
-        F.token_shingles(col("tokens"), ngram),
-        numPerms)
+                                  rowsPerBand: Int, ngram: Int): DataFrame =
     tokenDocs.select(col("doc_id"), col("tokens"))
-      .withColumn("sz", size(array_distinct(elems)))
-      .withColumn("sig", sigExpr)
+      .withColumn("sz", size(array_distinct(elements(ngram))))
+      .withColumn("sig", minhashOf(numBands * rowsPerBand, ngram))
       .select(col("doc_id"), col("sz"),
         explode(F.minhash_bands(numBands, rowsPerBand)(col("sig"))).as("band"))
-  }
 
   def minhashLshPairs(tokenDocs: DataFrame, threshold: Double,
                       numBands: Int = 32, rowsPerBand: Int = 4,
@@ -268,13 +266,10 @@ object Dedup {
     // it. Under band params that put random pairs in collision range
     // (the quadratic-candidate regime the b10 batch bench exercises)
     // this screens out most of the candidate volume for free.
-    val cands = sigs.as("x").join(sigs.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.doc_id") < col("y.doc_id") &&
-          sizeCompatible(col("x.sz"), col("y.sz"), threshold))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    verifyJaccard(cands, tokenSets(tokenDocs, ngram), threshold)
+    val cands = bandPairs(sigs, "doc_id",
+      Some(sizeCompatible(col("x.sz"), col("y.sz"), threshold)))
+    val sets = tokenSets(tokenDocs, ngram)
+    verifyJaccard(cands, sets, sets, threshold)
   }
 
   /** SimHash near-dup pairs: fingerprints within `maxHamming`, via the
@@ -289,15 +284,8 @@ object Dedup {
     */
   def simhashPairs(tokenDocs: DataFrame, maxHamming: Int = 3,
                    maxBucket: Int = 0, ngram: Int = 1): DataFrame = {
-    val keyed = simhashKeyed(tokenDocs, maxHamming, ngram)
     val pruned =
-      if (maxBucket <= 0) keyed
-      else {
-        val ok = keyed.groupBy(col("bk"))
-          .agg(count(lit(1)).as("bsz")).filter(col("bsz") <= maxBucket)
-          .select(col("bk"))
-        keyed.join(ok, Seq("bk"))
-      }
+      capBuckets(simhashKeyed(tokenDocs, maxHamming, ngram), maxBucket)
     val cands = pruned.as("x").join(pruned.as("y"),
         col("x.bk") === col("y.bk") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -310,10 +298,17 @@ object Dedup {
       .select(col("a"), col("b"), col("hamming"))
   }
 
+  /** `keyed` less the rows whose bucket key `bk` holds more than
+    * `maxBucket` rows (0 = no cap).
+    */
+  private def capBuckets(keyed: DataFrame, maxBucket: Int): DataFrame =
+    if (maxBucket <= 0) keyed
+    else keyed.join(keyed.groupBy(col("bk")).agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz") <= maxBucket).select(col("bk")), Seq("bk"))
+
   private def simhashFp(ngram: Int): Column =
     if (ngram == 1) F.simhash64(col("tokens"))
-    else graft.functions.expressions.simhash64_hashes(
-      F.token_shingles(col("tokens"), ngram))
+    else graft.functions.expressions.simhash64_hashes(elements(ngram))
 
   private def simhashKeyed(tokenDocs: DataFrame, maxHamming: Int,
                            ngram: Int = 1): DataFrame =
@@ -477,6 +472,274 @@ object Dedup {
   // shuffle is paid when the tables are written or compacted from a
   // directory, and amortized over every later snapshot. The catalog
   // layout takes no appends.
+  //
+  // Every operator is also written once over a [[Signature]]: the text
+  // index above ([[Signature.Text]]) or its vector twin
+  // ([[Signature.Vectors]]), which band-joins a snapshot of vectors
+  // against the stored ones and verifies exact cosine. The manifest, the
+  // monotone-id check, the band joins, both drop policies with their
+  // cluster labels and the one append path are shared.
+
+  /** On-disk format of the text dedup index, stamped in every manifest
+    * row as `format_version`. Version 2 stores each tokset sorted: the
+    * `sorted_intersect_size` merge-walk verify silently undercounts
+    * Jaccard on the unsorted toksets older indexes hold, so those are
+    * refused instead of read.
+    */
+  private val IndexFormat = 2
+
+  /** On-disk format of the embedding dedup index, stamped in every
+    * manifest row as `format_version`; an index written before the
+    * stamp existed is refused, as the text index refuses one. Version 2
+    * declares its vectors `array<float>`; a version-1 index may hold
+    * the caller's `array<double>`, which the declared read would not
+    * read as written, so it is refused too.
+    */
+  private val EmbIndexFormat = 2
+
+  /** One kind of dedup index: the three parameters its manifest
+    * records, its declared tables (`state` holds the per-id verify state,
+    * token sets or vectors), its `format_version` and its writer. It
+    * supplies what differs: the rows of a corpus it indexes, the
+    * snapshot's one pass (its rows past the exact tier and its min id,
+    * None when empty), the verify state and band keys of such rows, the
+    * residual of a band self-join (aliases x, y), the verify of (a, b)
+    * candidates, the write of its tables (it returns the signature
+    * written and the rows' count and max id) and the hits screen.
+    */
+  private sealed abstract class Signature(val manifest: Table,
+      val bands: Table, val state: Table, val format: Int, val writer: String)
+      extends Product with Serializable {
+    def withParams(p: Seq[Int]): Signature
+    def idCol: String
+    def survivors(docs: DataFrame): DataFrame
+    def pass(snapshot: DataFrame, at: Location): Option[(DataFrame, Long)]
+    def frames(rows: DataFrame): (DataFrame, DataFrame)
+    def screen(threshold: Double): Option[Column]
+    def verify(cands: DataFrame, sa: DataFrame, sb: DataFrame,
+               threshold: Double): DataFrame
+    def writeTables(rows: DataFrame, at: Location,
+                    append: Boolean): (Signature, Row)
+    /** Hits of `docs` on the (corpus_id, band) keys and state of a corpus. */
+    def hits(docs: DataFrame, at: Location, corpusBands: DataFrame,
+             corpus: DataFrame, threshold: Double): DataFrame
+    /** The manifest's parameters: the first three fields. */
+    final def params: Seq[Int] = productIterator.take(3).collect {
+      case p: Int => p }.toSeq
+    /** The id column of the stored tables. */
+    final def key: String = bands.schema.fieldNames.head
+    final def describe: String = productElementNames.zip(params)
+      .map { case (n, v) => s"$n=$v" }.mkString("(", ", ", ")")
+  }
+
+  private object Signature {
+
+    /** MinHash bands over each doc's token set (shingles above `ngram`
+      * 1), exact Jaccard behind the size screen, and the md5 exact tier.
+      */
+    final case class Text(numBands: Int, rowsPerBand: Int, ngram: Int)
+        extends Signature(T.Dedup.Manifest, T.Dedup.Bands,
+          T.Dedup.toksets(ngram), IndexFormat, "writeDedupIndex") {
+      def withParams(p: Seq[Int]): Signature = Text(p(0), p(1), p(2))
+      def idCol: String = "doc_id"
+      // the size screen in the join (the minhashLshPairs residual); the
+      // vs-corpus tier can't run it there (stored bands carry no sz)
+      // and relies on verifyJaccard's screen instead
+      def screen(threshold: Double): Option[Column] =
+        Some(sizeCompatible(col("x.sz"), col("y.sz"), threshold))
+      def survivors(docs: DataFrame): DataFrame =
+        docs.join(exactDropIds(docs), Seq("doc_id"), "left_anti")
+
+      def pass(newDocs: DataFrame, at: Location): Option[(DataFrame, Long)] = {
+        // exact tier, ONE pass over the snapshot: md5 once, drop content
+        // already in the corpus (left-anti on content_md5), then keep the
+        // min doc_id of each remaining content group. The snapshot is
+        // shuffled once, on content_md5: with broadcast corpus digests
+        // that exchange feeds the window; a shuffled anti-join (or one
+        // meeting the bucketed digests table's buckets) already
+        // partitions on content_md5, and the window reuses it.
+        // A null text has a null digest: it never matches a corpus digest
+        // and never groups with another null-text row, so it always
+        // survives; a null doc_id is never dropped by the group min
+        // either. The snapshot's min doc_id for the monotone-id check is
+        // observed on the same pass instead of a separate aggregation.
+        //
+        // localCheckpoint the survivors eagerly (not Dataset.persist: see
+        // [[dedupIncremental]]): the toksets, the band keys, the final
+        // keep join and the index append all read them, and uncached each
+        // would re-run the pass (and its index-sized digest join). It also
+        // cuts the plan away from the index files, which the append path
+        // requires: its index write would otherwise invalidate this
+        // subtree.
+        val ids = Observation()
+        val newExact = newDocs.observe(ids, min(col("doc_id")).as("min_id"))
+          .withColumn("content_md5", md5(col("text")))
+          .join(T.Dedup.Digests.read(newDocs.sparkSession, at)
+            .select(col("content_md5")), Seq("content_md5"), "left_anti")
+          .withColumn("keep_id",
+            min(col("doc_id")).over(Window.partitionBy(col("content_md5"))))
+          .filter(col("content_md5").isNull ||
+            coalesce(col("doc_id") === col("keep_id"), lit(true)))
+          .select(newDocs.columns.map(c => col(s"`$c`")): _*)
+          .localCheckpoint()
+        observedMinId(ids, newDocs).map(newExact -> _)
+      }
+
+      def frames(rows: DataFrame): (DataFrame, DataFrame) = {
+        val toks = docTokens(rows)
+        // lazy checkpoint (snapshot-sized: numBands rows/doc): the
+        // vs-corpus join prunes the sz column the within-snapshot join's
+        // size screen reads, so the two band exchanges stopped being
+        // canonically identical and ReusedExchange no longer deduped the
+        // snapshot's tokenize+minhash (measured: b10 incremental 2.0 →
+        // 3.5 s when the r06 size screen first landed). Materializing the
+        // sized band frame once restores the single evaluation for both
+        // consumers.
+        (tokenSets(toks, ngram),
+          bandKeys(toks, numBands, rowsPerBand, ngram).localCheckpoint(false))
+      }
+
+      def verify(cands: DataFrame, sa: DataFrame, sb: DataFrame,
+                 threshold: Double): DataFrame =
+        verifyJaccard(cands, sa, sb, threshold)
+
+      def writeTables(afterExact: DataFrame, at: Location,
+                      append: Boolean): (Signature, Row) = {
+        // four actions read afterExact (digests, toksets, bands, stats);
+        // all run inside this method, so an explicit persist+unpersist is
+        // safe and avoids four recomputations of the exact-tier anti-join
+        afterExact.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          T.Dedup.Digests.write(afterExact.select(col("doc_id"),
+            md5(col("text")).as("content_md5")), at, append)
+          val toks = docTokens(afterExact)
+          state.write(tokenSets(toks, ngram), at, append)
+          // persisted schema stays (doc_id, band): sz is a join-time
+          // optimization, selected away here (Catalyst prunes its
+          // array_distinct)
+          bands.write(bandKeys(toks, numBands, rowsPerBand, ngram)
+            .select(col("doc_id"), col("band")), at, append)
+          (this, afterExact
+            .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head())
+        } finally afterExact.unpersist()
+      }
+
+      def hits(docs: DataFrame, at: Location, corpusBands: DataFrame,
+               corpus: DataFrame, threshold: Double): DataFrame = {
+        val corpusSets = corpus.select(col("doc_id").as("corpus_id"),
+          col("tokset").as("ctokset"), col("set_size").as("csz"))
+        val withSets = docTokens(docs)
+          .select(col("doc_id"),
+            array_sort(array_distinct(elements(ngram))).as("tokset"),
+            minhashOf(numBands * rowsPerBand, ngram).as("sig"))
+          .withColumn("set_size", size(col("tokset")))
+          .select(col("doc_id"), col("tokset"), col("set_size"),
+            explode(F.minhash_bands(numBands, rowsPerBand)(col("sig")))
+              .as("band"))
+        // both sides sorted: the index's toksets via tokenSets, the
+        // query side just above
+        atJaccard(withSets.join(corpusBands, Seq("band"))
+            .join(corpusSets, Seq("corpus_id")),
+            "tokset", "set_size", "ctokset", "csz", threshold)
+          .select(col("doc_id"), col("corpus_id"),
+            round(col("jaccard"), 4).as("jaccard"))
+      }
+    }
+
+    /** Hyperplane bands over each `embCol` vector and exact cosine, with
+      * no exact tier: a near-dup-dropped vector is still the smaller-id
+      * neighbor of later snapshots' vectors under the batch policy, so
+      * every vector is indexed and appended. A `dim` of -1 is the one
+      * length every vector written has.
+      */
+    final case class Vectors(numBands: Int, bitsPerBand: Int, dim: Int,
+                             idCol: String, embCol: String)
+        extends Signature(T.EmbDedup.Manifest, T.EmbDedup.Bands,
+          T.EmbDedup.Vectors, EmbIndexFormat, "writeEmbDedupIndex") {
+      def withParams(p: Seq[Int]): Signature = copy(p(0), p(1), p(2))
+      def screen(threshold: Double): Option[Column] = None
+      def survivors(embs: DataFrame): DataFrame = embs
+
+      def pass(newEmbs: DataFrame, at: Location): Option[(DataFrame, Long)] = {
+        val (_, r) = checkDims(newEmbs, at, min(col(idCol)))
+        if (r.isNullAt(3)) None else Some(newEmbs -> r.getLong(3))
+      }
+
+      private def bandKeysOf(v: Column, d: Int): Column =
+        explode(F.lsh_band_keys(v, numBands, bitsPerBand, d)).as("band")
+
+      def frames(rows: DataFrame): (DataFrame, DataFrame) = {
+        val v = rows.select(col(idCol).as("vid"), col(embCol).as("emb"))
+        (v, v.select(col("vid"), bandKeysOf(col("emb"), dim)))
+      }
+
+      def verify(cands: DataFrame, sa: DataFrame, sb: DataFrame,
+                 threshold: Double): DataFrame =
+        cands.join(sa.select(col("vid").as("a"), col("emb").as("ea")), Seq("a"))
+          .join(sb.select(col("vid").as("b"), col("emb").as("eb")), Seq("b"))
+          .filter(F.cosine_sim(col("ea"), col("eb")) >= threshold)
+          .select(col("a"), col("b"))
+
+      def writeTables(embs: DataFrame, at: Location,
+                      append: Boolean): (Signature, Row) = {
+        val (d, r) = checkDims(embs, at, count(lit(1)), max(col(idCol)))
+        // stored as array<float>, the type the band and cosine kernels
+        // cast every vector to, so no stored value differs from what they
+        // compute on
+        val v = embs.select(col(idCol).as("vid"),
+          col(embCol).cast("array<float>").as("emb"))
+        state.write(v, at, append)
+        bands.write(v.select(col("vid"), bandKeysOf(col("emb"), d)), at, append)
+        (copy(dim = d), Row(r.get(3), r.get(4)))
+      }
+
+      def hits(embs: DataFrame, at: Location, corpusBands: DataFrame,
+               corpus: DataFrame, threshold: Double): DataFrame = {
+        // a stream cannot be probed (no collect on a stream), so a
+        // wrong-model stream is the caller's contract
+        if (!embs.isStreaming) checkDims(embs, at)
+        val corpusVecs =
+          corpus.select(col("vid").as("corpus_id"), col("emb").as("__cemb"))
+        embs
+          .select(col(idCol), col(embCol).as("__emb"),
+            bandKeysOf(col(embCol), dim))
+          .join(corpusBands, Seq("band"))
+          .join(corpusVecs, Seq("corpus_id"))
+          .withColumn("cos_raw", F.cosine_sim(col("__emb"), col("__cemb")))
+          .filter(col("cos_raw") >= threshold)
+          .select(col(idCol), col("corpus_id"),
+            round(col("cos_raw"), 4).as("cosine"))
+      }
+
+      /** One pass over `embs`: null-vector count, min and max vector
+        * length, then `extra`; returns the dim and the row. Refuses a
+        * null vector, or a length other than the dim on any row (the
+        * kernels compare common PREFIXes). Without a dim the longest
+        * vector gives it, and an empty frame, which has none, is
+        * refused.
+        */
+      private def checkDims(embs: DataFrame, at: Location,
+                            extra: Column*): (Int, Row) = {
+        val v = col(embCol)
+        val r = embs.agg(count(when(v.isNull, 1)),
+          Seq(min(size(v)), max(size(v))) ++ extra: _*).head()
+        require(r.getLong(0) == 0,
+          s"${r.getLong(0)} null $embCol vectors for the index at $at")
+        require(dim > 0 || !r.isNullAt(2),
+          s"cannot infer embedding dim: table has no rows (column $embCol)")
+        val d = if (dim > 0) dim else r.getInt(2)
+        require(r.isNullAt(1) || (r.getInt(1) == d && r.getInt(2) == d),
+          s"embedding dim ${r.get(1)}..${r.get(2)} != index dim $d at $at")
+        (d, r)
+      }
+    }
+  }
+
+  /** The two kinds, before a manifest gives their parameters. */
+  private val TextIndex: Signature = Signature.Text(0, 0, 0)
+  private def vectorIndex(idCol: String, embCol: String): Signature =
+    Signature.Vectors(0, 0, -1, idCol, embCol)
 
   /** Persist the dedup index of a corpus under `dir`:
     * digests/ (doc_id, content_md5), bands/ (doc_id, band) and
@@ -492,7 +755,8 @@ object Dedup {
   def writeDedupIndex(docs: DataFrame, dir: String,
                       numBands: Int = 32, rowsPerBand: Int = 4,
                       ngram: Int = 1, append: Boolean = false): Unit =
-    writeIndex(docs, Dir(dir), numBands, rowsPerBand, ngram, append)
+    writeIndex(docs, Dir(dir), Signature.Text(numBands, rowsPerBand, ngram),
+      append)
 
   /** [[writeDedupIndex]] as managed tables
     * `<prefix>_digests/_bands/_toksets/_manifest`, bucketed into
@@ -502,15 +766,24 @@ object Dedup {
                             numBuckets: Int,
                             numBands: Int = 32, rowsPerBand: Int = 4,
                             ngram: Int = 1): Unit =
-    writeIndex(docs, Catalog(tablePrefix, numBuckets), numBands,
-      rowsPerBand, ngram, append = false)
+    writeIndex(docs, Catalog(tablePrefix, numBuckets),
+      Signature.Text(numBands, rowsPerBand, ngram), append = false)
 
-  private def writeIndex(docs: DataFrame, at: Location, numBands: Int,
-                         rowsPerBand: Int, ngram: Int,
+  private def writeIndex(docs: DataFrame, at: Location, sig: Signature,
                          append: Boolean): Unit = {
     prepareWrite(docs.sparkSession, at, append)
-    val afterExact = docs.join(exactDropIds(docs), Seq("doc_id"), "left_anti")
-    writeIndexState(afterExact, at, numBands, rowsPerBand, ngram, append)
+    val written =
+      if (!append) sig
+      else {
+        // appended state must be band-compatible with what is already
+        // there; a parameter of -1 (a vector dim) takes the stored one
+        val stored = manifestAt(docs.sparkSession, at, sig).sig
+        require(sig.params.zip(stored.params).forall { case (p, s) =>
+          p == s || p == -1 }, s"index at $at was built " +
+          s"with ${stored.describe}; cannot append ${sig.describe}")
+        stored
+      }
+    writeState(written, written.survivors(docs), at, append)
   }
 
   /** [[writeDedupIndex]] plus persisted CLUSTER LABELS: after the
@@ -528,7 +801,8 @@ object Dedup {
                         threshold: Double = 0.9,
                         numBands: Int = 32, rowsPerBand: Int = 4,
                         ngram: Int = 1): Unit =
-    writeIndexCC(docs, Dir(dir), threshold, numBands, rowsPerBand, ngram)
+    writeIndexCC(docs, Dir(dir), Signature.Text(numBands, rowsPerBand, ngram),
+      threshold)
 
   /** [[writeDedupIndexCC]] as managed tables; the labels table
     * `<prefix>_labels` is bucketed on doc_id, the contraction join's
@@ -538,84 +812,76 @@ object Dedup {
                               numBuckets: Int, threshold: Double = 0.9,
                               numBands: Int = 32, rowsPerBand: Int = 4,
                               ngram: Int = 1): Unit =
-    writeIndexCC(docs, Catalog(tablePrefix, numBuckets), threshold,
-      numBands, rowsPerBand, ngram)
+    writeIndexCC(docs, Catalog(tablePrefix, numBuckets),
+      Signature.Text(numBands, rowsPerBand, ngram), threshold)
 
-  private def writeIndexCC(docs: DataFrame, at: Location, threshold: Double,
-                           numBands: Int, rowsPerBand: Int,
-                           ngram: Int): Unit = {
-    writeIndex(docs, at, numBands, rowsPerBand, ngram, append = false)
+  private def writeIndexCC(docs: DataFrame, at: Location, sig: Signature,
+                           threshold: Double): Unit = {
+    writeIndex(docs, at, sig, append = false)
     val spark = docs.sparkSession
-    // near-dup pairs recomputed from the persisted bands + toksets: one
+    // near-dup pairs recomputed from the persisted bands + state: one
     // band self-join and one verify join over index columns only
-    val bands = T.Dedup.Bands.read(spark, at)
-    val sets = T.Dedup.toksets(ngram).read(spark, at)
-    val cands = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    writeClusterLabels(at, threshold,
-      verifyJaccard2(cands, sets, sets, threshold).select(col("a"), col("b")))
-  }
-
-  private def writeClusterLabels(at: Location, threshold: Double,
-                                 pairs: DataFrame): Unit = {
-    val spark = pairs.sparkSession
+    val cands = bandPairs(sig.bands.read(spark, at), sig.key, None)
+    val state = sig.state.read(spark, at)
     import spark.implicits._
-    T.Dedup.Labels.write(nearDupClusters(pairs)
+    T.Dedup.Labels.write(nearDupClusters(sig.verify(cands, state, state,
+        threshold).select(col("a"), col("b")))
       .select(col("id").as("doc_id"), col("cluster_id")), at)
     T.Dedup.LabelsMeta.write(Seq(threshold).toDF("threshold").coalesce(1), at)
   }
 
+  /** Candidate pairs (a, b), a < b, of one band-key frame: a self-join
+    * on the band with `screen` as its residual. Both sides are the same
+    * plan, so the band exchange is computed once (ReusedExchange).
+    */
+  private def bandPairs(bands: DataFrame, key: String,
+                        screen: Option[Column]): DataFrame = {
+    val shared = col("x.band") === col("y.band") &&
+      col(s"x.$key") < col(s"y.$key")
+    bands.as("x").join(bands.as("y"), screen.fold(shared)(shared && _))
+      .select(col(s"x.$key").as("a"), col(s"y.$key").as("b"))
+      .distinct()
+  }
+
   /** True iff `dir` holds a CC-labeled index (labels_meta present). */
-  def hasClusterLabels(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = hasLabels(spark, Dir(dir))
+  def hasClusterLabels(spark: SparkSession, dir: String): Boolean =
+    hasLabels(spark, Dir(dir))
 
   /** True iff the table-layout index carries cluster labels. */
-  def hasClusterLabelsTables(spark: org.apache.spark.sql.SparkSession,
+  def hasClusterLabelsTables(spark: SparkSession,
                              tablePrefix: String): Boolean =
     hasLabels(spark, Catalog(tablePrefix))
 
-  private def hasLabels(spark: org.apache.spark.sql.SparkSession,
-                        at: Location): Boolean =
+  private def hasLabels(spark: SparkSession, at: Location): Boolean =
     at.exists(spark, T.Dedup.LabelsMeta)
 
-  /** A pairwise-policy append on a CC-labeled index would leave the
-    * stored labels missing the new snapshot — every later CC call would
-    * silently cluster against stale state. Fail loudly instead.
+  /** Ready `at` for a write of index state, text or embedding, outside
+    * the CC policy. An append is refused on a CC-labeled index: it would
+    * leave the stored labels missing the new snapshot, and every later
+    * CC call would silently cluster against stale state. A fresh write
+    * drops the labels of an earlier CC build, `labels_meta` (the marker
+    * [[hasLabels]] looks for) first. Kept, they would make the CC
+    * operators contract the new corpus's pairs against the old corpus's
+    * clusters.
     */
-  private def requireNoLabels(spark: org.apache.spark.sql.SparkSession,
-                              at: Location): Unit =
-    require(!hasLabels(spark, at),
+  private def prepareWrite(spark: SparkSession, at: Location,
+                           append: Boolean): Unit =
+    if (append) require(!hasLabels(spark, at),
       s"index at $at carries cluster labels; append through the CC " +
         "path (dedupIncrementalCC / embDedupIncrementalCC) so the " +
         "labels stay consistent with the appended state")
-
-  /** Ready `at` for a write of index state, text or embedding: an
-    * append must keep the labels consistent ([[requireNoLabels]]); a
-    * fresh write drops the labels of an earlier CC build, `labels_meta`
-    * (the marker [[hasLabels]] looks for) first. Kept, they would make
-    * the CC operators contract the new corpus's pairs against the old
-    * corpus's clusters.
-    */
-  private def prepareWrite(spark: org.apache.spark.sql.SparkSession,
-                           at: Location, append: Boolean): Unit =
-    if (append) requireNoLabels(spark, at)
     else Seq(T.Dedup.LabelsMeta, T.Dedup.Labels).foreach(at.drop(spark, _))
 
   /** Verify threshold the index's cluster labels were built at. */
-  def readLabelsThreshold(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Double =
+  def readLabelsThreshold(spark: SparkSession, dir: String): Double =
     labelsThreshold(spark, Dir(dir))
 
   /** Verify threshold of a table-layout index's cluster labels. */
-  def readLabelsThresholdTables(spark: org.apache.spark.sql.SparkSession,
+  def readLabelsThresholdTables(spark: SparkSession,
                                 tablePrefix: String): Double =
     labelsThreshold(spark, Catalog(tablePrefix))
 
-  private def labelsThreshold(spark: org.apache.spark.sql.SparkSession,
-                              at: Location): Double = {
+  private def labelsThreshold(spark: SparkSession, at: Location): Double = {
     require(hasLabels(spark, at),
       s"dedup index at $at carries no cluster labels — build it with " +
         "writeDedupIndexCC or writeDedupIndexTablesCC (or compact a CC " +
@@ -624,93 +890,59 @@ object Dedup {
       at.of(T.Dedup.LabelsMeta))
   }
 
-  /** On-disk format of the text dedup index, stamped in every manifest
-    * row as `format_version`. Version 2 stores each tokset sorted: the
-    * `sorted_intersect_size` merge-walk verify silently undercounts
-    * Jaccard on the unsorted toksets older indexes hold, so those are
-    * refused instead of read.
-    */
-  private val IndexFormat = 2
-
   /** (numBands, rowsPerBand, ngram, nDocs, maxDocId) of an index. */
-  def readIndexManifest(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): (Int, Int, Int, Long, Long) =
-    manifestAt(spark, Dir(dir))
-
-  /** The one reader of a dedup manifest (one row per appended
-    * snapshot): refuses a manifest without the current [[IndexFormat]]
-    * stamp. The rows are collected and folded on the driver (max of the
-    * parameters, sum of the doc counts): one scan job, no aggregate
-    * exchange.
-    */
-  private def manifestAt(spark: org.apache.spark.sql.SparkSession,
-                         at: Location): (Int, Int, Int, Long, Long) = {
-    val rows = T.Dedup.Manifest.read(spark, at)
-      .collect() // bounded: one row per appended snapshot
-    val stamp = stampOf(rows)
-    if (stamp < IndexFormat)
-      throw new IllegalStateException(s"dedup index at $at has " +
-        s"format_version $stamp (0 = unstamped); this build " +
-        s"reads only version $IndexFormat (sorted toksets) — rebuild " +
-        "it with writeDedupIndex")
-    (rows.map(_.getInt(0)).max, rows.map(_.getInt(1)).max,
-      rows.map(_.getInt(2)).max, rows.map(_.getLong(3)).sum,
-      rows.map(_.getLong(4)).max)
+  def readIndexManifest(spark: SparkSession,
+                        dir: String): (Int, Int, Int, Long, Long) = {
+    val Manifest(Signature.Text(nb, rpb, ng), n, mx) =
+      manifestAt(spark, Dir(dir), TextIndex)
+    (nb, rpb, ng, n, mx)
   }
 
-  /** The lowest `format_version` of a manifest's rows, in column 5; an
-    * unstamped row (null) or a manifest without rows counts as 0.
+  /** A folded manifest: the signature it records, the indexed doc count
+    * and the max indexed id.
     */
-  private def stampOf(rows: Array[Row]): Int =
-    if (rows.isEmpty) 0
-    else rows.map(r => if (r.isNullAt(5)) 0 else r.getInt(5)).min
+  private case class Manifest(sig: Signature, nDocs: Long, maxId: Long)
+
+  /** The one reader of a dedup manifest (one row per appended
+    * snapshot), of either kind of index: `like` names the kind and the
+    * caller's columns, its parameters are read here. Refuses a manifest
+    * whose lowest stamp is below the kind's format (an unstamped row, or
+    * a manifest without rows, counts as 0). The rows are collected and
+    * folded on the driver (max of the parameters, sum of the doc counts):
+    * one scan job, no aggregate exchange.
+    */
+  private def manifestAt(spark: SparkSession, at: Location,
+                         like: Signature): Manifest = {
+    val rows = like.manifest.read(spark, at)
+      .collect() // bounded: one row per appended snapshot
+    val stamp = rows.map(r => if (r.isNullAt(5)) 0 else r.getInt(5))
+      .minOption.getOrElse(0)
+    if (stamp < like.format)
+      throw new IllegalStateException(s"dedup index at $at has " +
+        s"format_version $stamp (0 = unstamped); this build reads only " +
+        s"version ${like.format} — rebuild it with ${like.writer}")
+    Manifest(like.withParams((0 to 2).map(i => rows.map(_.getInt(i)).max)),
+      rows.map(_.getLong(3)).sum, rows.map(_.getLong(4)).max)
+  }
 
   /** One stamped manifest row; an all-duplicates snapshot appends zero
     * docs, so a null max id is recorded as -1 (the monotone check stays
     * a no-op for it).
     */
-  private def manifestRow(spark: org.apache.spark.sql.SparkSession,
-                          numBands: Int, rowsPerBand: Int, ngram: Int,
+  private def manifestRow(spark: SparkSession, sig: Signature,
                           stats: Row): DataFrame = {
     import spark.implicits._
-    Seq((numBands, rowsPerBand, ngram, stats.getLong(0),
-        if (stats.isNullAt(1)) -1L else stats.getLong(1), IndexFormat))
-      .toDF("num_bands", "rows_per_band", "ngram", "n_docs", "max_doc_id",
-        "format_version")
+    val Seq(p0, p1, p2) = sig.params
+    Seq((p0, p1, p2, stats.getLong(0),
+        if (stats.isNullAt(1)) -1L else stats.getLong(1), sig.format))
+      .toDF(sig.manifest.schema.fieldNames.toIndexedSeq: _*)
   }
 
-  private def writeIndexState(afterExact: DataFrame, at: Location,
-                              numBands: Int, rowsPerBand: Int, ngram: Int,
-                              append: Boolean): Unit = {
-    val spark = afterExact.sparkSession
-    if (append) {
-      // appended state must be band-compatible with what is already there
-      val (nb, rpb, ng, _, _) = manifestAt(spark, at)
-      require(nb == numBands && rpb == rowsPerBand && ng == ngram,
-        s"index at $at was built with (numBands=$nb, rowsPerBand=$rpb, " +
-          s"ngram=$ng); cannot append ($numBands, $rowsPerBand, $ngram)")
-    }
-    // four actions read afterExact (digests, toksets, bands, stats);
-    // all run inside this method, so an explicit persist+unpersist is
-    // safe and avoids four recomputations of the exact-tier anti-join
-    afterExact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats =
-      try {
-        T.Dedup.Digests.write(afterExact.select(col("doc_id"),
-          md5(col("text")).as("content_md5")), at, append)
-        val toks = docTokens(afterExact)
-        T.Dedup.toksets(ngram).write(tokenSets(toks, ngram), at, append)
-        // persisted schema stays (doc_id, band): sz is a join-time
-        // optimization, selected away here (Catalyst prunes its
-        // array_distinct)
-        T.Dedup.Bands.write(bandKeys(toks, numBands, rowsPerBand, ngram)
-          .select(col("doc_id"), col("band")), at, append)
-        afterExact
-          .agg(count(lit(1)).as("n"), max(col("doc_id")).as("mx")).head()
-      } finally afterExact.unpersist()
-    T.Dedup.Manifest.write(
-      manifestRow(spark, numBands, rowsPerBand, ngram, stats).coalesce(1),
-      at, append)
+  private def writeState(sig: Signature, rows: DataFrame, at: Location,
+                         append: Boolean): Unit = {
+    val (written, stats) = sig.writeTables(rows, at, append)
+    written.manifest.write(
+      manifestRow(rows.sparkSession, written, stats).coalesce(1), at, append)
   }
 
   /** Fold a DIRECTORY dedup index — including every snapshot appended
@@ -725,21 +957,21 @@ object Dedup {
     * snapshot query. After it, the table-backed operators answer
     * exactly like the directory-backed ones (PlanSpec-asserted).
     */
-  def compactDedupIndexTables(spark: org.apache.spark.sql.SparkSession,
+  def compactDedupIndexTables(spark: SparkSession,
                               indexDir: String, tablePrefix: String,
                               numBuckets: Int): Unit =
     compact(spark, Dir(indexDir), Catalog(tablePrefix, numBuckets))
 
-  /** Copy every table of the index at `from` to `to`, the manifest
+  /** Copy every table of the text index at `from` to `to`, the manifest
     * folded to one row (`from` may hold one per appended snapshot).
     */
-  private def compact(spark: org.apache.spark.sql.SparkSession,
-                      from: Location, to: Location): Unit = {
-    val (nb, rpb, ng, nDocs, maxId) = manifestAt(spark, from)
+  private def compact(spark: SparkSession, from: Location,
+                      to: Location): Unit = {
+    val m = manifestAt(spark, from, TextIndex)
     prepareWrite(spark, to, append = false)
-    Seq(T.Dedup.Digests, T.Dedup.toksets(ng), T.Dedup.Bands)
+    Seq(T.Dedup.Digests, m.sig.state, m.sig.bands)
       .foreach(t => t.write(t.read(spark, from), to))
-    T.Dedup.Manifest.write(manifestRow(spark, nb, rpb, ng, Row(nDocs, maxId)), to)
+    T.Dedup.Manifest.write(manifestRow(spark, m.sig, Row(m.nDocs, m.maxId)), to)
     // labels_meta last: it marks the labels present
     if (hasLabels(spark, from))
       Seq(T.Dedup.Labels, T.Dedup.LabelsMeta)
@@ -769,7 +1001,7 @@ object Dedup {
   def dedupIncremental(newDocs: DataFrame, indexDir: String,
                        threshold: Double = 0.9,
                        appendToIndex: Boolean = false): DataFrame =
-    incremental(newDocs, Dir(indexDir), threshold, appendToIndex)
+    incremental(newDocs, Dir(indexDir), TextIndex, threshold, appendToIndex)
 
   /** [[dedupIncremental]] against a table-layout index: identical
     * semantics and drop policy, with the corpus side of the
@@ -779,53 +1011,68 @@ object Dedup {
     */
   def dedupIncrementalTables(newDocs: DataFrame, tablePrefix: String,
                              threshold: Double = 0.9): DataFrame =
-    incremental(newDocs, Catalog(tablePrefix), threshold, appendToIndex = false)
+    incremental(newDocs, Catalog(tablePrefix), TextIndex, threshold,
+      appendToIndex = false)
 
-  private def incremental(newDocs: DataFrame, at: Location, threshold: Double,
+  /** The pairwise drop policy over an opened snapshot: drop the (always
+    * new) larger endpoint of every verified pair, against the corpus and
+    * within the new snapshot alike — one anti-join against both drop
+    * sets.
+    */
+  private def incremental(newDocs: DataFrame, at: Location, like: Signature,
+                          threshold: Double,
                           appendToIndex: Boolean): DataFrame =
-    incrementalPairs(newDocs, at, threshold) match {
+    open(newDocs, at, like, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
-        // the pairwise drop policy: drop the (always-new) larger
-        // endpoint of every verified pair, against the corpus and within
-        // the new snapshot alike — one anti-join against both drop sets
-        val kept = without(st.newExact,
-          st.pairsVsCorpus.select(col("b").as("doc_id"))
-            .union(st.pairsWithin.select(col("b").as("doc_id"))))
-        if (appendToIndex) {
-          requireNoLabels(newDocs.sparkSession, at)
-          // MATERIALIZE the result before extending the index: each
-          // append refreshes Spark's file index/caches for the index, so
-          // a lazy RESULT evaluated afterwards would re-read the index
-          // with the new snapshot inside and drop every new doc as a
-          // duplicate of itself. newExact is already checkpointed (no
-          // index-file lineage), so the appends cannot invalidate it
-          // mid-write.
-          val materialized = kept.localCheckpoint()
-          writeIndexState(st.newExact, at, st.numBands,
-            st.rowsPerBand, st.ngram, append = true)
-          materialized
-        } else kept
-        // non-append path stays LAZY (composable, plan-inspectable — the
-        // PlanSpec index-only-scan assertion reads the returned plan)
+        val id = st.sig.idCol
+        keep(st, st.pairsVsCorpus.select(col("b").as(id))
+          .union(st.pairsWithin.select(col("b").as(id))), at, appendToIndex,
+          labels = None)
     }
 
-  /** Shared state of the incremental-dedup variants: the exact-tier
-    * survivors of the new snapshot plus its VERIFIED near-dup pairs
-    * against the corpus index and within itself — everything up to the
-    * drop policy, which is where [[dedupIncremental]] (pairwise) and
-    * [[dedupIncrementalCC]] (connected components) diverge.
+  /** The rows of an opened snapshot less `drops` (ids in its id column).
+    * With `appendToIndex` the rows are appended to the index, and the
+    * CC policy's `labels` replace the stored ones (the pairwise policy,
+    * with none, may not append to a CC-labeled index).
     */
-  private case class IncrementalState(
-      newExact: DataFrame,
-      pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
-      numBands: Int, rowsPerBand: Int, ngram: Int, maxIndexed: Long)
+  private def keep(st: Opened, drops: DataFrame, at: Location,
+                   appendToIndex: Boolean,
+                   labels: Option[DataFrame]): DataFrame = {
+    val kept = without(st.rows, drops, st.sig.idCol)
+    // the non-append result stays LAZY (composable, plan-inspectable —
+    // the PlanSpec index-only-scan assertion reads the returned plan)
+    if (!appendToIndex) return kept
+    if (labels.isEmpty) prepareWrite(kept.sparkSession, at, append = true)
+    // MATERIALIZE the result before extending the index: each append
+    // refreshes Spark's file index/caches for the index, so a lazy
+    // RESULT evaluated afterwards would re-read the index with the new
+    // snapshot inside and drop every new doc as a duplicate of itself.
+    // The pass rows carry no index-file lineage (checkpointed, or the
+    // caller's own frame), and the CC drops are checkpointed by
+    // nearDupClusters, so the appends cannot invalidate them mid-write.
+    val materialized = kept.localCheckpoint()
+    // cut lineage off labels/ BEFORE overwriting it
+    val pinned = labels.map(_.localCheckpoint())
+    writeState(st.sig, st.rows, at, append = true)
+    pinned.foreach(T.Dedup.Labels.write(_, at))
+    materialized
+  }
 
-  /** `docs` less the rows whose doc_id is in `drops`, in `docs`' column
-    * order (a USING join would move doc_id to the front).
+  /** A snapshot opened against an index: the rows past its exact tier
+    * plus its VERIFIED near-dup pairs against the corpus index and
+    * within itself — everything up to the drop policy, which is where
+    * the pairwise and the connected-component operators diverge.
     */
-  private def without(docs: DataFrame, drops: DataFrame): DataFrame =
-    docs.join(drops, Seq("doc_id"), "left_anti")
+  private case class Opened(sig: Signature, rows: DataFrame,
+      pairsVsCorpus: DataFrame, pairsWithin: DataFrame, maxIndexed: Long)
+
+  /** `docs` less the rows whose `key` is in `drops`, in `docs`' column
+    * order (a USING join would move the key to the front).
+    */
+  private def without(docs: DataFrame, drops: DataFrame,
+                      key: String): DataFrame =
+    docs.join(drops, Seq(key), "left_anti")
       .select(docs.columns.map(c => col(s"`$c`")): _*)
 
   /** Bound on the wait for an [[Observation]] of an action that has
@@ -849,96 +1096,40 @@ object Dedup {
   }
 
   /** The one opener of a dedup index for incremental dedup: reads the
-    * manifest and the corpus digests, bands and toksets at `at`, then
-    * runs the exact tier and both near-dup tiers of the snapshot.
+    * manifest at `at`, runs the signature's pass over the snapshot,
+    * checks the monotone-id precondition, then joins the snapshot's band
+    * keys against the corpus bands and against themselves and verifies
+    * both candidate sets.
     */
-  private def incrementalPairs(newDocs: DataFrame, at: Location,
-                               threshold: Double): Option[IncrementalState] = {
+  private def open(newDocs: DataFrame, at: Location, like: Signature,
+                   threshold: Double): Option[Opened] = {
     val spark = newDocs.sparkSession
-    val (numBands, rowsPerBand, ngram, _, maxIndexed) = manifestAt(spark, at)
-    val corpusDigests = T.Dedup.Digests.read(spark, at)
-    val corpusBands = T.Dedup.Bands.read(spark, at)
-    val corpusSets = T.Dedup.toksets(ngram).read(spark, at)
-    // exact tier, ONE pass over the snapshot: md5 once, drop content
-    // already in the corpus (left-anti on content_md5), then keep the
-    // min doc_id of each remaining content group. The snapshot is
-    // shuffled once, on content_md5: with broadcast corpus digests that
-    // exchange feeds the window; a shuffled anti-join (or one meeting the
-    // bucketed digests table's buckets) already partitions on
-    // content_md5, and the window reuses it.
-    // A null text has a null digest: it never matches a corpus digest
-    // and never groups with another null-text row, so it always
-    // survives; a null doc_id is never dropped by the group min either.
-    // The snapshot's min doc_id for the monotone-id check is observed on
-    // the same pass instead of a separate aggregation.
-    //
-    // localCheckpoint (NOT Dataset.persist) the survivors, eagerly: the
-    // toksets, the band keys, the final keep join and the index append
-    // all read them, and uncached each would re-run the pass (and its
-    // index-sized digest join). Dataset.persist would register the plan
-    // in the session CacheManager, which holds it with STRONG references
-    // until an explicit unpersist — a leak per call in long-lived
-    // sessions, since the lazy result cannot release it. localCheckpoint
-    // stores RDD blocks that ContextCleaner reclaims once the result
-    // frame is garbage-collected, is snapshot-sized by contract, and
-    // cuts the plan away from the index files (required by the append
-    // path, whose index write would otherwise invalidate this subtree).
-    val ids = Observation()
-    val newExact = newDocs.observe(ids, min(col("doc_id")).as("min_id"))
-      .withColumn("content_md5", md5(col("text")))
-      .join(corpusDigests.select(col("content_md5")), Seq("content_md5"),
-        "left_anti")
-      .withColumn("keep_id",
-        min(col("doc_id")).over(Window.partitionBy(col("content_md5"))))
-      .filter(col("content_md5").isNull ||
-        coalesce(col("doc_id") === col("keep_id"), lit(true)))
-      .select(newDocs.columns.map(c => col(s"`$c`")): _*)
-      .localCheckpoint()
-    val newMin = observedMinId(ids, newDocs) match {
-      case Some(m) => m
-      case None => return None // empty snapshot
+    val Manifest(sig, _, maxId) = manifestAt(spark, at, like)
+    // None: an empty snapshot
+    for ((rows, newMin) <- sig.pass(newDocs, at)) yield {
+      require(newMin > maxId,
+        s"incremental dedup requires new ids above the indexed corpus " +
+          s"(min new id $newMin <= max indexed id $maxId); batch-equal " +
+          s"results are only guaranteed for monotone snapshot ids")
+      val (newState, newBands) = sig.frames(rows)
+      val k = sig.key
+      // near-dup tier (a): new docs vs the CORPUS INDEX only — band-key
+      // equi-join then exact verify against the stored state
+      val candVsCorpus = newBands.as("n")
+        .join(sig.bands.read(spark, at).as("c"),
+          col("n.band") === col("c.band"))
+        .select(col(s"c.$k").as("a"), col(s"n.$k").as("b"))
+        .distinct()
+      val pairsVsCorpus = sig.verify(candVsCorpus, sig.state.read(spark, at),
+        newState, threshold)
+      // near-dup tier (b): within the new snapshot, from the SAME
+      // newBands/newState frames as tier (a) — a batch pair function here
+      // would band-key the snapshot a second time
+      val pairsWithin = sig.verify(
+        bandPairs(newBands, k, sig.screen(threshold)), newState, newState,
+        threshold)
+      Opened(sig, rows, pairsVsCorpus, pairsWithin, maxId)
     }
-    require(newMin > maxIndexed,
-      s"incremental dedup requires new doc_ids above the indexed corpus " +
-        s"(min new id $newMin <= max indexed id $maxIndexed); batch-equal " +
-        s"results are only guaranteed for monotone snapshot ids")
-
-    val newToks = docTokens(newExact)
-    val newSets = tokenSets(newToks, ngram)
-    // lazy checkpoint (snapshot-sized: numBands rows/doc): the
-    // vs-corpus join prunes the sz column the within-snapshot join's
-    // size screen reads, so the two band exchanges stopped being
-    // canonically identical and ReusedExchange no longer deduped the
-    // snapshot's tokenize+minhash (measured: b10 incremental 2.0 →
-    // 3.5 s when the r06 size screen first landed). Materializing the
-    // sized band frame once restores the single evaluation for both
-    // consumers.
-    val newBands = bandKeys(newToks, numBands, rowsPerBand, ngram)
-      .localCheckpoint(false)
-
-    // near-dup tier (a): new docs vs the CORPUS INDEX only — band-key
-    // equi-join then exact-Jaccard verify against the stored toksets
-    val candVsCorpus = newBands.as("n")
-      .join(corpusBands.as("c"), col("n.band") === col("c.band"))
-      .select(col("c.doc_id").as("a"), col("n.doc_id").as("b"))
-      .distinct()
-    val pairsVsCorpus =
-      verifyJaccard2(candVsCorpus, corpusSets, newSets, threshold)
-    // near-dup tier (b): within the new snapshot. Built from the SAME
-    // newBands/newSets frames as tier (a) — calling nearDupDropIds here
-    // would tokenize and minhash the snapshot a second time
-    val candWithin = newBands.as("x")
-      .join(newBands.as("y"), col("x.band") === col("y.band") &&
-        col("x.doc_id") < col("y.doc_id") &&
-        // size screen in the join (the minhashLshPairs residual); the
-        // vs-corpus tier can't run it here (stored bands carry no sz)
-        // and relies on verifyJaccard2's screen instead
-        sizeCompatible(col("x.sz"), col("y.sz"), threshold))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val pairsWithin = verifyJaccard2(candWithin, newSets, newSets, threshold)
-    Some(IncrementalState(newExact, pairsVsCorpus, pairsWithin,
-      numBands, rowsPerBand, ngram, maxIndexed))
   }
 
   /** Verified near-dup HITS of a docs frame against a persisted corpus
@@ -957,7 +1148,7 @@ object Dedup {
     */
   def nearDupHitsVsIndex(docs: DataFrame, indexDir: String,
                          threshold: Double = 0.9): DataFrame =
-    nearDupHits(docs, Dir(indexDir), threshold)
+    hits(docs, Dir(indexDir), TextIndex, threshold)
 
   /** [[nearDupHitsVsIndex]] against a table-layout index — on a stream,
     * the static corpus side of both joins additionally arrives
@@ -965,48 +1156,15 @@ object Dedup {
     */
   def nearDupHitsVsTables(docs: DataFrame, tablePrefix: String,
                           threshold: Double = 0.9): DataFrame =
-    nearDupHits(docs, Catalog(tablePrefix), threshold)
+    hits(docs, Catalog(tablePrefix), TextIndex, threshold)
 
-  private def nearDupHits(docs: DataFrame, at: Location,
-                          threshold: Double): DataFrame = {
+  private def hits(docs: DataFrame, at: Location, like: Signature,
+                   threshold: Double): DataFrame = {
     val spark = docs.sparkSession
-    val (numBands, rowsPerBand, ngram, _, _) = manifestAt(spark, at)
-    val corpusBands = T.Dedup.Bands.read(spark, at)
-      .select(col("doc_id").as("corpus_id"), col("band"))
-    val corpusSets = T.Dedup.toksets(ngram).read(spark, at)
-      .select(col("doc_id").as("corpus_id"), col("tokset").as("ctokset"),
-        col("set_size").as("csz"))
-    val toks = docTokens(docs)
-    val elems =
-      if (ngram == 1) col("tokens")
-      else F.token_shingles(col("tokens"), ngram)
-    val sigExpr =
-      if (ngram == 1)
-        F.minhash_signature(numBands * rowsPerBand)(col("tokens"))
-      else F.minhash_signature_hashes(
-        F.token_shingles(col("tokens"), ngram),
-        numBands * rowsPerBand)
-    val withSets = toks
-      .select(col("doc_id"),
-        array_sort(array_distinct(elems)).as("tokset"),
-        sigExpr.as("sig"))
-      .withColumn("set_size", size(col("tokset")))
-      .select(col("doc_id"), col("tokset"), col("set_size"),
-        explode(F.minhash_bands(numBands, rowsPerBand)(col("sig")))
-          .as("band"))
-    withSets.join(corpusBands, Seq("band"))
-      .join(corpusSets, Seq("corpus_id"))
-      // size screen + sorted merge walk (both sides sorted: the index's
-      // toksets via tokenSets, the query side just above)
-      .filter(sizeCompatible(col("set_size"), col("csz"), threshold))
-      .withColumn("common",
-        graft.functions.expressions.sorted_intersect_size(
-          col("tokset"), col("ctokset")))
-      .withColumn("jaccard",
-        jaccard(col("common"), col("set_size"), col("csz")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_id"), col("corpus_id"),
-        round(col("jaccard"), 4).as("jaccard"))
+    val sig = manifestAt(spark, at, like).sig
+    val corpusBands = sig.bands.read(spark, at)
+      .select(col(sig.key).as("corpus_id"), col("band"))
+    sig.hits(docs, at, corpusBands, sig.state.read(spark, at), threshold)
   }
 
   /** Incremental dedup with the CONNECTED-COMPONENT drop policy — the
@@ -1035,7 +1193,7 @@ object Dedup {
     */
   def dedupIncrementalCC(newDocs: DataFrame, indexDir: String,
                          appendToIndex: Boolean = false): DataFrame =
-    incrementalCC(newDocs, Dir(indexDir), appendToIndex)
+    incrementalCC(newDocs, Dir(indexDir), TextIndex, appendToIndex)
 
   /** [[dedupIncrementalCC]] against a table-layout index: identical
     * connected-component drop policy, with the corpus side of the
@@ -1047,40 +1205,27 @@ object Dedup {
     */
   def dedupIncrementalTablesCC(newDocs: DataFrame,
                                tablePrefix: String): DataFrame =
-    incrementalCC(newDocs, Catalog(tablePrefix), appendToIndex = false)
+    incrementalCC(newDocs, Catalog(tablePrefix), TextIndex,
+      appendToIndex = false)
 
-  private def incrementalCC(newDocs: DataFrame, at: Location,
+  private def incrementalCC(newDocs: DataFrame, at: Location, like: Signature,
                             appendToIndex: Boolean): DataFrame = {
     val spark = newDocs.sparkSession
     val threshold = labelsThreshold(spark, at)
-    incrementalPairs(newDocs, at, threshold) match {
+    open(newDocs, at, like, threshold) match {
       case None => newDocs // empty snapshot
       case Some(st) =>
-        val (drops, newLabels) = ccOverIncrementalPairs(
-          T.Dedup.Labels.read(spark, at),
-          st.pairsVsCorpus, st.pairsWithin, st.maxIndexed)
-        val kept =
-          without(st.newExact, drops.withColumnRenamed("id", "doc_id"))
-        if (appendToIndex) {
-          // same materialize-before-append discipline as
-          // dedupIncremental; cc is already checkpointed by
-          // nearDupClusters, so drops cannot see the appended state
-          val materialized = kept.localCheckpoint()
-          // cut lineage off labels/ BEFORE overwriting it
-          val pinnedLabels = newLabels.localCheckpoint()
-          writeIndexState(st.newExact, at, st.numBands,
-            st.rowsPerBand, st.ngram, append = true)
-          T.Dedup.Labels.write(pinnedLabels, at)
-          materialized
-        } else kept
+        val (drops, newLabels) =
+          ccOverIncrementalPairs(T.Dedup.Labels.read(spark, at), st)
+        keep(st, drops.withColumnRenamed("id", st.sig.idCol), at,
+          appendToIndex, Some(newLabels))
     }
   }
 
-  /** The shared CC core of the incremental-CC variants (text docs and
-    * embeddings): contract the corpus endpoint of every verified cross
-    * pair to its stored component label, run [[nearDupClusters]] over
-    * the quotient graph (new ids + touched corpus labels only — never
-    * the corpus pair set), and derive
+  /** The CC core of [[incrementalCC]]: contract the corpus endpoint of
+    * every verified cross pair to its stored component label, run
+    * [[nearDupClusters]] over the quotient graph (new ids + touched
+    * corpus labels only — never the corpus pair set), and derive
     *  - `drops`: new ids that are not their component's minimum (mixed
     *    components carry a corpus label below every new id under the
     *    monotone-id precondition, so their new members all drop), and
@@ -1091,37 +1236,30 @@ object Dedup {
     *    never silent), plus rows for corpus singletons first clustered
     *    by a cross pair and for new docs in components.
     * Both frames key by `id`; callers rename to their id column.
-    * `labels` is the stored (doc_id, cluster_id) table — parquet for
-    * the directory layout, a bucketed managed table for the table
-    * layout; the core is layout-agnostic.
+    * `labels` is the stored (doc_id, cluster_id) table.
     */
-  private def ccOverIncrementalPairs(
-      labels: DataFrame,
-      pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
-      maxIndexed: Long): (DataFrame, DataFrame) = {
-    val contracted = pairsVsCorpus.select(col("a"), col("b"))
+  private def ccOverIncrementalPairs(labels: DataFrame,
+                                     st: Opened): (DataFrame, DataFrame) = {
+    val maxIndexed = st.maxIndexed
+    val contracted = st.pairsVsCorpus.select(col("a"), col("b"))
       .join(labels.select(col("doc_id").as("a"),
         col("cluster_id").as("alab")), Seq("a"), "left")
       .select(coalesce(col("alab"), col("a")).as("a"), col("b"))
       .distinct() // two same-label corpus rows near one new row
-    val edges = contracted.union(pairsWithin.select(col("a"), col("b")))
+    val edges = contracted.union(st.pairsWithin.select(col("a"), col("b")))
     val cc = nearDupClusters(edges)
     val drops = cc.filter(col("cluster_id") =!= col("id") &&
         col("id") > lit(maxIndexed))
       .select(col("id"))
-    val ccCorpus = cc.filter(col("id") <= lit(maxIndexed))
-    val remap = ccCorpus
+    val remap = cc.filter(col("id") <= lit(maxIndexed))
       .select(col("id").as("oldlab"), col("cluster_id").as("newlab"))
     val remapped = labels.as("l")
       .join(remap, col("l.cluster_id") === col("oldlab"), "left")
       .select(col("l.doc_id"),
         coalesce(col("newlab"), col("l.cluster_id")).as("cluster_id"))
-    val newCorpusRows = ccCorpus
-      .select(col("id").as("doc_id"), col("cluster_id"))
+    val newRows = cc.select(col("id").as("doc_id"), col("cluster_id"))
       .join(labels.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val newSnapshotRows = cc.filter(col("id") > lit(maxIndexed))
-      .select(col("id").as("doc_id"), col("cluster_id"))
-    (drops, remapped.union(newCorpusRows).union(newSnapshotRows))
+    (drops, remapped.union(newRows))
   }
 
   // ----------------- connected-component clustering -----------------
@@ -1225,13 +1363,7 @@ object Dedup {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
-  // ------------- incremental EMBEDDING dedup -------------
-  //
-  // The vector twin of the text index: persist (vid, emb, band keys) of
-  // a corpus once; dedupe a new snapshot of vectors by band-joining it
-  // against the index and verifying exact cosine — corpus vectors are
-  // read only from the index, never recomputed. Same monotone-id
-  // precondition and manifest discipline as the text index.
+  // ------------- embedding dedup -------------
 
   /** Drop-the-larger-id policy over embedding near-dup pairs (the
     * SQL-replicable batch counterpart of [[embDedupIncremental]]).
@@ -1244,205 +1376,39 @@ object Dedup {
       idCol, embCol)
       .select(col("b").as(idCol)).distinct()
 
-  /** Persist the embedding dedup index: vectors/ (vid, emb),
-    * bands/ (vid, band) and manifest/ (band params, dim, count, max id).
-    * With `append`, band params must match the existing manifest, and
-    * the index must not carry cluster labels (same guard as the text
-    * twin [[writeDedupIndex]]: a raw append on a CC-labeled index would
-    * silently stale labels/ — append through
-    * [[embDedupIncrementalCC]], which remaps them). A fresh write drops
-    * the cluster labels of an earlier CC build.
+  /** Persist the embedding dedup index — the incremental index above
+    * over [[Signature.Vectors]]: vectors/ (vid, emb), bands/ (vid, band)
+    * and manifest/ (band params, dim, count, max id). Every vector is
+    * checked in the one pass that also counts them: a null vector, or a
+    * length other than `dim` (by default the vectors' one length), is
+    * refused. With `append`, band params and a given dim must match the
+    * manifest, and the index must carry no cluster labels (append
+    * through [[embDedupIncrementalCC]], which remaps them). A fresh write
+    * drops the cluster labels of an earlier CC build.
     */
   def writeEmbDedupIndex(embeddings: DataFrame, dir: String,
                          numBands: Int = 64, bitsPerBand: Int = 4,
                          idCol: String = "vec_id",
                          embCol: String = "embedding",
                          dim: Int = -1,
-                         append: Boolean = false): Unit = {
-    prepareWrite(embeddings.sparkSession, Dir(dir), append)
-    writeEmbDedupIndexUnguarded(embeddings, dir, numBands, bitsPerBand,
-      idCol, embCol, dim, append)
-  }
-
-  /** [[writeEmbDedupIndex]] without the no-labels append guard — for
-    * the internal CC append path ([[embDedupIncrementalCC]]), which
-    * overwrites labels/ consistently right after extending the state.
-    */
-  private def writeEmbDedupIndexUnguarded(
-      embeddings: DataFrame, dir: String,
-      numBands: Int, bitsPerBand: Int,
-      idCol: String, embCol: String,
-      dim: Int, append: Boolean): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val stored = if (append) Some(readEmbManifest(spark, dir)) else None
-    stored.foreach { m =>
-      require(m.numBands == numBands && m.bitsPerBand == bitsPerBand &&
-        (dim <= 0 || m.dim == dim),
-        s"embedding index at $dir was built with (numBands=${m.numBands}, " +
-          s"bitsPerBand=${m.bitsPerBand}, dim=${m.dim}); cannot append " +
-          s"($numBands, $bitsPerBand, $dim)")
-    }
-    val d = if (dim > 0) dim else Ann.dimOf(embeddings, embCol)
-    // validate the INFERRED dim too: with the default dim=-1 the require
-    // above is vacuous, and appending band keys computed under a
-    // different hyperplane set corrupts the index silently
-    stored.foreach { m =>
-      require(m.dim == d,
-        s"embedding index at $dir holds dim=${m.dim} vectors; cannot " +
-          s"append dim=$d")
-    }
-    // stored as array<float>, the type the band and cosine kernels
-    // cast every vector to, so no stored value differs from what they
-    // compute on
-    val v = embeddings.select(col(idCol).as("vid"),
-      col(embCol).cast("array<float>").as("emb"))
-    val at = Dir(dir)
-    T.EmbDedup.Vectors.write(v, at, append)
-    T.EmbDedup.Bands.write(v.select(col("vid"),
-      explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
-        .as("band")), at, append)
-    val stats = v.agg(count(lit(1)), max(col("vid"))).head()
-    T.EmbDedup.Manifest.write(Seq((numBands, bitsPerBand, d,
-        stats.getLong(0), if (stats.isNullAt(1)) -1L else stats.getLong(1),
-        EmbIndexFormat))
-      .toDF("num_bands", "bits_per_band", "dim", "n_vecs", "max_vid",
-        "format_version").coalesce(1), at, append)
-  }
-
-  /** On-disk format of the embedding dedup index, stamped in every
-    * manifest row as `format_version`; an index written before the
-    * stamp existed is refused, as the text index refuses one. Version 2
-    * declares its vectors `array<float>`; a version-1 index may hold
-    * the caller's `array<double>`, which the declared read would not
-    * read as written, so it is refused too.
-    */
-  private val EmbIndexFormat = 2
-
-  /** Folded manifest of an embedding dedup index (one row per appended
-    * snapshot).
-    */
-  private case class EmbManifest(numBands: Int, bitsPerBand: Int, dim: Int,
-                                 maxVid: Long)
-
-  /** The one reader of an embedding dedup manifest: collects its rows,
-    * folds them on the driver and refuses a manifest without the
-    * current [[EmbIndexFormat]] stamp.
-    */
-  private def readEmbManifest(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): EmbManifest = {
-    val rows = T.EmbDedup.Manifest.read(spark, dir)
-      .collect() // bounded: one row per appended snapshot
-    val stamp = stampOf(rows)
-    if (stamp < EmbIndexFormat)
-      throw new IllegalStateException(s"embedding dedup index at $dir " +
-        s"has format_version $stamp (0 = unstamped); this build reads " +
-        s"only version $EmbIndexFormat — rebuild it with writeEmbDedupIndex")
-    EmbManifest(rows.map(_.getInt(0)).max, rows.map(_.getInt(1)).max,
-      rows.map(_.getInt(2)).max, rows.map(_.getLong(4)).max)
-  }
+                         append: Boolean = false): Unit =
+    writeIndex(embeddings, Dir(dir),
+      Signature.Vectors(numBands, bitsPerBand, dim, idCol, embCol), append)
 
   /** Dedup new vectors against a persisted embedding index: drop any new
     * vector with a corpus neighbor at cosine >= threshold (band-join on
     * the index's keys + exact-cosine verify against the stored vectors)
     * or a smaller-id new neighbor. Band params come from the manifest;
-    * new ids must exceed every indexed id. Returns the kept new rows.
+    * new ids must exceed every indexed id. Returns the kept new rows, in
+    * their column order.
     */
   def embDedupIncremental(newEmbs: DataFrame, indexDir: String,
                           threshold: Double,
                           idCol: String = "vec_id",
                           embCol: String = "embedding",
                           appendToIndex: Boolean = false): DataFrame =
-    embIncrementalPairs(newEmbs, indexDir, threshold, idCol, embCol) match {
-      case None => newEmbs // empty snapshot
-      case Some(st) =>
-        val dropVsCorpus =
-          st.pairsVsCorpus.select(col("b").as(idCol)).distinct()
-        val dropWithin =
-          st.pairsWithin.select(col("b").as(idCol)).distinct()
-        val kept = newEmbs.join(dropVsCorpus, Seq(idCol), "left_anti")
-          .join(dropWithin, Seq(idCol), "left_anti")
-        if (appendToIndex) {
-          requireNoLabels(newEmbs.sparkSession, Dir(indexDir))
-          // materialize BEFORE the append (see dedupIncremental: the
-          // write refreshes the index path, and a lazy result would
-          // re-read the index with the new vectors inside and drop
-          // them all)
-          val materialized = kept.localCheckpoint()
-          writeEmbDedupIndex(newEmbs, indexDir, st.numBands,
-            st.bitsPerBand, idCol, embCol, st.dim, append = true)
-          materialized
-        } else kept
-    }
-
-  /** Shared state of the embedding incremental variants — verified
-    * pairs vs the index and within the snapshot, up to the drop policy
-    * (pairwise in [[embDedupIncremental]], connected components in
-    * [[embDedupIncrementalCC]]).
-    */
-  private case class EmbIncrementalState(
-      pairsVsCorpus: DataFrame, pairsWithin: DataFrame,
-      numBands: Int, bitsPerBand: Int, dim: Int, maxVid: Long)
-
-  /** One pass over a snapshot: null-vector count, min and max vector
-    * length, then `extra`. Refuses a null vector or a dim other than the
-    * index's `d` on any row (the kernels compare common PREFIXes).
-    */
-  private def checkDims(embs: DataFrame, embCol: String, d: Int,
-                        indexDir: String, extra: Column*): Row = {
-    val v = col(embCol)
-    val r = embs.agg(count(when(v.isNull, 1)),
-      Seq(min(size(v)), max(size(v))) ++ extra: _*).head()
-    require(r.getLong(0) == 0,
-      s"snapshot has ${r.getLong(0)} null $embCol vectors")
-    require(r.isNullAt(1) || (r.getInt(1) == d && r.getInt(2) == d),
-      s"snapshot embedding dim ${r.get(1)}..${r.get(2)} != index dim $d at $indexDir")
-    r
-  }
-
-  private def embIncrementalPairs(newEmbs: DataFrame, indexDir: String,
-                                  threshold: Double, idCol: String,
-                                  embCol: String):
-      Option[EmbIncrementalState] = {
-    val spark = newEmbs.sparkSession
-    val EmbManifest(numBands, bitsPerBand, d, maxVid) =
-      readEmbManifest(spark, indexDir)
-    val newMin = checkDims(newEmbs, embCol, d, indexDir, min(col(idCol)))
-    if (newMin.isNullAt(3)) return None
-    require(newMin.getLong(3) > maxVid,
-      s"incremental embedding dedup requires new ids above the indexed " +
-        s"corpus (min new ${newMin.getLong(3)} <= max indexed $maxVid)")
-    val corpusVecs = T.EmbDedup.Vectors.read(spark, indexDir)
-    val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
-    val newV = newEmbs.select(col(idCol).as("vid"), col(embCol).as("emb"))
-    val newBands = newV.select(col("vid"),
-      explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
-        .as("band"))
-    val pairsVsCorpus = newBands.as("n")
-      .join(corpusBands.as("c"), col("n.band") === col("c.band"))
-      .select(col("c.vid").as("a"), col("n.vid").as("b")).distinct()
-      .join(corpusVecs.select(col("vid").as("a"), col("emb").as("ea")),
-        Seq("a"))
-      .join(newV.select(col("vid").as("b"), col("emb").as("eb")), Seq("b"))
-      .filter(F.cosine_sim(col("ea"), col("eb")) >= threshold)
-      .select(col("a"), col("b"))
-    // within-snapshot tier from the SAME newBands/newV frames as the
-    // corpus tier — embDedupDropIds would recompute the band keys
-    val pairsWithin = newBands.as("x")
-      .join(newBands.as("y"), col("x.band") === col("y.band") &&
-        col("x.vid") < col("y.vid"))
-      .select(col("x.vid").as("a"), col("y.vid").as("b")).distinct()
-      .join(newV.select(col("vid").as("a"), col("emb").as("ea")), Seq("a"))
-      .join(newV.select(col("vid").as("b"), col("emb").as("eb")), Seq("b"))
-      .filter(F.cosine_sim(col("ea"), col("eb")) >= threshold)
-      .select(col("a"), col("b"))
-    // index composition appends ALL new vectors, not only kept ones: a
-    // near-dup-dropped vector is still the smaller-id neighbor of later
-    // snapshots' vectors under the batch policy (the text index keeps
-    // exact-tier survivors for the same reason)
-    Some(EmbIncrementalState(pairsVsCorpus, pairsWithin,
-      numBands, bitsPerBand, d, maxVid))
-  }
+    incremental(newEmbs, Dir(indexDir), vectorIndex(idCol, embCol),
+      threshold, appendToIndex)
 
   /** Cluster-policy drop set over embedding near-dup pairs — the vector
     * twin of [[nearDupDropIdsCC]] (one kept vector per cosine-connected
@@ -1467,22 +1433,9 @@ object Dedup {
                            numBands: Int = 64, bitsPerBand: Int = 4,
                            idCol: String = "vec_id",
                            embCol: String = "embedding",
-                           dim: Int = -1): Unit = {
-    writeEmbDedupIndex(embeddings, dir, numBands, bitsPerBand, idCol,
-      embCol, dim)
-    val spark = embeddings.sparkSession
-    val bands = T.EmbDedup.Bands.read(spark, dir)
-    val vecs = T.EmbDedup.Vectors.read(spark, dir)
-    val pairs = bands.as("x")
-      .join(bands.as("y"), col("x.band") === col("y.band") &&
-        col("x.vid") < col("y.vid"))
-      .select(col("x.vid").as("a"), col("y.vid").as("b")).distinct()
-      .join(vecs.select(col("vid").as("a"), col("emb").as("ea")), Seq("a"))
-      .join(vecs.select(col("vid").as("b"), col("emb").as("eb")), Seq("b"))
-      .filter(F.cosine_sim(col("ea"), col("eb")) >= threshold)
-      .select(col("a"), col("b"))
-    writeClusterLabels(Dir(dir), threshold, pairs)
-  }
+                           dim: Int = -1): Unit =
+    writeIndexCC(embeddings, Dir(dir),
+      Signature.Vectors(numBands, bitsPerBand, dim, idCol, embCol), threshold)
 
   /** Incremental embedding dedup with the CONNECTED-COMPONENT drop
     * policy — the vector twin of [[dedupIncrementalCC]]: same label
@@ -1493,67 +1446,25 @@ object Dedup {
   def embDedupIncrementalCC(newEmbs: DataFrame, indexDir: String,
                             idCol: String = "vec_id",
                             embCol: String = "embedding",
-                            appendToIndex: Boolean = false): DataFrame = {
-    val spark = newEmbs.sparkSession
-    val threshold = readLabelsThreshold(spark, indexDir)
-    embIncrementalPairs(newEmbs, indexDir, threshold, idCol, embCol) match {
-      case None => newEmbs // empty snapshot
-      case Some(st) =>
-        val (drops, newLabels) = ccOverIncrementalPairs(
-          T.Dedup.Labels.read(spark, indexDir),
-          st.pairsVsCorpus, st.pairsWithin, st.maxVid)
-        val kept = newEmbs.join(drops.withColumnRenamed("id", idCol),
-          Seq(idCol), "left_anti")
-        if (appendToIndex) {
-          val materialized = kept.localCheckpoint()
-          val pinnedLabels = newLabels.localCheckpoint()
-          writeEmbDedupIndexUnguarded(newEmbs, indexDir, st.numBands,
-            st.bitsPerBand, idCol, embCol, st.dim, append = true)
-          T.Dedup.Labels.write(pinnedLabels, Dir(indexDir))
-          materialized
-        } else kept
-    }
-  }
+                            appendToIndex: Boolean = false): DataFrame =
+    incrementalCC(newEmbs, Dir(indexDir), vectorIndex(idCol, embCol),
+      appendToIndex)
 
   /** Verified near-dup HITS of a vectors frame against a persisted
     * embedding dedup index ([[writeEmbDedupIndex]]): (vec_id,
     * corpus_id, cosine) for every (vector, indexed vector) pair at or
     * above the threshold — the vector twin of [[nearDupHitsVsIndex]],
-    * and like it STREAMING-SAFE: the query vector rides THROUGH the
-    * band explode (the text screen's tokset trick), so on a streaming
-    * `embs` the plan is a chain of stateless stream-static equi-joins
-    * (band keys, then the stored-vector cosine verify) — no watermark,
-    * no state store, any output mode. Band params and dim come from
-    * the index manifest. A pair sharing several bands emits one hit
-    * per shared band — dedupe downstream where distinctness is
-    * stateless. Batch inputs get the loud dim check; STREAMING inputs
-    * cannot be probed (no collect on a stream), so a wrong-model
-    * stream is the caller's contract — the manifest dim is the one the
-    * band keys and cosines compute over.
+    * STREAMING-SAFE the same way: the query vector rides THROUGH the
+    * band explode, band params and dim come from the manifest, and a
+    * pair sharing several bands emits one hit per shared band. Batch
+    * inputs get the loud dim check; a stream cannot be probed, so a
+    * wrong-model stream is the caller's contract.
     */
   def embNearDupHitsVsIndex(embs: DataFrame, indexDir: String,
                             threshold: Double,
                             idCol: String = "vec_id",
-                            embCol: String = "embedding"): DataFrame = {
-    val spark = embs.sparkSession
-    val EmbManifest(numBands, bitsPerBand, d, _) =
-      readEmbManifest(spark, indexDir)
-    if (!embs.isStreaming) checkDims(embs, embCol, d, indexDir)
-    val corpusBands = T.EmbDedup.Bands.read(spark, indexDir)
-      .select(col("vid").as("corpus_id"), col("band"))
-    val corpusVecs = T.EmbDedup.Vectors.read(spark, indexDir)
-      .select(col("vid").as("corpus_id"), col("emb").as("__cemb"))
-    embs
-      .select(col(idCol), col(embCol).as("__emb"),
-        explode(F.lsh_band_keys(col(embCol), numBands, bitsPerBand, d))
-          .as("band"))
-      .join(corpusBands, Seq("band"))
-      .join(corpusVecs, Seq("corpus_id"))
-      .withColumn("cos_raw", F.cosine_sim(col("__emb"), col("__cemb")))
-      .filter(col("cos_raw") >= threshold)
-      .select(col(idCol), col("corpus_id"),
-        round(col("cos_raw"), 4).as("cosine"))
-  }
+                            embCol: String = "embedding"): DataFrame =
+    hits(embs, Dir(indexDir), vectorIndex(idCol, embCol), threshold)
 
   /** Embedding-cosine near-duplicate pairs, EXACT: (a, b, cosine) with
     * cosine >= threshold, a < b — grid-blocked all-pairs (see
@@ -1591,19 +1502,11 @@ object Dedup {
                                dim: Int = -1,
                                maxBucket: Int = 0): DataFrame = {
     val d = if (dim > 0) dim else Ann.dimOf(embeddings, embCol)
-    val keyed = embeddings
+    val pruned = capBuckets(embeddings
       .select(col(idCol).as("vid"), col(embCol).as("emb"))
       .select(col("vid"), col("emb"),
         explode(F.lsh_band_keys(col("emb"), numBands, bitsPerBand, d))
-          .as("bk"))
-    val pruned =
-      if (maxBucket <= 0) keyed
-      else {
-        val ok = keyed.groupBy(col("bk"))
-          .agg(count(lit(1)).as("bsz")).filter(col("bsz") <= maxBucket)
-          .select(col("bk"))
-        keyed.join(ok, Seq("bk"))
-      }
+          .as("bk")), maxBucket)
     pruned.as("x").join(pruned.as("y"),
         col("x.bk") === col("y.bk") && col("x.vid") < col("y.vid"))
       .select(col("x.vid").as("a"), col("y.vid").as("b"),

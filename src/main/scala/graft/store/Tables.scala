@@ -44,9 +44,11 @@ object Tables {
     val LabelsMeta = Table("labels_meta", "threshold DOUBLE")
   }
 
-  /** Embedding dedup index (`Dedup.writeEmbDedupIndex`). Its vectors
-    * are stored as `array<float>`, the type every vector kernel computes
-    * in, whatever numeric array the caller passed.
+  /** Embedding dedup index (`Dedup.writeEmbDedupIndex`), written by
+    * `Dedup.writeIndex`, the one writer of both dedup indexes, over the
+    * `Signature.Vectors` kind. Its vectors are stored as `array<float>`,
+    * the type every vector kernel computes in, whatever numeric array the
+    * caller passed.
     */
   object EmbDedup {
     val Manifest = Table("manifest", "num_bands INT, bits_per_band INT, " +

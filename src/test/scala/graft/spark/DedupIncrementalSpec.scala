@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import org.apache.spark.graftsupport.{Jobs, Plans}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.operators.{Decontaminate, Dedup, SpanDedup}
 import graft.plans.SketchCheckpoint
@@ -178,6 +179,12 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert((corpusKept ++ incKept).sorted == batchKept,
       s"corpus=$corpusKept inc=$incKept batch=$batchKept")
     assert(incKept == Seq(11L, 14L), s"kept: $incKept")
+    // an unusual column order comes back unchanged
+    val reordered = Dedup.embDedupIncremental(
+      snap.select("embedding", "vec_id"), dir, 0.9)
+    assert(reordered.columns.toSeq == Seq("embedding", "vec_id"),
+      reordered.columns.toSeq)
+    assert(reordered.select("vec_id").as[Long].collect().sorted.toSeq == incKept)
     // monotone-id guard
     val bad = Seq((2L, vec(6, 0))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
@@ -289,6 +296,10 @@ class DedupIncrementalSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val dir = Files.createTempDirectory("graft-emb-cc-idx").toString
     Dedup.writeEmbDedupIndexCC(corpus, dir, threshold = 0.9)
+    // an unusual column order comes back unchanged
+    val reordered = Dedup.embDedupIncrementalCC(
+      snap.select("embedding", "vec_id"), dir).columns.toSeq
+    assert(reordered == Seq("embedding", "vec_id"), reordered)
     val incKept = Dedup.embDedupIncrementalCC(snap, dir,
         appendToIndex = true)
       .select("vec_id").as[Long].collect().sorted.toSeq
@@ -552,7 +563,8 @@ class DedupIncrementalSpec extends AnyFunSuite {
   }
 
   test("an embedding snapshot is checked in one pass: any wrong-dim or null vector is refused") {
-    // both readers of an embedding index: incremental dedup and the hits screen
+    // both readers of an embedding index, incremental dedup and the hits
+    // screen, and its writer, fresh and appending
     val embs = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val dir = Files.createTempDirectory("graft-emb-idx-dim").toString
@@ -560,6 +572,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     def snap(vs: Array[Float]*) = vs.zipWithIndex
       .map { case (v, i) => (10L + i, v) }.toDF("vec_id", "embedding")
     val ok = Array(0f, 0f, 1f, 0f)
+    val fresh = Files.createTempDirectory("graft-emb-idx-dim-w").toString
     // the wrong vector comes after a right one: a check of the first row
     // alone accepts it, and the kernels would compare common prefixes
     for ((bad, why) <- Seq(
@@ -567,16 +580,52 @@ class DedupIncrementalSpec extends AnyFunSuite {
         snap(ok, Array(0f, 0f, 1f, 0f, 1f)) -> "dim 4..5 != index dim 4",
         snap(ok, null) -> "1 null embedding")) {
       for (call <- Seq(() => Dedup.embDedupIncremental(bad, dir, 0.9).collect(),
-          () => Dedup.embNearDupHitsVsIndex(bad, dir, 0.9).collect())) {
+          () => Dedup.embNearDupHitsVsIndex(bad, dir, 0.9).collect(),
+          () => Dedup.writeEmbDedupIndex(bad, fresh, numBands = 8, dim = 4),
+          () => Dedup.writeEmbDedupIndex(bad, dir, numBands = 8, append = true))) {
         val e = intercept[IllegalArgumentException](call())
         assert(e.getMessage.contains(why), e.getMessage)
       }
     }
+    // without a dim, a fresh write takes the one length all vectors have
+    val e = intercept[IllegalArgumentException](
+      Dedup.writeEmbDedupIndex(snap(ok, Array(0f, 0f, 1f)), fresh, numBands = 8))
+    assert(e.getMessage.contains("dim 3..4"), e.getMessage)
+    assert(spark.read.parquet(s"$dir/vectors").count() == 2)
     // before any pair work: one manifest read, one pass over the snapshot
     val (_, actions) = Plans.recorded(spark)(
       Dedup.embDedupIncremental(snap(ok, ok), dir, 0.9))
     assert(actions.map(_._1) == Seq("collect", "head"), actions.map(_._1))
     assert(Dedup.embDedupIncremental(snap(), dir, 0.9).isEmpty)
+  }
+
+  test("an incremental append reads the manifest once") {
+    def manifestReads(body: => Unit): Int = {
+      val (_, actions) = Plans.recorded(spark)(body)
+      actions.count { case (name, plan) =>
+        name == "collect" && Plans.nodes(plan).exists {
+          case s: FileSourceScanExec =>
+            s.relation.location.rootPaths.exists(_.getName == "manifest")
+          case _ => false
+        }
+      }
+    }
+    val dir = Files.createTempDirectory("graft-dedup-idx-append1").toString
+    Dedup.writeDedupIndex(df(s1), dir)
+    assert(manifestReads(
+      Dedup.dedupIncremental(df(s2), dir, appendToIndex = true)) == 1)
+    val embDir = Files.createTempDirectory("graft-emb-idx-append1").toString
+    Dedup.writeEmbDedupIndex(Seq((0L, Array(1f, 0f, 0f, 0f)))
+      .toDF("vec_id", "embedding"), embDir, numBands = 8)
+    val embSnap = Seq((5L, Array(0f, 1f, 0f, 0f))).toDF("vec_id", "embedding")
+    assert(manifestReads(
+      Dedup.embDedupIncremental(embSnap, embDir, 0.9, appendToIndex = true)) == 1)
+    // the appended state is read back under the signature it was read
+    // with: s1 holds 8 exact-tier survivors, s2 adds 6 (up to id 18), and
+    // the appended vector hits itself (once per shared band)
+    assert(Dedup.readIndexManifest(spark, dir) == ((32, 4, 1, 14L, 18L)))
+    assert(Dedup.embNearDupHitsVsIndex(embSnap, embDir, 0.9)
+      .select("corpus_id").distinct().as[Long].collect().toSeq == Seq(5L))
   }
 
   /** Every file under `dir`, by relative path, with its bytes. */

@@ -240,6 +240,31 @@ class StoreSpec extends AnyFunSuite {
       s"operator over a Store.Location): ${found.mkString("; ")}")
   }
 
+  test("source scan: Dedup reads its manifests at one call site") {
+    // a second manifest reader is a second copy of the index; one line
+    // each, with the reason, for the defs that read one
+    val allowed = Map("manifestAt" -> "the one reader of every dedup manifest")
+    val file = new java.io.File("src/main/scala/graft/operators/Dedup.scala")
+    assert(file.isFile, s"sources not found from ${file.getAbsolutePath}")
+    val lines = new String(java.nio.file.Files.readAllBytes(file.toPath), UTF_8)
+      .split('\n')
+    val read = """[Mm]anifest\.read\(""".r
+    val enclosing = """\bdef (\w+)""".r
+    val found = for {
+      (line, n) <- lines.toSeq.zipWithIndex
+      if read.findFirstIn(line).nonEmpty
+    } yield lines.take(n + 1).reverseIterator
+      .flatMap(enclosing.findFirstMatchIn(_)).nextOption()
+      .fold("<top level>")(_.group(1)) -> s"Dedup.scala:${n + 1}: ${line.trim}"
+    assert(found.size <= 1, "manifest reads at more than one call site " +
+      s"(read through manifestAt): ${found.map(_._2).mkString("; ")}")
+    val stray = found.filterNot { case (d, _) => allowed.contains(d) }
+    assert(stray.isEmpty, s"manifest reads outside ${allowed.keys.mkString(", ")}: " +
+      stray.map(_._2).mkString("; "))
+    assert(found.map(_._1).toSet == allowed.keySet,
+      s"allowlist entries with no read left: ${allowed.keySet -- found.map(_._1)}")
+  }
+
   test("source scan: graft's own tables are read with their declared schema") {
     // caller-typed tables keep inference; one line each, with the reason
     val allowed = Map(
